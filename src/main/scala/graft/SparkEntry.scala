@@ -1,86 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.ops.WarpOps._
-import graft.ops.WarpOps.Order
-import graft.functions.{WarpAggregates => WA, WarpFunctions => WF}
-import graft.sources.Sequencer
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.catalog.{Catalog, Embeddings, Q, Sql}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with an equivalent DuckDB oracle in [[oracleSql]].
-  *
-  * Float discipline: double sums are accumulated as decimal(28,6) and cast
-  * back to double, so Spark's partial-aggregation order and DuckDB's scan
-  * order produce bit-identical results (exact decimal addition is
-  * associative; the per-row double->decimal rounding is deterministic in
-  * both engines). Row-level double arithmetic (a*b etc.) is IEEE-identical
-  * everywhere and needs no care.
-  */
+/** Driver contract, derived once from [[graft.catalog.Catalog]]: one
+  * `queries` entry per implemented operator from SURVEY.md §2, each with
+  * an equivalent DuckDB oracle in [[oracleSql]] unless the catalog
+  * declares why it has none. */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    // events.ts is nanosecond-precision parquet, which Spark only reads via
-    // spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench sessions).
-    // Normalize to a naive microsecond timestamp; `DIV` keeps the integer
-    // math exact (a double division would lose precision on int64 nanos).
-    df.schema.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType) match {
-      case Some(_) => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")).cast("timestamp_ntz"))
-      case None    => df
-    }
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.all.map(q => q.name -> q.run).toMap
 
-  /** Order-insensitive exact double sum (see class doc). */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 6))).cast("double")
-
-  /** Runs `body` with spark.sql.shuffle.partitions temporarily lowered for
-    * the REAL-streaming catalog rows. A stateful streaming operator opens
-    * one state-store instance PER shuffle partition PER micro-batch — at
-    * the session's 32 partitions each tiny bounded fixture pays 32 store
-    * inits + 32 delta-file commits per stateful operator per batch, pure
-    * fixed overhead (measured: q_stream_neardup 6.2 s, q_stream_interval
-    * _join 8.2 s isolated at sf0.1, dominated by store churn, not rows).
-    * Results are partition-count independent (hash-partitioning by key is
-    * semantically neutral; every row's output is key-local), pinned by the
-    * unchanged oracle hashes. Production sizes this to the cluster — the
-    * number is a tuning knob, not a semantic one; streaming queries clone
-    * the session conf at start(), so the scoped set/restore is race-free. */
-  private def streamShuffle[A](s: SparkSession, n: Int = 4)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-  /** Scoped skip of the trailing NO-DATA micro-batch (r15, VERDICT r14
-    * item 5): a bounded AvailableNow run otherwise appends one empty batch
-    * whose only work is watermark-driven state EVICTION — measured at
-    * ~0.7-0.9 s of pure machinery (planning + empty addBatch + state
-    * commit) per streaming query. Output-NEUTRAL only where no operator
-    * emits on watermark advance: inner stream-stream joins (matches emit
-    * in the data batch) and NoTimeout flatMapGroupsWithState (no-data
-    * batches invoke nothing). NOT for append-mode windowed aggregations,
-    * whose final windows emit exactly in that batch — those entries keep
-    * the default. Unbounded production runs keep no-data batches ON for
-    * state cleanup; this wrapper is scoped per entry and restores the
-    * previous value. */
-  private def streamNoFinalBatch[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
-  }
-  /** Matching exact average: exact decimal sum, one double division. */
-  private def davg(c: Column): Column = (sum(c.cast(DecimalType(28, 6))).cast("double") / count(c))
-
-  /** Deterministic duplicate-pair fixture for the connected-components
-    * queries: doc i ~ doc i+1 whenever both exist and i % 10 < 9 — 10-node
-    * chains, reproducible in SQL (no hash seeds involved). */
-  private def chainEdges(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
-      .where(col("doc_id") % 10 < 9)
-      .join(docs.select(col("doc_id").as("id2")), Seq("id2"), "left_semi")
+  lazy val oracleSql: Map[String, String] =
+    Catalog.all.collect { case Q(name, _, Sql(text), _) => name -> text }.toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The end-to-end curation pipeline (quality + language scoring,
@@ -89,8828 +22,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_curate")(spark, "/root/testdata/sf0.001")
 
-  // ===== persisted similarity indexes ======================================
-  // The whole point of a sketch/IVF index is AMORTIZATION: build once, query
-  // many times. The build cost is timed explicitly by the q_embed_*_build
-  // entries (oracle-checked: the index row count equals the corpus count);
-  // q_embed_lsh / q_embed_ivf then measure only the probe against the
-  // persisted index — the number a user sees per query in steady state.
-
-  /** Data fingerprint tag: the directory embedded verbatim (sanitized for
-    * path use) plus the table file's (mtime, size). The full tuple is kept
-    * in the string rather than collapsed to a 32-bit hash — a hash
-    * collision between two data directories would silently serve the wrong
-    * memoized fixture/centroids/index. */
-  /** Collision-free path tag: the directory string verbatim, sanitized —
-    * never a 32-bit hash that could alias two data directories. */
-  private def dirTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  private def dataFp(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    s"${dirTag(dir)}_${st.getModificationTime}_${st.getLen}"
-  }
-
-  /** Index root keyed by the data directory AND the embeddings file's
-    * (mtime, size) fingerprint: different SFs never share an index, and
-    * REGENERATED data at the same path invalidates the old index instead
-    * of silently probing stale neighbors. */
-  private def idxRoot(s: SparkSession, dir: String): String =
-    s"/tmp/graft_index_${dataFp(s, dir, "embeddings")}"
-
-  private def indexExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Bench-fixture memo: a similarity probe's query VECTOR is an input (a
-    * real deployment receives it with the request); these queries derive it
-    * from the corpus only to stay deterministic. Collect it once per data
-    * directory — re-running the derivation scan per probe invocation would
-    * charge every probe one fixture job that no deployed probe pays. */
-  private val fixtureVec = new scala.collection.concurrent.TrieMap[String, Seq[Float]]
-
-  /** Trained-merge-list fixture for q_bpe_segment: in a deployment the
-    * merge list ships WITH the tokenizer (it is the trained artifact);
-    * deriving it per probe invocation would charge segmentation the whole
-    * training run. Memoized per data fingerprint (the fixtureVec pattern);
-    * 8 merges keeps the chained fold inside codegen limits (Bpe.segment's
-    * scaladoc: long merge lists belong in a native kernel). */
-  private val bpeMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]
-  private def bpeMergeFixture(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergeCache.getOrElseUpdate(dataFp(s, dir, "documents"),
-      graft.pipeline.Bpe.trainMerges(T(s, dir, "documents"), "text", numMerges = 8)
-        .orderBy("rank").collect()
-        .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq)
-  /** Vocabulary fixture for q_bpe_encode — ships with the merges as the
-    * tokenizer artifact; same memo discipline. */
-  private val bpeVocabCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[String]]
-  private def bpeVocabFixture(s: SparkSession, dir: String): Seq[String] =
-    bpeVocabCache.getOrElseUpdate(dataFp(s, dir, "documents"),
-      graft.pipeline.Bpe.vocabulary(T(s, dir, "documents"), "text",
-          bpeMergeFixture(s, dir))
-        .orderBy("id").collect().map(_.getAs[String]("token")).toSeq)
-  /** Hand-set "English prose quality" weights for q_classify_score: the
-    * POINT of the literal-weight entry is that a trained model applies as
-    * a pure SQL-expressible map pass, so the oracle can recompute it —
-    * fixed literals keep the oracle static text. (q_classify_train
-    * demonstrates the actual training; its output depends on the corpus
-    * and so is rows-only.) Order: len_cap, punct_ratio, stopword_en,
-    * mean_wlen_cap, digit_ratio, upper_ratio, intercept. */
-  private val classifyDemoWeights =
-    Seq(1.0, -2.0, 4.0, 1.0, -3.0, -2.0, -1.0)
-
-  /** Shared WITH-body for the classifier-evaluation oracles: `sc(doc_id,
-    * s, y)` = the q_classify_score sigmoid (same feature SQL, same demo
-    * weights, rounded to 6 so the tie structure is engine-portable) plus
-    * the `lang = 'en'` 0/1 evaluation label. */
-  private val classifyScoredCte: String =
-    """f AS (
-         SELECT doc_id, coalesce(text, '') AS t,
-           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-         FROM documents
-       ), feat AS (
-         SELECT doc_id, y,
-           least(CAST(length(t) AS DOUBLE) / 1000.0, 1.0) AS f1,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f2,
-           CASE WHEN len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-             CAST(len(list_filter(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+'),
-               w -> w IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-               / len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS f3,
-           least((CASE WHEN len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-             CAST(list_sum(list_transform(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+'),
-               w -> length(w))) AS DOUBLE)
-               / len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END) / 10.0, 1.0) AS f4,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[0-9]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f5,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[A-Z]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f6
-         FROM f
-       ), sc AS (
-         SELECT doc_id, y,
-           round(1.0 / (1.0 + exp(-(1.0*f1 - 2.0*f2 + 4.0*f3 + 1.0*f4 - 3.0*f5 - 2.0*f6 - 1.0))), 6) AS s
-         FROM feat)"""
-
-  /** HALF_UP decimal rounding matching Spark/DuckDB round() — the same
-    * convention weightTable publishes trained weights with; one shared
-    * implementation ([[graft.pipeline.Cluster.round9]]) so the deflation
-    * inputs and the published values can never drift apart. */
-  private def round9(x: Double): Double = graft.pipeline.Cluster.round9(x)
-
-  /** Memoized first two principal components per embeddings fingerprint:
-    * all q_pca_* entries share ONE covariance job + both power
-    * iterations. */
-  private val pcaCache = new scala.collection.concurrent.TrieMap[
-    String, ((Seq[Double], Double), (Seq[Double], Double))]
-  private def pcaFixture2(s: SparkSession, dir: String)
-      : ((Seq[Double], Double), (Seq[Double], Double)) =
-    pcaCache.getOrElseUpdate(idxRoot(s, dir), {
-      val ((v1, l1), (v2, l2)) = graft.pipeline.Cluster.pcaPowerDeflated(
-        T(s, dir, "embeddings"), "embedding", PcaIters)
-      ((v1.toSeq, l1), (v2.toSeq, l2))
-    })
-  private def pcaFixture(s: SparkSession, dir: String): (Seq[Double], Double) =
-    pcaFixture2(s, dir)._1
-
-  private def queryVec(s: SparkSession, dir: String): Seq[Float] =
-    // keyed by the embeddings file's fingerprint (idxRoot), not the bare
-    // dir: regenerated data at the same path must refresh the memo
-    fixtureVec.getOrElseUpdate(idxRoot(s, dir),
-      T(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0))
-
-  /** Sketch width of the persisted LSH index: 256 bits = four longs; a
-    * pair-gate is then 4 XOR + POPCNT. Width chosen empirically: this
-    * corpus is weakly clustered (true top-10 neighbors sit at cosine
-    * ~0.28-0.60), and at 64 bits the neighbor/noise Hamming distributions
-    * overlap so much that recall 0.9 admits ~40% of all pairs; at 256
-    * bits recall ~0.95 passes only ~12% (measured at sf0.1). */
-  val LshBits = 256
-
-  /** Hamming gate matching [[LshBits]]: 112/256 = recall ~0.95 on true
-    * top-10 with ~12% of random pairs passing (measured at sf0.1;
-    * recall pinned in PipelineSpec). */
-  val LshMaxHamming = 112
-
-  /** Gauge-tier LSH params for `q_embed_recall_lsh`: 64 md5-derived
-    * planes fit one packed word (the oracle XOR+bit_counts a single
-    * BIGINT), and 28/64 mirrors the production 112/256 gate ratio. */
-  val RecallLshBits = 64
-  val RecallLshMaxHamming = 28
-
-  /** Gauge-tier IVF params for `q_embed_recall_ivf`: the q_kmeans cell
-    * count, probing 2 of 8 cells (a quarter of the corpus scored). */
-  val RecallIvfCells = 8
-  val RecallIvfProbe = 2
-
-  /** Power-iteration rounds for the q_pca_* entries — enough for the
-    * dominant eigenvector to settle at gauge scale; both sides run the
-    * SAME fixed count, so the entries hash-match regardless. */
-  val PcaIters = 30
-
-  /** Centers selected by the q_coreset k-center greedy gauge (and rounds
-    * unrolled by its oracle). */
-  val CoresetK = 8
-
-  /** Output dimensions of the q_embed_rp Johnson–Lindenstrauss gauge. */
-  val RpDims = 8
-
-  /** Gauge-tier PQ params for `q_embed_recall_pq`: 4 subspaces × 8-entry
-    * codebooks (16 dims each on the 64-dim corpus), one deterministic
-    * Lloyd round per codebook — 3-bit-per-subspace compression whose
-    * reconstruction the oracle replays via four kmeans CTE chains. */
-  val RecallPqSubspaces = 4
-  val RecallPqCodebook = 8
-
-  /** Param-versioned index paths: an index of a different sketch width or
-    * an older on-disk LAYOUT must never be mistaken for the current index.
-    * Layout history: (bare) = corpus + bare `__sk`; `n` = + bare `__norm`;
-    * `n2` = norm renamed `__norm_<vecCol>`; `n3` = sketch renamed
-    * `__sk_<vecCol>` (provenance-named stored columns); IVF `k2` = centroids
-    * refined by 2 Lloyd iterations (see
-    * [[graft.pipeline.Similarity.normColName]]). Bump the suffix whenever
-    * the written schema changes. */
-  private def lshIndexPath(s: SparkSession, dir: String): String =
-    s"${idxRoot(s, dir)}/lsh${LshBits}n3"
-  private def ivfIndexPath(s: SparkSession, dir: String): String =
-    s"${idxRoot(s, dir)}/ivfk2"
-
-  /** Build-if-missing; returns the LSH index path. */
-  def ensureLshIndex(s: SparkSession, dir: String): String = {
-    val path = lshIndexPath(s, dir)
-    if (!indexExists(s, path)) {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.lshWriteIndex(emb, "embedding",
-        nBits = LshBits, dim = queryVec(s, dir).length, path)
-    }
-    path
-  }
-
-  /** Build-if-missing; returns the IVF index path (centroids persisted
-    * beside it). */
-  def ensureIvfIndex(s: SparkSession, dir: String): String = {
-    val path = ivfIndexPath(s, dir)
-    if (!indexExists(s, path)) {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.ivfWriteIndex(emb, "embedding", "vec_id",
-        nCells = 16, path)
-    }
-    path
-  }
-
-  private def pqIndexPath(s: SparkSession, dir: String): String =
-    s"${idxRoot(s, dir)}/pqm8k256"
-
-  /** Build-if-missing; returns the PQ index path (codebooks persisted
-    * beside it). */
-  def ensurePqIndex(s: SparkSession, dir: String): String = {
-    val path = pqIndexPath(s, dir)
-    if (!indexExists(s, path)) {
-      val emb = T(s, dir, "embeddings")
-      val books = graft.pipeline.Similarity.pqTrain(emb, "embedding", "vec_id",
-        m = 8, k = 256)
-      graft.pipeline.Similarity.pqWriteIndex(emb, "embedding", "vec_id", books, path)
-    }
-    path
-  }
-
-  private def ivfPqIndexPath(s: SparkSession, dir: String): String =
-    s"${idxRoot(s, dir)}/ivfpq16m8k256"
-
-  /** Build-if-missing; returns the IVF-PQ index path (centroids and
-    * codebooks persisted beside it). */
-  def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
-    val path = ivfPqIndexPath(s, dir)
-    if (!indexExists(s, path)) {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.ivfPqWriteIndex(emb, "embedding", "vec_id",
-        nCells = 16, m = 8, k = 256, path)
-    }
-    path
-  }
-
-  /** Amortization hook: build every persisted index once (Bench calls this
-    * untimed before the query loop, mirroring a warehouse's index job). */
-  def prepareIndexes(s: SparkSession, dir: String): Unit = {
-    ensureLshIndex(s, dir)
-    ensureIvfIndex(s, dir)
-    ensurePqIndex(s, dir)
-    ensureIvfPqIndex(s, dir)
-  }
-
-  /** IVF centroid table memo: the centroids ARE the in-memory half of the
-    * index (16 cells × dim floats) — a deployment loads them once at
-    * startup, not once per probe. Keyed by index path; the build query
-    * invalidates after rewriting. */
-  private val centroidCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Seq[Float]]]
-  private def ivfCentroids(s: SparkSession, path: String): Array[Seq[Float]] =
-    centroidCache.getOrElseUpdate(path,
-      graft.pipeline.Similarity.ivfReadCentroids(s, path))
-
-  /** PQ codebook memo (the centroidCache pattern): the codebooks are the
-    * in-memory half of the PQ index — a deployment loads them once at
-    * startup, not once per probe. Keyed by index path; the build query
-    * invalidates after rewriting. */
-  private val pqCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]]
-  private def pqBooks(s: SparkSession, path: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(path,
-      graft.pipeline.Similarity.pqReadCodebooks(s, path))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- aggregate (Data.swift:260-263): grouped agg with computed measures
-    "q1_agg" -> ((s, dir) => {
-      val l = T(s, dir, "lineitem")
-      l.warpFilter(col("l_shipdate") <= lit("1998-09-02 00:00:00"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          davg(col("l_quantity")).as("avg_qty"),
-          davg(col("l_extendedprice")).as("avg_price"),
-          davg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- calculate (Data.swift:221-230): derived column, then filter + sort
-    "q_calc_filter" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .calculate(Seq("revenue" -> col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-        .warpFilter(col("l_discount") >= 0.05 && col("l_quantity") < 10)
-        .selectColumns(Seq("l_orderkey", "l_linenumber", "revenue"))
-        .warpSort(Seq(Order(col("l_orderkey")), Order(col("l_linenumber"))))
-    }),
-
-    // ---- calculate snapshot semantics: all exprs see the PRE-update row
-    "q_calc_snapshot" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .calculate(Seq(
-          "l_quantity" -> (col("l_quantity") * 2),
-          "qty_plus" -> (col("l_quantity") + lit(1.0))))
-        .selectColumns(Seq("l_orderkey", "l_linenumber", "l_quantity", "qty_plus"))
-        .warpSort(Seq(Order(col("l_orderkey")), Order(col("l_linenumber"))))
-    }),
-
-    // ---- selectColumns + limit + offset (Data.swift:232-238,256-258)
-    "q_limit_offset" -> ((s, dir) => {
-      T(s, dir, "orders")
-        .warpSort(Seq(Order(col("o_orderkey"))))
-        .selectColumns(Seq("o_orderkey", "o_totalprice", "O_ORDERPRIORITY"))
-        .offset(10).limit(100)
-    }),
-
-    // ---- sort: multi-key, string + numeric-desc collation (Data.swift:81-111)
-    "q_sort" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .selectColumns(Seq("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"))
-        .warpSort(Seq(
-          Order(col("l_returnflag"), ascending = true, numeric = false),
-          Order(col("l_quantity"), ascending = false),
-          Order(col("l_orderkey")), Order(col("l_linenumber"))))
-    }),
-
-    // ---- distinct (Data.swift:245-246)
-    "q_distinct" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .selectColumns(Seq("l_returnflag", "l_linestatus"))
-        .distinct()
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- unique: distinct values of one expression (Data.swift:252-254)
-    "q_unique" -> ((s, dir) =>
-      T(s, dir, "part").unique(col("p_brand"), "p_brand").orderBy("p_brand")),
-
-    // ---- union by name, union-of-schemas (Data.swift:300-304)
-    "q_union" -> ((s, dir) => {
-      val c = T(s, dir, "customer").select(
-        col("c_name").as("name"), col("c_acctbal").as("acctbal"), lit("customer").as("kind"))
-      val su = T(s, dir, "supplier").select(
-        col("s_name").as("name"), lit("supplier").as("kind"))
-      c.warpUnion(su).orderBy("kind", "name")
-    }),
-
-    // ---- join inner: equi-extraction, shuffle join at scale (Data.swift:113-145)
-    "q_join_inner" -> ((s, dir) => {
-      val l = T(s, dir, "lineitem")
-      val o = T(s, dir, "orders")
-      l.warpJoin(o, l("l_orderkey") === o("o_orderkey"), "inner")
-        .groupBy("o_orderpriority")
-        .agg(
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // ---- join left-outer with a broadcast dimension
-    "q_join_left" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val c = T(s, dir, "customer").warpFilter(col("c_acctbal") > 5000)
-      o.warpJoin(c, o("o_custkey") === c("c_custkey"), "left_outer", broadcastRight = true)
-        .selectColumns(Seq("o_orderkey", "c_name", "c_acctbal"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- semi / anti join surface: customers WITH urgent orders and
-    //      suppliers WITHOUT any lineitem — existence predicates as
-    //      shuffle-free broadcast semi/anti joins where the probe side
-    //      never widens (no fan-out, no dedup-after-join)
-    "q_join_semi_anti" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-      val urgent = T(s, dir, "orders").warpFilter(col("o_orderpriority") === "1-URGENT")
-      val semi = c.join(urgent, c("c_custkey") === urgent("o_custkey"), "left_semi")
-        .selectColumns(Seq("c_custkey", "c_name"))
-        .calculate(Seq("side" -> lit("has_urgent")))
-      val s2 = T(s, dir, "supplier")
-      val li = T(s, dir, "lineitem")
-      val anti = s2.join(li, s2("s_suppkey") === li("l_suppkey"), "left_anti")
-        .selectColumns(Seq("s_suppkey", "s_name"))
-        .calculate(Seq("side" -> lit("no_lineitem")))
-        .renameColumns(Map("s_suppkey" -> "c_custkey", "s_name" -> "c_name"))
-      semi.warpUnion(anti)
-        .warpSort(Seq(Order(col("side"), numeric = false), Order(col("c_custkey"))))
-    }),
-
-    // ---- analytic window surface: lead/lag/ntile/cume_dist per customer
-    //      order history — partitioned windows only (the rankBy shape)
-    "q_window_funcs" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      T(s, dir, "orders")
-        .selectColumns(Seq("o_custkey", "o_orderkey", "o_totalprice"))
-        .calculate(Seq(
-          "prev_price" -> lag(col("o_totalprice"), 1).over(w),
-          "next_key" -> lead(col("o_orderkey"), 1).over(w),
-          "quartile" -> ntile(4).over(w),
-          "cdist" -> cume_dist().over(w)))
-        .warpSort(Seq(Order(col("o_custkey")), Order(col("o_orderkey"))))
-    }),
-
-    // ---- rank / running aggregation (Data.swift:306-311)
-    "q_rank" -> ((s, dir) => {
-      // distributed global running agg: bucketed prefix-sum, value-identical
-      // to the single-window rank (decimal partials combine exactly)
-      T(s, dir, "orders")
-        .rankDistributed(Seq(
-          graft.ops.WarpOps.RunningAgg.RCount("rn"),
-          graft.ops.WarpOps.RunningAgg.RSum("running",
-            col("o_totalprice").cast(DecimalType(28, 6)))),
-          Seq(Order(col("o_orderkey"))))
-        .withColumn("running", col("running").cast("double"))
-        .selectColumns(Seq("o_orderkey", "o_totalprice", "rn", "running"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- pivot (Data.swift:265, Raster.swift:984-1050): labels passed
-    //      explicitly — the unbounded form would run an eager
-    //      distinct-label job and collect labels at plan-build time
-    "q_pivot" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .warpPivot(Seq(col("l_linestatus")), Seq("l_returnflag"),
-          dsum(col("l_quantity")), values = Seq("F", "O"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- flatten / melt (Data.swift:270-276)
-    "q_flatten" -> ((s, dir) => {
-      T(s, dir, "part")
-        .selectColumns(Seq("p_partkey", "p_brand", "p_type"))
-        .flatten("cell_value", Some("col_name"), Some(("row_id", col("p_partkey"))))
-        .warpSort(Seq(Order(col("row_id")), Order(col("col_name"), numeric = false)))
-    }),
-
-    // ---- explode vertically (QBEExplodeStep.swift:230)
-    "q_explode_vertical" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .warpFilter(col("doc_id") < 100)
-        .explodeVertically("text", " ")
-        .select(col("doc_id"), col("text").as("word"))
-        .orderBy("doc_id", "word")
-    }),
-
-    // ---- explode horizontally (QBEExplodeStep.swift:327)
-    "q_explode_horizontal" -> ((s, dir) => {
-      T(s, dir, "orders")
-        .explodeHorizontally("o_orderpriority", "-", 2)
-        .selectColumns(Seq("o_orderkey", "o_orderpriority_1", "o_orderpriority_2"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- dummies / one-hot (QBEDummiesStep.swift:15-96)
-    "q_dummies" -> ((s, dir) => {
-      T(s, dir, "orders")
-        .dummies("o_orderstatus")
-        .selectColumns(Seq("o_orderkey", "o_orderstatus_F", "o_orderstatus_O", "o_orderstatus_P"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- search across all columns (QBESearchStep.swift:4)
-    "q_search" -> ((s, dir) => {
-      T(s, dir, "part")
-        .search("widget")
-        .selectColumns(Seq("p_partkey", "p_name"))
-        .warpSort(Seq(Order(col("p_partkey"))))
-    }),
-
-    // ---- filter-set / IN (QBERowsStep.swift:88)
-    "q_filterset" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .filterSet("l_returnflag", Seq("A", "R"))
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- as-of join (custom operator; DuckDB verifies with native ASOF
-    //      JOIN): each event picks up the latest hourly per-type mark
-    //      at-or-before its timestamp
-    "q_asof_join" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .selectColumns(Seq("event_id", "event_type", "ts", "value"))
-      val marks = T(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).cast("timestamp_ntz").as("mark_ts"))
-        .agg(dsum(col("value")).as("mark_total"))
-      graft.ops.AsofJoin.asofJoin(ev, marks, Seq("event_type"),
-        "ts", "mark_ts", Seq("mark_total"))
-        .selectColumns(Seq("event_id", "event_type", "mark_total"))
-        .warpSort(Seq(Order(col("event_id"))))
-    }),
-
-    // ---- range join (custom operator: binned equi-join, no nested loop)
-    "q_range_join" -> ((s, dir) => {
-      val bands = Sequencer.range(s, 0, 20, "band")
-        .select(col("band"), (col("band") * 50.0).as("lo"), (col("band") * 50.0 + 50.0).as("hi"))
-      val ev = T(s, dir, "events").selectColumns(Seq("event_id", "value"))
-      graft.ops.RangeJoin.rangeJoin(ev, "value", bands, "lo", "hi", binWidth = 50.0)
-        .selectColumns(Seq("event_id", "value", "band"))
-        .warpSort(Seq(Order(col("event_id"))))
-    }),
-
-    // ---- time-bucketed aggregation over the events table
-    "q_events_window" -> ((s, dir) => {
-      T(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-        .orderBy("hour", "event_type")
-    }),
-
-    // ---- rollup (surface extension; SURVEY §2.3 note)
-    "q_rollup" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .warpRollup(Seq(col("l_returnflag"), col("l_linestatus")),
-          Seq(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty")))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    // ---- cube: all grouping-set combinations (the rollup twin; same
-    //      partial-aggregation machinery, so it scales identically)
-    "q_cube" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .warpCube(Seq(col("l_returnflag"), col("l_linestatus")),
-          Seq(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty")))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    // ---- reducer battery: median/variance/stddev/min/max/countDistinct (§2.3)
-    "q_agg_stats" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          WA.warpMedian(col("l_quantity")).as("med_qty"),
-          WA.warpVarianceSample(col("l_quantity")).as("var_qty"),
-          WA.warpStdevSample(col("l_quantity")).as("std_qty"),
-          WA.warpMin(col("l_extendedprice")).as("min_price"),
-          WA.warpMax(col("l_extendedprice")).as("max_price"),
-          WA.warpCountDistinct(col("l_suppkey")).as("n_supp"),
-          WA.warpCountAll().as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- ordered string/list aggregation: concat + list reducers (§2.3)
-    "q_agg_strings" -> ((s, dir) => {
-      T(s, dir, "nation")
-        .groupBy("n_regionkey")
-        .agg(
-          WA.warpConcat(col("n_name")).as("all_names"),
-          array_join(WA.warpList(col("n_name")), "|").as("name_list"),
-          WA.warpPack(col("n_name")).as("packed"))
-        .orderBy("n_regionkey")
-    }),
-
-    // ---- minimumCount privacy floor (Aggregation.swift:103-134)
-    "q_agg_mincount" -> ((s, dir) => {
-      T(s, dir, "events")
-        .select(col("user_id"), when(col("value") > 150, col("value")).as("v"))
-        .groupBy("user_id")
-        .agg(
-          WA.minimumCount(WA.dsum(col("v")), col("v"), 5).as("big_total"),
-          count(col("v")).as("n_big"))
-        .orderBy("user_id")
-    }),
-
-    // ---- transpose (Raster.swift:657-694) — collect-based like the reference
-    "q_transpose" -> ((s, dir) =>
-      T(s, dir, "region").orderBy("r_regionkey").warpTranspose()),
-
-    // ---- random sample (Data.swift:240-243) — no SQL oracle (rows-only check)
-    "q_random" -> ((s, dir) =>
-      T(s, dir, "orders").randomSample(50).selectColumns(Seq("o_orderkey"))),
-
-    // ---- sequencer pattern source (Sequencer.swift, QBESequencerStep.swift:27)
-    "q_sequencer" -> ((s, dir) =>
-      Sequencer.dataset(s, "[A-Z]{2}", "value").orderBy("value")),
-
-    // ---- sequencer numeric range source
-    "q_sequencer_range" -> ((s, dir) =>
-      Sequencer.range(s, 1, 1001, "n").orderBy("n")),
-
-    // ---- scalar string functions (§2.4)
-    "q_func_string" -> ((s, dir) => {
-      T(s, dir, "part").calculate(Seq(
-        "u" -> WF.fnUppercase(col("p_name")),
-        "l4" -> WF.fnLeft(col("p_name"), lit(4)),
-        "len" -> WF.fnLength(col("p_name")),
-        "rep" -> WF.fnSubstitute(col("p_name"), lit(" "), lit("_")),
-        "lev" -> WF.fnLevenshtein(col("p_name"), lit("widget")),
-        "catd" -> graft.values.Warp.cat(col("p_brand"), lit("#"))))
-        .selectColumns(Seq("p_partkey", "u", "l4", "len", "rep", "lev", "catd"))
-        .warpSort(Seq(Order(col("p_partkey"))))
-    }),
-
-    // ---- scalar math functions (§2.4) — IEEE-stable subset for the oracle
-    "q_func_math" -> ((s, dir) => {
-      T(s, dir, "lineitem").calculate(Seq(
-        "sqrt_qty" -> WF.fnSqrt(col("l_quantity")),
-        // plain IEEE division (round() semantics differ between engines at
-        // half-point doubles; fnRoundTo is pinned by unit tests instead)
-        "unit_price" -> (col("l_extendedprice") / col("l_quantity")),
-        "fl" -> WF.fnFloor(col("l_discount") * 100),
-        "ce" -> WF.fnCeiling(col("l_discount") * 100),
-        "ab" -> WF.fnAbsolute(col("l_discount") - lit(0.05)),
-        "sg" -> WF.fnSign(col("l_discount") - lit(0.05))))
-        .selectColumns(Seq("l_orderkey", "l_linenumber", "sqrt_qty", "unit_price", "fl", "ce", "ab", "sg"))
-        .warpSort(Seq(Order(col("l_orderkey")), Order(col("l_linenumber"))))
-    }),
-
-    // ---- date/time functions (§2.4; Excel serial dates Date.swift:25-38)
-    "q_func_datetime" -> ((s, dir) => {
-      T(s, dir, "orders").calculate(Seq(
-        "y" -> WF.fnUtcYear(col("o_orderdate")),
-        "m" -> WF.fnUtcMonth(col("o_orderdate")),
-        "d" -> WF.fnUtcDay(col("o_orderdate")),
-        "iso" -> WF.fnToUTCISO8601(col("o_orderdate")),
-        "excel" -> WF.fnToExcelDate(col("o_orderdate")),
-        "unix" -> WF.fnToUnixTime(col("o_orderdate"))))
-        .selectColumns(Seq("o_orderkey", "y", "m", "d", "iso", "excel", "unix"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- JSON extraction (jsonDecode, Function.swift:1579-1590)
-    "q_func_json" -> ((s, dir) => {
-      T(s, dir, "events")
-        .calculate(Seq("k_val" -> get_json_object(col("props"), "$.k").cast("int")))
-        .selectColumns(Seq("event_id", "k_val"))
-        .warpSort(Seq(Order(col("event_id"))))
-    }),
-
-    // ---- rename step (QBERenameStep.swift:15)
-    "q_rename" -> ((s, dir) => {
-      T(s, dir, "nation")
-        .renameColumns(Map("n_name" -> "nation_name", "n_regionkey" -> "region_id"))
-        .selectColumns(Seq("n_nationkey", "nation_name", "region_id"))
-        .warpSort(Seq(Order(col("n_nationkey"))))
-    }),
-
-    // ---- select-rows-by-example (QBERowsStep.swift:15-87)
-    "q_rows_select" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .rowsByExample(Seq("l_returnflag", "l_linestatus"),
-          Seq(Seq("A", "F"), Seq("N", "O")))
-        .groupBy("l_returnflag", "l_linestatus").agg(count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---- cache + clone steps (QBECacheStep.swift:15, QBECloneStep.swift:15)
-    "q_cache_clone" -> ((s, dir) => {
-      val base = T(s, dir, "region").cacheStep().registerClone("graft_region_clone")
-      val cloned = graft.ops.WarpOps.cloneOf(s, "graft_region_clone")
-        .selectColumns(Seq("r_regionkey")).renameColumns(Map("r_regionkey" -> "rk2"))
-      base.warpJoin(cloned, base("r_regionkey") === cloned("rk2"), "inner")
-        .selectColumns(Seq("r_regionkey", "r_name"))
-        .warpSort(Seq(Order(col("r_regionkey"))))
-    }),
-
-    // ---- CSV sink + source round-trip (CSVStream.swift:19-181,
-    //      QBECSVStep.swift:135): write with the reference's formatting,
-    //      read back with header dedup + locale parse + type inference
-    "q_csv_roundtrip" -> ((s, dir) => {
-      // export fingerprint-cached (the q_dbf_roundtrip recipe): the bench
-      // then measures the READ + type-inference path, which is the
-      // operator; the write ran once and is timed by its first invocation
-      val out = s"/tmp/graft_csv_${dataFp(s, dir, "customer")}"
-      if (!indexExists(s, out))
-        graft.sources.CsvSource.write(T(s, dir, "customer"), out)
-      val back = graft.sources.CsvSource.inferTyped(
-        graft.sources.CsvSource.read(s, out))
-      back.select(
-        col("c_custkey").cast("long").as("c_custkey"),
-        col("c_name"),
-        col("c_nationkey").cast("long").as("c_nationkey"),
-        col("c_acctbal").cast("double").as("c_acctbal"),
-        col("c_mktsegment"))
-        .orderBy("c_custkey")
-    }),
-
-    // ---- JSON sink + source round-trip with shape detection
-    //      (JSONStream.swift:16-168)
-    "q_json_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_json_${dataFp(s, dir, "supplier")}"
-      if (!indexExists(s, out))
-        graft.sources.JsonSource.write(
-          T(s, dir, "supplier").selectColumns(Seq("s_suppkey", "s_name", "s_nationkey")), out)
-      graft.sources.JsonSource.read(s, out)
-        .select(col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
-          col("s_nationkey").cast("long").as("s_nationkey"))
-        .orderBy("s_suppkey")
-    }),
-
-    // ---- DBF roundtrip (reference reader DBFStream.swift:132, writer
-    //      QBEDBFStep.swift): single-file dBase III export then re-read;
-    //      column names shortened to DBF's 10-char limit
-    "q_dbf_roundtrip" -> ((s, dir) => {
-      val sup = T(s, dir, "supplier").select(
-        col("s_suppkey").as("suppkey"), col("s_name").as("name"),
-        col("s_acctbal").as("acctbal"), col("s_nationkey").as("nation"))
-      // export fingerprint-cached like the similarity indexes: the write
-      // runs driver-side at plan-build time, so an uncached export charges
-      // every bench iteration a full file re-write; keyed by the supplier
-      // file's (dir, mtime, size) so regenerated data still re-exports
-      val path = s"/tmp/graft_dbf_${dataFp(s, dir, "supplier")}.dbf"
-      if (!new java.io.File(path).exists())
-        graft.sources.DbfSource.write(sup, path)
-      graft.sources.DbfSource.read(s, path).orderBy("suppkey")
-    }),
-
-    // ---- Avro roundtrip (beyond-reference row-format ingestion): export
-    //      events once per data fingerprint as per-partition containers,
-    //      read back distributed (one task per file) with a filter —
-    //      timestamps travel as local-timestamp-micros logical type
-    "q_avro_roundtrip" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .selectColumns(Seq("event_id", "ts", "user_id", "event_type", "value"))
-      val path = s"/tmp/graft_avro_${dataFp(s, dir, "events")}"
-      graft.sources.AvroSource.writeOnce(ev, path)
-      graft.sources.AvroSource.read(s, path)
-        .warpFilter(col("event_type") === "click")
-        .selectColumns(Seq("event_id", "user_id", "value", "ts"))
-        .warpSort(Seq(Order(col("event_id"))))
-    }),
-
-    // ---- ORC roundtrip (beyond-reference columnar interchange): export
-    //      customer once per data fingerprint, read back with a filtered
-    //      projection — pushdown into the ORC scan pinned in PlanAuditSpec
-    "q_orc_roundtrip" -> ((s, dir) => {
-      val cust = T(s, dir, "customer")
-      val path = s"/tmp/graft_orc_${dataFp(s, dir, "customer")}"
-      graft.sources.OrcSource.writeOnce(cust, path)
-      graft.sources.OrcSource.read(s, path)
-        .warpFilter(col("c_mktsegment") === "BUILDING")
-        .selectColumns(Seq("c_custkey", "c_name", "c_acctbal"))
-        .warpSort(Seq(Order(col("c_custkey"))))
-    }),
-
-    // ---- JDBC roundtrip through embedded Derby (in-process, serverless):
-    //      batched-insert sink -> dialect type mapping (BIGINT/CLOB/DOUBLE)
-    //      -> JDBC scan back. Proves the same relation/sink code path the
-    //      server engines (PG/MySQL) use, end-to-end against a real DB
-    "q_jdbc_roundtrip" -> ((s, dir) => {
-      val sup = T(s, dir, "supplier")
-        .selectColumns(Seq("s_suppkey", "s_name", "s_acctbal", "s_nationkey"))
-      val db = s"/tmp/graft_derby_${dirTag(dir)}"
-      graft.sources.JdbcSource.derbyWrite(sup, db, "supplier_rt")
-      graft.sources.JdbcSource.derby(s, db, "supplier_rt")
-        .orderBy("s_suppkey")
-    }),
-
-    // ---- LIVE PostgreSQL roundtrip over the pure-JVM wire-protocol
-    //      client (sources/PgWire.scala, protocol v3 — no JDBC jar): the
-    //      entry provisions a throwaway local cluster (initdb + pg_ctl,
-    //      trust auth), bulk-loads nation via COPY FROM STDIN, and reads
-    //      it back with the PARTITIONED executor-side scan (one wire
-    //      connection per task). Oracle = the source rows from parquet.
-    //      Reference connector: PostgresStream.swift:916.
-    "q_pg_roundtrip" -> ((s, dir) => {
-      val pg = graft.sources.PgWire
-      val conn = pg.ensureLocalServer()
-      val nat = T(s, dir, "nation")
-        .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
-      val tbl = s"nation_rt_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      pg.writeTable(nat, conn, tbl)
-      pg.read(s, conn, tbl, "n_nationkey", numPartitions = 4)
-        .orderBy("n_nationkey")
-    }),
-
-    // ---- RANGE-partitioned live-PG read (the INDEXABLE partitioned-scan
-    //      shape: n disjoint `key >= lo AND key < hi` slices instead of n
-    //      full `mod(hashtext)` scans) over a table loaded by the STAGED
-    //      exactly-once distributed COPY (per-partition stage tables
-    //      promoted in one transaction). Oracle = the source rows — so
-    //      this row pins range-read == hash-read == parquet truth.
-    "q_pg_range_read" -> ((s, dir) => {
-      val pg = graft.sources.PgWire
-      val conn = pg.ensureLocalServer()
-      val sup = T(s, dir, "supplier")
-        .select(col("s_suppkey").cast("long").as("s_suppkey"),
-          col("s_name").cast("string").as("s_name"),
-          col("s_nationkey").cast("long").as("s_nationkey"),
-          col("s_acctbal").cast("double").as("s_acctbal"))
-      val tbl = s"supplier_rr_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      pg.writeTableDistributed(sup.repartition(3), conn, tbl)
-      pg.readRange(s, conn, tbl, "s_suppkey", numPartitions = 4)
-        .orderBy("s_suppkey")
-    }),
-
-    // ---- SQLite FILE roundtrip through the pure-JVM on-disk-format
-    //      reader/writer (sources/SqliteFile.scala — the driver-less
-    //      answer to the reference's libsqlite3 source/sink): write a
-    //      real .sqlite b-tree file, read it back with the partitioned
-    //      leaf-page scan, oracle = the source rows straight from parquet
-    "q_sqlite_roundtrip" -> ((s, dir) => {
-      val ord = T(s, dir, "orders")
-        .select(col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_custkey").cast("long").as("o_custkey"),
-          col("o_orderstatus").cast("string").as("o_orderstatus"),
-          col("o_totalprice").cast("double").as("o_totalprice"))
-        .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_${dirTag(dir)}.sqlite"
-      graft.sources.SqliteFile.write(ord, path, "orders_rt")
-      graft.sources.SqliteFile.read(s, path, "orders_rt")
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- index-backed KEYED read (r13): the same orders table written
-    //      WITH a single-column index b-tree on o_custkey (leaf type 10 /
-    //      interior type 2, spec-shaped — real SQLite integrity_checks
-    //      and query-plans through it, pinned in SqliteFileSpec); the
-    //      read seeks rowids through the index (log-depth page touches
-    //      per key) and point-reads the table b-tree — the pushdown
-    //      posture of the reference's database connectors
-    //      (SQLiteStream.swift:238). Oracle = the equivalent IN-filter
-    //      over the source parquet.
-    "q_sqlite_index_read" -> ((s, dir) => {
-      val ord = T(s, dir, "orders")
-        .select(col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_custkey").cast("long").as("o_custkey"),
-          col("o_totalprice").cast("double").as("o_totalprice"))
-        .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_idx_${dirTag(dir)}.sqlite"
-      graft.sources.SqliteFile.writeTablesIndexed(
-        Seq(("orders_ix", ord, Seq("o_custkey"))), path)
-      graft.sources.SqliteFile.readIndexed(s, path, "orders_ix", "o_custkey",
-          Seq(1L, 7L, 13L, 25L))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- COMPOSITE-key index read from the pure-JVM SQLite writer: a
-    //      real two-column index b-tree on (o_custkey, o_orderstatus)
-    //      (key-columns-plus-rowid records, promoted separators), range-
-    //      read over a LEXICOGRAPHIC tuple window — the keyed pushdown
-    //      shape of the reference's mutable connectors
-    //      (MutableData.swift:124-196). Oracle replays the window with
-    //      DuckDB row-value comparisons on the source parquet.
-    "q_sqlite_composite_read" -> ((s, dir) => {
-      val ord = T(s, dir, "orders")
-        .select(col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_custkey").cast("long").as("o_custkey"),
-          col("o_orderstatus").cast("string").as("o_orderstatus"),
-          col("o_totalprice").cast("double").as("o_totalprice"))
-        .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_cidx_${dirTag(dir)}.sqlite"
-      graft.sources.SqliteFile.writeTablesIndexedMulti(
-        Seq(("orders_cx", ord, Seq(Seq("o_custkey", "o_orderstatus")))), path)
-      graft.sources.SqliteFile.readIndexedRangeMulti(s, path, "orders_cx",
-          Seq("o_custkey", "o_orderstatus"),
-          Seq(10L, "O"), Seq(20L, "F"))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- WITHOUT ROWID roundtrip: the table IS a clustered-PK index
-    //      b-tree (spec §2.2 — PK columns lead each record, no rowid,
-    //      schema format 4); written by our streaming builder with
-    //      spill-sorted PK order + overflow chains, read back by our
-    //      index-tree reader. Real SQLite interop pinned in
-    //      SqliteFileSpec; oracle = the source rows.
-    "q_sqlite_worowid" -> ((s, dir) => {
-      val cust = T(s, dir, "customer")
-        .select(col("c_name").cast("string").as("c_name"),
-          col("c_custkey").cast("long").as("c_custkey"),
-          col("c_nationkey").cast("long").as("c_nationkey"),
-          col("c_acctbal").cast("double").as("c_acctbal"))
-      val path = s"/tmp/graft_sqlite_worowid_${dirTag(dir)}.sqlite"
-      graft.sources.SqliteFile.writeTablesWithoutRowid(
-        Seq(("customer_wr", cust, Seq("c_custkey"))), path)
-      graft.sources.SqliteFile.read(s, path, "customer_wr")
-        .orderBy("c_custkey")
-    }),
-
-    // ---- crawl step plumbing (QBECrawlStep.swift:16-60,232): bounded
-    //      concurrency + rate cap are real; the fetcher is the offline
-    //      deterministic stub (md5 of the url), so the oracle can verify
-    "q_crawl" -> ((s, dir) => {
-      val urls = T(s, dir, "region")
-        .calculate(Seq("url" -> concat(lit("https://example.invalid/r/"), col("r_regionkey"))))
-        .selectColumns(Seq("r_regionkey", "url"))
-      graft.sources.Crawl.crawl(urls, "url")
-        .selectColumns(Seq("r_regionkey", "url", "crawl_status", "crawl_body"))
-        .warpSort(Seq(Order(col("r_regionkey"))))
-    }),
-
-    // ---- HTTP source (QBEHTTPStep.swift:73): one URL -> one-row table,
-    //      riding the crawl machinery's deterministic offline stub (the
-    //      same fetcher a real deployment swaps for an HTTP client);
-    //      crawl_error/crawl_time dropped (null / wall-clock)
-    "q_http_source" -> ((s, dir) => {
-      graft.sources.HttpSource.read(s, "https://example.invalid/doc/42")
-        .selectColumns(Seq("url", "crawl_status", "crawl_body"))
-    }),
-
-    // ---- partitioned running aggregation — the scale-path rank variant
-    //      (Data.swift:306-311; global rank kept as q_rank for parity)
-    "q_rank_by" -> ((s, dir) => {
-      T(s, dir, "orders")
-        .rankBy(Seq(col("o_custkey")), Seq(
-          ("rn", w => row_number().over(w)),
-          ("running", w => sum(col("o_totalprice").cast(DecimalType(28, 6))).over(w).cast("double"))),
-          Seq(Order(col("o_orderkey"))))
-        .selectColumns(Seq("o_orderkey", "o_custkey", "o_totalprice", "rn", "running"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    // ---- medianPack + medianLow/High + population variance reducers
-    //      (Function.swift:2143-2188, 2196-2268)
-    "q_agg_medianpack" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(WA.warpMedianPack(col("l_quantity")).as("med_pack"),
-             WA.warpMedianLow(col("l_quantity")).as("med_lo"),
-             WA.warpMedianHigh(col("l_quantity")).as("med_hi"),
-             WA.warpVariancePopulation(col("l_quantity")).as("var_pop"),
-             WA.warpStdevPopulation(col("l_quantity")).as("std_pop"),
-             WA.warpCount(col("l_quantity")).as("n_num"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- bounded-memory EXACT median (bracket-and-refine): same result
-    //      as warpMedian/DuckDB median, hash-matched by the oracle, but no
-    //      per-group aggregation buffer — the 100-TB path when a group
-    //      holds a large fraction of the table. Grouped by linestatus so
-    //      this exercises different group shapes than q_agg_stats.
-    // ---- medianPack without whole-group buffers: the bracket-median twin
-    //      of q_agg_medianpack (same reducer semantics, bounded memory)
-    "q_agg_medianpack_scalable" -> ((s, dir) => {
-      graft.ops.BracketMedian.exactMedianPack(
-        T(s, dir, "lineitem"), Seq("l_returnflag"), "l_quantity", out = "med_pack")
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- bivariate statistics from exact decimal moments: corr/covar/
-    //      least-squares fit per group, deterministic under any
-    //      partitioning (unlike streaming-moment corr/regr_slope)
-    "q_regression" -> ((s, dir) => {
-      val q = col("l_quantity"); val p = col("l_extendedprice")
-      T(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          WA.warpCorr(q, p).as("corr_qp"),
-          WA.warpCovarSample(q, p).as("covar_qp"),
-          WA.warpSlope(q, p).as("slope_qp"),
-          WA.warpIntercept(q, p).as("intercept_qp"),
-          WA.warpR2(q, p).as("r2_qp"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- per-type linear TREND over daily activity: slope/intercept/
-    //      corr of (day index, daily count) through the decimal-exact
-    //      bivariate moments — the volume-drift monitor (is this source
-    //      growing, shrinking, how consistently?)
-    "q_trend" -> ((s, dir) => {
-      val daily = T(s, dir, "events")
-        .select(col("event_type"),
-          floor(unix_micros(col("ts")
-            .cast(org.apache.spark.sql.types.TimestampType))
-            / lit(86400000000L)).as("d"))
-        .groupBy("event_type", "d").agg(count(lit(1)).as("cnt"))
-      daily.groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          WA.warpSlope(col("d"), col("cnt")).as("slope"),
-          WA.warpIntercept(col("d"), col("cnt")).as("intercept"),
-          WA.warpCorr(col("d"), col("cnt")).as("corr"))
-        .orderBy("event_type")
-    }),
-
-    // ---- winsorization: clamp into per-group [p05, p95] quantile caps;
-    //      aggregate output pins both the clamped sum and the clip count
-    "q_winsorize" -> ((s, dir) => {
-      graft.ops.Robust.winsorize(
-        T(s, dir, "lineitem").selectColumns(Seq("l_returnflag", "l_extendedprice")),
-        Seq("l_returnflag"), "l_extendedprice", pLo = 0.05, pHi = 0.95)
-        .groupBy(col("l_returnflag"))
-        .agg(count(when(col("winsorized_clipped"), 1)).as("n_clipped"),
-             dsum(col("winsorized")).as("sum_w"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- median imputation: nulls repaired with the group's exact
-    //      median (bracket core); aggregate output proves value + flag
-    "q_impute" -> ((s, dir) => {
-      val withNulls = T(s, dir, "lineitem")
-        .selectColumns(Seq("l_returnflag", "l_linenumber", "l_quantity"))
-        .calculate(Seq("l_quantity" ->
-          when(col("l_linenumber") === 3, lit(null)).otherwise(col("l_quantity"))))
-      graft.ops.Robust.imputeMedian(withNulls, Seq("l_returnflag"), "l_quantity")
-        .groupBy(col("l_returnflag"))
-        .agg(count(when(col("imputed_was_null"), 1)).as("n_imputed"),
-             dsum(col("imputed")).as("sum_q"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- robust per-group outlier screen: modified z-score over
-    //      median/MAD (both via the bounded-memory bracket median) —
-    //      heavy-tail-safe where mean/stdev screens are not
-    "q_outliers" -> ((s, dir) => {
-      graft.ops.Robust.outliers(
-        T(s, dir, "documents").selectColumns(Seq("doc_id", "source", "n_chars")),
-        Seq("source"), "n_chars", cutoff = 2.0)
-        .orderBy("doc_id")
-    }),
-
-    // ---- event-time tolerance dedup (chain semantics): repeats of the
-    //      same (user, type) within 6h of the last KEPT event drop —
-    //      greedy walk, mirrored by a recursive-CTE oracle
-    "q_dedup_tolerance" -> ((s, dir) => {
-      graft.ops.TimeSeries.dedupByTolerance(T(s, dir, "events"),
-          Seq("user_id", "event_type"), "ts",
-          toleranceUs = 21600000000L, tieBreak = "event_id")
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType)).as("us"))
-        .orderBy("user_id", "event_type", "us")
-    }),
-
-    // ---- regular-grid resampling with forward fill: dense daily series
-    //      per user from sparse events, carrying the last observation
-    //      across gaps (integer epoch buckets, engine-portable)
-    "q_gapfill" -> ((s, dir) => {
-      graft.ops.TimeSeries.resampleFill(T(s, dir, "events"),
-        "user_id", "ts", "value", stepUs = 86400000000L, tieBreak = "event_id")
-        .orderBy("user_id", "bucket_ts")
-    }),
-
-    // ---- equi-depth binning: per-group quantile discretization on the
-    //      bracket core; the count-per-bin aggregate doubles as the
-    //      depth-property check (bins hold ~equal row counts)
-    "q_bins" -> ((s, dir) => {
-      graft.ops.Robust.equiDepthBins(
-        T(s, dir, "lineitem").selectColumns(Seq("l_returnflag", "l_extendedprice")),
-        Seq("l_returnflag"), "l_extendedprice", nBins = 4)
-        .groupBy(col("l_returnflag"), col("bin"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "bin")
-    }),
-
-    // ---- linear-interpolation resampling: the gap-fill twin that
-    //      interpolates between neighbors instead of carrying forward
-    "q_interp" -> ((s, dir) => {
-      graft.ops.TimeSeries.resampleInterp(T(s, dir, "events"),
-        "user_id", "ts", "value", stepUs = 86400000000L, tieBreak = "event_id")
-        .orderBy("user_id", "bucket_ts")
-    }),
-
-    // ---- bounded-memory exact multi-quantile: the bracket technique
-    //      generalized to a p25/p50/p75/p95 summary per group — type-7
-    //      interpolation, bit-equal to Spark's buffering `percentile`
-    "q_quantiles" -> ((s, dir) => {
-      graft.ops.BracketMedian.exactQuantiles(
-        T(s, dir, "lineitem"), Seq("l_returnflag"), "l_extendedprice",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95))
-        .orderBy("l_returnflag")
-    }),
-
-    "q_agg_median_scalable" -> ((s, dir) => {
-      graft.ops.BracketMedian.exactMedianFamily(
-        T(s, dir, "lineitem"), Seq("l_linestatus"), "l_quantity", prefix = "med_qty")
-        .orderBy("l_linestatus")
-    }),
-
-    // ---- formula-language queries: the same computations expressed as
-    // Warp formula STRINGS, parsed and compiled by graft.formula.Formula
-    // (Formula.swift:276-350 grammar). Typed contexts (Ctx.forSchema) keep
-    // the compiled plans free of coercion CASE trees.
-    "q_formula_calc" -> ((s, dir) => {
-      val l = T(s, dir, "lineitem")
-      val F = (f: String) => graft.formula.Formula.columnFor(l.schema, f)
-      l.calculate(Seq("revenue" -> F("=[l_extendedprice]*(1-[l_discount])")))
-        .warpFilter(F("=AND([l_discount]>=0.05;[l_quantity]<10)"))
-        .selectColumns(Seq("l_orderkey", "l_linenumber", "revenue"))
-        .warpSort(Seq(Order(col("l_orderkey")), Order(col("l_linenumber"))))
-    }),
-
-    "q_formula_logic" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val F = (f: String) => graft.formula.Formula.columnFor(o.schema, f)
-      o.calculate(Seq(
-        "label" -> F("=IF([o_totalprice]>100000;\"big\";\"small\")"),
-        "fb" -> F("=IFERROR([o_totalprice]/0;0-1)"),        // /0 -> invalid -> fallback
-        "third" -> F("=COALESCE(1/0;[o_totalprice]*2;99)"))) // invalid skipped
-        .selectColumns(Seq("o_orderkey", "label", "fb", "third"))
-        .warpSort(Seq(Order(col("o_orderkey"))))
-    }),
-
-    "q_formula_string" -> ((s, dir) => {
-      val p = T(s, dir, "part")
-      val F = (f: String) => graft.formula.Formula.columnFor(p.schema, f)
-      p.calculate(Seq(
-        "tag" -> F("=UPPER([p_name]) & \"-\" & [p_brand]"),
-        "midpart" -> F("=MID([p_name];2;3)"),
-        "nlen" -> F("=LENGTH([p_name])+0")))
-        .selectColumns(Seq("p_partkey", "tag", "midpart", "nlen"))
-        .warpSort(Seq(Order(col("p_partkey"))))
-    }),
-
-    // ---- list + pack function group (§2.4; pack format Value.swift:266-380)
-    "q_func_list" -> ((s, dir) => {
-      val withComma = concat(col("n_name"), lit(",x")) // exercises pack escaping
-      val lst = WF.fnList(col("n_name"), withComma)
-      T(s, dir, "nation").calculate(Seq(
-        "packed" -> WF.fnPackList(lst),
-        "n_items" -> WF.fnItems(lst),
-        "second" -> WF.fnNth(lst, lit(2)),
-        "unpacked2" -> WF.fnNth(WF.fnUnpackList(WF.fnPackList(lst)), lit(2)),
-        "glued" -> WF.fnGlue(lst, "-")))
-        .selectColumns(Seq("n_nationkey", "packed", "n_items", "second", "unpacked2", "glued"))
-        .warpSort(Seq(Order(col("n_nationkey"))))
-    }),
-
-    // ==== training-data pipeline operators ====
-
-    // ---- exact dedup on content hash
-    // ---- incremental intake dedup: a new batch (fresh docs + re-keyed
-    //      copies of already-admitted content) anti-joined against the
-    //      historical fingerprint ledger — only genuinely novel content
-    //      survives, and history is never re-scanned as text
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val history = docs.warpFilter(col("doc_id") < 250)
-      val ledger = graft.pipeline.Dedup.fingerprintLedger(history, "text", "doc_id")
-      val batch = docs.warpFilter(col("doc_id") >= 250)
-        .warpUnion(docs.warpFilter(col("doc_id") < 50)
-          .calculate(Seq("doc_id" -> (col("doc_id") + 300000))))
-      graft.pipeline.Dedup.incrementalExact(batch, "text", "doc_id", ledger)
-        .selectColumns(Seq("doc_id", "dupes"))
-        .orderBy("doc_id")
-    }),
-
-    "q_dedup_exact" -> ((s, dir) => {
-      // plant exact duplicates: docs 0-49 appear again under new ids
-      val docs = T(s, dir, "documents")
-      val dupes = docs.warpFilter(col("doc_id") < 50)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 100000)))
-      graft.pipeline.Dedup.exact(docs.warpUnion(dupes), "text", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // ---- sub-document span dedup (keep-first repeated-span removal)
-    "q_dedup_spans" -> ((s, dir) => {
-      // plant span repeats: docs 0-24 re-appear as new docs whose text is
-      // their first 20 words TWICE — for docs with >= 20 words the planted
-      // chunks align with the originals' first two spans, exercising both
-      // cross-document and within-document keep-first drops
-      val docs = T(s, dir, "documents")
-      val head20 = array_join(slice(split(trim(lower(col("text"))), "\\s+"), 1, 20), " ")
-      val planted = docs.warpFilter(col("doc_id") < 25).calculate(Seq(
-        "doc_id" -> (col("doc_id") + 200000),
-        "text" -> concat_ws(" ", head20, head20)))
-      graft.pipeline.Dedup.dedupSpans(docs.warpUnion(planted), "text", "doc_id", 10)
-        .orderBy("doc_id")
-    }),
-
-    // ---- MinHash LSH near-dup pairs (no SQL oracle: xxhash64-based)
-    "q_dedup_minhash" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      // plant near-duplicates: docs 0-49 with a few words appended
-      val near = docs.warpFilter(col("doc_id") < 50).calculate(Seq(
-        "doc_id" -> (col("doc_id") + 100000),
-        "text" -> concat(col("text"), lit(" zz yy xx"))))
-      graft.pipeline.Dedup.minhashPairs(docs.warpUnion(near), "text", "doc_id",
-        shingleSize = 5, numHashes = 64, bands = 16, jaccardThreshold = 0.5)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- incremental near-dup intake: new batch (edited copies of
-    //      history + genuinely new docs) probed against the persisted
-    //      minhash ledger — history is never re-shingled (no SQL oracle:
-    //      hash-seeded, like the other minhash ops)
-    "q_dedup_incr_near" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val ledger = graft.pipeline.Dedup.minhashLedger(
-        docs, "text", "doc_id", shingleSize = 5, numHashes = 64, bands = 16)
-      val batch = docs.warpFilter(col("doc_id") < 40).calculate(Seq(
-          "doc_id" -> (col("doc_id") + 500000),
-          "text" -> concat(col("text"), lit(" zz yy xx"))))
-        .warpUnion(docs.warpFilter(col("doc_id") < 10).calculate(Seq(
-          "doc_id" -> (col("doc_id") + 600000),
-          "text" -> concat(lit("totally fresh unrelated words "), col("doc_id").cast("string")))))
-      graft.pipeline.Dedup.incrementalNearDup(batch, "text", "doc_id", ledger,
-        shingleSize = 5, numHashes = 64, bands = 16, jaccardThreshold = 0.5)
-        .orderBy("new_id", "hist_id")
-    }),
-
-    // ---- md5-tier hash-exact twin of the incremental intake (VERDICT
-    //      r11 item 8): the same batch-vs-ledger probe over engine-
-    //      replayable md5 signatures, so the incremental path gets a
-    //      REAL oracle gate like q_dedup_minhash_md5 gives the batch path
-    "q_dedup_incr_md5" -> ((s, dir) => {
-      // md5-tier GAUGE sizing discipline (same as q_dedup_minhash_md5):
-      // the md5 tier pays one md5 per (hash x shingle), so the gauge
-      // history is a 1-in-5 slice — the production twin q_dedup_incr_near
-      // runs the one-pass kernel over the full corpus
-      val docs = T(s, dir, "documents")
-      val hist = docs.warpFilter(col("doc_id") % 5 === 0)
-      val ledger = graft.pipeline.Dedup.minhashLedgerMd5(
-        hist, "text", "doc_id", shingleSize = 3, numHashes = 16, bands = 4)
-      val batch = docs.warpFilter(col("doc_id") < 40).calculate(Seq(
-          "doc_id" -> (col("doc_id") + 500000),
-          "text" -> concat(col("text"), lit(" zz yy xx"))))
-        .warpUnion(docs.warpFilter(col("doc_id") < 10).calculate(Seq(
-          "doc_id" -> (col("doc_id") + 600000),
-          "text" -> concat(lit("totally fresh unrelated words "), col("doc_id").cast("string")))))
-      graft.pipeline.Dedup.incrementalNearDupMd5(batch, "text", "doc_id", ledger,
-        shingleSize = 3, numHashes = 16, bands = 4, jaccardThreshold = 0.5)
-        .orderBy("new_id", "hist_id")
-    }),
-
-    // ---- SimHash near-dup pairs (no SQL oracle)
-    "q_dedup_simhash" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val near = docs.warpFilter(col("doc_id") < 50).calculate(Seq(
-        "doc_id" -> (col("doc_id") + 100000),
-        "text" -> concat(col("text"), lit(" zz"))))
-      graft.pipeline.Dedup.simhashPairs(docs.warpUnion(near), "text", "doc_id", maxHamming = 3)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- exact n-gram (trigram) Jaccard pairs — the no-hash dedup
-    //      baseline, fully SQL-expressible so it carries a REAL oracle
-    //      (unlike the seeded minhash/simhash variants). Quadratic per
-    //      blocking set by design: it is the small-data / verification
-    //      path; the LSH variants are the 100 TB path.
-    "q_dedup_jaccard" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 50 === 0)
-      val near = docs.calculate(Seq(
-        "doc_id" -> (col("doc_id") + 1000000),
-        "text" -> concat(col("text"), lit(" nearly identical content"))))
-      graft.pipeline.Dedup.ngramJaccardPairs(docs.warpUnion(near),
-        "text", "doc_id", shingleSize = 3, threshold = 0.5)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- contrastive triplet mining: best exact near-dup as the
-    //      positive, md5-bucket non-dups as negatives (anti-joined
-    //      against the FULL exact pair set so no secret near-dup
-    //      poisons the loss) — the embedding-training data constructor
-    "q_contrastive" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 7 === 0)
-      val near = docs.calculate(Seq(
-        "doc_id" -> (col("doc_id") + 1000000),
-        "text" -> concat(col("text"), lit(" extra trailing words appended"))))
-      // buckets pinned to 16: the oracle's md5 modulus is a literal, and
-      // the gauge corpus is small enough that auto-sizing would floor to
-      // 16 anyway — pinning keeps the construct (and hashes) explicit
-      graft.pipeline.Preference.contrastiveTriplets(docs.warpUnion(near),
-        "text", "doc_id", threshold = 0.6, kNeg = 3, buckets = 16)
-        .orderBy("anchor_id", "neg_rank")
-    }),
-
-    // ---- EXACT containment join (|A∩B|/|A| ≥ t): the asymmetric
-    //      sub-document dedup measure — truncations and quote-heavy
-    //      derivations that symmetric Jaccard misses. Planted fixture:
-    //      word-level half-truncations of sampled docs (token sets are
-    //      strict subsets -> containment exactly 1.0)
-    "q_containment" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 13 === 0)
-        .select(col("doc_id"), col("text"))
-      val toksArr = split(trim(lower(col("text"))), "\\s+")
-      val trunc = docs.select((col("doc_id") + 3000000).as("doc_id"),
-        array_join(slice(toksArr, lit(1), (size(toksArr) / 2).cast("int")), " ")
-          .as("text"))
-      graft.pipeline.Dedup.containmentJoin(docs.unionByName(trunc),
-        "text", "doc_id", threshold = 0.8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- truncation cleanup over the containment join: every doc >= 90%
-    //      contained in a strictly larger doc drops (ties keep the
-    //      smallest id) — emits the KEPT ids with their char counts
-    "q_drop_contained" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 13 === 0)
-        .select(col("doc_id"), col("text"))
-      val toksArr = split(trim(lower(col("text"))), "\\s+")
-      val trunc = docs.select((col("doc_id") + 3000000).as("doc_id"),
-        array_join(slice(toksArr, lit(1), (size(toksArr) / 2).cast("int")), " ")
-          .as("text"))
-      graft.pipeline.Dedup.dropContained(docs.unionByName(trunc),
-          "text", "doc_id", threshold = 0.9)
-        .select(col("doc_id"), length(col("text")).as("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- EXACT near-dup intake screen (probe vs corpus through the
-    //      prefix-filter machinery): provably-complete cross-side pairs —
-    //      what the banded-minhash ledger tier trades away. Oracle =
-    //      independent all-pairs cross-side ground truth
-    "q_dedup_ppjoin_screen" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val corpus = docs.warpFilter(col("doc_id") % 3 === 0)
-      val probes = docs.warpFilter(col("doc_id") % 3 === 1)
-        .warpUnion(docs.warpFilter(col("doc_id") % 3 === 0 && col("doc_id") % 5 === 0)
-          .calculate(Seq(
-            "doc_id" -> (col("doc_id") + 2000000),
-            "text" -> concat(col("text"), lit(" probe trailing suffix")))))
-      graft.pipeline.Dedup.prefixJaccardScreen(corpus, probes,
-        "text", "doc_id", threshold = 0.6)
-        .orderBy("probe_id", "corpus_id")
-    }),
-
-    // ---- prefix-filtered EXACT Jaccard self-join (SSJoin/PPJoin family):
-    //      exact like q_dedup_jaccard (provably no false negatives — the
-    //      oracle is the independent all-pairs ground truth) but WITHOUT
-    //      the cross product: candidates come only from rare-first prefix
-    //      token collisions, the 100 TB-safe exact-similarity-join shape
-    "q_dedup_ppjoin" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 7 === 0)
-      val near = docs.calculate(Seq(
-        "doc_id" -> (col("doc_id") + 1000000),
-        "text" -> concat(col("text"), lit(" extra trailing words appended"))))
-      graft.pipeline.Dedup.prefixJaccardJoin(docs.warpUnion(near),
-        "text", "doc_id", threshold = 0.6)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- md5-tier SimHash pairs: the pigeonhole-quarter signature-dedup
-    //      shape (signatures -> quarter-block join -> Hamming verify)
-    //      through the PRODUCTION pair machinery (signaturePairs), with
-    //      md5-derived token hashes so signatures, quarters, and Hamming
-    //      all replay in the DuckDB oracle (the seeded kernel tier stays
-    //      rows-only; this is its hash-exact gauge twin)
-    "q_dedup_simhash_md5" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val near = docs.warpFilter(col("doc_id") < 50).calculate(Seq(
-        "doc_id" -> (col("doc_id") + 100000),
-        "text" -> concat(col("text"), lit(" zz"))))
-      graft.pipeline.Dedup.signaturePairs(
-        graft.pipeline.Dedup.simhashMd5Sigs(docs.warpUnion(near),
-          "text", "doc_id"),
-        maxHamming = 3)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- md5-tier MinHash LSH pairs: the banded-LSH pipeline shape
-    //      (signatures -> band-bucket join -> exact-Jaccard verify) with
-    //      md5-derived hash functions, so the WHOLE path — band keys
-    //      included — replays in the DuckDB oracle (the seeded kernel tier
-    //      stays rows-only; this is its hash-exact gauge twin)
-    "q_dedup_minhash_md5" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").warpFilter(col("doc_id") % 50 === 0)
-      val near = docs.calculate(Seq(
-        "doc_id" -> (col("doc_id") + 1000000),
-        "text" -> concat(col("text"), lit(" nearly identical content"))))
-      graft.pipeline.Dedup.minhashPairsMd5(docs.warpUnion(near),
-        "text", "doc_id", shingleSize = 3, numHashes = 16, bands = 4,
-        jaccardThreshold = 0.5)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- banded-Levenshtein fuzzy pairs over a 48-char key (edit
-    //      distance over full documents is not a 100 TB operation; the
-    //      length-band blocking is COMPLETE for the threshold, so a plain
-    //      quadratic SQL oracle verifies it exactly)
-    "q_dedup_fuzzy" -> ((s, dir) => {
-      val keyed = T(s, dir, "documents")
-        .select(col("doc_id"), substring(col("text"), 1, 48).as("k"))
-      graft.pipeline.Dedup.fuzzyPairs(keyed, "k", "doc_id", maxDist = 4)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- Bloom-gated cross-corpus dedup: flag incoming docs already in
-    //      a historical corpus. The two corpora are overlapping md5-bucket
-    //      slices (the q_split recipe) — a re-crawled batch partially
-    //      overlapping yesterday's ingest. The Bloom gate runs map-side;
-    //      only gate survivors reach the exact (hash, length) semi-join,
-    //      so the result is exact and the oracle is plain EXISTS.
-    "q_dedup_bloom" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val bk = graft.pipeline.Sampling.hashBucket(col("doc_id"), 100)
-      graft.pipeline.Dedup.crossDupes(
-        docs.warpFilter(bk < 60), docs.warpFilter(bk >= 30),
-        "text", "doc_id", expectedItems = 100000)
-        .selectColumns(Seq("doc_id", "source"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- train/test contamination: docs in the train split sharing >= 2
-    //      distinct trigrams with any doc in the held-out split (n=3 fits
-    //      these short synthetic docs; real corpora use the published
-    //      n=13). Gram HASHES cross the shuffle, never gram strings.
-    "q_contamination" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.pipeline.Dedup.contamination(
-        docs.warpFilter(col("doc_id") % 10 =!= 7),
-        docs.warpFilter(col("doc_id") % 10 === 7),
-        "text", "doc_id", n = 3, minOverlap = 2)
-        .orderBy("doc_id", "probe_id")
-    }),
-
-    // ---- embedding-space decontamination: corpus vectors within tau
-    //      cosine of any held-out probe — catches paraphrased benchmark
-    //      leakage that shares no n-grams with the probe text; probes
-    //      broadcast (eval sets are small), corpus scans once, exact and
-    //      seedless so the oracle replays it bit-for-bit
-    "q_contamination_embed" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.semanticContamination(
-        emb.warpFilter(col("vec_id") % 50 =!= 0),
-        emb.warpFilter(col("vec_id") % 50 === 0),
-        "embedding", "vec_id", "vec_id", tau = 0.35)
-        .orderBy("id", "probe_id")
-    }),
-
-    // ---- n-gram novelty vs the reference corpus: the memorization-risk
-    //      gauge (share of a doc's distinct trigrams absent from the
-    //      reference) — the inverse of the contamination screen
-    "q_novelty" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.pipeline.Dedup.noveltyScore(
-        docs.warpFilter(col("doc_id") % 10 === 7),
-        docs.warpFilter(col("doc_id") % 10 =!= 7),
-        "text", "doc_id", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // ---- out-of-vocabulary rate vs the corpus top-16 vocabulary
-    //      (CCNet-style rarity signal; ties break on the token string so
-    //      the vocabulary is engine-reproducible. topK=16 because the
-    //      synthetic corpus has only 31 distinct tokens — real corpora
-    //      use the 10k default)
-    "q_text_oov" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.oovRate(
-        T(s, dir, "documents"), "doc_id", "text", topK = 16)
-        .orderBy("doc_id")
-    }),
-
-    // ---- unigram-LM mean negative log likelihood (self-trained; the
-    //      CCNet-style perplexity quality signal). Per-token logprobs are
-    //      decimal-summed and the mean rounded to 6 dp, so the oracle's
-    //      ln() needs only ulp-level agreement, not bit equality.
-    "q_text_lm" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.lmScore(
-        T(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- bigram LM score (add-k smoothed): the next step toward CCNet's
-    //      n-gram perplexity filter — scores word ORDER, not just word
-    //      rarity. Same decimal-summed portability recipe as q_text_lm.
-    "q_text_lm2" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.lmScoreBigram(
-        T(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- CCNet-style perplexity bucketing: self-trained unigram NLL,
-    //      exact interpolated tercile cuts, head/middle/tail tags — the
-    //      bucket-by-LM-quality slice CCNet trains from, fully replayable
-    "q_ccnet_buckets" -> ((s, dir) =>
-      graft.pipeline.TextAnalysis.perplexityBuckets(
-        T(s, dir, "documents"), "doc_id", "text").orderBy("doc_id")),
-
-    // ---- per-source unigram KL divergence from the corpus blend: the
-    //      mixture-design companion to q_temperature_mix — which sources
-    //      sit far from the mixture a temperature flatten would produce.
-    //      Decimal-summed addends (the dsum recipe), vocab-sized joins
-    "q_source_divergence" -> ((s, dir) =>
-      graft.pipeline.TextAnalysis.sourceDivergence(
-          T(s, dir, "documents"), "source", "text")
-        .orderBy("source")),
-
-    // ---- BPE tokenizer training (Sennrich 2016). Three facets:
-    //      round-1 adjacent-pair statistics (a pure two-aggregate plan,
-    //      full DuckDB oracle), the iterative trainer (deterministic
-    //      count-desc/lexicographic tie-break — FULLY oracled by
-    //      unrolling the 16 greedy rounds as a DuckDB CTE chain, see
-    //      [[bpeTrainOracle]]), and segmentation with the trained merges
-    //      (ALSO fully oracled: [[bpeSegmentOracle]] recomputes the
-    //      8-merge fixture and replays the per-word fold positionally;
-    //      reconstruction law additionally pinned in BpeSpec). Scale
-    //      shape: ONE corpus pass, then vocabulary-sized iterations —
-    //      see Bpe.scala's scaladoc.
-    "q_bpe_pairs" -> ((s, dir) => {
-      graft.pipeline.Bpe.pairCounts(
-        graft.pipeline.Bpe.initialVocab(T(s, dir, "documents"), "text"))
-        .orderBy("l", "r")
-    }),
-    "q_bpe_train" -> ((s, dir) =>
-      graft.pipeline.Bpe.trainMerges(T(s, dir, "documents"), "text",
-        numMerges = 16).orderBy("rank")),
-    "q_bpe_segment" -> ((s, dir) => {
-      val merges = bpeMergeFixture(s, dir)
-      // NULL text tokenizes as '' (both engines): a pipeline emits a row
-      // per doc, never drops records at the tokenizer
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          flatten(graft.pipeline.Bpe.segment(coalesce(col("text"), lit("")), merges))
-            .as("pieces"))
-        .select(col("doc_id"), size(col("pieces")).as("n_pieces"),
-          concat_ws(" ", slice(col("pieces"), 1, 12)).as("head_pieces"))
-        .orderBy("doc_id")
-    }),
-    // encode-to-ids: the artifact an LM pipeline actually emits (merges +
-    // vocab frozen into ONE kernel call per document). Fully oracled like
-    // the trainer: DuckDB recomputes the 8-merge fixture, replays the
-    // per-word segmentation positionally, and renumbers the vocabulary by
-    // first occurrence ([[bpeEncodeOracle]]); decode-inversion and unk
-    // laws additionally pinned in BpeSpec.
-    "q_bpe_encode" -> ((s, dir) => {
-      val merges = bpeMergeFixture(s, dir)
-      val vocab = bpeVocabFixture(s, dir)
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.pipeline.Bpe.encode(coalesce(col("text"), lit("")), merges, vocab)
-            .as("ids"))
-        .select(col("doc_id"), size(col("ids")).as("n_ids"),
-          concat_ws(" ", transform(slice(col("ids"), 1, 16),
-            i => i.cast("string"))).as("head_ids"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- text quality metrics (portable arithmetic => full oracle)
-    "q_text_quality" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      T(s, dir, "documents").calculate(Seq(
-        "n_tokens" -> ta.tokenCountWsNonEmpty(col("text")),
-        "n_bpe" -> ta.tokenCountBpe(col("text")),
-        "punct_ratio" -> ta.punctRatio(col("text")),
-        "mean_wlen" -> ta.meanWordLength(col("text")),
-        "sw_en" -> ta.stopwordRatio(col("text"), "en")))
-        .selectColumns(Seq("doc_id", "n_tokens", "n_bpe", "punct_ratio", "mean_wlen", "sw_en"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- composite quality score (heuristic-filter recipe)
-    "q_text_scored" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .calculate(Seq("score" -> graft.pipeline.TextAnalysis.qualityScore(col("text"))))
-        .selectColumns(Seq("doc_id", "score"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- Unicode hygiene. q_text_nfc: NFC normalization vs DuckDB's own
-    //      nfc_normalize — the corpus is already NFC, so a decomposed
-    //      suffix (e + combining acute) forces one real composition per
-    //      row. q_text_fixmojibake: repair is oracle-checked by
-    //      INVERSION — corrupt the text through a latin-1 misdecode
-    //      in-plan (encode/decode), repair with the kernel, and the
-    //      oracle asserts equality with the pristine original text.
-    "q_text_nfc" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .calculate(Seq("nfc" -> graft.pipeline.TextAnalysis.normalizeUnicode(
-          concat(col("text"), lit("e\u0301"))))) // decomposed; NFC composes it
-        .selectColumns(Seq("doc_id", "nfc"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-    "q_text_fixmojibake" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .calculate(Seq("fixed" -> graft.pipeline.TextAnalysis.fixMojibake(
-          decode(encode(col("text"), "UTF-8"), "ISO-8859-1"))))
-        .selectColumns(Seq("doc_id", "fixed"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- TRAINED quality filter (CCNet/fastText-style model-based
-    //      filtering): scoring with literal trained weights is a pure
-    //      map-only sigmoid — fully oracle-checked vs DuckDB recomputing
-    //      all six features; training (iterative exact-decimal gradient
-    //      descent, one aggregate per iteration over a checkpointed
-    //      compact feature table) is ALSO fully oracled — the exact
-    //      decimal sums make each round determinate, so DuckDB replays
-    //      the 12 unrolled iterations ([[classifyTrainOracle]]);
-    //      determinism + convergence additionally pinned in
-    //      ClassifierSpec.
-    "q_classify_score" -> ((s, dir) => {
-      graft.pipeline.Classifier.scored(
-          T(s, dir, "documents"), "text", classifyDemoWeights)
-        .calculate(Seq("score" -> round(col("score"), 6)))
-        .selectColumns(Seq("doc_id", "score"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-    "q_classify_train" -> ((s, dir) =>
-      graft.pipeline.Classifier.weightTable(T(s, dir, "documents"), "text",
-        (col("lang") === "en").cast("double"), iters = 12).orderBy("idx")),
-
-    // ---- classifier evaluation suite over the demo-weight scores and
-    //      the lang='en' label: exact tie-averaged Mann-Whitney AUC
-    //      (bucketed prefix-sum, no global window), fixed-bin calibration,
-    //      and a one-pass threshold sweep — the "should I trust this
-    //      filter at cut x?" reads, each replayed end-to-end in DuckDB
-    "q_classify_auc" -> ((s, dir) => {
-      val sc = graft.pipeline.Classifier.scored(
-        T(s, dir, "documents"), "text", classifyDemoWeights)
-      // total label: NULL lang counts as negative on both engines (the
-      // oracle CTE's CASE ... ELSE 0; aucReport would drop a NULL label)
-      graft.pipeline.Classifier.aucReport(
-        sc, round(col("score"), 6), coalesce(col("lang") === "en", lit(false)))
-    }),
-    "q_classify_calibration" -> ((s, dir) => {
-      val sc = graft.pipeline.Classifier.scored(
-        T(s, dir, "documents"), "text", classifyDemoWeights)
-      graft.pipeline.Classifier.calibrationReport(
-          sc, round(col("score"), 6), coalesce(col("lang") === "en", lit(false)))
-        .warpSort(Seq(Order(col("bin"))))
-    }),
-    "q_classify_thresholds" -> ((s, dir) => {
-      val sc = graft.pipeline.Classifier.scored(
-        T(s, dir, "documents"), "text", classifyDemoWeights)
-      graft.pipeline.Classifier.thresholdReport(
-          sc, round(col("score"), 6), coalesce(col("lang") === "en", lit(false)),
-          (1 to 9).map(_ / 10.0))
-        .warpSort(Seq(Order(col("threshold"))))
-    }),
-
-    // ---- CURATION CHAIN v2, oracle-verified END-TO-END: sub-document
-    //      span dedup -> quality score on the deduped text -> top-80%
-    //      per-source cut -> temperature-flattened mixing -> sequence
-    //      packing. Every stage is an already-oracle-proven operator;
-    //      this entry proves the COMPOSITION (the thing a user actually
-    //      runs) against one DuckDB query assembled from the same
-    //      recipes. Scale shape = the union of the stages' pinned
-    //      shapes: hash-only winner election, shard-partitioned windows,
-    //      broadcast allocations — nothing global, nothing collected.
-    "q_curate_packed" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      val docs = T(s, dir, "documents")
-      val dd = graft.pipeline.Dedup.dedupSpans(docs, "text", "doc_id", 10)
-        .warpFilter(col("n_kept") > 0)
-        .selectColumns(Seq("doc_id", "text_dedup"))
-      val joined = dd.join(docs.selectColumns(Seq("doc_id", "source")), Seq("doc_id"))
-      val scored = joined.calculate(Seq("score" -> ta.qualityScore(col("text_dedup"))))
-      val cut = graft.pipeline.Sampling.keepTopFraction(scored, col("score"),
-        col("source"), col("doc_id"), 0.8)
-      val mixed = graft.pipeline.Sampling.temperatureSample(cut,
-        col("source"), col("doc_id"), 0.5)
-      graft.pipeline.Packing.packSequences(mixed,
-          ta.tokenCountWsNonEmpty(col("text_dedup")), col("source"), col("doc_id"), 256)
-        .selectColumns(Seq("doc_id", "source", "n_tokens", "pack_id", "pack_offset"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- temperature-flattened source mixing (alpha = 0.5); a planted
-    //      head domain (src0 grows 5x) gets trimmed, tail sources kept
-    "q_temperature_mix" -> ((s, dir) => {
-      val base = T(s, dir, "documents").selectColumns(Seq("doc_id", "source"))
-      val planted = T(s, dir, "documents").warpFilter(col("doc_id") < 100)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 400000),
-          "source" -> lit("src0")))
-        .selectColumns(Seq("doc_id", "source"))
-      graft.pipeline.Sampling.temperatureSample(base.warpUnion(planted),
-          col("source"), col("doc_id"), alpha = 0.5)
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- hard per-source cap (at most n docs per domain): skewed corpus
-    //      (src0 planted to 4x the others), two-phase salted path — the
-    //      production shape for mega-domains; result provably identical to
-    //      the plain window the oracle computes
-    "q_source_cap" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").selectColumns(Seq("doc_id", "source"))
-      val planted = T(s, dir, "documents").warpFilter(col("doc_id") % 10 < 3)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 500000),
-          "source" -> lit("src0")))
-        .selectColumns(Seq("doc_id", "source"))
-      graft.pipeline.Sampling.capPerGroup(docs.warpUnion(planted),
-          col("source"), col("doc_id"), n = 15, presaltParts = 4)
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- mergeable per-source distinct sketches -> one merged estimate
-    //      (incremental distinct counting; binary sketches, so rows-only —
-    //      merge-equals-one-pass and accuracy pinned in WarpOpsSpec)
-    "q_distinct_sketch" -> ((s, dir) => {
-      val sk = graft.ops.WarpOps.distinctSketchByShard(
-        T(s, dir, "documents"), col("source"), col("text"))
-      graft.ops.WarpOps.mergeDistinctSketches(sk)
-    }),
-
-    // ---- md5-tier HLL gauge: the DataSketches path above is binary and
-    //      rows-only, so this twin replays the FULL register/estimator
-    //      pipeline (md5 buckets, leading-zero rho, integer-scaled
-    //      register sum, linear-counting correction) hash-exactly in
-    //      DuckDB — the determinate quality gate for the distinct-sketch
-    //      shape, with the exact count and relative error alongside
-    "q_distinct_hll_md5" -> ((s, dir) =>
-      graft.ops.WarpOps.hllMd5Report(T(s, dir, "documents"), col("text"))),
-
-    // ---- per-group md5-tier HLL: distinct texts per source — the
-    //      realistic sketch shape (distinct per domain/tenant), same
-    //      exact-integer register estimator, one row per source
-    "q_distinct_hll_groups" -> ((s, dir) =>
-      graft.ops.WarpOps.hllMd5ReportByGroup(
-          T(s, dir, "documents"), col("source"), col("text"))
-        .withColumnRenamed("grp", "source")
-        .orderBy("source")),
-
-    // ---- HLL set algebra between sources: per-bucket register max IS
-    //      the union sketch (no rescan); inclusion-exclusion over the
-    //      published estimates probes cross-source duplication at sketch
-    //      cost. Exact union/intersection companions at gauge scale.
-    //      Bounded to 5 sources (10 pairs) to keep the report readable
-    "q_hll_algebra" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .warpFilter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      graft.ops.WarpOps.hllMd5SetAlgebra(docs, col("source"), col("text"))
-        .orderBy("grp_a", "grp_b")
-    }),
-
-    // ---- fixed-width histogram (profiler companion): doc length
-    //      distribution, 12 bins over [0, 600)
-    "q_histogram" -> ((s, dir) =>
-      T(s, dir, "documents").histogram(col("n_chars"), 0.0, 600.0, 12)
-        .orderBy("bin")),
-
-    // ---- DSIR-style importance weights vs an in-domain target sample
-    //      (lang='en' docs): mean per-token smoothed log-probability ratio
-    "q_importance" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val target = docs.warpFilter(col("lang") === "en")
-      graft.pipeline.TextAnalysis.importanceWeight(docs, "doc_id", "text",
-          target, "text")
-        .orderBy("doc_id")
-    }),
-
-    // ---- global token-budget selection: md5-rank order, distributed
-    //      prefix-sum (bucketed by rank prefix; the only global window
-    //      runs over the <=256-row bucket-total aggregate)
-    "q_token_budget" -> ((s, dir) => {
-      val docs = T(s, dir, "documents").calculate(Seq(
-        "n_tokens" -> graft.pipeline.TextAnalysis.tokenCountWsNonEmpty(col("text")).cast("long")))
-      graft.pipeline.Sampling.takeTokenBudget(docs, col("doc_id"),
-          col("n_tokens"), budget = 15000L)
-        .selectColumns(Seq("doc_id", "source", "n_tokens", "cum_tokens"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- per-column descriptives (the reference app's column panel,
-    //      QBEColumnViewController.swift:24-31) as one aggregate pass;
-    //      exactDistinct=true is the oracle twin of the default HLL path
-    "q_profile" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .profileColumns(Seq("doc_id", "text", "lang", "source", "n_chars"),
-          exactDistinct = true)
-        .orderBy("column")),
-
-    // ---- size-balanced shard layout + manifest: deterministic token-boundary
-    //      shard assignment (same distributed prefix-sum as q_token_budget)
-    //      and an order-free per-shard checksum manifest
-    "q_shard_manifest" -> ((s, dir) => {
-      val Sa = graft.pipeline.Sampling
-      // total token count (NULL text = 0): a shard manifest must cover
-      // every doc — a NULL weight would orphan the doc from all shards
-      val docs = T(s, dir, "documents").calculate(Seq(
-        "n_tokens" -> coalesce(
-          graft.pipeline.TextAnalysis.tokenCountWsNonEmpty(col("text")).cast("long"),
-          lit(0L))))
-      val assigned = Sa.assignShards(docs, col("doc_id"), col("n_tokens"),
-        tokensPerShard = 2000L)
-      Sa.shardManifest(assigned, col("doc_id"), col("n_tokens"), col("shard_id"))
-        .orderBy("shard_id")
-    }),
-
-    // ---- per-source corpus report card: counts, token totals, mean
-    //      quality (decimal-exact), corpus-wide duplicate incidence
-    // ---- Zipf rank-frequency fit over the top-100 tokens: slope ~ -1 is
-    //      healthy natural text; exact-decimal bivariate moments, so the
-    //      one-row report hash-replays
-    "q_zipf" -> ((s, dir) =>
-      graft.pipeline.TextAnalysis.zipfFit(
-        T(s, dir, "documents"), "text", topN = 100)),
-
-    // ---- duplicate-cluster size histogram: unique mass vs the dedup
-    //      tail — the sizing report before any dedup run; docs 0-24
-    //      planted twice and doc 0 three times so sizes 2 and 3 appear
-    "q_dup_histogram" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val planted = docs.warpFilter(col("doc_id") < 25)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 500000)))
-      val tripled = docs.warpFilter(col("doc_id") === 0)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 600000)))
-      graft.pipeline.Dedup.dupHistogram(
-          docs.warpUnion(planted).warpUnion(tripled), "text")
-        .orderBy("cluster_size")
-    }),
-
-    // ---- cross-source duplication matrix: distinct fingerprints shared
-    //      per source pair + fingerprint-set Jaccard (mirror/scrape
-    //      detection before mixture weighting); docs 0-24 re-tagged under
-    //      a 'mirror' source so the pair machinery is exercised
-    "q_source_overlap" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val planted = docs.warpFilter(col("doc_id") < 25)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 400000),
-          "source" -> lit("mirror")))
-      graft.pipeline.Dedup.sourceOverlap(
-          docs.warpUnion(planted), "text", "source")
-        .orderBy("src_a", "src_b")
-    }),
-
-    "q_corpus_stats" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      val docs = T(s, dir, "documents")
-      // plant duplicates so the dup column exercises: docs 0-24 re-appear
-      val planted = docs.warpFilter(col("doc_id") < 25)
-        .calculate(Seq("doc_id" -> (col("doc_id") + 300000)))
-      val enriched = docs.warpUnion(planted).calculate(Seq(
-        "fp" -> ta.fingerprintMd5(col("text")),
-        "ntok" -> ta.tokenCountWsNonEmpty(col("text")).cast("long"),
-        "score" -> ta.qualityScore(col("text"))))
-      val dupFps = enriched.groupBy(col("fp")).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).select(col("fp"), lit(true).as("__dup"))
-      enriched.join(dupFps, Seq("fp"), "left")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ntok")).as("tok_total"),
-          davg(col("score")).as("avg_quality"),
-          count(col("__dup")).as("n_dup_docs"))
-        .orderBy("source")
-    }),
-
-    // ---- domain-balanced quality filter: top 80% per source by score
-    "q_quality_topfrac" -> ((s, dir) => {
-      val scored = T(s, dir, "documents")
-        .calculate(Seq("score" -> graft.pipeline.TextAnalysis.qualityScore(col("text"))))
-      graft.pipeline.Sampling.keepTopFraction(scored, col("score"),
-          col("source"), col("doc_id"), 0.8)
-        .selectColumns(Seq("doc_id", "source", "score", "keep_frac"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- top-k salient terms per document (tf/df ranking)
-    "q_tfidf_terms" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.salientTerms(T(s, dir, "documents"), "doc_id", "text", 3)
-        .warpSort(Seq(Order(col("doc_id")), Order(col("term_rank"))))
-    }),
-
-    // ---- sketch-gated EXACT heavy hitters: Misra-Gries candidate pass
-    //      (map-only, ≤k counters/partition) then an exact recount of the
-    //      candidates only — the most frequent tokens across the corpus
-    //      without shuffling the full token cardinality
-    "q_heavyhitters" -> ((s, dir) => {
-      val toks = T(s, dir, "documents")
-        .select(explode(graft.pipeline.TextAnalysis.tokens(col("text"))).as("item"))
-      graft.pipeline.HeavyHitters.topKExact(toks, col("item"), n = 20, k = 1 << 14)
-    }),
-
-    // ---- per-window histogram, batch twin of the streaming
-    //      histogramClosed (same daily buckets, same clamped bins)
-    "q_window_hist" -> ((s, dir) => {
-      val (lo, hi, nBins) = (0.0, 100.0, 10)
-      val w = (floor(unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        / lit(86400000000L)) * lit(86400000000L)).as("w")
-      val bin = least(lit(nBins - 1), greatest(lit(0),
-        floor((col("value") - lit(lo)) / lit(hi - lo) * nBins))).cast("int").as("bin")
-      T(s, dir, "events").select(w, bin)
-        .groupBy("w", "bin").agg(count(lit(1)).as("cnt"))
-        .orderBy("w", "bin")
-    }),
-
-    // ---- trending items per tumbling window (batch twin of the
-    //      streaming trendingClosed operator — same buckets, same
-    //      tiebreak; WindowGroupLimit partial top-k)
-    "q_trending" -> ((s, dir) => {
-      val ev = T(s, dir, "events").calculate(Seq("w" ->
-        (floor(unix_micros(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-          / lit(86400000000L)) * lit(86400000000L))))
-      graft.pipeline.HeavyHitters.topKPerGroup(ev, Seq("w"), col("event_type"), n = 3)
-        .warpSort(Seq(Order(col("w")), Order(col("rk"))))
-    }),
-
-    // ---- corpus diversity: pairwise vocabulary Jaccard between sources —
-    //      integer-exact, group-bounded (never token-quadratic)
-    "q_vocab_overlap" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.vocabOverlap(T(s, dir, "documents"), "source", "text")
-        .warpSort(Seq(Order(col("group_a"), numeric = false),
-          Order(col("group_b"), numeric = false)))
-    }),
-
-    // ---- per-group top-k terms: rank-filtered window, executed as
-    //      WindowGroupLimit (partial top-k before the shuffle)
-    "q_topk_per_group" -> ((s, dir) => {
-      val toks = T(s, dir, "documents").select(col("source"),
-        explode(graft.pipeline.TextAnalysis.tokens(col("text"))).as("tok"))
-      graft.pipeline.HeavyHitters.topKPerGroup(toks, Seq("source"), col("tok"), n = 3)
-        .warpSort(Seq(Order(col("source"), numeric = false), Order(col("rk"))))
-    }),
-
-    // ---- deterministic weighted sampling (Efraimidis-Spirakis priority
-    //      keys from md5 — reproducible on any engine, no rand())
-    "q_weighted_sample" -> ((s, dir) => {
-      graft.pipeline.Sampling.weightedSample(
-        T(s, dir, "documents").selectColumns(Seq("doc_id", "source", "n_chars")),
-        col("doc_id"), col("n_chars"), n = 100)
-        .orderBy("doc_id")
-    }),
-
-    // ---- concat-and-chunk sequence packing (per-source token streams)
-    "q_pack_sequences" -> ((s, dir) => {
-      graft.pipeline.Packing.packSequences(T(s, dir, "documents"),
-          graft.pipeline.TextAnalysis.tokenCountWsNonEmpty(col("text")),
-          col("source"), col("doc_id"), budget = 256)
-        .selectColumns(Seq("doc_id", "source", "n_tokens", "pack_id", "pack_offset"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- BM25 ranked retrieval against a keyword query (Lucene idf form):
-    //      in-domain selection / curation sweeps. No token explode: per-doc
-    //      (dl, tf) in one codegen'd projection, one broadcast stats row,
-    //      TakeOrderedAndProject top-k. Exact oracle via the lmScore
-    //      decimal-quantized-contribution recipe.
-    "q_bm25" -> ((s, dir) => {
-      graft.pipeline.Retrieval.bm25TopK(T(s, dir, "documents"),
-        "doc_id", "text", Seq("spark", "merge", "vector"), k = 15)
-    }),
-
-    // ---- hybrid search: reciprocal-rank fusion of the BM25 run and the
-    //      vector top-k run — both runs and the fusion arithmetic are
-    //      deterministic, so the composed oracle replays end-to-end
-    "q_hybrid_search" -> ((s, dir) => {
-      val bm = graft.pipeline.Retrieval.bm25TopK(T(s, dir, "documents"),
-        "doc_id", "text", Seq("spark", "merge", "vector"), k = 15)
-      val vec = graft.pipeline.Similarity.bruteTopK(T(s, dir, "embeddings"),
-        "embedding", "vec_id", queryVec(s, dir), 20)
-      graft.pipeline.Retrieval.rrfFuse(
-        Seq((bm, "doc_id", "bm25"), (vec, "vec_id", "cosine")))
-    }),
-
-    // ---- fixed-token-window chunking with overlap (RAG / long-doc
-    //      preprocessing; the inverse of q_pack_sequences). Map-only.
-    "q_chunk" -> ((s, dir) => {
-      graft.pipeline.Retrieval.chunkByTokens(T(s, dir, "documents"),
-          "doc_id", "text", chunkTokens = 24, overlap = 8)
-        .warpSort(Seq(Order(col("doc_id")), Order(col("chunk_id"))))
-    }),
-
-    // ---- deterministic k-means over the embedding corpus (semantic
-    //      clustering for curation): pinned init/tie-break/decimal-mean
-    //      arithmetic make the full Lloyd iteration EXACTLY replayable by
-    //      the DuckDB oracle (unrolled rounds) — clustering with a
-    //      bit-for-bit external check, not just an inertia eyeball.
-    "q_kmeans" -> ((s, dir) => {
-      graft.pipeline.Cluster.kmeansAssign(T(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2)
-        .withColumn("dist2", round(col("dist2"), 6))
-        .warpSort(Seq(Order(col("vec_id"))))
-    }),
-    // ---- corpus geometry: systematic-pair cosine histogram split by
-    //      same/cross label — the separability gauge (deterministic
-    //      id-offset sampling, never quadratic, oracle-replayed)
-    "q_embed_geometry" -> ((s, dir) => {
-      graft.pipeline.Similarity.geometryReport(T(s, dir, "embeddings"),
-          "embedding", "vec_id", "label")
-        .warpSort(Seq(Order(col("bucket")), Order(col("same_label"), numeric = false)))
-    }),
-
-    // ---- dimension covariance + correlation over the embedding space:
-    //      the PCA/whitening-readiness report (redundant correlated dims,
-    //      dead near-zero-variance dims). Decimal-exact sums; the dim^2
-    //      fan-out is the report size, never row-quadratic
-    "q_embed_covariance" -> ((s, dir) =>
-      graft.pipeline.Cluster.covarianceReport(
-          T(s, dir, "embeddings"), "embedding")
-        .orderBy("i", "j")),
-
-    // ---- PCA-lite: first principal component by deterministic power
-    //      iteration over the oracled covariance matrix (decimal-summed
-    //      rounds, pinned sign), plus the corpus projected onto the
-    //      published rounded component — BOTH fully replayed in DuckDB
-    //      (the covariance CTEs + 30 unrolled matrix-vector rounds)
-    "q_pca_component" -> ((s, dir) => {
-      val (v, lam) = pcaFixture(s, dir)
-      import s.implicits._
-      val l6 = BigDecimal(lam).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
-      v.zipWithIndex.map { case (x, i) => (i + 1, round9(x), l6) }
-        .toDF("i", "loading", "eigenvalue").orderBy("i")
-    }),
-    "q_pca_scores" -> ((s, dir) => {
-      val (v, _) = pcaFixture(s, dir)
-      T(s, dir, "embeddings").select(col("vec_id"),
-          round(graft.pipeline.Similarity.dot(col("embedding"),
-            typedLit(v.map(round9))), 6).as("pc1"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- second principal component by Hotelling deflation: the same
-    //      pinned power iteration over cov − λ₁·v₁v₁ᵀ built from the
-    //      PUBLISHED 9-rounded first component, so the deflation is
-    //      bit-identical on both engines; orthogonality to pc1 is the
-    //      spec-pinned invariant
-    "q_pca_component2" -> ((s, dir) => {
-      val (_, (v2, lam2)) = pcaFixture2(s, dir)
-      import s.implicits._
-      val l6 = BigDecimal(lam2).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
-      v2.zipWithIndex.map { case (x, i) => (i + 1, round9(x), l6) }
-        .toDF("i", "loading", "eigenvalue").orderBy("i")
-    }),
-
-    // ---- Johnson–Lindenstrauss random projection to 8 dims: the
-    //      md5-plane continuous companion of the sign sketch — the
-    //      standard pre-reduction before clustering/ANN at high dims;
-    //      map-only, planes are literals
-    "q_embed_rp" -> ((s, dir) =>
-      graft.pipeline.Similarity.randomProject(
-          T(s, dir, "embeddings"), "embedding", "vec_id", k = RpDims)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id", "j")),
-
-    // ---- embedding outliers: distance-to-centroid z-scores, top-20 —
-    //      the embedding-side data-cleaning gauge (wrong-model rows and
-    //      dead vectors surface here first)
-    "q_embed_outliers" -> ((s, dir) =>
-      graft.pipeline.Cluster.embeddingOutliers(
-        T(s, dir, "embeddings"), "embedding", "vec_id", topK = 20)),
-
-    // ---- 2-D PCA projection: every vector's (pc1, pc2) coordinates
-    //      against the published rounded components — the embedding-map
-    //      export every visualization/debug tool consumes; map-only
-    "q_pca_project" -> ((s, dir) => {
-      val ((v1, _), (v2, _)) = pcaFixture2(s, dir)
-      T(s, dir, "embeddings").select(col("vec_id"),
-          round(graft.pipeline.Similarity.dot(col("embedding"),
-            typedLit(v1.map(round9))), 6).as("pc1"),
-          round(graft.pipeline.Similarity.dot(col("embedding"),
-            typedLit(v2.map(round9))), 6).as("pc2"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- per-dimension z-score standardization: the whitening-lite
-    //      transform covarianceReport diagnoses readiness for — one
-    //      decimal-exact dim-stats aggregate + a broadcast-joined map
-    //      pass; zero-variance dims yield NULL, never ±Inf
-    "q_embed_whiten" -> ((s, dir) =>
-      graft.pipeline.Cluster.standardize(
-          T(s, dir, "embeddings"), "embedding", "vec_id")
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id", "i")),
-
-    // ---- embedding drift: per-label centroid vs the corpus centroid
-    //      (decimal-exact means + fold cosine) — the dataset-shift gauge
-    //      for embedding pipelines, oracle-replayed bit-for-bit
-    "q_embed_drift" -> ((s, dir) => {
-      graft.pipeline.Cluster.embeddingDrift(T(s, dir, "embeddings"),
-          "embedding", "label")
-        .withColumn("centroid_cosine", round(col("centroid_cosine"), 9))
-        .withColumn("centroid_norm", round(col("centroid_norm"), 9))
-        .warpSort(Seq(Order(col("label"))))
-    }),
-
-    "q_kmeans_summary" -> ((s, dir) => {
-      graft.pipeline.Cluster.kmeansSummary(T(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2)
-        .warpSort(Seq(Order(col("cluster"))))
-    }),
-
-    // ---- per-cluster medoid-lite: the member closest to its final
-    //      centroid (deterministic ties to lowest id) — the canonical
-    //      representative document per topic
-    "q_cluster_medoids" -> ((s, dir) =>
-      graft.pipeline.Cluster.medoids(T(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2)
-        .orderBy("cluster")),
-
-    // ---- cluster↔label purity: per-cluster majority label + share —
-    //      the external-validity gauge for the kmeans topic clusters
-    "q_cluster_purity" -> ((s, dir) =>
-      graft.pipeline.Cluster.clusterPurity(T(s, dir, "embeddings"),
-          "embedding", "vec_id", "label", k = 8, iters = 2)
-        .orderBy("cluster")),
-
-    // ---- diversity coreset: k-center greedy (farthest-point) selection —
-    //      maximally-spread seed/eval subset; every pick and distance
-    //      replayed by unrolled SQL rounds
-    "q_coreset" -> ((s, dir) =>
-      graft.pipeline.Sampling.kCenterGreedy(T(s, dir, "embeddings"),
-          "embedding", "vec_id", k = CoresetK)
-        .orderBy("step")),
-
-    // ---- tokenizer fertility per (source, lang): subword-per-word cost
-    //      signal for mixture/budget decisions; all-integer until the
-    //      final division, so exact cross-engine
-    "q_fertility" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.fertilityReport(
-          T(s, dir, "documents"), Seq("source", "lang"), "text")
-        .warpSort(Seq(Order(col("source"), numeric = false),
-          Order(col("lang"), numeric = false)))
-    }),
-
-    // ---- DoReMi-style mixture reweighting: per-source sampling weights
-    //      move multiplicatively by exp(-eta * fertility excess) from the
-    //      doc-share baseline — expensive (high tokens-per-word) slices
-    //      downweighted in one deterministic step; integer-published
-    //      arithmetic end-to-end
-    "q_mixture_reweight" -> ((s, dir) => {
-      // r14: migrated off the pre-r12 legacyDouble construct (VERDICT r13
-      // item 5) — ONE fertility construct (caseless kernel counts +
-      // integer-derived 9-decimal ratio) serves every consumer. r15: the
-      // REPORT presentation moved to DOUBLE (every scale-9 DECIMAL output
-      // is driver-hash red — see TextAnalysis.ratioDouble9), but the cost
-      // signal handed to mixtureReweight stays the exact DECIMAL(18,9) so
-      // its __c9 re-publish remains a lossless decimal multiply and exp()
-      // sees bit-identical doubles on both engines, exactly as before.
-      val fert = graft.pipeline.TextAnalysis.fertilityReport(
-          T(s, dir, "documents"), Seq("source"), "text")
-        .withColumn("fertility", graft.pipeline.TextAnalysis.ratioDecimal9(
-          col("bpe_tokens"), col("ws_tokens")))
-      graft.pipeline.Sampling.mixtureReweight(
-          fert.select(col("source"), col("docs"), col("fertility")),
-          col("docs"), col("fertility"), eta = -1.0)
-        .selectColumns(Seq("source", "docs", "excess", "factor", "weight"))
-        .warpSort(Seq(Order(col("source"), numeric = false)))
-    }),
-
-    // ---- padding-waste report: arrival-order vs length-sorted batching
-    //      (batch ids from DISTRIBUTED row numbers — rankDistributed,
-    //      no single-partition window anywhere)
-    "q_pad_waste" -> ((s, dir) => {
-      graft.pipeline.Packing.padWasteReport(
-          T(s, dir, "documents"), col("doc_id"),
-          graft.pipeline.TextAnalysis.tokenCountWsCaseless(col("text")),
-          batchSize = 8)
-        .warpSort(Seq(Order(col("strategy"), numeric = false)))
-    }),
-
-    // ---- matryoshka-truncation retrieval gauge: recall@10 of exact kNN
-    //      over the FIRST HALF of each embedding vs the full-dimension
-    //      exact graph — the "how much retrieval do cheaper truncated
-    //      embeddings buy" curve, fully deterministic (no seeds; cosine
-    //      ranking is renorm-invariant, so the slice alone suffices)
-    "q_embed_recall_trunc" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val m = emb.select("embedding").head().getSeq[Any](0).length / 2
-      val tr = emb.select(col("vec_id"),
-        slice(col("embedding"), 1, m).as("embedding"))
-      val exact = graft.pipeline.Similarity.knnGraphGemm(
-        emb, "embedding", "vec_id", 10,
-        queries = Some(emb.filter(col("vec_id") < 64)))
-      val approx = graft.pipeline.Similarity.knnGraphGemm(
-        tr, "embedding", "vec_id", 10,
-        queries = Some(tr.filter(col("vec_id") < 64)))
-      graft.pipeline.Similarity.recallReport(exact, approx)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- exact-k uniform per-source sample (eval-set carving): md5
-    //      priority per id, per-group top-k, deterministic and
-    //      engine-replayable
-    "q_sample_k_group" -> ((s, dir) => {
-      graft.pipeline.Sampling.sampleKPerGroup(
-          T(s, dir, "documents"), col("doc_id"), col("source"), k = 20)
-        .selectColumns(Seq("doc_id", "source", "lang"))
-        .warpSort(Seq(Order(col("source"), numeric = false), Order(col("doc_id"))))
-    }),
-
-    // ---- script/character-class mix per corpus slice: the mixed-script
-    //      spam / mislabeled-language curation gauge; explicit code-point
-    //      ranges, integer totals, one rounded ratio
-    "q_text_scripts" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.scriptReport(
-          T(s, dir, "documents"), Seq("source", "lang"), "text")
-        .warpSort(Seq(Order(col("source"), numeric = false),
-          Order(col("lang"), numeric = false)))
-    }),
-
-    // ---- integers-only diagnostic twin of q_fertility (no DOUBLE at
-    //      all): if the ratio query ever diverges cross-engine, this row
-    //      pinpoints WHICH count column (ws_tokens vs bpe_tokens) moved
-    "q_fertility_counts" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.fertilityReport(
-          T(s, dir, "documents"), Seq("source", "lang"), "text")
-        .drop("fertility")
-        .warpSort(Seq(Order(col("source"), numeric = false),
-          Order(col("lang"), numeric = false)))
-    }),
-
-    // ---- r11 bisect probes for the r8-r10 driver-red corpus-statistics
-    //      family (VERDICT r10 item 1; see the oracle-side comment for
-    //      the decision tree). The three agree sentinels are EMPTY
-    //      frames on the Spark side: their oracles emit a row only if
-    //      the driver's DuckDB regex construct disagrees with the
-    //      per-char-class truth, so a red directly names the construct.
-    "q_diag_agree_ws" -> ((s, dir) => {
-      val _ = dir
-      s.range(0).select(lit("ws_split_regex").as("construct"),
-        lit(0L).as("regex_total"), lit(0L).as("charclass_total"))
-    }),
-    "q_diag_agree_bpe" -> ((s, dir) => {
-      val _ = dir
-      s.range(0).select(lit("bpe_extract_all").as("construct"),
-        lit(0L).as("regex_total"), lit(0L).as("charclass_total"))
-    }),
-    "q_diag_agree_latin" -> ((s, dir) => {
-      val _ = dir
-      s.range(0).select(lit("latin_regexp_replace").as("construct"),
-        lit(0L).as("regex_total"), lit(0L).as("charclass_total"))
-    }),
-    // ---- r14 conviction pair for the wide-DECIMAL root cause, r15
-    //      re-adjudicated (VERDICT r14 item 1). r14's design assumed
-    //      DECIMAL(18,9) (int64-backed) was the green tier; the driver
-    //      falsified that: the narrow twin came back RED alongside the
-    //      wide one, with rows/schema green and the sf0.01 value-level
-    //      replay exact — so ANY scale-9 DECIMAL presentation diverges on
-    //      the driver's hash path regardless of physical backing (the
-    //      only decimal outputs ever driver-green are tiny DECIMAL(2,1)
-    //      literals). r15 therefore moved the production ratio columns to
-    //      the proven-green DOUBLE tier (TextAnalysis.ratioDouble9 — the
-    //      identical integer e9 value, one exact cast + one IEEE division,
-    //      changed in lockstep on both engines). The pair now reads:
-    //      _wide keeps the deliberate DECIMAL(20,9) (EXPECTED red, and
-    //      OracleLintSpec's self-test requires its construct flagged);
-    //      _narrow is the production double presentation (expected
-    //      green). Red-wide + green-narrow convicts the DECIMAL-vs-DOUBLE
-    //      presentation by difference in the same artifact that shows
-    //      production green.
-    //      Retired with information extracted (VERDICT r13 item 6): the
-    //      r13 HUGEINT pair q_diag_sum_cast (green) / q_diag_sum_uncast
-    //      (red exactly as designed — DuckDB sum→HUGEINT widening
-    //      convicted; all production sums carry CAST(... AS BIGINT) and
-    //      OracleLintSpec gates the construct).
-    "q_diag_dec_wide" -> ((s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      // deliberately DECIMAL: rebuilt from the integer counts via the
-      // exact decimal form (the production report now presents DOUBLE)
-      graft.pipeline.TextAnalysis.fertilityReport(
-        T(s, dir, "documents"), Seq("source", "lang"), "text")
-        .withColumn("fertility", graft.pipeline.TextAnalysis.ratioDecimal9(
-          col("bpe_tokens"), col("ws_tokens")).cast(DecimalType(20, 9)))
-        .warpSort(Seq(Order(col("source"), numeric = false),
-          Order(col("lang"), numeric = false)))
-    }),
-    "q_diag_dec_narrow" -> ((s, dir) => {
-      graft.pipeline.TextAnalysis.fertilityReport(
-        T(s, dir, "documents"), Seq("source", "lang"), "text")
-        .warpSort(Seq(Order(col("source"), numeric = false),
-          Order(col("lang"), numeric = false)))
-    }),
-    // data-INDEPENDENT double-construct probes: each row is one SQL
-    // expression evaluated from the IDENTICAL source text on both engines
-    // (the shared dblProbeSql builder), so a red names a construct family
-    // with zero data dependence — arith/libm, round-half, literal repr
-    "q_diag_dbl_arith" -> ((s, dir) => { val _ = dir; s.sql(dblProbeSql(dblArithRows)) }),
-    "q_diag_dbl_round" -> ((s, dir) => { val _ = dir; s.sql(dblProbeSql(dblRoundRows)) }),
-    "q_diag_dbl_repr" -> ((s, dir) => { val _ = dir; s.sql(dblProbeSql(dblReprRows)) }),
-    // BIGINT edge values through the same shared-source machinery
-    "q_diag_bigint_edge" -> ((s, dir) => { val _ = dir; s.sql(bigintProbeSql) }),
-    // STRING edge values (empty vs NULL, unicode planes, embedded
-    // whitespace) — the compare-machinery probe for string normalization
-    "q_diag_str_edge" -> ((s, dir) => { val _ = dir; s.sql(strProbeSql) }),
-    // corpus data-profile probe: one row per text/metadata FEATURE present
-    // (docs containing uppercase, digits, tabs, non-ASCII, combining
-    // marks, null lang, ...). Both engines compute presence from explicit
-    // code-point ranges, so this should stay green on any data — and the
-    // VISIBLE spark_rows/oracle_rows fields then reveal the driver-data
-    // profile (which divergence dimensions are even exercisable) in the
-    // round's CORRECTNESS artifact.
-    "q_diag_profile" -> ((s, dir) => {
-      import graft.pipeline.TextAnalysis.classCounts
-      val cc = classCounts(col("text"))
-      def anyc(slot: Int) =
-        sum(when(element_at(cc, slot) > lit(0L), 1L).otherwise(0L))
-      val agg = T(s, dir, "documents").agg(
-        anyc(3).as("upper"), anyc(4).as("digit"), anyc(17).as("tab"),
-        anyc(18).as("cr"), anyc(19).as("lf"), anyc(20).as("vtff"),
-        anyc(6).as("ascii_punct"), anyc(7).as("ascii_ctrl"),
-        anyc(8).as("nonascii"), anyc(9).as("supplementary"),
-        anyc(10).as("combining"), anyc(11).as("unicode_ws"),
-        anyc(12).as("cyrillic"), anyc(13).as("greek"), anyc(14).as("cjk"),
-        sum(when(col("text").isNull, 1L).otherwise(0L)).as("null_text"),
-        sum(when(col("text") === lit(""), 1L).otherwise(0L)).as("empty_text"),
-        sum(when(element_at(cc, 1) > lit(0L) && element_at(cc, 15) === lit(0L),
-          1L).otherwise(0L)).as("ws_only_text"),
-        sum(when(col("lang").isNull, 1L).otherwise(0L)).as("null_lang"),
-        sum(when(col("source").isNull, 1L).otherwise(0L)).as("null_source"))
-      val names = Seq("upper", "digit", "tab", "cr", "lf", "vtff",
-        "ascii_punct", "ascii_ctrl", "nonascii", "supplementary",
-        "combining", "unicode_ws", "cyrillic", "greek", "cjk",
-        "null_text", "empty_text", "ws_only_text", "null_lang", "null_source")
-      val stackArgs = names.map(n => s"'$n', $n").mkString(", ")
-      agg.selectExpr(s"stack(${names.size}, $stackArgs) AS (feature, n_docs)")
-        .filter(col("n_docs") > 0)
-        .warpSort(Seq(Order(col("feature"), numeric = false)))
-    }),
-    // oracle-internal sentinel (empty Spark frame): fires iff the driver
-    // DuckDB's string_split(text,'') stops being one-element-per-CODE-
-    // POINT (e.g. a grapheme-cluster change) — the one construct every
-    // char-class oracle in this family stands on
-    "q_diag_agree_cpsplit" -> ((s, dir) => {
-      val _ = dir
-      s.range(0).select(lit("string_split_cp").as("construct"),
-        lit(0L).as("split_total"), lit(0L).as("length_total"))
-    }),
-
-    // ---- deterministic PageRank over the customer<->supplier trade graph
-    //      (the "domain quality weight" signal at corpus scale): per-edge
-    //      contributions quantize to DECIMAL(30,15) before the per-node
-    //      sum, so 3 full rounds replay bit-for-bit in the unrolled DuckDB
-    //      oracle. The undirected-ized edge set has no dangling nodes;
-    //      the dangling term is still computed each round (and oracled).
-    "q_pagerank" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      // distinct on the INTEGER key pair, node strings built after (r14,
-      // guide §2.3): the dedup shuffle carries two longs per row instead
-      // of two strings, and concat runs once per distinct pair
-      val pairs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey")).distinct()
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-      val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      graft.pipeline.Graph.pageRank(edges, "src", "dst", iters = 3)
-        .withColumn("pagerank", round(col("pagerank"), 9))
-        .warpSort(Seq(Order(col("node"), numeric = false)))
-    }),
-
-    // ---- personalized PageRank over the trade graph: random walk with
-    //      restart at the low-key customer seed set — seed-relative
-    //      importance, same decimal-exact round machinery as q_pagerank,
-    //      oracle-unrolled 3 rounds
-    "q_ppr" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      // distinct on the INTEGER key pair, node strings built after (r14,
-      // guide §2.3): the dedup shuffle carries two longs per row instead
-      // of two strings, and concat runs once per distinct pair
-      val pairs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey")).distinct()
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-      val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "orders").warpFilter(col("o_custkey") < 20)
-        .select(concat(lit("c"), col("o_custkey")).as("id")).distinct()
-      graft.pipeline.Graph.personalizedPageRank(edges, "src", "dst",
-          seeds, "id", iters = 3)
-        .withColumn("ppr", round(col("ppr"), 9))
-        .warpSort(Seq(Order(col("node"), numeric = false)))
-    }),
-
-    // ---- semi-supervised label propagation over the same trade graph:
-    //      a hand-labeled quality signal (rich/poor customers) spreads to
-    //      every node as clamped-seed neighbor means — the scale-a-small-
-    //      label-set move; decimal-exact rounds, oracle-unrolled
-    "q_label_prop" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val l = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      // distinct on the INTEGER key pair, node strings built after (r14,
-      // guide §2.3): the dedup shuffle carries two longs per row instead
-      // of two strings, and concat runs once per distinct pair
-      val pairs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey")).distinct()
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-      val edges = pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = T(s, dir, "customer")
-        .warpFilter(abs(col("c_acctbal")) > 9000)
-        .select(concat(lit("c"), col("c_custkey")).as("id"),
-          when(col("c_acctbal") > 0, 1.0).otherwise(0.0).as("label"))
-      graft.pipeline.Graph.labelPropagation(edges, seeds, "src", "dst",
-          "id", "label", iters = 2)
-        .withColumn("score", round(col("score"), 9))
-        .warpSort(Seq(Order(col("node"), numeric = false)))
-    }),
-
-    // ---- END-TO-END CURATION PIPELINE: the engine's flagship composite —
-    //      quality-score + language-ID (map-only, one pass), filter, exact
-    //      near-dup removal on the normalized-content fingerprint (ONE
-    //      shuffle, keyed on the 16-byte md5 — never the text), then the
-    //      deterministic md5-bucket train/val/test split (map-only,
-    //      rand()-free). At 100 TB this plan is: scan -> project ->
-    //      filter -> one hash shuffle -> project, with every text column
-    //      dropped before the shuffle.
-    "q_curate" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      val scored = T(s, dir, "documents")
-        .calculate(Seq(
-          "score" -> ta.qualityScore(col("text")),
-          "detected" -> ta.langId(col("text"), Seq("en", "de", "es")),
-          "fp" -> ta.fingerprintMd5(col("text"))))
-        .warpFilter(col("score") >= 0.5 && col("detected") === "en")
-        .selectColumns(Seq("doc_id", "score", "fp"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("fp").orderBy("doc_id")
-      val deduped = scored.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1).drop("__rn", "fp")
-      graft.pipeline.Sampling.splitByHash(deduped, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .selectColumns(Seq("doc_id", "score", "split"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- content fingerprint (md5 — engine portable)
-    "q_text_fingerprint" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .calculate(Seq("fp" -> graft.pipeline.TextAnalysis.fingerprintMd5(col("text"))))
-        .selectColumns(Seq("doc_id", "fp"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- language ID heuristic (argmax stopword ratio)
-    "q_text_langid" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      T(s, dir, "documents")
-        .calculate(Seq("detected" -> ta.langId(col("text"), Seq("en", "de", "es"))))
-        .selectColumns(Seq("doc_id", "detected"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- repetition signals (Gopher-style filters; one native kernel pass)
-    "q_text_repetition" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      T(s, dir, "documents").calculate(Seq(
-        "dup_token_ratio" -> ta.dupTokenRatio(col("text")),
-        "top_token_frac" -> ta.topTokenFraction(col("text")),
-        "dup_bigram_ratio" -> ta.dupBigramRatio(col("text")),
-        // the corpus is single-line; fold tokens onto lines so the
-        // duplicate-line filter is exercised non-trivially
-        "dup_line_frac" -> ta.duplicateLineFraction(translate(col("text"), " ", "\n"))))
-        .selectColumns(Seq("doc_id", "dup_token_ratio", "top_token_frac",
-          "dup_bigram_ratio", "dup_line_frac"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- PII detection + redaction (planted deterministically: the
-    //      corpus text is clean, so counts would all be zero otherwise)
-    "q_text_pii" -> ((s, dir) => {
-      val ta = graft.pipeline.TextAnalysis
-      T(s, dir, "documents").calculate(Seq(
-        "synth" -> concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-          lit("@example.com via 10."), (col("doc_id") % 200).cast("string"),
-          lit(".0.1 tel +1555"), lpad(col("doc_id").cast("string"), 7, "0"))))
-        .calculate(Seq(
-          "emails" -> ta.piiEmailCount(col("synth")),
-          "ips" -> ta.piiIpv4Count(col("synth")),
-          "phones" -> ta.piiPhoneCount(col("synth")),
-          "redacted" -> ta.redactPii(col("synth"))))
-        .selectColumns(Seq("doc_id", "emails", "ips", "phones", "redacted"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- duplicate-cluster resolution: connected components over a
-    //      deterministic chain graph (doc i ~ i+1 within each decade).
-    //      Chains are the WORST case for label propagation, so the oracle
-    //      (a recursive CTE) genuinely checks multi-round convergence, not
-    //      just clique collapsing.
-    "q_dedup_clusters" -> ((s, dir) => {
-      graft.pipeline.Dedup.connectedComponents(chainEdges(T(s, dir, "documents")))
-        .orderBy("id")
-    }),
-
-    // ---- near-dedup canonicalization: pairs -> components -> keep the
-    //      minimum id per cluster, pass untouched rows through
-    "q_dedup_canon" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.pipeline.Dedup.dedupByPairs(docs, "doc_id", chainEdges(docs))
-        .selectColumns(Seq("doc_id", "n_chars"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- keep-best canonicalization: same components, but the winner is
-    //      the member with the most characters (tie -> lowest id) — the
-    //      production policy (keep the best copy, not an arbitrary one)
-    "q_dedup_keepbest" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.pipeline.Dedup.dedupByPairsBest(docs, "doc_id", chainEdges(docs), "n_chars")
-        .selectColumns(Seq("doc_id", "n_chars"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- deterministic train/val/test split: md5-bucket assignment, the
-    //      same row lands in the same split on every engine and every run
-    "q_split" -> ((s, dir) => {
-      graft.pipeline.Sampling.splitByHash(T(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .selectColumns(Seq("doc_id", "lang", "split"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- leakage-proof split: whole duplicate CLUSTERS go to one split,
-    //      so a near-dup of a training doc can never leak into val/test;
-    //      unclustered rows fall back to plain id-hash splitting
-    "q_split_cluster" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.pipeline.Sampling.splitByCluster(docs, "doc_id", chainEdges(docs),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .selectColumns(Seq("doc_id", "lang", "split"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- deterministic stratified sampling: per-stratum hash-threshold
-    //      keep fractions (NOT rand() — re-runs agree row-for-row)
-    "q_stratified" -> ((s, dir) => {
-      graft.pipeline.Sampling.stratifiedSample(T(s, dir, "documents"),
-        "doc_id", "lang", Map("en" -> 0.5, "de" -> 0.2))
-        .selectColumns(Seq("doc_id", "lang"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- certainty-driven sample sizing (the engine form of the
-    //      reference's adaptive interactive sampling,
-    //      QBECalculator.swift:55-167): md5-threshold pilot -> standard
-    //      sample-size formula -> md5-threshold sample; every step (driver
-    //      arithmetic included) replays in the DuckDB oracle
-    "q_adaptive_sample" -> ((s, dir) => {
-      graft.pipeline.Sampling.adaptiveSample(
-        T(s, dir, "documents")
-          .withColumn("len", length(col("text")).cast("double")),
-        "doc_id", "len", relErr = 0.05, z = 1.96, pilotN = 200L)
-    }),
-
-    // ---- corpus-level boilerplate line removal (C4 recipe): drop lines
-    //      occurring in >= 78% of documents. The corpus is single-line, so
-    //      tokens are folded onto lines first; the 78% threshold removes
-    //      the most common vocabulary lines and keeps the rest.
-    "q_text_boilerplate" -> ((s, dir) => {
-      // fraction threshold: corpus size is a broadcast scalar INSIDE the
-      // plan — building this query runs no job (pinned by PlanAuditSpec)
-      graft.pipeline.TextAnalysis.removeBoilerplateLinesByFrac(
-        T(s, dir, "documents").calculate(Seq("lined" -> translate(col("text"), " ", "\n"))),
-        "doc_id", "lined", minDocFrac = 0.78)
-        .selectColumns(Seq("doc_id", "clean_text"))
-        .warpSort(Seq(Order(col("doc_id"))))
-    }),
-
-    // ---- brute-force cosine top-k over embeddings (exact-decimal dot)
-    "q_embed_topk" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.bruteTopK(emb, "embedding", "vec_id",
-        queryVec(s, dir), 20)
-    }),
-
-    // ---- PQ index BUILD: train sampled codebooks, encode the corpus,
-    //      persist both (32x smaller than the float corpus)
-    "q_embed_pq_build" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val path = pqIndexPath(s, dir)
-      val books = graft.pipeline.Similarity.pqTrain(emb, "embedding", "vec_id",
-        m = 8, k = 256)
-      graft.pipeline.Similarity.pqWriteIndex(emb, "embedding", "vec_id", books, path)
-      pqCache.remove(path) // rewritten on disk: drop the memo
-      s.read.parquet(path).agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- product-quantized top-k PROBE over the persisted index (no SQL
-    //      oracle: xxhash64-sampled codebooks; recall pinned in
-    //      PipelineSpec). The probe reads codes + norms only — never a
-    //      float vector; scoring = m table lookups + one divide per row
-    "q_embed_pq" -> ((s, dir) => {
-      val path = ensurePqIndex(s, dir)
-      graft.pipeline.Similarity.pqReadTopK(s, path, pqBooks(s, path),
-        "vec_id", queryVec(s, dir), 20)
-    }),
-
-    // ---- IVF-PQ index BUILD: cell-partitioned AND PQ-encoded — the
-    //      billion-scale composition (probe I/O = nProbe/nCells of the
-    //      files x 1/32 of the bytes)
-    "q_embed_ivfpq_build" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val path = ivfPqIndexPath(s, dir)
-      graft.pipeline.Similarity.ivfPqWriteIndex(emb, "embedding", "vec_id",
-        nCells = 16, m = 8, k = 256, path)
-      centroidCache.remove(path); pqCache.remove(path) // rewritten on disk
-      s.read.parquet(path).agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- IVF-PQ probe (no SQL oracle: seeded sample; recall pinned in
-    //      PipelineSpec): partition-prune to 4/16 cells, ADC-score codes —
-    //      no float vector is ever read
-    "q_embed_ivfpq" -> ((s, dir) => {
-      val path = ensureIvfPqIndex(s, dir)
-      graft.pipeline.Similarity.ivfPqReadTopK(s, path,
-        ivfCentroids(s, path), pqBooks(s, path),
-        "vec_id", queryVec(s, dir), 20, nProbe = 4)
-    }),
-
-    // ---- int8 scalar quantization of the embedding corpus (exact oracle:
-    //      the affine code arithmetic is order-fixed double math). The code
-    //      vector is emitted as an md5 over its comma-joined decimal form so
-    //      every output column is scalar-sortable by the comparator.
-    "q_embed_quantize" -> ((s, dir) => {
-      graft.pipeline.Similarity.quantizeInt8(T(s, dir, "embeddings"),
-          "embedding", "vec_id")
-        .select(col("vec_id"), col("q_lo"), col("q_scale"),
-          md5(concat_ws(",", transform(col("q_codes"), x => x.cast("string"))))
-            .as("q_codes_md5"))
-        .warpSort(Seq(Order(col("vec_id"))))
-    }),
-
-    // ---- asymmetric quantized top-k (codes never reconstructed per-dim;
-    //      one kernel dot + stored-sum scalar arithmetic per row)
-    "q_embed_topk_q8" -> ((s, dir) => {
-      val q8 = graft.pipeline.Similarity.quantizeInt8(T(s, dir, "embeddings"),
-        "embedding", "vec_id")
-      graft.pipeline.Similarity.topKQuantized(q8, "vec_id", queryVec(s, dir), 20)
-    }),
-
-    // ---- HARD-NEGATIVE band scan (exact oracle: same fold-order dot
-    //      arithmetic as q_embed_topk, plus a band filter): "close but
-    //      not a duplicate" vectors for contrastive training. The IVF
-    //      variant is the partition-pruned scale path (rows-only: index
-    //      cells are build-seeded; band-subset law pinned in
-    //      PipelineSpec).
-    "q_embed_band" -> ((s, dir) => {
-      graft.pipeline.Similarity.bandScan(T(s, dir, "embeddings"),
-        "embedding", "vec_id", queryVec(s, dir), lo = 0.1, hi = 0.5)
-    }),
-    "q_embed_band_ivf" -> ((s, dir) => {
-      val path = ensureIvfIndex(s, dir)
-      graft.pipeline.Similarity.ivfBandScan(s, path, ivfCentroids(s, path),
-        "embedding", "vec_id", queryVec(s, dir), lo = 0.1, hi = 0.5, nProbe = 8)
-    }),
-
-    // ---- embedding-cosine near-dup pairs (no SQL oracle: hyperplane-
-    //      seeded; recall pinned in PipelineSpec on planted duplicates)
-    "q_dedup_embed" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      // plant near-duplicates: vectors 0-24 re-appear with a tiny nudge
-      val near = emb.warpFilter(col("vec_id") < 25).calculate(Seq(
-        "vec_id" -> (col("vec_id") + 1000000),
-        "embedding" -> transform(col("embedding"), v => v * lit(1.0001f))))
-      // dim passed explicitly: omitting it makes embeddingPairs probe the
-      // dimensionality with a driver-side head()
-      graft.pipeline.Dedup.embeddingPairs(emb.warpUnion(near),
-        "embedding", "vec_id", cosineThreshold = 0.99, dim = queryVec(s, dir).length)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- SemDeDup: deterministic k-means clusters, then in-cluster
-    //      lower-id epsilon-ball pruning — the fully-replayable form of
-    //      semantic dedup (vs q_dedup_embed's seeded-sketch recall<1
-    //      pairs): the oracle unrolls the same Lloyd rounds AND the same
-    //      pairwise cosine compare, so is_dup/dup_of hash-match exactly.
-    "q_dedup_semantic" -> ((s, dir) => {
-      graft.pipeline.Dedup.semantic(T(s, dir, "embeddings"),
-          "embedding", "vec_id", k = 8, iters = 2, tau = 0.92)
-        .warpSort(Seq(Order(col("vec_id"))))
-    }),
-
-    // ---- LSH sketch index BUILD (timed separately: amortized over every
-    //      later probe; oracle = index row count equals corpus count)
-    "q_embed_lsh_build" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val path = lshIndexPath(s, dir)
-      graft.pipeline.Similarity.lshWriteIndex(emb, "embedding",
-        nBits = LshBits, dim = queryVec(s, dir).length, path)
-      s.read.parquet(path).agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- LSH-bucketed cosine top-k PROBE over the persisted sketch
-    //      index — one table read; the stored sketches gate candidates
-    //      with per-word XOR+POPCNT before any dot product, so only ~12%
-    //      of the corpus pays a cosine. At this SF per-job fixed cost
-    //      dominates; the algorithmic win of the same index shows in
-    //      q_embed_knn_lsh vs q_embed_knn, where pair count is 4M
-    //      (rows-only check: hyperplanes are engine-local)
-    "q_embed_lsh" -> ((s, dir) => {
-      val path = ensureLshIndex(s, dir)
-      val idx = s.read.parquet(path)
-      graft.pipeline.Similarity.lshTopKIndexed(idx, "embedding", "vec_id",
-        queryVec(s, dir), 20, nBits = LshBits, maxHamming = LshMaxHamming)
-    }),
-
-    // ---- kNN graph, exact: every vector's top-10 neighbors by cosine —
-    //      the all-pairs workload where index amortization actually shows
-    "q_embed_knn" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.knnGraphBrute(emb, "embedding", "vec_id", 10)
-        .orderBy("qid", "id")
-    }),
-
-    // ---- EXACT kNN graph via per-partition dgemm blocks + exact-fold
-    //      candidate re-scoring: same answer (and the same oracle) as
-    //      q_embed_knn without the 400M-iteration codegen loop and its
-    //      profile-compilation warmup cliff
-    "q_embed_knn_gemm" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.knnGraphGemm(emb, "embedding", "vec_id", 10)
-        .orderBy("qid", "id")
-    }),
-
-    // ---- recall@10 of int8-quantized retrieval vs the exact kNN graph:
-    //      the index-quality gauge, with BOTH sides seedless so the whole
-    //      evaluation — quantize, dequantize, two top-k's, the recall
-    //      join — is replayed exactly by the DuckDB oracle.
-    "q_embed_recall_q8" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val exact = graft.pipeline.Similarity.knnGraphGemm(emb, "embedding", "vec_id", 10)
-      val deq = graft.pipeline.Similarity.quantizeInt8(emb, "embedding", "vec_id")
-        .select(col("vec_id"), transform(col("q_codes"),
-          c => col("q_lo") + col("q_scale") * c.cast("double")).as("embedding"))
-      // both sides ride the dgemm path: the approx (dequantized-double)
-      // corpus works because the gemm graph widens per element exactly
-      // where the dot kernel does — same oracle, no 400M-pair codegen loop
-      val approx = graft.pipeline.Similarity.knnGraphGemm(
-        deq, "embedding", "vec_id", 10, queries = Some(emb))
-      graft.pipeline.Similarity.recallReport(exact, approx)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- recall@10 of sketch-gated LSH retrieval vs the exact kNN graph:
-    //      the gauge runs on the ENGINE-REPLAYABLE md5-derived hyperplane
-    //      tier (hyperplanesMd5), so sketches, Hamming gate, top-k and the
-    //      recall join all replay exactly in the DuckDB oracle — the
-    //      determinate quality gate for the LSH path (the production
-    //      256-bit seeded index stays rows-only)
-    "q_embed_recall_lsh" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val planes = graft.pipeline.Similarity.hyperplanesMd5(
-        emb.select("embedding").head().getSeq[Any](0).length, RecallLshBits)
-      val idx = emb.withColumn(
-        graft.pipeline.Similarity.skColName("embedding"),
-        graft.pipeline.Similarity.sketch(col("embedding"), planes))
-      val exact = graft.pipeline.Similarity.knnGraphGemm(
-        emb, "embedding", "vec_id", 10,
-        queries = Some(emb.filter(col("vec_id") < 64)))
-      val approx = graft.pipeline.Similarity.knnGraphSketch(
-        idx, "embedding", "vec_id", 10, maxHamming = RecallLshMaxHamming,
-        queries = Some(idx.filter(col("vec_id") < 64)))
-      graft.pipeline.Similarity.recallReport(exact, approx)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- recall@10 of IVF cell-probed retrieval vs the exact kNN graph:
-    //      cells come from the DETERMINISTIC k-means fit (kmeansFit — the
-    //      q_kmeans arithmetic), so cell ranking, probe join, top-k and
-    //      the recall join replay exactly in the DuckDB oracle — the
-    //      determinate quality gate for the IVF path (the seeded-sample
-    //      ivfIndex tier stays rows-only)
-    "q_embed_recall_ivf" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val (asg, cents) = graft.pipeline.Cluster.kmeansFit(
-        emb, "embedding", "vec_id", k = RecallIvfCells, iters = 2)
-      val assigned = emb.select(col("vec_id"), col("embedding"))
-        .join(asg.select(col("vec_id"), col("cluster").as("__cell")), "vec_id")
-      val queries = emb.filter(col("vec_id") < 64)
-      val exact = graft.pipeline.Similarity.knnGraphGemm(
-        emb, "embedding", "vec_id", 10, queries = Some(queries))
-      val approx = graft.pipeline.Similarity.knnGraphIvfExact(
-        assigned, cents, "embedding", "vec_id", 10, nProbe = RecallIvfProbe,
-        queries = queries)
-      graft.pipeline.Similarity.recallReport(exact, approx)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- rank-sensitive retrieval quality: per-query MRR + binary
-    //      nDCG@10 of the deterministic IVF retrieval vs the exact graph —
-    //      the recall gauge's rank-aware companion; discounts come from a
-    //      shared 12-rounded table so no libm log2 reaches the hash
-    "q_retrieval_ndcg" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val (asg, cents) = graft.pipeline.Cluster.kmeansFit(
-        emb, "embedding", "vec_id", k = RecallIvfCells, iters = 2)
-      val assigned = emb.select(col("vec_id"), col("embedding"))
-        .join(asg.select(col("vec_id"), col("cluster").as("__cell")), "vec_id")
-      val queries = emb.filter(col("vec_id") < 64)
-      val exact = graft.pipeline.Similarity.knnGraphGemm(
-        emb, "embedding", "vec_id", 10, queries = Some(queries))
-      val approx = graft.pipeline.Similarity.knnGraphIvfExact(
-        assigned, cents, "embedding", "vec_id", 10, nProbe = RecallIvfProbe,
-        queries = queries)
-      graft.pipeline.Retrieval.rankedEval(exact, approx, 10)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- recall@10 of product-quantized retrieval vs the exact kNN
-    //      graph: per-subspace codebooks come from the DETERMINISTIC
-    //      k-means fit, so codebooks, codes, reconstruction, ranking and
-    //      the recall join all replay in the DuckDB oracle (four kmeans
-    //      CTE chains + the q8 dequantized-retrieval recipe) — the
-    //      determinate quality gate for the PQ path (the seeded ivfpq /
-    //      pq index tiers stay rows-only)
-    "q_embed_recall_pq" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val dim = emb.select("embedding").head().getSeq[Any](0).length
-      val m = RecallPqSubspaces
-      require(dim % m == 0, s"dim $dim not divisible by $m subspaces")
-      val sub = dim / m
-      val parts = (0 until m).map { si =>
-        val sv = slice(col("embedding"), si * sub + 1, sub)
-        val (asg, cents) = graft.pipeline.Cluster.kmeansFit(
-          emb.select(col("vec_id"), sv.as("sub")), "sub", "vec_id",
-          k = RecallPqCodebook, iters = 1)
-        (asg.select(col("vec_id"), col("cluster").as(s"__c$si")), cents)
-      }
-      val coded = parts.map(_._1).reduce(_.join(_, "vec_id"))
-      val deq = parts.zipWithIndex.foldLeft(coded) {
-        case (d, ((_, cents), si)) =>
-          d.withColumn(s"__d$si",
-            element_at(typedLit(cents.map(_.toSeq).toSeq), col(s"__c$si") + 1))
-      }.select(col("vec_id"),
-        concat((0 until m).map(si => col(s"__d$si")): _*).as("embedding"))
-      val queries = emb.filter(col("vec_id") < 64)
-      val exact = graft.pipeline.Similarity.knnGraphGemm(
-        emb, "embedding", "vec_id", 10, queries = Some(queries))
-      val approx = graft.pipeline.Similarity.knnGraphGemm(
-        deq, "embedding", "vec_id", 10, queries = Some(queries))
-      graft.pipeline.Similarity.recallReport(exact, approx)
-        .warpSort(Seq(Order(col("qid"))))
-    }),
-
-    // ---- kNN label transfer: majority label of the 10 exact nearest
-    //      labeled neighbors, leave-one-out over the first 64 vectors,
-    //      with the known label alongside — semi-supervised labeling AND
-    //      its quality gauge in one determinate, fully replayable entry
-    "q_knn_label" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val pred = graft.pipeline.Similarity.knnLabelTransfer(
-        emb, "embedding", "vec_id", "label", 10,
-        queries = Some(emb.filter(col("vec_id") < 64)))
-      pred.join(emb.select(col("vec_id").cast("long").as("qid"),
-          col("label").as("actual_label")), "qid")
-        .select(col("qid").as("vec_id"), col("pred_label"), col("votes"),
-          col("actual_label"))
-        .orderBy("vec_id")
-    }),
-
-    // ---- kNN graph, sketch-gated over the persisted LSH index: ~88% of
-    //      the 4M candidate pairs fail the one-call native Hamming gate
-    //      before any dot product, and only survivors enter the per-query
-    //      top-k shuffle (rows-only check: hyperplane-seeded)
-    "q_embed_knn_lsh" -> ((s, dir) => {
-      val path = ensureLshIndex(s, dir)
-      graft.pipeline.Similarity.knnGraphSketch(
-        s.read.parquet(path), "embedding", "vec_id", 10,
-        maxHamming = LshMaxHamming)
-        .orderBy("qid", "id")
-    }),
-
-    // ---- BATCH probe pair: 64 query vectors against the corpus — the
-    //      regime the LSH index exists for (single-query probes are
-    //      fixed-job-cost bound; at 64 queries the per-pair gate savings
-    //      dominate). Brute twin is exact (DuckDB-oracled); the gated twin
-    //      is rows-only (hyperplane-seeded), recall pinned in PipelineSpec
-    "q_embed_topk_batch" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      graft.pipeline.Similarity.knnGraphBrute(emb, "embedding", "vec_id", 10,
-        queries = Some(emb.filter(col("vec_id") < 64)))
-        .orderBy("qid", "id")
-    }),
-    "q_embed_lsh_batch" -> ((s, dir) => {
-      val path = ensureLshIndex(s, dir)
-      val idx = s.read.parquet(path)
-      graft.pipeline.Similarity.knnGraphSketch(idx, "embedding", "vec_id", 10,
-        maxHamming = LshMaxHamming,
-        queries = Some(idx.filter(col("vec_id") < 64)))
-        .orderBy("qid", "id")
-    }),
-
-    // ---- IVF index BUILD: persisted partitioned-by-cell + centroid table
-    //      (oracle = index row count equals corpus count)
-    "q_embed_ivf_build" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val path = ivfIndexPath(s, dir)
-      graft.pipeline.Similarity.ivfWriteIndex(emb, "embedding", "vec_id",
-        nCells = 16, path)
-      centroidCache.remove(path) // rewritten on disk: drop the memo
-      s.read.parquet(path).agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- IVF top-k PROBE: the __cell filter prunes non-probed cells at
-    //      the FILE level (rows-only check: centroid sampling engine-local)
-    "q_embed_ivf" -> ((s, dir) => {
-      val path = ensureIvfIndex(s, dir)
-      val idx = s.read.parquet(path)
-      graft.pipeline.Similarity.ivfTopK(idx, ivfCentroids(s, path),
-        "embedding", "vec_id", queryVec(s, dir), 20, nProbe = 4)
-    }),
-
-    // ---- BATCH kNN over the partitioned IVF index: 64 queries ranked
-    //      against the centroid table, broadcast into a cell equi-join —
-    //      the corpus never shuffles, only candidates pay a dot product
-    //      (rows-only: probe set is centroid-seeded; recall pinned in
-    //      PipelineSpec)
-    "q_embed_ivf_batch" -> ((s, dir) => {
-      val path = ensureIvfIndex(s, dir)
-      val idx = s.read.parquet(path)
-      graft.pipeline.Similarity.knnGraphIvf(idx, ivfCentroids(s, path),
-        "embedding", "vec_id", 10, nProbe = 4,
-        queries = idx.filter(col("vec_id") < 64))
-        .orderBy("qid", "id")
-    }),
-
-    // ---- multimodal: metadata transforms never touch the payload bytes
-    "q_media_meta" -> ((s, dir) => {
-      val media = graft.pipeline.Multimodal.fabricate(
-        T(s, dir, "documents"), "doc_id", "text", "image/fake")
-      graft.pipeline.Multimodal.resizeMeta(media, 640, 480)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"))
-        .orderBy("media_id")
-    }),
-
-    // ---- multimodal: frame sampling (explode shape; stub frame bytes)
-    // ---- perceptual image dedup: dHash over real decoded pixels (the
-    //      SimHash machinery pointed at images), pigeonhole-blocked pair
-    //      join; planted byte-identical copies must collide at Hamming 0.
-    //      Seedless but pixel-level, so no SQL oracle — semantics pinned
-    //      in PipelineSpec (declared rows-only, like q_dedup_simhash).
-    "q_image_dhash" -> ((s, dir) => {
-      val base = graft.pipeline.Multimodal.fabricateImages(
-        T(s, dir, "documents").warpFilter(col("doc_id") < 200), "doc_id")
-      val copies = base.filter(col("media_id") < 10)
-        .withColumn("media_id", col("media_id") + 1000000L)
-      val hashed = graft.pipeline.Multimodal.imageDHash(base.unionByName(copies))
-      graft.pipeline.Dedup.signaturePairs(
-        hashed.select(col("media_id").as("id"), col("dhash").as("sig")),
-        maxHamming = 0)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- perceptual audio dedup: RMS-delta fingerprint through the real
-    //      javax.sound decode path, same pigeonhole pair join; planted
-    //      byte-identical clips collide at Hamming 0 (rows-only, pinned
-    //      in PipelineSpec like q_image_dhash)
-    "q_audio_fp" -> ((s, dir) => {
-      val base = graft.pipeline.Multimodal.fabricateAudio(
-        T(s, dir, "documents").warpFilter(col("doc_id") < 200), "doc_id")
-      val copies = base.filter(col("media_id") < 10)
-        .withColumn("media_id", col("media_id") + 1000000L)
-      val hashed = graft.pipeline.Multimodal.audioFingerprint(base.unionByName(copies))
-      graft.pipeline.Dedup.signaturePairs(
-        hashed.select(col("media_id").as("id"), col("afp").as("sig")),
-        maxHamming = 0)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- md5-tier gauge for the perceptual IMAGE dedup path: 9×8 PNGs
-    //      drawn so the correct dHash is an md5-derived pattern (+10
-    //      twins planted at Hamming 0..3), run through the REAL codec →
-    //      dHash → pigeonhole pair join; the DuckDB oracle recomputes
-    //      every pattern from md5 and brute-forces ALL pairs — gating
-    //      codec, hash, flip planting AND blocking completeness at once
-    "q_image_dhash_md5" -> ((s, dir) => {
-      val ids = T(s, dir, "documents").warpFilter(col("doc_id") < 64)
-        .select(col("doc_id").cast("long").as("media_id"),
-          col("doc_id").cast("long").as("key_id"), lit(0).as("flip"))
-      val copies = ids.filter(col("media_id") < 10)
-        .select((col("media_id") + 1000000L).as("media_id"), col("key_id"),
-          (col("key_id") % 4).cast("int").as("flip"))
-      val media = graft.pipeline.Multimodal.fabricatePatternImages(
-        ids.unionByName(copies))
-      val hashed = graft.pipeline.Multimodal.imageDHash(media)
-      graft.pipeline.Dedup.signaturePairs(
-        hashed.select(col("media_id").as("id"), col("dhash").as("sig")),
-        maxHamming = 3)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- md5-tier gauge for the perceptual AUDIO dedup path: WAVs whose
-    //      window-amplitude walk encodes the md5 pattern, through the
-    //      REAL javax.sound decode → RMS fingerprint → pair join
-    "q_audio_fp_md5" -> ((s, dir) => {
-      val ids = T(s, dir, "documents").warpFilter(col("doc_id") < 64)
-        .select(col("doc_id").cast("long").as("media_id"),
-          col("doc_id").cast("long").as("key_id"), lit(0).as("flip"))
-      val copies = ids.filter(col("media_id") < 10)
-        .select((col("media_id") + 1000000L).as("media_id"), col("key_id"),
-          (col("key_id") % 4).cast("int").as("flip"))
-      val media = graft.pipeline.Multimodal.fabricatePatternAudio(
-        ids.unionByName(copies))
-      val hashed = graft.pipeline.Multimodal.audioFingerprint(media)
-      graft.pipeline.Dedup.signaturePairs(
-        hashed.select(col("media_id").as("id"), col("afp").as("sig")),
-        maxHamming = 3)
-        .orderBy("id1", "id2")
-    }),
-
-    "q_media_frames" -> ((s, dir) => {
-      val media = graft.pipeline.Multimodal.fabricate(
-        T(s, dir, "documents"), "doc_id", "text", "video/fake")
-      graft.pipeline.Multimodal.sampleFrames(media, 3)
-        .select(col("media_id"), col("frame_idx"), col("ts_ms"),
-          length(col("frame_data")).as("frame_bytes"))
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    // ---- REAL image codec round-trip (javax.imageio, in-JDK): encode a
-    //      PNG per document whose dimensions are a pure function of the
-    //      id, decode the actual bytes back, then resize-bounded decode
-    //      again — the oracle recomputes what a correct codec MUST return
-    "q_media_decode" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      // bounded corpus slice: the query measures codec CORRECTNESS
-      // end-to-end (6 ImageIO passes per row); full-corpus throughput is
-      // not the contract and would dominate the whole bench
-      val imgs = mm.fabricateImages(
-        T(s, dir, "documents").filter(col("doc_id") < 1000), "doc_id")
-      val decoded = mm.decodeImages(imgs)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"))
-      val resized = mm.decodeImages(mm.resizeImages(imgs, 8, 8))
-        .select(col("media_id"), col("meta.width").as("r_width"),
-          col("meta.height").as("r_height"))
-      decoded.join(resized, "media_id").orderBy("media_id")
-    }),
-
-    // ---- REAL image transcode: PNG fixtures re-encoded as BMP, decoded
-    //      back from the rewritten bytes — the reader's reported format
-    //      and dimensions are the oracle contract
-    "q_media_transcode" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val imgs = mm.fabricateImages(
-        T(s, dir, "documents").filter(col("doc_id") < 1000), "doc_id")
-      mm.decodeImages(mm.transcodeImages(imgs, "bmp"))
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL audio codec round-trip (javax.sound.sampled, in-JDK):
-    //      encode a WAV per document whose duration is a pure function of
-    //      the id, decode the actual bytes back — the oracle recomputes
-    //      what a correct header decode MUST return
-    "q_audio_decode" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val wavs = mm.fabricateAudio(
-        T(s, dir, "documents").filter(col("doc_id") < 1000), "doc_id")
-      mm.decodeAudio(wavs)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("sample_rate"),
-          col("meta.height").as("channels"),
-          col("meta.duration_ms").as("duration_ms"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL audio resample: 8 kHz fixtures down to 4 kHz by linear
-    //      interpolation, then decode the rewritten bytes — frame counts
-    //      halve exactly (fixture frames are even), so duration is
-    //      preserved to the millisecond and the oracle is exact
-    "q_audio_resample" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val wavs = mm.fabricateAudio(
-        T(s, dir, "documents").filter(col("doc_id") < 1000), "doc_id")
-      mm.decodeAudio(mm.resampleAudio(wavs, 4000))
-        .select(col("media_id"), col("meta.width").as("sample_rate"),
-          col("meta.duration_ms").as("duration_ms"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL video container round-trip (RIFF/AVI + MJPEG frames via
-    //      javax.imageio): encode an AVI per document whose geometry is a
-    //      pure function of the id, parse the actual container back —
-    //      the oracle recomputes what a correct header parse MUST return
-    "q_video_decode" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val vids = mm.fabricateVideos(
-        T(s, dir, "documents").filter(col("doc_id") < 500), "doc_id")
-      mm.decodeVideos(vids)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"),
-          col("meta.duration_ms").as("duration_ms"))
-        .orderBy("media_id")
-    }),
-
-    // ---- REAL frame extraction: sample 2 frames per clip from the movi
-    //      stream and DECODE each JPEG — emitted dimensions come from the
-    //      decoded raster, so the oracle checks the whole path
-    "q_video_frames" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val vids = mm.fabricateVideos(
-        T(s, dir, "documents").filter(col("doc_id") < 500), "doc_id")
-      mm.sampleVideoFrames(vids, 2)
-        .orderBy("media_id", "frame_idx")
-    }),
-
-    // ---- REAL inter-frame video (pure-JVM MPEG-1 I/P codec, Mpeg1.scala):
-    //      encode a clip per document — geometry, picture count and 25 fps
-    //      duration all pure functions of the id — then parse the actual
-    //      sequence header and count the actual picture startcodes back.
-    //      The P pictures motion-compensate (interior MBs) and intra-
-    //      refresh (edges), so a correct frame count proves the inter-
-    //      frame structure, not just a header echo. 150 clips: the codec
-    //      is O(pixels·frames) per row and this is a correctness gate.
-    "q_video_mpeg" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val vids = mm.fabricateMpegVideos(
-        T(s, dir, "documents").filter(col("doc_id") < 150), "doc_id")
-      mm.decodeMpegVideos(vids)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"),
-          col("meta.duration_ms").as("duration_ms"))
-        .orderBy("media_id")
-    }),
-
-    // ---- B-picture tier of q_video_mpeg: every clip carries at least one
-    //      B picture (dual references, interpolated MC, B-type VLC). This
-    //      row gates the HEADER/STARTCODE plumbing only (decodeMpegVideos
-    //      scans, it does not decode pixels); the full B-path pixel
-    //      decode is driver-gated by q_video_mpeg_b_decode below.
-    "q_video_mpeg_b" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val vids = mm.fabricateMpegVideosB(
-        T(s, dir, "documents").filter(col("doc_id") < 150), "doc_id")
-      mm.decodeMpegVideos(vids)
-        .select(col("media_id"), col("meta.format").as("format"),
-          col("meta.width").as("width"), col("meta.height").as("height"),
-          col("meta.duration_ms").as("duration_ms"))
-        .orderBy("media_id")
-    }),
-
-    // ---- FULL B-stream pixel decode (r11, ADVICE r10): Mpeg1.decode
-    //      runs over every clip's actual bytes on the executors — a
-    //      VLC desync, wrong reference slot or broken interpolated MC
-    //      throws or miscounts, so the planted frame-count/geometry
-    //      oracle certifies the decode itself, not the header echo
-    "q_video_mpeg_b_decode" -> ((s, dir) => {
-      val mm = graft.pipeline.Multimodal
-      val vids = mm.fabricateMpegVideosB(
-        T(s, dir, "documents").filter(col("doc_id") < 150), "doc_id")
-      mm.decodeMpegFrameStats(vids)
-        .select(col("media_id"), col("frames_decoded"), col("frame_w"),
-          col("frame_h"), col("dims_consistent"))
-        .orderBy("media_id")
-    }),
-
-    // ---- warehouse mutation battery (MutableData.swift:40-196): create →
-    //      insert (schema-aligned, missing column -> null) → keyed update
-    //      (null-safe match) → keyed delete, then read the surviving table.
-    //      Oracle = the equivalent DuckDB UPDATE/DELETE algebra.
-    "q_warehouse_mutate" -> ((s, dir) => {
-      val root = s"/tmp/graft_wh_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      wh.create("nation_mut",
-        T(s, dir, "nation").calculate(Seq("flag" -> lit("old"))))
-      // insert: 5 re-keyed rows; 'flag' is absent from the insert -> null
-      wh.insert("nation_mut", T(s, dir, "nation")
-        .warpFilter(col("n_nationkey") < 5)
-        .calculate(Seq("n_nationkey" -> (col("n_nationkey") + 100)))
-        .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey")))
-      // keyed update: region-2 rows flip flag old -> new (inserted rows
-      // have flag null, which must NOT match 'old' — null-safe semantics)
-      wh.update("nation_mut", Map("n_regionkey" -> 2), "flag", "old", "new")
-      // keyed delete: nations 1 and 2 removed
-      wh.deleteRows("nation_mut", Seq(Map("n_nationkey" -> 1), Map("n_nationkey" -> 2)))
-      wh.read("nation_mut").orderBy("n_nationkey")
-    }),
-
-    // ---- warehouse COMPACTION: a fragmented append-heavy table (64
-    //      part-files) coalesced to target-size files via the staging
-    //      swap; file budget from filesystem metadata, no table scan.
-    //      The read-back aggregate proves rows survive byte-identical.
-    "q_compact" -> ((s, dir) => {
-      val root = s"/tmp/graft_whc_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      wh.create("ord_frag", T(s, dir, "orders").repartition(64))
-      wh.compact("ord_frag", targetBytes = 256L << 20)
-      val nf = wh.fileCount("ord_frag")
-      require(nf <= 4, s"compaction left $nf files")
-      wh.read("ord_frag")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // ---- warehouse range-CLUSTERED rewrite + pruned probe: lineitem
-    //      scattered across files, then clusterBy(l_orderkey) —
-    //      repartitionByRange + in-file sort gives each parquet file a
-    //      disjoint key range, so the probe's pushed filter skips every
-    //      row group outside [1000,2000). Cluster step is fingerprint-
-    //      cached (the index recipe): the PROBE is the measured path.
-    "q_cluster_prune" -> ((s, dir) => {
-      val root = s"/tmp/graft_whk_${dataFp(s, dir, "lineitem")}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      if (!wh.exists("li_clu")) {
-        wh.create("li_clu", T(s, dir, "lineitem")
-          .selectColumns(Seq("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"))
-          .repartition(16))
-        wh.clusterBy("li_clu", Seq("l_orderkey"), targetBytes = 1L << 20)
-      }
-      wh.read("li_clu")
-        .warpFilter(col("l_orderkey") >= 1000 && col("l_orderkey") < 2000)
-        .agg(count(lit(1)).as("n"),
-             dsum(col("l_quantity")).as("sum_qty"),
-             dsum(col("l_extendedprice")).as("sum_price"))
-    }),
-
-    // ---- 2-D Hilbert-curve clustering + probe on the SECOND dimension:
-    //      a 1-D sort would leave l_suppkey full-width per file; the
-    //      curve layout tightens both footers. Cluster step fingerprint-
-    //      cached; the probe is the measured path.
-    "q_curve_prune" -> ((s, dir) => {
-      val root = s"/tmp/graft_whv_${dataFp(s, dir, "lineitem")}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      if (!wh.exists("li_curve")) {
-        wh.create("li_curve", T(s, dir, "lineitem")
-          .selectColumns(Seq("l_orderkey", "l_suppkey", "l_quantity"))
-          .repartition(16))
-        wh.clusterByCurve("li_curve", "l_orderkey", "l_suppkey",
-          order = 12, targetBytes = 1L << 20)
-      }
-      wh.read("li_curve")
-        .warpFilter(col("l_suppkey") < 20 && col("l_orderkey") < 30000)
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    // ---- keyed diff of two table versions: added / removed / changed
-    //      classification from ONE full-outer join
-    "q_table_diff" -> ((s, dir) => {
-      val root = s"/tmp/graft_whd_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      val nation = T(s, dir, "nation")
-        .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
-      wh.create("nat_old", nation)
-      wh.create("nat_new", nation
-        .warpFilter(!col("n_nationkey").isin(1, 2))
-        .calculate(Seq("n_name" -> when(col("n_regionkey") === 2,
-          concat(col("n_name"), lit("_X"))).otherwise(col("n_name"))))
-        .warpUnion(nation.warpFilter(col("n_nationkey") < 3)
-          .calculate(Seq("n_nationkey" -> (col("n_nationkey") + 900)))))
-      wh.diffTables("nat_old", "nat_new", Seq("n_nationkey"))
-        .orderBy("n_nationkey")
-    }),
-
-    // ---- join-key skew report: the salt-or-broadcast diagnostic —
-    //      per-key counts summarized by bracket quantiles
-    "q_skew_report" -> ((s, dir) => {
-      graft.ops.Robust.skewReport(T(s, dir, "lineitem"), Seq("l_suppkey"))
-    }),
-
-    // ---- two-sample drift report: binned KS over pooled equi-width
-    //      bins — integer counts, exact cumulative shares
-    "q_drift" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      graft.ops.Robust.drift(
-        docs.warpFilter(col("doc_id") < 250),
-        docs.warpFilter(col("doc_id") >= 250),
-        "n_chars", nBins = 20)
-        .orderBy("bin")
-    }),
-
-    // ---- warehouse MERGE (upsert): nations 0-9 get re-priced rows, 900+
-    //      are brand-new — one anti-join + union rewrite
-    "q_warehouse_merge" -> ((s, dir) => {
-      val root = s"/tmp/graft_whm_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      wh.create("nation_m", T(s, dir, "nation")
-        .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey")))
-      val updates = T(s, dir, "nation").warpFilter(col("n_nationkey") < 10)
-        .calculate(Seq("n_name" -> concat(col("n_name"), lit("_V2"))))
-        .warpUnion(T(s, dir, "nation").warpFilter(col("n_nationkey") < 3)
-          .calculate(Seq("n_nationkey" -> (col("n_nationkey") + 900))))
-      wh.merge("nation_m", updates, Seq("n_nationkey"))
-      wh.read("nation_m").orderBy("n_nationkey")
-    }),
-
-    // ---- SCD Type 2 dimension maintenance: init at t=100, two change
-    //      batches at t=200/300 covering every case — attribute change
-    //      (close + new version), brand-new key, genuine no-op (identical
-    //      attrs -> NO version), and a second change to a key first seen
-    //      in batch 1. The oracle reconstructs the full version history
-    //      independently from the base table
-    "q_warehouse_scd2" -> ((s, dir) => {
-      val root = s"/tmp/graft_whscd_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      val base = T(s, dir, "nation")
-        .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
-      wh.scd2Init("dim", base, 100L)
-      val batch1 = base.warpFilter(col("n_nationkey") < 10)
-          .calculate(Seq("n_name" -> concat(col("n_name"), lit("_V2"))))
-        .warpUnion(base.warpFilter(col("n_nationkey") < 3)
-          .calculate(Seq("n_nationkey" -> (col("n_nationkey") + 900))))
-        .warpUnion(base.warpFilter(
-          col("n_nationkey") >= 10 && col("n_nationkey") < 15)) // no-ops
-      wh.scd2Apply("dim", batch1, Seq("n_nationkey"), 200L)
-      val batch2 = base.warpFilter(col("n_nationkey") < 5)
-          .calculate(Seq("n_name" -> concat(col("n_name"), lit("_V3"))))
-        .warpUnion(base.warpFilter(col("n_nationkey") < 1)
-          .calculate(Seq("n_nationkey" -> (col("n_nationkey") + 900),
-                         "n_regionkey" -> (col("n_regionkey") + 1))))
-      wh.scd2Apply("dim", batch2, Seq("n_nationkey"), 300L)
-      wh.read("dim").orderBy("n_nationkey", "valid_from")
-    }),
-
-    // ---- Cohen's kappa inter-rater agreement per source: two
-    //      deterministic "annotators" label each document's quality
-    //      bucket from different evidence (char count vs whitespace word
-    //      count); kappa = chance-corrected agreement, the label-QC
-    //      gauge for annotated training data. One exact-BIGINT division
-    //      per group — bit-reproducible cross-engine
-    "q_rater_kappa" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val wc = size(filter(split(trim(lower(col("text"))), "\\s+"),
-        t => length(t) > 0))
-      val r1 = when(col("n_chars") < 216, lit("lo"))
-        .when(col("n_chars") < 374, lit("mid")).otherwise(lit("hi"))
-      val r2 = when(wc < 39, lit("lo"))
-        .when(wc < 69, lit("mid")).otherwise(lit("hi"))
-      graft.pipeline.Classifier.cohenKappa(docs, r1, r2,
-        Seq("source" -> col("source")))
-        .orderBy("source")
-    }),
-
-    // ---- RLHF/DPO preference-pair construction: per (source, lang)
-    //      prompt group, top-3 by score pair as "chosen" against
-    //      bottom-3 as "rejected" with a minimum margin — k²-capped per
-    //      group (never quadratic in group size), deterministic
-    //      tie-breaks, WindowGroupLimit top-k heaps underneath
-    "q_pref_pairs" -> ((s, dir) => {
-      graft.pipeline.Preference.preferencePairs(T(s, dir, "documents"),
-        Seq("source" -> col("source"), "lang" -> col("lang")),
-        col("doc_id"), col("n_chars"), k = 3, margin = 50L)
-        .orderBy("source", "lang", "chosen_id", "rejected_id")
-    }),
-
-    // ---- triangle enumeration with degree-ordered orientation over the
-    //      part co-occurrence graph (parts on adjacent lines of one
-    //      order). The oracle closes wedges by brute 3-way self-join; the
-    //      Spark side generates wedges only from ORIENTED out-edges —
-    //      the skew-safe shape. Part keys ride zero-padded so the
-    //      operator's string node order equals numeric order.
-    "q_graph_triangles" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem").warpFilter(col("l_orderkey") < 6000)
-        .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-          lpad(col("l_partkey").cast("string"), 7, "0").as("pk"))
-      val edges = li.select(col("ok"), col("ln"), col("pk").as("u"))
-        .join(li.select(col("ok"), (col("ln") - 1).as("ln"), col("pk").as("v")),
-          Seq("ok", "ln"))
-        .select("u", "v")
-      graft.pipeline.Graph.triangles(edges, "u", "v")
-        .orderBy("n1", "n2", "n3")
-    }),
-
-    // ---- frequent co-occurring part pairs (A-Priori first step):
-    //      anti-monotone singleton prune BEFORE any pair forms, canonical
-    //      pairs, support = basket count
-    "q_freq_pairs" -> ((s, dir) => {
-      graft.pipeline.HeavyHitters.frequentPairs(T(s, dir, "lineitem"),
-          col("l_orderkey"), col("l_partkey"), minSupport = 2L)
-        .orderBy("item1", "item2")
-    }),
-
-    // ---- Markov event-transition matrix per user stream: strict
-    //      (ts, event_id) ordering, exact counts, one double division
-    //      for the row-normalized probability
-    "q_transitions" -> ((s, dir) => {
-      graft.pipeline.HeavyHitters.transitionMatrix(T(s, dir, "events"),
-          col("user_id"),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType),
-          col("event_type"), col("event_id"))
-        .orderBy("prev_event", "next_event")
-    }),
-
-    // ---- time-weighted average per (user, day): each value holds until
-    //      the next observation; exact decimal mass, one final division.
-    //      Group-bounded lead() window, never global
-    "q_twap" -> ((s, dir) => {
-      graft.ops.TimeSeries.twa(T(s, dir, "events"),
-          col("user_id"),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType),
-          col("value"), 86400000000L, col("event_id"))
-        .orderBy("key", "w")
-    }),
-
-    // ---- DAU / trailing-7-day-WAU stickiness: one distinct pass to
-    //      (day, user), then a calendar-bounded 7-fan range self-join —
-    //      no count-distinct window (Spark has none over ranges)
-    "q_stickiness" -> ((s, dir) => {
-      graft.ops.TimeSeries.stickiness(T(s, dir, "events"),
-          col("user_id"),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        .orderBy("d")
-    }),
-
-    // ---- dictionary (label) encoding: dense contiguous ids for the
-    //      corpus vocabulary via the DISTRIBUTED rank machinery (bucketed
-    //      prefix-sum — no single-partition window), then the encode join
-    //      gated through integer per-doc signatures
-    "q_dict_encode" -> ((s, dir) => {
-      val toks = T(s, dir, "documents").select(col("doc_id"),
-        explode(graft.pipeline.TextAnalysis.tokens(col("text"))).as("tok"))
-      val dict = toks.select("tok").distinct()
-        .rankDistributed(Seq(graft.ops.WarpOps.RunningAgg.RCount("id")),
-          Seq(Order(col("tok"), numeric = false)))
-      toks.join(dict, "tok")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum(col("id")).as("sum_id"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- incremental aggregate-view maintenance: counts + exact decimal
-    //      sums updated from an insert/delete delta batch (deletes ride as
-    //      weight -1) — O(|delta| + |groups|), never a base-table rescan.
-    //      Oracle: the view recomputed directly over the post-delta data.
-    "q_incr_agg" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-      val state0 = graft.pipeline.Incremental.aggState(
-        li.warpFilter(col("l_orderkey") < 30000),
-        Seq("l_returnflag"), Seq("l_quantity", "l_extendedprice"))
-      val deletes = li.warpFilter(col("l_orderkey") < 2000)
-        .calculate(Seq("w" -> lit(-1L)))
-      val inserts = li.warpFilter(
-          col("l_orderkey") >= 30000 && col("l_orderkey") < 32000)
-        .calculate(Seq("w" -> lit(1L)))
-      graft.pipeline.Incremental.applyDelta(state0,
-          deletes.warpUnion(inserts), Seq("l_returnflag"),
-          Seq("l_quantity", "l_extendedprice"), "w")
-        .select(col("l_returnflag"), col("cnt"),
-          col("sum_l_quantity").cast("double").as("sum_qty"),
-          col("sum_l_extendedprice").cast("double").as("sum_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- seventh REAL Structured Streaming driver row: stream-static
-    //      enrichment against an SCD2 dimension — each event joins the
-    //      dimension VERSION valid at its event time (the "join the dim
-    //      as it was" semantics a replayable pipeline needs). Stateless
-    //      stream-static join: no watermark, no sentinel required.
-    "q_stream_scd2_enrich" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
-      val root = s"/tmp/graft_whse_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      val base = T(s, dir, "nation").selectColumns(Seq("n_nationkey", "n_name"))
-      val cutMs = 1704326400000L // 2024-01-04: splits the event fixture
-      wh.scd2Init("dim_e", base, 0L)
-      wh.scd2Apply("dim_e", base.warpFilter(col("n_nationkey") < 12)
-          .calculate(Seq("n_name" -> concat(col("n_name"), lit("_V2")))),
-        Seq("n_nationkey"), cutMs)
-      val dim = wh.read("dim_e")
-      val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
-        .select(col("event_id"),
-          pmod(col("user_id"), lit(25L)).cast("long").as("nk"),
-          col("ts").cast(TimestampType).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_se").toString
-      ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(ev.schema).parquet(tmp)
-      val ems = unix_millis(col("ts"))
-      val out = src.join(dim,
-        col("nk") === col("n_nationkey") && col("valid_from") <= ems &&
-          (col("valid_to").isNull || col("valid_to") > ems))
-        .select(col("event_id"), col("n_name"))
-      val qname = "graft_stream_se_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy("event_id")
-      }
-    }),
-
-    // ---- k-core peeling on the part co-occurrence graph: three rounds
-    //      of remove-degree-below-k, each round one degree aggregate and
-    //      two semi-joins — surviving (node, degree) rows, every round
-    //      replayed by the unrolled oracle
-    "q_kcore" -> ((s, dir) => {
-      val li = T(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-          lpad(col("l_partkey").cast("string"), 7, "0").as("pk"))
-      val edges = li.select(col("ok"), col("ln"), col("pk").as("u"))
-        .join(li.select(col("ok"), (col("ln") - 1).as("ln"), col("pk").as("v")),
-          Seq("ok", "ln"))
-        .select("u", "v")
-      graft.pipeline.Graph.kCorePeel(edges, "u", "v", k = 20, rounds = 3)
-        .orderBy("node")
-    }),
-
-    // ---- declarative data-quality audit ("expectations"): NOT NULL,
-    //      uniqueness, and range rules -> one violations row per rule;
-    //      scan rules share one aggregation pass
-    "q_constraints" -> ((s, dir) => {
-      graft.sources.ParquetWarehouse.audit(T(s, dir, "orders"),
-        notNull = Seq("o_orderkey", "o_orderstatus"),
-        unique = Seq(Seq("o_orderkey"), Seq("o_custkey")),
-        ranges = Seq(("o_totalprice", 0.0, 300000.0)))
-        .orderBy("rule")
-    }),
-
-    // ---- warehouse ANALYZE: per-column row/null/NDV/min/max stats — the
-    //      stats surface pruning and join planning feed from
-    "q_warehouse_stats" -> ((s, dir) => {
-      val root = s"/tmp/graft_whst_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      wh.create("cust_s", T(s, dir, "customer").selectColumns(
-        Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment")))
-      wh.analyze("cust_s").orderBy("col_name")
-    }),
-
-    // ---- XML sink + source round-trip (QBEXMLStep.swift:41-110): write
-    //      the grid document, read it back (header dedup, empty -> null)
-    "q_xml_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_xml_${dataFp(s, dir, "region")}.xml"
-      if (!new java.io.File(out).exists())
-        graft.sources.XmlSource.write(T(s, dir, "region"), out)
-      graft.sources.XmlSource.read(s, out)
-        .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
-        .orderBy("r_regionkey")
-    }),
-
-    // ---- streaming sessionization, batch-equivalence form: the SAME
-    //      flatMapGroupsWithState operator behind sessionizeClosed runs
-    //      here in batch mode (one group pass, empty initial state), so
-    //      the oracle checks the real session-assembly code path against a
-    //      DuckDB gaps-and-islands query. Only CLOSED sessions emit — each
-    //      user's final session stays in state — and the oracle excludes
-    //      each user's last session to match. Times compare as epoch ms:
-    //      the state machine works on Timestamp.getTime (ms), while the
-    //      raw event timestamps carry microseconds.
-    // ---- retention cohorts: users bucketed by first-event day, distinct
-    //      actives per (cohort day, day offset)
-    "q_retention" -> ((s, dir) => {
-      val ts = col("ts").cast(org.apache.spark.sql.types.TimestampType)
-      T(s, dir, "events")
-        .retentionCohorts(col("user_id"), ts, 86400L * 1000000)
-        .orderBy("cohort", "period_offset")
-    }),
-
-    // ---- ordered funnel: signup -> click -> purchase per user, strict
-    //      event-time ordering; timestamps emitted as epoch micros
-    "q_funnel" -> ((s, dir) => {
-      val ts = col("ts").cast(org.apache.spark.sql.types.TimestampType)
-      T(s, dir, "events").funnel(col("user_id"), ts, Seq(
-          "signup" -> (col("event_type") === "signup"),
-          "click" -> (col("event_type") === "click"),
-          "purchase" -> (col("event_type") === "purchase")))
-        .select(col("key").as("user_id"),
-          unix_micros(col("t_signup")).as("us_signup"),
-          unix_micros(col("t_click")).as("us_click"),
-          unix_micros(col("t_purchase")).as("us_purchase"),
-          col("reached"))
-        .orderBy("user_id")
-    }),
-
-    // ---- rolling event-time aggregation: per user, trailing-hour event
-    //      count and value sum at every event (range frame on epoch micros)
-    "q_rolling" -> ((s, dir) => {
-      T(s, dir, "events").rollingByTime(
-          // NTZ -> LTZ cast: session tz is UTC, instant unchanged (the
-          // q_sessionize recipe); unix_micros requires TIMESTAMP
-          Seq(col("user_id")),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType),
-          3600L * 1000000,
-          Seq("n_1h" -> (w => count(lit(1)).over(w)),
-            "sum_1h" -> (w => sum(col("value").cast(DecimalType(28, 6))).over(w)
-              .cast("double"))))
-        .selectColumns(Seq("event_id", "user_id", "n_1h", "sum_1h"))
-        .warpSort(Seq(Order(col("event_id"))))
-    }),
-
-    // ---- streaming per-key admission quota, run in batch mode over the
-    //      bounded events table (the q_sessionize recipe): first 1000
-    //      events per type in full-precision event-time order
-    "q_stream_quota" -> ((s, dir) => {
-      import s.implicits._
-      val ev = T(s, dir, "events")
-        .select(col("event_id").cast("long").as("_1"), col("event_type").as("_2"),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType).as("_3"))
-        .as[(Long, String, java.sql.Timestamp)]
-      graft.streaming.EventStream.capPerKeyStream(ev, n = 1000L).toDF()
-        .orderBy("key", "admit_seq")
-    }),
-
-    // ---- eighth REAL Structured Streaming driver row: the per-key
-    //      admission quota (flatMapGroupsWithState, one counter per key)
-    //      as an actual file-source -> memory-sink query. Stateless-ish
-    //      append output: admissions emit during the data batch, so no
-    //      sentinel is needed; the single-file fixture keeps arrival
-    //      order deterministic (one batch), matching the oracle's
-    //      (ts, event_id) chronological rank
-    // ---- REAL Structured Streaming -> LIVE PostgreSQL sink: micro-batches
-    //      land via foreachBatch + distributed COPY (one wire connection
-    //      per batch partition, sources/PgWire.scala), then the result is
-    //      read back through the partitioned wire scan. The stream->
-    //      warehouse shape every ingest pipeline runs; AvailableNow makes
-    //      it deterministic and oracle-gated against the source parquet.
-    "q_stream_pg_sink" -> ((s, dir) => {
-      val pg = graft.sources.PgWire
-      val conn = pg.ensureLocalServer()
-      val tbl = s"stream_sink_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      streamShuffle(s) {
-        val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
-          .select(col("event_id").cast("long").as("event_id"),
-            col("event_type").cast("string").as("event_type"),
-            col("value").cast("double").as("value"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_pg").toString
-        ev.coalesce(2).write.mode("overwrite").parquet(tmp)
-        pg.resetTable(conn, tbl, ev.schema) // start-empty: re-runs must not append
-        val src = s.readStream.schema(ev.schema).parquet(tmp)
-        val q = src.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-            // epoch-ledgered staged promote: a replayed micro-batch is a
-            // no-op, so the sink is exactly-once end-to-end
-            pg.appendDistributedExactlyOnce(batch, conn, tbl, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        pg.read(s, conn, tbl, "event_id", numPartitions = 4)
-          .orderBy("event_id")
-      }
-    }),
-
-    // ---- REAL Structured Streaming SOURCE from LIVE PostgreSQL: the
-    //      DataSource V2 micro-batch source (sources/PgStreamSource.scala)
-    //      polls a monotonic key's high-water mark, range-splits each key
-    //      window into executor tasks, and each task consumes its slice
-    //      over its own wire connection INCREMENTALLY (O(row) memory).
-    //      Trigger.AvailableNow pins the target offset so the run drains
-    //      exactly the rows present at start -> deterministic, oracle-
-    //      gated against the parquet the table was seeded from.
-    "q_stream_pg_source" -> ((s, dir) => {
-      val pg = graft.sources.PgWire
-      val conn = pg.ensureLocalServer()
-      val tbl = s"stream_src_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      streamShuffle(s) {
-        val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
-          .select(col("event_id").cast("long").as("event_id"),
-            col("event_type").cast("string").as("event_type"),
-            col("value").cast("double").as("value"))
-        pg.resetTable(conn, tbl, ev.schema) // start-empty: re-runs must not append
-        pg.appendDistributed(ev, conn, tbl)
-        val qname = "graft_stream_pg_src_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val src = s.readStream.format("graft.sources.PgStreamSource")
-          .option("host", conn.host).option("port", conn.port.toString)
-          .option("db", conn.db).option("user", conn.user)
-          .option("password", conn.password)
-          .option("table", tbl).option("keycol", "event_id")
-          .option("numpartitions", "4")
-          .load()
-        val q = src.writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(qname).orderBy("event_id")
-      }
-    }),
-
-    "q_stream_cap" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
-      import s.implicits._
-      val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
-        .select(col("event_id").cast("long").as("_1"),
-          col("event_type").as("_2"),
-          col("ts").cast(TimestampType).as("_3"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cap").toString
-      ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(ev.schema).parquet(tmp)
-        .as[(Long, String, java.sql.Timestamp)]
-      val out = graft.streaming.EventStream.capPerKeyStream(src, n = 500L).toDF()
-      val qname = "graft_stream_cap_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy("key", "admit_seq")
-      }
-    }),
-
-    // ---- REAL Structured Streaming execution, driver-gated: the md5-tier
-    //      near-dup intake screen runs as an actual streaming query
-    //      (file source -> stream-static band join -> watermarked pair
-    //      dedup -> Jaccard verify -> memory sink, Trigger.AvailableNow)
-    //      over a bounded fixture with planted near-dups; the oracle
-    //      replays every md5 min-hash, band key and Jaccard in DuckDB
-    "q_stream_neardup" -> ((s, dir) => {
-      // dropDuplicatesWithinWatermark emits each first occurrence IN its
-      // data batch (the watermark only EVICTS dedup state), so the
-      // trailing no-data batch is skippable machinery here too
-      streamShuffle(s) { streamNoFinalBatch(s) {
-      val docs = T(s, dir, "documents")
-      val hist = docs.warpFilter(col("doc_id") < 250)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      // materialize the ledger once (r14): the streaming screen references
-      // it in TWO plan branches (band probe + shingle verify) and each
-      // MICRO-BATCH would otherwise re-run its 16-md5-per-shingle
-      // signature pass — a static batch side should be computed once.
-      // r15 (VERDICT r14 item 8): as a RELIABLY persisted table (parquet
-      // write + read back), not a localCheckpoint — executor-local blocks
-      // on a corpus-sized frame are a local-mode-only pattern (an executor
-      // loss on a cluster kills the stream); the written form survives and
-      // is exactly what a production deployment feeds its screen from
-      val tmpL = java.nio.file.Files.createTempDirectory("graft_stream_ndl").toString
-      graft.pipeline.Dedup.minhashLedgerMd5(hist, "text", "doc_id")
-        .write.mode("overwrite").parquet(tmpL)
-      val ledger = s.read.parquet(tmpL)
-      val fresh = docs
-        .warpFilter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val planted = docs.warpFilter(col("doc_id") < 50)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" nearly identical content")).as("text"))
-      // LTZ event time (watermarks reject NTZ); internal only — the ts
-      // column never reaches the dumped output, so the repo-wide NTZ
-      // parquet discipline is unaffected
-      val streamIn = fresh.unionByName(planted)
-        .withColumn("ts",
-          timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(600L))))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_nd").toString
-      streamIn.write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(streamIn.schema).parquet(tmp)
-      val out = graft.streaming.EventStream.nearDupScreenStreamMd5(
-        src, ledger, "text", "doc_id", "ts")
-      val qname = "graft_stream_nd_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("doc_id").as("new_id"), col("hist_id"), col("jaccard"))
-        .orderBy("new_id", "hist_id")
-      } }
-    }),
-
-    // ---- second REAL streaming driver row: the stateless ingest-time
-    //      contamination flagger (broadcast probe grams, pure projection,
-    //      no state store) runs as an actual streaming query; the oracle
-    //      counts distinct-gram hits per document in plain SQL
-    "q_stream_contamination" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val probes = docs.warpFilter(col("doc_id") % 10 === 7)
-        .select(col("doc_id"), col("text"))
-      val streamSide = docs.warpFilter(col("doc_id") % 10 =!= 7)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ct").toString
-      streamSide.write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(streamSide.schema).parquet(tmp)
-      val out = graft.streaming.EventStream.contaminationFlagStream(
-        src, probes, "text", n = 3)
-      val qname = "graft_stream_ct_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("doc_id"), col("overlap"))
-        .filter(col("overlap") >= 1)
-        .orderBy("doc_id")
-    }),
-
-    // ---- third REAL streaming driver row (r11): the watermarked
-    //      STREAM-STREAM interval join — the one streaming path that was
-    //      still spec-pinned only. Events and hourly marks both arrive as
-    //      file-source streams; each event joins the same-type marks
-    //      whose timestamp lies within [ts - 1 hour, ts]. Watermarks on
-    //      BOTH sides plus the time-range join condition are what let
-    //      Spark expire join state — the requirement for running this
-    //      unbounded. Oracle: the identical range predicate in plain SQL.
-    "q_stream_interval_join" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      // inner join: every output row emits in its data batch, so the
-      // trailing no-data batch is pure state-eviction machinery — skipped
-      // (streamNoFinalBatch; profiled in plans/r15/stream_profile.txt)
-      streamShuffle(s) { streamNoFinalBatch(s) {
-      // LTZ event time (watermarks reject NTZ); session tz is UTC so the
-      // instant is unchanged, and the dumped mts is cast back to NTZ.
-      // Bounded fixture (the q_stream_neardup discipline): event_id <
-      // 20000 keeps EVERY row at the sf0.01 gate scale (ids 0-9999) and
-      // caps the sf0.1/sf1 REHEARSALS at 20k events — this row gates
-      // stream-stream join semantics (inclusive bounds, tolerance
-      // window, multi-mark events, watermarking), not state-store
-      // throughput (an unbounded first cut paid 307 s at sf1 writing 1M
-      // rows through the single-box HDFS-backed store + memory sink; a
-      // cluster runs RocksDB).
-      val ev = T(s, dir, "events")
-        .select(col("event_id").cast("long").as("event_id"),
-          col("event_type"), col("ts").cast(TimestampType).as("ts"))
-        .filter(col("event_id") < 20000L)
-      val marks = T(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).cast(TimestampType).as("mts"))
-        .agg(dsum(col("value")).as("mark_total"))
-      val tmpE = java.nio.file.Files.createTempDirectory("graft_stream_ije").toString
-      val tmpM = java.nio.file.Files.createTempDirectory("graft_stream_ijm").toString
-      ev.write.mode("overwrite").parquet(tmpE)
-      marks.write.mode("overwrite").parquet(tmpM)
-      val srcE = s.readStream.schema(ev.schema).parquet(tmpE)
-      val srcM = s.readStream.schema(marks.schema).parquet(tmpM)
-      val out = graft.streaming.EventStream.intervalJoinMarks(
-        srcE, srcM, "event_type", tolerance = "1 hour")
-      val qname = "graft_stream_ij_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("event_id"), col("mts").cast("timestamp_ntz").as("mts"),
-          col("mark_total"))
-        .orderBy("event_id", "mts")
-      } }
-    }),
-
-    "q_sessionize" -> ((s, dir) => {
-      import s.implicits._
-      // explicit LTZ cast: the session maps the NAME "timestamp" to NTZ
-      // (spark.sql.timestampType), which the java.sql.Timestamp encoder
-      // rejects; session tz is UTC so the instant is unchanged
-      val ev = T(s, dir, "events")
-        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-          col("ts").cast(org.apache.spark.sql.types.TimestampType).as("ts"),
-          col("value").cast("double").as("value"))
-        .as[graft.streaming.EventStream.Event]
-      graft.streaming.EventStream.sessionizeClosed(ev, gapMs = 2L * 3600 * 1000)
-        .toDF()
-        .select(col("user_id"), unix_millis(col("started")).as("started_ms"),
-          unix_millis(col("ended")).as("ended_ms"), col("events"))
-        .orderBy("user_id", "started_ms")
-    }),
-
-    // ---- fourth REAL Structured Streaming driver row: per-user
-    //      sessionization through flatMapGroupsWithState (file source →
-    //      closed-session state op → memory sink, Trigger.AvailableNow).
-    //      A far-future end-of-stream SENTINEL event per user closes each
-    //      user's final real session (append mode emits sessions only when
-    //      a later-than-gap event arrives); the sentinel's own session
-    //      never closes, so the emitted set is EXACTLY the full session
-    //      list — which is what the oracle computes. Bounded fixture
-    //      (the q_stream_neardup discipline): event_id < 20000 keeps
-    //      every row at the sf0.01 gate scale.
-    "q_stream_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      // sessions close on the SENTINEL events, never on timeouts
-      // (NoTimeout FMGWS — no-data batches invoke nothing), so the
-      // trailing no-data batch is skippable machinery. q_stream_trending
-      // is the opposite case — its event-time timeouts FIRE in that
-      // batch — and keeps the default.
-      streamShuffle(s) { streamNoFinalBatch(s) {
-      import s.implicits._
-      val gapMs = 2L * 3600 * 1000
-      val sentinelMs = 4102444800000L // 2100-01-01, past any fixture event
-      val base = T(s, dir, "events")
-        .filter(col("event_id") < 20000L)
-        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-          col("ts").cast(TimestampType).as("ts"),
-          col("value").cast("double").as("value"))
-      val sentinels = base.select("user_id").distinct()
-        .withColumn("event_type", lit("__eos"))
-        .withColumn("ts", timestamp_millis(lit(sentinelMs)))
-        .withColumn("value", lit(0.0))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sess").toString
-      base.unionByName(sentinels).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream
-        .sessionizeClosed(src, gapMs).toDF()
-        .filter(unix_millis(col("started")) < sentinelMs) // belt-and-braces
-      val qname = "graft_stream_sess_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("user_id"), unix_millis(col("started")).as("started_ms"),
-          unix_millis(col("ended")).as("ended_ms"), col("events"))
-        .orderBy("user_id", "started_ms")
-      } }
-    }),
-
-    // ---- fifth REAL Structured Streaming driver row: windowed trending
-    //      top-k through flatMapGroupsWithState with EVENT-TIME timeouts
-    //      (file source → per-window count state → watermark-fired close →
-    //      memory sink, Trigger.AvailableNow). One far-future sentinel
-    //      event pushes the watermark past every real window end and the
-    //      AvailableNow no-data final batch fires the timeouts, so every
-    //      REAL window emits exactly once; the sentinel's own window never
-    //      emits. The fixture is written as ONE parquet file — data split
-    //      across source files could put the sentinel in an earlier
-    //      micro-batch than real events, silently dropping them as late.
-    //      Bounded fixture: event_id < 20000 (the q_stream_neardup
-    //      discipline). Oracle: the q_trending SQL on the same slice.
-    "q_stream_trending" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
-      import s.implicits._
-      val winMs = 86400000L
-      val sentinelMs = 4102444800000L // 2100-01-01, past any fixture event
-      val base = T(s, dir, "events")
-        .filter(col("event_id") < 20000L)
-        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-          col("ts").cast(TimestampType).as("ts"),
-          col("value").cast("double").as("value"))
-      val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
-        .select(col("user_id"), col("event_type"),
-          timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_tr").toString
-      base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream.trendingClosed(src, winMs, k = 3)
-        .toDF()
-        .filter(unix_millis(col("window_start")) < sentinelMs)
-      val qname = "graft_stream_tr_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(unix_millis(col("window_start")).as("w_ms"), col("item"),
-          col("cnt"), col("rk"))
-        .orderBy("w_ms", "rk")
-      }
-    }),
-
-    // ---- sixth REAL Structured Streaming driver row: per-window value
-    //      HISTOGRAM (complete equi-width bins, zeros included, shares)
-    //      through the same window-keyed state + event-time-timeout
-    //      machinery, closed by the far-future-sentinel + AvailableNow
-    //      no-data batch. Oracle: bins 0..9 generated per window, counts
-    //      left-joined, share = one double division of exact counts.
-    "q_stream_histogram" -> ((s, dir) => {
-      import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
-      import s.implicits._
-      val winMs = 86400000L
-      val sentinelMs = 4102444800000L
-      val base = T(s, dir, "events")
-        .filter(col("event_id") < 20000L)
-        .select(col("user_id").cast("long").as("user_id"), col("event_type"),
-          col("ts").cast(TimestampType).as("ts"),
-          col("value").cast("double").as("value"))
-      val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
-        .select(col("user_id"), col("event_type"),
-          timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hg").toString
-      base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val src = s.readStream.schema(base.schema).parquet(tmp)
-        .as[graft.streaming.EventStream.Event]
-      val out = graft.streaming.EventStream
-        .histogramClosed(src, winMs, lo = 0.0, hi = 100.0, nBins = 10)
-        .toDF()
-        .filter(unix_millis(col("window_start")) < sentinelMs)
-      val qname = "graft_stream_hg_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(unix_millis(col("window_start")).as("w_ms"), col("bin"),
-          col("cnt"), col("share"))
-        .orderBy("w_ms", "bin")
-      }
-    }),
-
-    // ---- warehouse TIME TRAVEL: every mutation retires the pre-state
-    //      into the version history (rewrites by rename — zero extra
-    //      bytes; appends by hard link — metadata only). The row gates
-    //      readVersion at each point of a 3-version timeline plus the
-    //      cross-version diff — dataset reproducibility, the thing a
-    //      100 TB training pipeline needs from its corpus store.
-    "q_time_travel" -> ((s, dir) => {
-      val root = s"/tmp/graft_whv_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      wh.create("nation_v",
-        T(s, dir, "nation").calculate(Seq("flag" -> lit("old"))))
-      wh.update("nation_v", Map("n_regionkey" -> 2), "flag", "old", "new")
-      wh.deleteRows("nation_v",
-        Seq(Map("n_nationkey" -> 1), Map("n_nationkey" -> 2)))
-      val sigs = (1 to 3).map { v =>
-        wh.readVersion("nation_v", v)
-          .agg(count(lit(1)).as("n"),
-            count(when(col("flag") === "new", 1)).as("n_new"))
-          .withColumn("tag", lit(s"v$v"))
-      }.reduce(_ unionByName _)
-      val diff = wh.diffVersions("nation_v", 1, 3, Seq("n_nationkey"))
-        .groupBy(concat(lit("diff_"), col("diff_kind")).as("tag"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n_new", lit(0L))
-      sigs.select("tag", "n", "n_new")
-        .unionByName(diff.select("tag", "n", "n_new"))
-        .orderBy("tag")
-    }),
-
-    // ---- k-anonymity / l-diversity privacy audit: per-QI-group sizes,
-    //      sensitive-value diversity, compliance flags — one hash
-    //      aggregate on the quasi-identifier keys. QI = (nation, last
-    //      name digit); sensitive = market segment.
-    "q_anonymity" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-        .withColumn("qi_digit", substring(col("c_name"), -1, 1))
-      graft.pipeline.Privacy.anonymityReport(
-          c, Seq("c_nationkey", "qi_digit"), "c_mktsegment", k = 5, l = 3)
-        .orderBy("c_nationkey", "qi_digit")
-    }),
-
-    // ---- the enforcement pass: suppress rows in non-compliant QI
-    //      groups (left-semi join against the bounded compliant-key
-    //      aggregate), report per-nation survivor counts
-    "q_anonymity_suppress" -> ((s, dir) => {
-      val c = T(s, dir, "customer")
-        .withColumn("qi_digit", substring(col("c_name"), -1, 1))
-      graft.pipeline.Privacy.suppress(
-          c, Seq("c_nationkey", "qi_digit"), "c_mktsegment", k = 5, l = 3)
-        .groupBy("c_nationkey").agg(count(lit(1)).as("kept"))
-        .orderBy("c_nationkey")
-    }),
-
-    // ---- deterministic multi-epoch training-order shuffle, SHARD-local
-    //      positions (no global window — the 100 TB layout): md5-keyed,
-    //      rand()-free, fully replayable by the oracle
-    "q_epoch_shuffle" -> ((s, dir) => {
-      graft.pipeline.Sampling.epochShuffle(
-          T(s, dir, "documents"), "doc_id", epochs = 3, shards = 8)
-        .orderBy("epoch", "shard", "pos")
-    }),
-
-    // ---- Count-Min sketch point estimates vs exact counts: md5-salted
-    //      row hashes, depth×width bounded counter table, min-over-rows
-    //      estimate (always >= exact); the overestimate column IS the
-    //      CMS error surface, hash-replayable end to end
-    "q_sketch_cms" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-      val counters = graft.pipeline.HeavyHitters.cmsCounters(
-        ev, col("event_type"), depth = 4, width = 32)
-      val est = graft.pipeline.HeavyHitters.cmsEstimate(
-        counters, ev, col("event_type"), depth = 4, width = 32)
-      val exact = ev.filter(col("event_type").isNotNull)
-        .groupBy(col("event_type").cast("string").as("item"))
-        .agg(count(lit(1)).as("exact"))
-      est.join(exact, Seq("item"))
-        .withColumn("overcount", col("est") - col("exact"))
-        .orderBy("item")
-    })
-  )
-
-  /** Generated DuckDB replay of [[graft.pipeline.Bpe.trainMerges]]. The
-    * merge sequence is DETERMINATE given the fixed tie order (count DESC,
-    * left ASC, right ASC), so the oracle unrolls the greedy rounds as a
-    * CTE chain: per round, pair counts over the current vocabulary, the
-    * winner by the same ordering, and the vocabulary rewritten by that
-    * merge. The only non-trivial piece is replaying the single
-    * left-to-right fold of [[graft.pipeline.Bpe.applyMerge]] without a
-    * fold primitive: for l != r adjacent occurrences can never overlap,
-    * so EVERY occurrence merges; for l == r greedy pairing merges exactly
-    * the even offsets within each maximal run of l. Both are positional,
-    * hence expressible with list lambdas. (A repeated string-replace
-    * fixpoint is NOT equivalent: on a 6-run of `a` it converges to
-    * [aa,a,aa,a] where the fold yields [aa,aa,aa].) Every chained CTE is
-    * MATERIALIZED — DuckDB inlines plain CTEs, and each round references
-    * the previous twice, so un-materialized the expansion (and the
-    * parquet re-scans) would grow 2^rounds. */
-  /** One positional merge application as a CTE: `src(keep, syms)` ->
-    * `dst(keep, syms)` with round-`wk`'s winning pair merged (the
-    * [[bpeTrainOracle]] fold replay, shared with the segment/encode
-    * oracles). */
-  private def bpeApplyMergeCte(src: String, dst: String, wk: String,
-                               alias: String, keep: String): String =
-    s"""$dst AS MATERIALIZED (
-       SELECT $keep, list_filter(list_transform(generate_series(1, len(syms)), i ->
-           CASE WHEN f[i] THEN ml || mr
-                WHEN i > 1 AND f[i-1] THEN NULL
-                ELSE syms[i] END), x -> x IS NOT NULL) AS syms
-       FROM (
-         SELECT $keep, syms, $wk.l AS ml, $wk.r AS mr,
-           list_transform(generate_series(1, len(syms)), i ->
-             i < len(syms) AND syms[i] = $wk.l AND syms[i+1] = $wk.r AND
-             ($wk.l <> $wk.r OR
-              (i - coalesce(list_max(list_filter(generate_series(1, i),
-                 j -> syms[j] <> $wk.l)), 0) - 1) % 2 = 0)
-           ) AS f
-         FROM $src, $wk) $alias)"""
-
-  /** Trainer CTE chain `words, wc, v0..v{n-1}, w0..w{n-1}`: greedy merge
-    * rounds over the word-vocabulary table (the [[bpeTrainOracle]] core;
-    * n=8 prefixes equal the n=16 run — greedy is prefix-stable). */
-  private def bpeTrainerCtes(n: Int): Seq[String] = {
-    val head =
-      s"""words AS (
-         SELECT unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')) AS w FROM documents
-       ), wc AS (
-         SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM words WHERE len(w) > 0 GROUP BY w
-       ), v0 AS MATERIALIZED (
-         SELECT cnt, list_append(string_split(w, ''), '</w>') AS syms FROM wc
-       )"""
-    head +: (0 until n).flatMap { k =>
-      val pairs =
-        s"""p$k AS MATERIALIZED (
-           SELECT syms[i] AS l, syms[i+1] AS r, CAST(sum(cnt) AS BIGINT) AS pc
-           FROM v$k, unnest(generate_series(1, len(syms) - 1)) AS t$k(i)
-           GROUP BY 1, 2),
-         w$k AS MATERIALIZED (SELECT l, r, pc FROM p$k ORDER BY pc DESC, l ASC, r ASC LIMIT 1)"""
-      if (k == n - 1) Seq(pairs)
-      else Seq(pairs, bpeApplyMergeCte(s"v$k", s"v${k + 1}", s"w$k", s"z$k", "cnt"))
-    }
-  }
-
-  /** Per-document segmentation CTE chain `dw, d0..d{n}`: every document
-    * word through the same n merges, in rank order. */
-  private def bpeSegmentCtes(n: Int): Seq[String] = {
-    val head =
-      s"""dw AS (
-         SELECT doc_id, ws[i] AS w, i
-         FROM (SELECT doc_id,
-                 string_split_regex(trim(lower(coalesce(text, ''))), '[ \\t\\n\\x0b\\f\\r]+') AS ws
-               FROM documents),
-              unnest(generate_series(1, len(ws))) AS tt(i)
-       ), d0 AS MATERIALIZED (
-         -- empty words (NULL/empty text coalesced to '') carry ZERO base
-         -- symbols — just the </w> sentinel, as Bpe.segment emits;
-         -- DuckDB string_split('','') = [''] would plant a phantom ''
-         SELECT doc_id, i,
-           list_append(list_filter(string_split(w, ''), c -> c <> ''), '</w>') AS syms
-         FROM dw
-       )"""
-    head +: (0 until n).map(k =>
-      bpeApplyMergeCte(s"d$k", s"d${k + 1}", s"w$k", s"y$k", "doc_id, i"))
-  }
-
-  private def bpeTrainOracle(numMerges: Int): String = {
-    val sel = (0 until numMerges).map(k =>
-      s"""SELECT ${k + 1} AS "rank", l AS "left", r AS "right", l || r AS merged, pc AS pair_count FROM w$k""")
-      .mkString("\nUNION ALL\n")
-    s"""WITH ${bpeTrainerCtes(numMerges).mkString(",\n")}
-       SELECT * FROM ($sel) ORDER BY "rank""""
-  }
-
-  /** DuckDB replay of [[graft.pipeline.Bpe.segment]] with the runtime
-    * 8-merge fixture: recompute the merges (trainer chain), apply them to
-    * every document word positionally, flatten in word order. */
-  private def bpeSegmentOracle(n: Int): String =
-    s"""WITH ${(bpeTrainerCtes(n) ++ bpeSegmentCtes(n)).mkString(",\n")}
-       , per_doc AS (
-         SELECT doc_id, flatten(list(syms ORDER BY i)) AS pieces FROM d$n GROUP BY doc_id
-       )
-       SELECT doc_id, CAST(len(pieces) AS INT) AS n_pieces,
-         array_to_string(pieces[1:12], ' ') AS head_pieces
-       FROM per_doc ORDER BY doc_id"""
-
-  /** DuckDB replay of [[graft.pipeline.Bpe.encode]]: segmentation plus
-    * the deterministic id vocabulary (`<unk>`, sorted base symbols,
-    * merges by rank; first occurrence wins, ids consecutive). */
-  private def bpeEncodeOracle(n: Int): String = {
-    val mergedList = "[" +
-      (0 until n).map(k => s"(SELECT l || r FROM w$k)").mkString(", ") + "]"
-    s"""WITH ${(bpeTrainerCtes(n) ++ bpeSegmentCtes(n)).mkString(",\n")}
-       , base AS (
-         SELECT list(DISTINCT sym ORDER BY sym) AS bs
-         FROM (SELECT unnest(syms) AS sym FROM v0)
-       ), alltoks AS (
-         SELECT ['<unk>'] || bs || $mergedList AS ts FROM base
-       ), pos AS (
-         SELECT ts[i] AS tok, i FROM alltoks, unnest(generate_series(1, len(ts))) AS tp(i)
-       ), ids AS MATERIALIZED (
-         SELECT tok, CAST(row_number() OVER (ORDER BY min(i)) - 1 AS INT) AS id
-         FROM pos GROUP BY tok
-       ), pieces AS (
-         SELECT doc_id, i AS wi, p.j AS pj, syms[p.j] AS piece
-         FROM d$n, unnest(generate_series(1, len(syms))) AS p(j)
-       ), coded AS (
-         SELECT doc_id, wi, pj, coalesce(ids.id, 0) AS id
-         FROM pieces LEFT JOIN ids ON pieces.piece = ids.tok
-       ), per_doc AS (
-         SELECT doc_id, list(id ORDER BY wi, pj) AS idl FROM coded GROUP BY doc_id
-       )
-       SELECT doc_id, CAST(len(idl) AS INT) AS n_ids,
-         array_to_string(list_transform(idl[1:16], x -> CAST(x AS VARCHAR)), ' ') AS head_ids
-       FROM per_doc ORDER BY doc_id"""
-  }
-
-  /** Generated DuckDB replay of
-    * [[graft.pipeline.Classifier.trainLogistic]]: full-batch gradient
-    * descent is determinate because every per-iteration gradient is an
-    * EXACT DECIMAL(30,15) sum (order-invariant on both engines) and the
-    * driver-side update is fixed double arithmetic. Each unrolled round
-    * keeps the Spark side's exact association order (intercept first in
-    * the sigmoid's dot product; decimal->double before the /n). */
-  private def classifyTrainOracle(iters: Int): String = {
-    val dot = "w$.a7 + w$.a1*f1 + w$.a2*f2 + w$.a3*f3 + w$.a4*f4 + w$.a5*f5 + w$.a6*f6"
-    val rounds = (0 until iters).map { k =>
-      val d = dot.replace("w$", s"w$k")
-      val gs = (1 to 6).map(j =>
-        s"sum(CAST(e * f$j AS DECIMAL(30,15))) AS g$j").mkString(", ")
-      val ws = (1 to 7).map { j =>
-        s"w$k.a$j - 2.0 * (CAST(g$k.g$j AS DOUBLE) / nn.n) AS a$j"
-      }.mkString(", ")
-      s"""e$k AS MATERIALIZED (
-         SELECT f1, f2, f3, f4, f5, f6,
-           (1.0 / (1.0 + exp(-($d))) - y) AS e
-         FROM feat, w$k),
-       g$k AS MATERIALIZED (
-         SELECT $gs, sum(CAST(e AS DECIMAL(30,15))) AS g7 FROM e$k),
-       w${k + 1} AS MATERIALIZED (SELECT $ws FROM w$k, g$k, nn)"""
-    }.mkString(",\n")
-    val names = Seq("len_cap", "punct_ratio", "stopword_en", "mean_wlen_cap",
-      "digit_ratio", "upper_ratio", "intercept")
-    val out = names.zipWithIndex.map { case (n, i) =>
-      s"SELECT $i AS idx, '$n' AS name, round(CAST(a${i + 1} AS DOUBLE), 9) AS weight FROM w$iters"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH f AS (
-         SELECT doc_id, coalesce(text, '') AS t, CAST(lang = 'en' AS DOUBLE) AS y FROM documents
-       ), feat AS MATERIALIZED (
-         SELECT doc_id, y,
-           least(CAST(length(t) AS DOUBLE) / 1000.0, 1.0) AS f1,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f2,
-           CASE WHEN len(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+')) > 0 THEN
-             CAST(len(list_filter(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+'),
-               w -> w IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-               / len(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+')) ELSE 0.0 END AS f3,
-           least((CASE WHEN len(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+')) > 0 THEN
-             CAST(list_sum(list_transform(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+'),
-               w -> length(w))) AS DOUBLE)
-               / len(string_split_regex(trim(lower(t)), '[ \\t\\n\\x0b\\f\\r]+')) ELSE 0.0 END) / 10.0, 1.0) AS f4,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[0-9]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f5,
-           CASE WHEN length(t) > 0 THEN
-             CAST(length(t) - length(regexp_replace(t, '[A-Z]', '', 'g')) AS DOUBLE)
-               / length(t) ELSE 0.0 END AS f6
-         FROM f
-       ), nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM feat),
-       w0 AS MATERIALIZED (SELECT 0.0 AS a1, 0.0 AS a2, 0.0 AS a3, 0.0 AS a4, 0.0 AS a5, 0.0 AS a6, 0.0 AS a7),
-       $rounds
-       SELECT * FROM ($out) ORDER BY idx"""
-  }
-
-  /** A double constant for oracle SQL, parse-exact: Scala's shortest
-    * round-trip repr, parsed via VARCHAR so DuckDB cannot route it through
-    * a decimal literal (which would double-round non-representable values
-    * like `k1+1.0 = 2.2000000000000002`). */
-  private def dlit(v: Double): String = s"CAST('$v' AS DOUBLE)"
-
-  /** Unrolled-Lloyd DuckDB oracle for q_kmeans(+_summary): replays the
-    * exact [[graft.pipeline.Cluster.kmeansAssign]] chain — init from the
-    * k lowest ids, `n2 + c2 − 2·dot` left-fold distance, (dist, cluster)
-    * tie-break, DECIMAL(30,15) per-dimension sums with one double
-    * division (VARCHAR-routed decimal→double: DuckDB's direct cast can
-    * double-round). */
-  /** DuckDB oracle for q_dedup_semantic: replay the deterministic Lloyd
-    * rounds (shared with [[kmeansOracle]]), then the in-cluster
-    * lower-id epsilon-ball compare of [[graft.pipeline.Dedup.semantic]] —
-    * same left-fold cosine, same >= tau boundary, bit-for-bit. */
-  private def semdedupOracle(k: Int, iters: Int, tau: Double): String = {
-    val dotAB = "list_reduce(list_transform(list_zip(a.v, b.v), " +
-      "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, w) -> acc + w)"
-    def n2(t: String) = s"list_reduce(list_transform($t.v, " +
-      "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, w) -> acc + w)"
-    kmeansCtes(k, iters) +
-      s""",
-       pr AS (
-         SELECT a.vec_id AS aid, min(b.vec_id) AS dup_of
-         FROM afin a JOIN afin b ON a.cl = b.cl AND b.vec_id < a.vec_id
-         WHERE $dotAB / (sqrt(${n2("a")}) * sqrt(${n2("b")})) >= ${dlit(tau)}
-         GROUP BY a.vec_id)
-       SELECT a.vec_id, a.cl AS cluster, pr.dup_of IS NOT NULL AS is_dup, pr.dup_of
-       FROM afin a LEFT JOIN pr ON a.vec_id = pr.aid ORDER BY a.vec_id"""
-  }
-
-  /** Shared WITH-prefix for the k-means-replay oracles: `e` (vectors +
-    * norms), `c0..c$iters` (centroid rounds), `afin` (final assignment
-    * with vec_id, v, cl, d). */
-  private def kmeansCtes(k: Int, iters: Int): String =
-    "WITH " + kmeansCtesFor(k, iters, "embedding", "", "e", "c", "a", "m", "afin")
-
-  /** The kmeans CTE chain over an arbitrary vector EXPRESSION (e.g. a
-    * sub-vector slice for PQ codebooks), with prefixed CTE names so
-    * several chains compose in one WITH. Emits `<eName>`,
-    * `<cPrefix>0..<cPrefix>iters`, per-round assigns/means, and the final
-    * assignment CTE `<finName>(vec_id, v, cl, d)`. */
-  private def kmeansCtesFor(k: Int, iters: Int, vecExpr: String,
-                            suffix: String, eName: String, cPrefix: String,
-                            aPrefix: String, mPrefix: String,
-                            finName: String): String = {
-    val dotVC = s"list_reduce(list_transform(list_zip(e.v, c.c), " +
-      "p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, w) -> acc + w)"
-    val c2 = "list_reduce(list_transform(c.c, x -> x * x), (acc, w) -> acc + w)"
-    def assignCte(name: String, cents: String) =
-      s"""$name AS MATERIALIZED (
-         SELECT vec_id, v, cl, d FROM (
-           SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, cl) AS rn FROM (
-             SELECT e.vec_id, e.v, c.cl, e.n2 + $c2 - 2.0 * $dotVC AS d
-             FROM $eName e, $cents c))
-         WHERE rn = 1)"""
-    val rounds = (0 until iters).map { r =>
-      s"""${assignCte(s"$aPrefix$r", s"$cPrefix$r")},
-       $mPrefix$r AS MATERIALIZED (
-         SELECT cl, i,
-           CAST(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE) AS mu
-         FROM (SELECT cl, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM $aPrefix$r)
-         GROUP BY cl, i),
-       $cPrefix${r + 1} AS MATERIALIZED (
-         SELECT p.cl,
-           CASE WHEN count(m.mu) = 0 THEN any_value(p.c)
-                ELSE list(m.mu ORDER BY m.i) END AS c
-         FROM $cPrefix$r p LEFT JOIN $mPrefix$r m ON p.cl = m.cl
-         GROUP BY p.cl)"""
-    }.mkString(",\n")
-    s"""$eName AS MATERIALIZED (
-         SELECT vec_id, $vecExpr AS v,
-           list_reduce(list_transform($vecExpr,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, w) -> acc + w) AS n2
-         FROM embeddings$suffix),
-       ${cPrefix}0 AS MATERIALIZED (
-         SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cl,
-           list_transform(v0, x -> CAST(x AS DOUBLE)) AS c
-         FROM (SELECT vec_id, $vecExpr AS v0 FROM embeddings$suffix
-               ORDER BY vec_id LIMIT $k)),
-       $rounds,
-       ${assignCte(finName, s"$cPrefix$iters")}"""
-  }
-
-  /** DuckDB oracle replaying the md5-tier MinHash LSH pairs of
-    * q_dedup_minhash_md5 end-to-end: same derived corpus as
-    * q_dedup_jaccard, hash i of shingle s = first 60 bits of
-    * md5("i:s"), per-band signature-key join, exact-Jaccard verify. */
-  private def minhashMd5Oracle(numHashes: Int, bands: Int,
-                               threshold: Double): String = {
-    val r = numHashes / bands
-    val sigs = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(s, x ->
-         CAST(('0x' || substr(md5('$i:' || x), 1, 15)) AS BIGINT))) AS sig$i"""
-    }.mkString(",\n           ")
-    val bandSelects = (0 until bands).map { b =>
-      val key = (0 until r).map(j => s"CAST(sig${b * r + j} AS VARCHAR)")
-        .mkString(" || ',' || ")
-      s"SELECT doc_id, $b AS band, $key AS key FROM sg"
-    }.mkString("\n           UNION ALL\n           ")
-    s"""WITH d AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text || ' nearly identical content' AS text
-           FROM documents WHERE doc_id % 50 = 0
-         ), w AS (
-           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+') AS ws FROM d
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         ), f AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-         sg AS (SELECT doc_id, s,
-           $sigs
-           FROM f),
-         bd AS (
-           $bandSelects
-         ), cand AS (
-           SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-           FROM bd a JOIN bd b ON a.band = b.band AND a.key = b.key
-             AND a.doc_id < b.doc_id
-         ), v AS (
-           SELECT c.id1, c.id2,
-             CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) AS inter,
-             CAST(len(x.s) + len(y.s) AS DOUBLE)
-               - CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) AS uni
-           FROM cand c JOIN f x ON x.doc_id = c.id1 JOIN f y ON y.doc_id = c.id2
-         )
-         SELECT id1, id2,
-           round(CASE WHEN uni = 0.0 THEN 1.0 ELSE inter / uni END, 9) AS jaccard
-         FROM v
-         WHERE (CASE WHEN uni = 0.0 THEN 1.0 ELSE inter / uni END) >= $threshold
-         ORDER BY id1, id2"""
-  }
-
-  /** DuckDB oracle replaying the md5-tier SimHash pairs of
-    * q_dedup_simhash_md5 end-to-end: token-frequency ±1 bit sums over the
-    * two md5 halves, 16-bit pigeonhole quarters, Hamming verify via
-    * per-half XOR popcounts (no 64-bit shifts). */
-  /** DuckDB replay of the md5-tier STREAMING intake screen
-    * (q_stream_neardup): the bipartite form of [[minhashMd5Oracle]] —
-    * new-side docs (fresh + planted near-dup twins) band-match against
-    * the historical ledger side, candidates verify exact Jaccard. The
-    * Spark side must reproduce this through an actual Structured
-    * Streaming execution. */
-  private def streamNearDupOracle(numHashes: Int, bands: Int,
-                                  threshold: Double,
-                                  maxBucket: Int = 1000): String =
-    bipartiteMd5Oracle(
-      """SELECT 'h' AS side, CAST(doc_id AS BIGINT) AS doc_id, text
-           FROM documents WHERE doc_id < 250
-           UNION ALL
-           SELECT 'n', CAST(doc_id AS BIGINT), text
-           FROM documents WHERE doc_id >= 250 AND doc_id < 500
-           UNION ALL
-           SELECT 'n', CAST(doc_id AS BIGINT) + 1000000,
-             text || ' nearly identical content'
-           FROM documents WHERE doc_id < 50""",
-      numHashes, bands, threshold, maxBucket)
-
-  /** DuckDB replay of the md5-tier INCREMENTAL intake (q_dedup_incr_md5):
-    * same fixture as q_dedup_incr_near (history = the whole corpus, batch
-    * = edited copies of docs < 40 plus genuinely fresh docs) through the
-    * bipartite band-match + exact-Jaccard verify. The Spark side probes a
-    * [[graft.pipeline.Dedup.minhashLedgerMd5]] without re-shingling
-    * history; this oracle regenerates both sides from scratch. */
-  private def incrNearDupMd5Oracle(numHashes: Int, bands: Int,
-                                   threshold: Double,
-                                   maxBucket: Int = 1000): String =
-    bipartiteMd5Oracle(
-      """SELECT 'h' AS side, CAST(doc_id AS BIGINT) AS doc_id, text
-           FROM documents WHERE doc_id % 5 = 0
-           UNION ALL
-           SELECT 'n', CAST(doc_id AS BIGINT) + 500000, text || ' zz yy xx'
-           FROM documents WHERE doc_id < 40
-           UNION ALL
-           SELECT 'n', CAST(doc_id AS BIGINT) + 600000,
-             'totally fresh unrelated words ' || CAST(doc_id AS VARCHAR)
-           FROM documents WHERE doc_id < 10""",
-      numHashes, bands, threshold, maxBucket)
-
-  /** Shared bipartite md5-tier LSH replay: `dCte` yields
-    * (side 'h'|'n', doc_id, text); new-side docs band-match against the
-    * capped history side, candidates verify exact Jaccard. */
-  private def bipartiteMd5Oracle(dCte: String, numHashes: Int, bands: Int,
-                                 threshold: Double, maxBucket: Int): String = {
-    val r = numHashes / bands
-    val sigs = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(s, x ->
-         CAST(('0x' || substr(md5('$i:' || x), 1, 15)) AS BIGINT))) AS sig$i"""
-    }.mkString(",\n           ")
-    val bandSelects = (0 until bands).map { b =>
-      val key = (0 until r).map(j => s"CAST(sig${b * r + j} AS VARCHAR)")
-        .mkString(" || ',' || ")
-      s"SELECT side, doc_id, $b AS band, $key AS key FROM sg"
-    }.mkString("\n           UNION ALL\n           ")
-    s"""WITH d AS (
-           $dCte
-         ), w AS (
-           SELECT side, doc_id, regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+') AS ws FROM d
-         ), sh AS (
-           SELECT side, doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         ), f AS (SELECT side, doc_id, s FROM sh WHERE len(s) > 0),
-         sg AS (SELECT side, doc_id, s,
-           $sigs
-           FROM f),
-         bd0 AS (
-           $bandSelects
-         ), bd AS (
-           -- mirror nearDupScreenStreamMd5's STATIC-side bucket cap
-           -- (maxBucket=$maxBucket, smallest hist ids win): without this
-           -- the Spark stream and the oracle diverge silently on any
-           -- band bucket larger than the cap
-           SELECT side, doc_id, band, key FROM (
-             SELECT side, doc_id, band, key,
-               row_number() OVER (PARTITION BY band, key, side
-                 ORDER BY doc_id) AS rn
-             FROM bd0)
-           WHERE side = 'n' OR rn <= $maxBucket
-         ), cand AS (
-           SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS hist_id
-           FROM bd a JOIN bd b ON a.band = b.band AND a.key = b.key
-           WHERE a.side = 'n' AND b.side = 'h'
-         ), v AS (
-           SELECT c.new_id, c.hist_id,
-             CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) AS inter,
-             CAST(len(x.s) + len(y.s) AS DOUBLE)
-               - CAST(len(list_intersect(x.s, y.s)) AS DOUBLE) AS uni
-           FROM cand c JOIN f x ON x.side = 'n' AND x.doc_id = c.new_id
-             JOIN f y ON y.side = 'h' AND y.doc_id = c.hist_id
-         )
-         SELECT new_id, hist_id,
-           round(CASE WHEN uni = 0.0 THEN 1.0 ELSE inter / uni END, 9) AS jaccard
-         FROM v
-         WHERE (CASE WHEN uni = 0.0 THEN 1.0 ELSE inter / uni END) >= $threshold
-         ORDER BY new_id, hist_id"""
-  }
-
-  /** Planted-pattern codec-gauge oracle (q_image_dhash_md5 /
-    * q_audio_fp_md5): recompute every fixture's 64-bit signature from md5
-    * words (low `flip` bits of word 1 inverted for the planted twins) and
-    * brute-force ALL pairwise Hammings — the Spark side must reproduce
-    * exactly this set through the real encode→decode→feature→blocked-join
-    * pipeline. */
-  private def plantedSigOracle(prefix: String): String =
-    s"""WITH ids AS (
-         SELECT CAST(doc_id AS BIGINT) AS id FROM documents WHERE doc_id < 64
-       ), mem AS (
-         SELECT id AS mid, id AS kid, 0 AS flip FROM ids
-         UNION ALL
-         SELECT id + 1000000, id, CAST(id % 4 AS INT) FROM ids WHERE id < 10
-       ), w AS (
-         SELECT mid,
-           xor(CAST(('0x' || substr(md5('$prefix' || CAST(kid AS VARCHAR)), 1, 8)) AS BIGINT),
-               CAST(CASE flip WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 3 ELSE 7 END AS BIGINT)) AS w1,
-           CAST(('0x' || substr(md5('$prefix' || CAST(kid AS VARCHAR)), 9, 8)) AS BIGINT) AS w2
-         FROM mem
-       )
-       SELECT a.mid AS id1, b.mid AS id2,
-         CAST(bit_count(xor(a.w1, b.w1)) + bit_count(xor(a.w2, b.w2)) AS BIGINT) AS hamming
-       FROM w a JOIN w b ON a.mid < b.mid
-       WHERE bit_count(xor(a.w1, b.w1)) + bit_count(xor(a.w2, b.w2)) <= 3
-       ORDER BY id1, id2"""
-
-  private def simhashMd5Oracle(maxHamming: Int): String = {
-    def half(h: String, w: String) = (0 until 32).map { b =>
-      s"(CASE WHEN sum(cnt * ((($h >> $b) & 1) * 2 - 1)) > 0 THEN (1::BIGINT << $b) ELSE 0 END)"
-    }.mkString(s"\n             + ") + s" AS $w"
-    s"""WITH d AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 100000 AS doc_id, text || ' zz' AS text
-           FROM documents WHERE doc_id < 50
-         ), w AS (
-           SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')) AS tok
-           FROM d
-         ), tf AS (
-           SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS cnt
-           FROM w GROUP BY doc_id, tok
-         ), th AS (
-           SELECT doc_id, cnt,
-             CAST(('0x' || substr(md5('sh1:' || tok), 1, 8)) AS BIGINT) AS h1,
-             CAST(('0x' || substr(md5('sh2:' || tok), 1, 8)) AS BIGINT) AS h2
-           FROM tf
-         ), sg AS (
-           SELECT doc_id,
-             ${half("h1", "w1")},
-             ${half("h2", "w2")}
-           FROM th GROUP BY doc_id
-         ), bd AS (
-           SELECT doc_id, w1, w2, 0 AS q, w1 & 65535 AS qh FROM sg
-           UNION ALL
-           SELECT doc_id, w1, w2, 1, (w1 >> 16) & 65535 FROM sg
-           UNION ALL
-           SELECT doc_id, w1, w2, 2, w2 & 65535 FROM sg
-           UNION ALL
-           SELECT doc_id, w1, w2, 3, (w2 >> 16) & 65535 FROM sg
-         ), cand AS (
-           SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-             a.w1 AS aw1, a.w2 AS aw2, b.w1 AS bw1, b.w2 AS bw2
-           FROM bd a JOIN bd b ON a.q = b.q AND a.qh = b.qh
-             AND a.doc_id < b.doc_id
-         )
-         SELECT id1, id2,
-           CAST(bit_count(xor(aw1, bw1)) + bit_count(xor(aw2, bw2)) AS BIGINT)
-             AS hamming
-         FROM cand
-         WHERE bit_count(xor(aw1, bw1)) + bit_count(xor(aw2, bw2)) <= $maxHamming
-         ORDER BY id1, id2"""
-  }
-
-  /** Shared recall-gauge tail: hits/total per exact-side query (the
-    * q_embed_recall_q8 join, reused by the LSH/IVF gauges). Expects CTEs
-    * `ex(qid, id)` (exact top-k) and `ap(qid, id)` (approx top-k). */
-  private val recallTailSql: String =
-    """h AS (SELECT ex.qid, count(*) AS hits FROM ex
-           JOIN ap ON ex.qid = ap.qid AND ex.id = ap.id GROUP BY ex.qid),
-         t AS (SELECT qid, count(*) AS total FROM ex GROUP BY qid)
-       SELECT t.qid, coalesce(h.hits, 0) AS hits, t.total,
-         CAST(coalesce(h.hits, 0) AS DOUBLE) / CAST(t.total AS DOUBLE) AS recall
-       FROM t LEFT JOIN h ON t.qid = h.qid ORDER BY t.qid"""
-
-  /** DuckDB oracle for the matryoshka-truncation gauge
-    * (q_embed_recall_trunc): exact cosine top-k over the first half of
-    * every embedding vs the full-dimension exact graph, then the recall
-    * join. No seeds anywhere — both graphs are deterministic. */
-  private def recallTruncOracle(nQueries: Int, k: Int): String =
-    s"""WITH dims AS (SELECT len(embedding) // 2 AS m FROM embeddings LIMIT 1),
-         b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         tb AS (SELECT vec_id, emb2,
-           sqrt(list_reduce(list_transform(emb2,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM (SELECT e.vec_id, e.embedding[1:dims.m] AS emb2
-               FROM embeddings e, dims)),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d, b q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $k),
-         ap AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.emb2, q.emb2),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM tb d, tb q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $k),
-         $recallTailSql"""
-
-  /** DuckDB oracle replaying the md5-hyperplane LSH retrieval of
-    * q_embed_recall_lsh end-to-end: regenerate the planes from md5
-    * ([[graft.pipeline.Similarity.hyperplanesMd5]]'s exact formula), sign
-    * sketches via the same left-fold dots, Hamming-gate with the packed
-    * word split into two 32-bit halves (DuckDB's BIGINT shift rejects bit
-    * 63; Hamming is split-invariant), cosine top-k among survivors, then
-    * the recall join against the exact graph. */
-  private def recallLshOracle(nBits: Int, maxHamming: Int, nQueries: Int,
-                              k: Int): String =
-    s"""WITH b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d, b q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $k),
-         pl AS (SELECT bb, list(w ORDER BY dd) AS pw FROM (
-           SELECT bb, dd,
-             CAST(('0x' || substr(md5('lshp:' || bb || ':' || dd), 1, 8)) AS BIGINT)
-               / 4294967296.0 * 2.0 - 1.0 AS w
-           FROM (SELECT unnest(range(0, $nBits)) AS bb),
-                (SELECT unnest(range(0, (SELECT len(embedding) FROM embeddings
-                   LIMIT 1))) AS dd))
-          GROUP BY bb),
-         sk AS (SELECT vec_id,
-             CAST(sum(CASE WHEN dot > 0.0 AND bb < 32
-               THEN 1::BIGINT << bb ELSE 0 END) AS BIGINT) AS w1,
-             CAST(sum(CASE WHEN dot > 0.0 AND bb >= 32
-               THEN 1::BIGINT << (bb - 32) ELSE 0 END) AS BIGINT) AS w2
-           FROM (
-             SELECT e.vec_id, p.bb,
-               list_reduce(list_transform(list_zip(e.embedding, p.pw),
-                 pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, v) -> acc + v) AS dot
-             FROM embeddings e, pl p)
-           GROUP BY vec_id),
-         ap AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d JOIN sk sd ON sd.vec_id = d.vec_id
-                JOIN b q ON d.vec_id <> q.vec_id AND q.vec_id < $nQueries
-                JOIN sk sq ON sq.vec_id = q.vec_id
-           WHERE bit_count(xor(sd.w1, sq.w1)) + bit_count(xor(sd.w2, sq.w2))
-             <= $maxHamming)
-          WHERE rn <= $k),
-         $recallTailSql"""
-
-  /** DuckDB oracle replaying the deterministic-cell IVF retrieval of
-    * q_embed_recall_ivf: the kmeansCtes final cells + centroids, each
-    * query's nProbe best cells by fold-cosine (ties to the lower cell),
-    * cosine top-k among probed-cell candidates, then the recall join
-    * against the exact graph. */
-  private def recallIvfOracle(kCells: Int, iters: Int, nProbe: Int,
-                              nQueries: Int, k: Int): String =
-    s"""${kmeansCtes(kCells, iters)},
-         bq AS (SELECT vec_id, v, sqrt(n2) AS nv FROM e WHERE vec_id < $nQueries),
-         crp AS (SELECT a.vec_id, a.v, a.cl, sqrt(e.n2) AS nv
-           FROM afin a JOIN e ON e.vec_id = a.vec_id),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.v, q.v),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (sqrt(d.n2) * sqrt(q.n2)) DESC, d.vec_id) AS rn
-           FROM e d, e q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $k),
-         qc AS (SELECT qid, cl FROM (
-           SELECT q.vec_id AS qid, c.cl,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(q.v, c.c),
-                 pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, v) -> acc + v)
-               / (q.nv * sqrt(list_reduce(list_transform(c.c, x -> x * x),
-                   (acc, v) -> acc + v))) DESC, c.cl) AS rn
-           FROM bq q, c$iters c) WHERE rn <= $nProbe),
-         ap AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.v, q.v),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM crp d JOIN qc ON d.cl = qc.cl
-                JOIN bq q ON q.vec_id = qc.qid
-           WHERE d.vec_id <> q.vec_id)
-          WHERE rn <= $k),
-         $recallTailSql"""
-
-  /** DuckDB oracle replaying q_retrieval_ndcg: the recallIvfOracle
-    * retrieval CTEs with the approx side keeping its rank, then MRR +
-    * binary nDCG@k with the SAME 12-rounded discount table
-    * [[graft.pipeline.Retrieval.dcgDiscounts]] injects on the Spark
-    * side — decimal-summed DCG, so no float fold order or libm log2
-    * reaches the compare. */
-  private def ivfNdcgOracle(kCells: Int, iters: Int, nProbe: Int,
-                            nQueries: Int, k: Int): String = {
-    val disc = graft.pipeline.Retrieval.dcgDiscounts(k).map(dlit).mkString(", ")
-    val ideal = graft.pipeline.Retrieval.dcgIdeal(k).map(dlit).mkString(", ")
-    s"""${kmeansCtes(kCells, iters)},
-         bq AS (SELECT vec_id, v, sqrt(n2) AS nv FROM e WHERE vec_id < $nQueries),
-         crp AS (SELECT a.vec_id, a.v, a.cl, sqrt(e.n2) AS nv
-           FROM afin a JOIN e ON e.vec_id = a.vec_id),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.v, q.v),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (sqrt(d.n2) * sqrt(q.n2)) DESC, d.vec_id) AS rn
-           FROM e d, e q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $k),
-         qc AS (SELECT qid, cl FROM (
-           SELECT q.vec_id AS qid, c.cl,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(q.v, c.c),
-                 pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, v) -> acc + v)
-               / (q.nv * sqrt(list_reduce(list_transform(c.c, x -> x * x),
-                   (acc, v) -> acc + v))) DESC, c.cl) AS rn
-           FROM bq q, c$iters c) WHERE rn <= $nProbe),
-         ap AS (SELECT qid, id, rn FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.v, q.v),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM crp d JOIN qc ON d.cl = qc.cl
-                JOIN bq q ON q.vec_id = qc.qid
-           WHERE d.vec_id <> q.vec_id)
-          WHERE rn <= $k),
-         dt AS (SELECT [$disc] AS dl, [$ideal] AS il),
-         hit AS (SELECT a.qid, a.rn FROM ap a
-           JOIN ex e ON a.qid = e.qid AND a.id = e.id),
-         mm AS (SELECT h.qid, min(h.rn) AS minrn,
-             CAST(sum(CAST(dt.dl[h.rn] AS DECIMAL(28,12))) AS DOUBLE) AS dcg
-           FROM hit h, dt GROUP BY h.qid),
-         tt AS (SELECT qid, count(*) AS total FROM ex GROUP BY qid)
-         SELECT tt.qid, tt.total,
-           round(coalesce(1.0 / mm.minrn, 0.0), 9) AS mrr,
-           round(coalesce(mm.dcg, 0.0) / dt.il[least(tt.total, $k)], 9) AS ndcg
-         FROM tt LEFT JOIN mm ON tt.qid = mm.qid, dt ORDER BY tt.qid"""
-  }
-
-  /** Shared WITH-body for the covariance-based oracles: `cv(i, j, cov,
-    * vi, vj)` = unrounded population covariance over the fixed-point
-    * (2^-30-quantized) pair sums plus both variances, i ≤ j, 1-based. */
-  private val covarianceCteBody: String =
-    """x AS MATERIALIZED (
-         SELECT vec_id, i, CAST(xi AS DOUBLE) AS xi FROM (
-           SELECT vec_id, unnest(embedding) AS xi,
-             generate_subscripts(embedding, 1) AS i
-           FROM embeddings WHERE embedding IS NOT NULL)
-       ), p AS MATERIALIZED (
-         SELECT a.i AS i, b.i AS j,
-           CAST(CAST(sum(CAST(floor(a.xi * b.xi * 1073741824.0) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
-             / 1073741824.0 AS sxy
-         FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-         GROUP BY a.i, b.i
-       ), m AS MATERIALIZED (
-         SELECT i,
-           CAST(CAST(sum(CAST(xi AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS sx,
-           CAST(CAST(sum(CAST(xi * xi AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS sxx,
-           count(*) AS n
-         FROM x GROUP BY i
-       ), mv AS MATERIALIZED (
-         SELECT i, sx, n, (sxx - sx * sx / n) / n AS var FROM m
-       ), cv AS MATERIALIZED (
-         SELECT p.i, p.j, (p.sxy - mi.sx * mj.sx / mi.n) / mi.n AS cov,
-           mi.var AS vi, mj.var AS vj
-         FROM p JOIN mv mi ON mi.i = p.i JOIN mv mj ON mj.i = p.j
-       )"""
-
-  /** One pinned power-iteration CTE chain over matrix CTE `mat(i,j,cval)`
-    * using name prefix `p`: `iters` unrolled rounds (`${p}w/n/v`), the
-    * max-|loading| sign pin, and final CTEs `${p}vfin(i,x)` /
-    * `${p}lam(nn)` / `${p}lv(lv)` (9-rounded ordered loading list).
-    * Decimal sums route through VARCHAR before the double cast (the
-    * kmeansOracle double-rounding guard). A zero norm resets the iterate
-    * to e_1, replaying Cluster.powerIterate's annihilation contract —
-    * for a SYMMETRIC matrix `C·x = 0` with `x = C·y/‖C·y‖` implies
-    * `C·y = 0`, so annihilation can only happen at round 0 and the
-    * per-round reset is equivalent to the Scala early-stop. */
-  private def pcaChain(p: String, mat: String, iters: Int): String = {
-    val rounds = (0 until iters).map { r =>
-      s"""${p}w$r AS MATERIALIZED (
-           SELECT cf.i,
-             CAST(CAST(sum(CAST(cf.cval * v.x AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE) AS wx
-           FROM $mat cf JOIN ${p}v$r v ON v.i = cf.j GROUP BY cf.i),
-         ${p}n$r AS MATERIALIZED (
-           SELECT sqrt(CAST(CAST(sum(CAST(wx * wx AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)) AS nn
-           FROM ${p}w$r),
-         ${p}v${r + 1} AS MATERIALIZED (
-           SELECT w.i, CASE WHEN n.nn = 0
-             THEN CAST(CASE WHEN w.i = 1 THEN 1 ELSE 0 END AS DOUBLE)
-             ELSE w.wx / n.nn END AS x
-           FROM ${p}w$r w, ${p}n$r n)"""
-    }.mkString(",\n         ")
-    s"""${p}v0 AS MATERIALIZED (
-           SELECT i, CAST(CASE WHEN i = 1 THEN 1 ELSE 0 END AS DOUBLE) AS x
-           FROM (SELECT DISTINCT i FROM $mat)
-         ),
-         $rounds,
-         ${p}sgn AS (
-           SELECT CASE WHEN x < 0 THEN CAST(-1 AS DOUBLE)
-                       ELSE CAST(1 AS DOUBLE) END AS sg
-           FROM ${p}v$iters ORDER BY abs(x) DESC, i LIMIT 1
-         ),
-         ${p}vfin AS (SELECT v.i, v.x * sgn.sg AS x FROM ${p}v$iters v, ${p}sgn sgn),
-         ${p}lam AS (SELECT nn FROM ${p}n${iters - 1}),
-         ${p}lv AS (SELECT list(round(x, 9) ORDER BY i) AS lv FROM ${p}vfin)"""
-  }
-
-  /** Shared WITH prefix of both PCA oracles: the covariance CTEs, the
-    * symmetric rounded-9 matrix, and the first pinned chain. */
-  private def pcaPrefix(iters: Int): String =
-    s"""WITH $covarianceCteBody,
-         cfull AS MATERIALIZED (
-           SELECT i, j, round(cov, 9) AS cval FROM cv
-           UNION ALL
-           SELECT j, i, round(cov, 9) FROM cv WHERE i <> j
-         ),
-         ${pcaChain("", "cfull", iters)}"""
-
-  /** DuckDB oracle replaying the q_pca_* power iteration: the covariance
-    * CTEs, `iters` unrolled matrix-vector rounds with DECIMAL(28,12)-
-    * summed addends (exact — fold-order-free, mirroring Cluster.pcaPower's
-    * driver arithmetic), the max-|loading| sign pin, and the published
-    * rounded component as an ordered list for the projection entry. */
-  private def pcaOracle(iters: Int, finalSelect: String): String =
-    s"""${pcaPrefix(iters)}
-         $finalSelect"""
-
-  /** The two-component oracle: the shared prefix, Hotelling deflation
-    * with the PUBLISHED 9-rounded loadings/eigenvalue (exactly the
-    * doubles Cluster.pcaPowerDeflated subtracts), then a second pinned
-    * chain over the deflated matrix. */
-  private def pcaOracle2(iters: Int, finalSelect: String): String =
-    s"""${pcaPrefix(iters)},
-         lpub AS (SELECT round(nn, 9) AS l FROM lam),
-         vpub AS (SELECT i, round(x, 9) AS x FROM vfin),
-         cdefl AS MATERIALIZED (
-           SELECT cf.i, cf.j, cf.cval - lpub.l * vi.x * vj.x AS cval
-           FROM cfull cf JOIN vpub vi ON vi.i = cf.i
-             JOIN vpub vj ON vj.i = cf.j, lpub
-         ),
-         ${pcaChain("d", "cdefl", iters)}
-         $finalSelect"""
-
-  /** DuckDB oracle replaying the deterministic-PQ retrieval of
-    * q_embed_recall_pq: one kmeans CTE chain per subspace (the q_kmeans
-    * arithmetic over `embedding[a:b]` slices), reconstruction by
-    * centroid concat, the q8 dequantized-retrieval ranking, then the
-    * recall join against the exact graph. Subspace bounds assume the
-    * corpus dim (64) like every dim-dependent oracle here. */
-  private def recallPqOracle(m: Int, sub: Int, k: Int, iters: Int,
-                             nQueries: Int, topK: Int): String = {
-    val chains = (0 until m).map { si =>
-      kmeansCtesFor(k, iters, s"embedding[${si * sub + 1}:${(si + 1) * sub}]",
-        "", s"e$si", s"p${si}c", s"p${si}a", s"p${si}m", s"fin$si")
-    }.mkString(",\n         ")
-    val joins = (0 until m).map { si =>
-      (if (si == 0) s"FROM fin0 a0 "
-       else s"JOIN fin$si a$si ON a$si.vec_id = a0.vec_id ") +
-        s"JOIN p${si}c$iters cc$si ON cc$si.cl = a$si.cl"
-    }.mkString("\n           ")
-    val dv = (1 until m).foldLeft("cc0.c") {
-      (acc, si) => s"list_concat($acc, cc$si.c)"
-    }
-    s"""WITH $chains,
-         dq AS MATERIALIZED (
-           SELECT a0.vec_id, $dv AS dv
-           $joins),
-         d2 AS (SELECT vec_id, dv,
-             sqrt(list_reduce(list_transform(dv, x -> x * x),
-               (acc, v) -> acc + v)) AS nv
-           FROM dq),
-         b AS (SELECT vec_id, embedding,
-             sqrt(list_reduce(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-               (acc, v) -> acc + v)) AS nv
-           FROM embeddings),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d, b q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $topK),
-         ap AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.dv, q.embedding),
-                 pr -> pr[1] * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM d2 d, b q WHERE d.vec_id <> q.vec_id AND q.vec_id < $nQueries)
-          WHERE rn <= $topK),
-         $recallTailSql"""
-  }
-
-  /** DuckDB oracle replaying [[graft.pipeline.Sampling.kCenterGreedy]]:
-    * `k − 1` unrolled farthest-point rounds — each picks the max-min-dist
-    * row (ties to smallest id), then `least`-folds the new center's
-    * `n2 + c2 − 2·dot` distance into the running minimum, the exact
-    * arithmetic the Spark side runs. */
-  private def coresetOracle(k: Int): String = {
-    val dotMS = "list_reduce(list_transform(list_zip(m.v, s.v), " +
-      "p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, w) -> acc + w)"
-    val c2S = "list_reduce(list_transform(s.v, " +
-      "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, w) -> acc + w)"
-    val rounds = (2 to k).map { r =>
-      val pick =
-        s"""s$r AS (SELECT vec_id, v, mind FROM m${r - 1}
-           ORDER BY mind DESC, vec_id LIMIT 1)"""
-      if (r < k) pick +
-        s""",
-       m$r AS MATERIALIZED (
-         SELECT m.vec_id, m.v, m.n2,
-           least(m.mind, m.n2 + $c2S - 2.0 * $dotMS) AS mind
-         FROM m${r - 1} m, s$r s WHERE m.vec_id <> s.vec_id)"""
-      else pick
-    }.mkString(",\n       ")
-    val unions = (2 to k).map(r =>
-      s"SELECT $r AS step, vec_id, round(mind, 6) AS min_dist FROM s$r")
-      .mkString("\n         UNION ALL ")
-    s"""WITH e AS MATERIALIZED (
-         SELECT vec_id, embedding AS v,
-           list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, w) -> acc + w) AS n2
-         FROM embeddings WHERE embedding IS NOT NULL),
-       c1 AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1),
-       m1 AS MATERIALIZED (
-         SELECT m.vec_id, m.v, m.n2, m.n2 + $c2S - 2.0 * $dotMS AS mind
-         FROM e m, c1 s WHERE m.vec_id <> s.vec_id),
-       $rounds
-       SELECT 1 AS step, vec_id, CAST(NULL AS DOUBLE) AS min_dist FROM c1
-       UNION ALL $unions
-       ORDER BY step"""
-  }
-
-  private def kmeansOracle(k: Int, iters: Int, summary: Boolean): String = {
-    val out =
-      if (summary)
-        """SELECT cl AS cluster, count(*) AS n,
-           round(CAST(CAST(sum(CAST(d AS DECIMAL(30,12))) AS VARCHAR) AS DOUBLE)
-             / count(*), 6) AS mean_dist2
-         FROM afin GROUP BY cl ORDER BY cluster"""
-      else "SELECT vec_id, cl AS cluster, round(d, 6) AS dist2 FROM afin ORDER BY vec_id"
-    kmeansCtes(k, iters) + "\n       " + out
-  }
-
-  /** DuckDB per-CHARACTER-CLASS token counting, entirely regex-FREE —
-    * the r11 replacement for the `string_split_regex` /
-    * `regexp_extract_all` oracle constructs implicated in the
-    * three-round driver-red corpus-statistics family (VERDICT r10 item
-    * 1: every red row shared those constructs while greens avoided
-    * them; local DuckDB 1.0.0 agrees with both, so the regex path is
-    * quarantined rather than trusted). Each character maps to a class
-    * symbol via `unicode()` code-point ranges ('a' letter, 'd' digit,
-    * 's' whitespace [ \t\n\x0b\f\r], 'o' other); token counts are
-    * maximal-run starts counted with an index lambda. Verified equal to
-    * the regex constructs on every sf0.01 document locally; the
-    * q_diag_agree_* sentinel entries re-verify that equality inside the
-    * DRIVER's DuckDB each round. */
-  private val charClassCte: String =
-    """cls AS (
-         SELECT source, lang, doc_id,
-           list_transform(string_split(lower(text), ''),
-             -- unicode('') = -1: string_split('','') yields [''], which
-             -- must classify as a non-token (class 's'), not 'other'
-             c -> CASE WHEN unicode(c) < 0 THEN 's'
-                       WHEN unicode(c) BETWEEN 97 AND 122 THEN 'a'
-                       WHEN unicode(c) BETWEEN 48 AND 57 THEN 'd'
-                       WHEN unicode(c) IN (9,10,11,12,13,32) THEN 's'
-                       ELSE 'o' END) AS cl
-         FROM documents),
-       cnt AS (
-         SELECT source, lang, doc_id,
-           CAST(len(list_filter(cl, (x,i) -> x <> 's' AND (i = 1 OR cl[i-1] = 's'))) AS BIGINT) AS ws,
-           CAST(len(list_filter(cl, (x,i) -> x = 'a' AND (i = 1 OR cl[i-1] <> 'a')))
-              + len(list_filter(cl, (x,i) -> x = 'd' AND (i = 1 OR cl[i-1] <> 'd')))
-              + len(list_filter(cl, x -> x = 'o')) AS BIGINT) AS bpe
-         FROM cls)"""
-
-  /** r12 twin of [[charClassCte]] with NO `lower()` anywhere: letters are
-    * the explicit ranges 65-90 and 97-122 on the ORIGINAL text, so neither
-    * engine's case-mapping tables (DuckDB utf8proc `lower`, Spark
-    * `UTF8String.toLowerCase` + JVM locale) are on the production path.
-    * Pairs with the caseless [[graft.functions.ClassCountsExpr]] kernel
-    * (same classification, same run lambdas). */
-  private val charClassCteNoLower: String =
-    """cls AS (
-         SELECT source, lang, doc_id,
-           list_transform(string_split(text, ''),
-             -- unicode('') = -1: string_split('','') yields [''], which
-             -- must classify as a non-token (class 's'), not 'other'
-             c -> CASE WHEN unicode(c) < 0 THEN 's'
-                       WHEN (unicode(c) BETWEEN 97 AND 122)
-                         OR (unicode(c) BETWEEN 65 AND 90) THEN 'a'
-                       WHEN unicode(c) BETWEEN 48 AND 57 THEN 'd'
-                       WHEN unicode(c) IN (9,10,11,12,13,32) THEN 's'
-                       ELSE 'o' END) AS cl
-         FROM documents),
-       cnt AS (
-         SELECT source, lang, doc_id,
-           CAST(len(list_filter(cl, (x,i) -> x <> 's' AND (i = 1 OR cl[i-1] = 's'))) AS BIGINT) AS ws,
-           CAST(len(list_filter(cl, (x,i) -> x = 'a' AND (i = 1 OR cl[i-1] <> 'a')))
-              + len(list_filter(cl, (x,i) -> x = 'd' AND (i = 1 OR cl[i-1] <> 'd')))
-              + len(list_filter(cl, x -> x = 'o')) AS BIGINT) AS bpe
-         FROM cls)"""
-
-  /** Exact cross-engine DECIMAL(18,9) ratio — the oracle-side twin of
-    * [[graft.pipeline.TextAnalysis.ratioDecimal9]]: round-half-up of
-    * `num/den * 1e9` in INTEGER (HUGEINT) arithmetic, then an exact
-    * decimal multiply. No double division, no `round(double, n)`. The
-    * OUTPUT is DECIMAL(18,9) — the int64-backed tier — because
-    * precision > 18 decimals are 128-bit-backed in both engines, the
-    * repr class the driver hash convicted in r12 (HUGEINT) and r13
-    * (DECIMAL(20,9)); ratios are < 1e9 so 18 digits are exact. */
-  private def dec9Sql(num: String, den: String): String =
-    s"""CAST(CAST(CASE WHEN $den > 0
-          THEN (CAST($num AS HUGEINT) * 2000000000 + $den) // (CAST($den AS HUGEINT) * 2)
-          ELSE 0 END AS DECIMAL(20,0))
-        * CAST(0.000000001 AS DECIMAL(10,9)) AS DECIMAL(18,9))"""
-
-  /** The same integer-derived 9-decimal ratio presented as DOUBLE — the
-    * DuckDB twin of [[graft.pipeline.TextAnalysis.ratioDouble9]] (r15:
-    * every scale-9 DECIMAL output column is driver-hash red, int64- and
-    * int128-backed alike; DOUBLE is the proven-green tier). The HUGEINT
-    * e9 is exact, its DOUBLE cast is exact for e9 < 2^53, and `/ 1e9` is
-    * the identical correctly-rounded binary64 division Spark performs. */
-  private def dbl9Sql(num: String, den: String): String =
-    s"""CASE WHEN $den > 0
-          THEN CAST((CAST($num AS HUGEINT) * 2000000000 + $den) // (CAST($den AS HUGEINT) * 2) AS DOUBLE) / 1e9
-          ELSE CAST(0 AS DOUBLE) END"""
-
-  /** Shared (label, expression) rows for the data-independent double /
-    * bigint probes: the SAME strings are parsed by Spark SQL (query side)
-    * and DuckDB (oracle side), so the construct under test is identical by
-    * construction and a red names an ENGINE divergence (or a compare-
-    * machinery repr issue), with zero data dependence. Only the common SQL
-    * subset is used (CAST/arith/exp/ln/sqrt/power/round). */
-  private val dblArithRows: Seq[(String, String)] = Seq(
-    "add_01_02" -> "CAST('0.1' AS DOUBLE) + CAST('0.2' AS DOUBLE)",
-    "third" -> "CAST(1 AS DOUBLE) / 3",
-    // exp() is NOT in the shared subset: Spark exp(1) and DuckDB exp(1)
-    // differ in the last ulp already on the LOCAL pairing
-    // (2.7182818284590455 vs 2.718281828459045) — a born-red row carries
-    // no driver-specific information, so the libm family is represented
-    // by ln/sqrt/power, which agree locally
-    "ln2" -> "ln(CAST(2 AS DOUBLE))",
-    "sqrt2" -> "sqrt(CAST(2 AS DOUBLE))",
-    "pow_neg30" -> "power(CAST(2 AS DOUBLE), -30)")
-  private val dblRoundRows: Seq[(String, String)] = Seq(
-    // 0.0009765625 = 2^-10, exactly representable: a TRUE half at the
-    // 10th decimal — the case where half-up vs half-even vs reconstruction
-    // rounding genuinely differ across engines
-    "half_e10" -> "round(CAST('0.0009765625' AS DOUBLE), 9)",
-    "half_e10_neg" -> "round(CAST('-0.0009765625' AS DOUBLE), 9)",
-    "half_int" -> "round(CAST('2.5' AS DOUBLE), 0)",
-    "half_int_neg" -> "round(CAST('-2.5' AS DOUBLE), 0)",
-    "near_half" -> "round(CAST('1.0000000005' AS DOUBLE), 9)",
-    "plain_9" -> "round(CAST('0.123456789' AS DOUBLE), 9)")
-  private val dblReprRows: Seq[(String, String)] = Seq(
-    "neg_zero" -> "CAST('-1' AS DOUBLE) * CAST('0' AS DOUBLE)",
-    "point1" -> "CAST('0.1' AS DOUBLE)",
-    "sig17" -> "CAST('0.1234567890123456789' AS DOUBLE)",
-    "denorm" -> "CAST('5e-324' AS DOUBLE)",
-    "dbl_max" -> "CAST('1.7976931348623157e308' AS DOUBLE)",
-    "pow53p1" -> "CAST('9007199254740993' AS DOUBLE)",
-    "pos_inf" -> "CAST('Infinity' AS DOUBLE)",
-    "nan" -> "CAST('NaN' AS DOUBLE)")
-  private def dblProbeSql(rows: Seq[(String, String)]): String =
-    rows.map { case (l, e) => s"SELECT '$l' AS label, CAST($e AS DOUBLE) AS val" }
-      .mkString("", " UNION ALL ", " ORDER BY label")
-  private val bigintRows: Seq[(String, String)] = Seq(
-    "max" -> "9223372036854775807",
-    "min1" -> "-9223372036854775807",
-    "zero" -> "0",
-    "neg1" -> "-1",
-    "pow53p1" -> "9007199254740993")
-  private val bigintProbeSql: String =
-    bigintRows.map { case (l, e) => s"SELECT '$l' AS label, CAST($e AS BIGINT) AS val" }
-      .mkString("", " UNION ALL ", " ORDER BY label")
-  /** String edge values as DIRECT UTF-8 literals in the shared SQL text
-    * (both parsers read the identical bytes — chr() is NOT shared
-    * vocabulary: Spark's chr is byte-level n % 256, DuckDB's is a code
-    * point): empty vs NULL, 2-byte/3-byte/supplementary code points, an
-    * NFD combining mark, embedded tab/newline (Verify's JSON escaping
-    * carries control chars), and a long repeated string. */
-  private val strRows: Seq[(String, String)] = Seq(
-    "empty" -> "''",
-    "null_str" -> "CAST(NULL AS STRING)",
-    "ascii" -> "'plain'",
-    "two_byte" -> "'\u00e9'", // e-acute (2-byte UTF-8)
-    "three_byte" -> "'\u4e2d'", // CJK (3-byte UTF-8)
-    "supplementary" -> "'\ud834\udd1e'", // U+1D11E (4-byte UTF-8, non-BMP)
-    "combining" -> "'a\u0301'", // NFD a + combining acute
-    "embedded_ws" -> "'a\tb\nc'",
-    "long_repeat" -> "repeat('ab', 500)")
-  private val strProbeSql: String =
-    strRows.map { case (l, e) => s"SELECT '$l' AS label, CAST($e AS STRING) AS val" }
-      .mkString("", " UNION ALL ", " ORDER BY label")
-
-  /** The regex-based ws/bpe token expressions the red family USED to
-    * oracle with — kept only for the q_diag_agree_* oracle-internal
-    * cross-checks (VERDICT r10 item 1c), never for a pass/fail gate. */
-  private val wsTokensRegexSql: String =
-    """CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
-        t -> len(t) > 0)) AS BIGINT)"""
-  private val bpeTokensRegexSql: String =
-    """CAST(len(regexp_extract_all(lower(text),
-        '[a-z]+|[0-9]+|[^a-z0-9 \t\n\x0b\f\r]')) AS BIGINT)"""
-
-  /** DuckDB oracle for q_bm25, mirroring
-    * [[graft.pipeline.Retrieval.bm25TopK]] shape-for-shape (same operator
-    * tree, same decimal quantization of each term's contribution). */
-  private def bm25Oracle(terms: Seq[String], k: Int, k1: Double, b: Double): String = {
-    val toks = "string_split_regex(trim(lower(text)), '[ \\t\\n\\x0b\\f\\r]+')"
-    val tfs = terms.indices.map(i =>
-      s"CAST(len(list_filter($toks, w -> w = '${terms(i)}')) AS DOUBLE) AS tf$i").mkString(",\n           ")
-    val dfs = terms.indices.map(i =>
-      s"CAST(sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df$i").mkString(", ")
-    val contribs = terms.indices.map { i =>
-      val idf = s"ln(1.0 + (n - df$i + 0.5) / (df$i + 0.5))"
-      val denom = s"(tf$i + ${dlit(k1)} * (${dlit(1.0 - b)} + ${dlit(b)} * dl / (sumdl / n)))"
-      s"CAST(CASE WHEN tf$i > 0 THEN $idf * (tf$i * ${dlit(k1 + 1.0)}) / $denom ELSE 0.0 END AS DECIMAL(28,12))"
-    }.mkString("\n           + ")
-    val anyHit = terms.indices.map(i => s"tf$i").mkString(" + ") + " > 0"
-    s"""WITH f AS (
-         SELECT doc_id,
-           CAST(len($toks) AS DOUBLE) AS dl,
-           $tfs
-         FROM documents
-       ), st AS (
-         SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl, $dfs
-         FROM f
-       )
-       SELECT doc_id,
-         round(CAST(CAST($contribs AS VARCHAR) AS DOUBLE), 6) AS bm25
-       FROM f, st WHERE $anyHit
-       ORDER BY bm25 DESC, doc_id LIMIT $k"""
-  }
-
-  /** Unrolled PageRank oracle replaying
-    * [[graft.pipeline.Graph.pageRank]]'s exact round arithmetic over the
-    * q_pagerank trade graph. */
-  private def pagerankOracle(iters: Int, damping: Double): String = {
-    val d = dlit(damping)
-    val rounds = (0 until iters).map { r =>
-      s"""dang$r AS MATERIALIZED (
-         SELECT coalesce(CAST(CAST(sum(CAST(pr AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE), 0.0) AS dm
-         FROM p$r LEFT JOIN deg ON p$r.node = deg.src WHERE deg.src IS NULL),
-       i$r AS MATERIALIZED (
-         SELECT e.dst AS node,
-           sum(CAST(p.pr / CAST(deg.dg AS DOUBLE) AS DECIMAL(30,15))) AS s
-         FROM e JOIN p$r p ON e.src = p.node JOIN deg ON e.src = deg.src
-         GROUP BY e.dst),
-       p${r + 1} AS MATERIALIZED (
-         SELECT prev.node,
-           (1.0 - $d) / nn.n
-             + $d * coalesce(CAST(CAST(i.s AS VARCHAR) AS DOUBLE), 0.0)
-             + $d * dang$r.dm / nn.n AS pr
-         FROM p$r prev LEFT JOIN i$r i ON prev.node = i.node, nn, dang$r)"""
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-         SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                's' || CAST(l_suppkey AS VARCHAR) AS dst
-         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       ), e AS MATERIALIZED (
-         SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs
-       ), nd AS MATERIALIZED (
-         SELECT DISTINCT n FROM (SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e)
-       ), deg AS MATERIALIZED (SELECT src, count(*) AS dg FROM e GROUP BY src),
-       nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nd),
-       p0 AS MATERIALIZED (SELECT nd.n AS node, 1.0 / nn.n AS pr FROM nd, nn),
-       $rounds
-       SELECT node, round(pr, 9) AS pagerank FROM p$iters ORDER BY node"""
-  }
-
-  /** Unrolled k-core-peel oracle replaying
-    * [[graft.pipeline.Graph.kCorePeel]] over the part co-occurrence
-    * graph: each round keeps nodes of degree >= k and drops edges
-    * touching a removed node. */
-  private def kcoreOracle(k: Int, rounds: Int): String = {
-    val rnds = (0 until rounds).map { r =>
-      s"""k$r AS MATERIALIZED (
-         SELECT s FROM e$r GROUP BY s HAVING count(*) >= $k),
-       e${r + 1} AS MATERIALIZED (
-         SELECT e$r.s, e$r.t FROM e$r
-         WHERE e$r.s IN (SELECT s FROM k$r)
-           AND e$r.t IN (SELECT s FROM k$r))"""
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-         SELECT l_orderkey, l_linenumber,
-           lpad(CAST(l_partkey AS VARCHAR), 7, '0') AS pk
-         FROM lineitem
-       ), und AS MATERIALIZED (
-         SELECT DISTINCT least(a.pk, b.pk) AS u, greatest(a.pk, b.pk) AS v
-         FROM li a JOIN li b
-           ON a.l_orderkey = b.l_orderkey
-          AND a.l_linenumber + 1 = b.l_linenumber
-         WHERE a.pk <> b.pk
-       ), e0 AS MATERIALIZED (
-         SELECT u AS s, v AS t FROM und UNION ALL SELECT v, u FROM und
-       ),
-       $rnds
-       SELECT s AS node, count(*) AS degree FROM e$rounds
-       GROUP BY s ORDER BY node"""
-  }
-
-  /** Unrolled personalized-PageRank oracle replaying
-    * [[graft.pipeline.Graph.personalizedPageRank]] over the q_pagerank
-    * trade graph with the low-key customer seed set: uniform teleport
-    * replaced by the seed-restricted vector, dangling mass restarting at
-    * the seeds, float expression order mirrored term for term. */
-  private def pprOracle(iters: Int, damping: Double): String = {
-    val d = dlit(damping)
-    val rounds = (0 until iters).map { r =>
-      s"""dang$r AS MATERIALIZED (
-         SELECT coalesce(CAST(CAST(sum(CAST(pr AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE), 0.0) AS dm
-         FROM p$r LEFT JOIN deg ON p$r.node = deg.src WHERE deg.src IS NULL),
-       i$r AS MATERIALIZED (
-         SELECT e.dst AS node,
-           sum(CAST(p.pr / CAST(deg.dg AS DOUBLE) AS DECIMAL(30,15))) AS s
-         FROM e JOIN p$r p ON e.src = p.node JOIN deg ON e.src = deg.src
-         GROUP BY e.dst),
-       p${r + 1} AS MATERIALIZED (
-         SELECT prev.node,
-           (1.0 - $d) * tele.t
-             + $d * coalesce(CAST(CAST(i.s AS VARCHAR) AS DOUBLE), 0.0)
-             + $d * dang$r.dm * tele.t AS pr
-         FROM p$r prev LEFT JOIN i$r i ON prev.node = i.node
-              JOIN tele ON tele.node = prev.node, dang$r)"""
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-         SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                's' || CAST(l_suppkey AS VARCHAR) AS dst
-         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       ), e AS MATERIALIZED (
-         SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs
-       ), nd AS MATERIALIZED (
-         SELECT DISTINCT n FROM (SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e)
-       ), deg AS MATERIALIZED (SELECT src, count(*) AS dg FROM e GROUP BY src),
-       seeds AS MATERIALIZED (
-         SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS s
-         FROM orders WHERE o_custkey < 20
-       ), kk AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS k FROM seeds),
-       tele AS MATERIALIZED (
-         SELECT nd.n AS node,
-           CASE WHEN seeds.s IS NOT NULL THEN 1.0 / kk.k ELSE 0.0 END AS t
-         FROM nd LEFT JOIN seeds ON nd.n = seeds.s, kk
-       ),
-       p0 AS MATERIALIZED (SELECT node, t AS pr FROM tele),
-       $rounds
-       SELECT node, round(pr, 9) AS ppr FROM p$iters ORDER BY node"""
-  }
-
-  /** Unrolled clamped-seed label-propagation oracle replaying
-    * [[graft.pipeline.Graph.labelPropagation]] over the q_pagerank trade
-    * graph with rich/poor customer seeds. */
-  private def labelPropOracle(iters: Int, prior: Double): String = {
-    val rounds = (0 until iters).map { r =>
-      s"""i$r AS MATERIALIZED (
-         SELECT e.dst AS node,
-           sum(CAST(p.s AS DECIMAL(30,15))) AS sm, count(*) AS cnt
-         FROM e JOIN p$r p ON e.src = p.node
-         GROUP BY e.dst),
-       p${r + 1} AS MATERIALIZED (
-         SELECT prev.node, prev.seed,
-           CASE WHEN prev.seed IS NOT NULL THEN prev.seed
-                WHEN i.cnt IS NOT NULL THEN
-                  CAST(CAST(i.sm AS VARCHAR) AS DOUBLE) / CAST(i.cnt AS DOUBLE)
-                ELSE prev.s END AS s
-         FROM p$r prev LEFT JOIN i$r i ON prev.node = i.node)"""
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-         SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                's' || CAST(l_suppkey AS VARCHAR) AS dst
-         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       ), e AS MATERIALIZED (
-         SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs
-       ), nd AS MATERIALIZED (
-         SELECT DISTINCT n AS node
-         FROM (SELECT src AS n FROM e UNION ALL SELECT dst AS n FROM e)
-       ), sd AS MATERIALIZED (
-         SELECT 'c' || CAST(c_custkey AS VARCHAR) AS node,
-           CASE WHEN c_acctbal > 0 THEN 1.0 ELSE 0.0 END AS seed
-         FROM customer WHERE abs(c_acctbal) > 9000
-       ), p0 AS MATERIALIZED (
-         SELECT nd.node, sd.seed, coalesce(sd.seed, ${dlit(prior)}) AS s
-         FROM nd LEFT JOIN sd ON nd.node = sd.node
-       ),
-       $rounds
-       SELECT node, seed IS NOT NULL AS is_seed, round(s, 9) AS score
-       FROM p$iters ORDER BY node"""
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pagerank" -> pagerankOracle(3, 0.85),
-    "q_ppr" -> pprOracle(3, 0.85),
-    "q_label_prop" -> labelPropOracle(2, 0.5),
-    "q_avro_roundtrip" ->
-      """SELECT event_id, user_id, value, ts FROM events
-         WHERE event_type = 'click' ORDER BY event_id""",
-    // r11: the whole corpus-statistics oracle family moved OFF regex
-    // constructs (string_split_regex / regexp_extract_all /
-    // per-class regexp_replace) onto the per-character-class
-    // charClassCte — the four r8-r10 driver-red rows shared exactly
-    // those constructs while every green tokenizing entry avoided
-    // them; the constructs themselves are cross-checked in the
-    // driver's DuckDB by the q_diag_agree_* sentinels.
-    // r12: the production family moved onto the CASELESS char-class CTE
-    // (no lower() on either engine's path) and integer-derived
-    // DECIMAL(18,9) ratios (no round(double, 9) anywhere) — the two
-    // engine-owned surfaces the r11 bisect left as suspects.
-    // r13: every integer sum() reaching an output column is wrapped in
-    // CAST(... AS BIGINT) — DuckDB widens sum(BIGINT) to HUGEINT, which
-    // serializes as decimal128(38,0) on the driver's Arrow fetch path and
-    // hash-diverges from Spark's LONG on numerically identical values
-    // (VERDICT r12 root cause; the construct shared by all 7 r12 reds and
-    // absent from all 246 greens). OracleLintSpec now gates this class.
-    "q_fertility" ->
-      s"""WITH $charClassCteNoLower
-         SELECT source, lang, docs, ws_tokens, bpe_tokens,
-           ${dbl9Sql("bpe_tokens", "ws_tokens")} AS fertility
-         FROM (
-           SELECT source, lang, count(*) AS docs,
-             CAST(sum(ws) AS BIGINT) AS ws_tokens,
-             CAST(sum(bpe) AS BIGINT) AS bpe_tokens
-           FROM cnt GROUP BY source, lang)
-         ORDER BY source, lang""",
-    "q_mixture_reweight" ->
-      s"""WITH $charClassCteNoLower,
-         f AS (
-           SELECT source, count(*) AS docs,
-             CAST(sum(ws) AS BIGINT) AS ws_tokens,
-             CAST(sum(bpe) AS BIGINT) AS bpe_tokens
-           FROM cnt GROUP BY source
-         ), b AS (
-           SELECT source, docs,
-             CAST(CASE WHEN ws_tokens > 0
-               THEN (CAST(bpe_tokens AS HUGEINT) * 2000000000 + ws_tokens)
-                    // (CAST(ws_tokens AS HUGEINT) * 2)
-               ELSE 0 END AS BIGINT) AS c9
-           FROM f
-         ), t AS (
-           SELECT CAST(sum(docs) AS BIGINT) AS t_docs,
-                  CAST(sum(docs * c9) AS BIGINT) AS snum FROM b
-         ), wf AS (
-           SELECT b.source, b.docs,
-             CAST(b.c9 * 1000 -
-               ((t.snum * 1000 + t.t_docs // 2) // t.t_docs) AS DOUBLE) / 1e12 AS excess,
-             (CAST(b.docs AS DOUBLE) / t.t_docs) *
-               exp(-1.0 * (CAST(b.c9 * 1000 -
-                 ((t.snum * 1000 + t.t_docs // 2) // t.t_docs) AS DOUBLE) / 1e12)) AS factor
-           FROM b, t
-         ), z AS (SELECT sum(CAST(factor AS DECIMAL(28,15))) AS z FROM wf)
-         SELECT wf.source, wf.docs, excess,
-           round(factor, 12) AS factor,
-           CAST(round(CAST(factor AS DECIMAL(28,15)) / z.z, 9) AS DOUBLE) AS weight
-         FROM wf, z ORDER BY source""",
-
-    "q_pad_waste" ->
-      s"""WITH $charClassCteNoLower,
-         toks AS (
-           SELECT CAST(doc_id AS BIGINT) AS id,
-             coalesce(ws, 0) AS toks
-           FROM cnt WHERE doc_id IS NOT NULL
-         ), arr AS (
-           SELECT 'arrival' AS strategy,
-             (row_number() OVER (ORDER BY id) - 1) // 8 AS batch, toks FROM toks
-           UNION ALL
-           SELECT 'sorted',
-             (row_number() OVER (ORDER BY toks, id) - 1) // 8, toks FROM toks
-         ), per AS (
-           SELECT strategy, batch, count(*) AS n, max(toks) AS mx, sum(toks) AS tk
-           FROM arr GROUP BY strategy, batch
-         ), fin AS (
-           SELECT strategy,
-             CAST(sum(n) AS BIGINT) AS n_docs, count(*) AS n_batches,
-             CAST(sum(tk) AS BIGINT) AS token_sum,
-             CAST(sum(n * mx) AS BIGINT) AS padded_cells
-           FROM per GROUP BY strategy
-         )
-         SELECT strategy, n_docs, n_batches, token_sum, padded_cells,
-           ${dbl9Sql("padded_cells - token_sum", "padded_cells")} AS waste_ratio
-         FROM fin ORDER BY strategy""",
-
-    "q_sample_k_group" ->
-      """SELECT doc_id, source, lang FROM (
-           SELECT doc_id, source, lang,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM documents WHERE doc_id IS NOT NULL)
-         WHERE rn <= 20
-         ORDER BY source, doc_id""",
-
-    // Script report: per-class counts via per-character unicode()
-    // code-point classification — regex-FREE (r11; the
-    // length-minus-regexp_replace identity was one of the quarantined
-    // red-family constructs). Same explicit ranges as the Spark side:
-    // ASCII letters 65-90/97-122, digits 48-57, Cyrillic 1024-1279,
-    // Greek 880-1023, CJK 19968-40959, whitespace {9,10,11,12,13,32}.
-    "q_text_scripts" ->
-      s"""WITH cp AS (
-           SELECT source, lang,
-             CAST(length(text) AS BIGINT) AS n,
-             list_transform(string_split(text, ''), c -> unicode(c)) AS u
-           FROM documents
-         ), per AS (
-           SELECT source, lang, n,
-             CAST(len(list_filter(u, x -> (x BETWEEN 65 AND 90) OR (x BETWEEN 97 AND 122))) AS BIGINT) AS latin,
-             CAST(len(list_filter(u, x -> x BETWEEN 48 AND 57)) AS BIGINT) AS digit,
-             CAST(len(list_filter(u, x -> x BETWEEN 1024 AND 1279)) AS BIGINT) AS cyrillic,
-             CAST(len(list_filter(u, x -> x BETWEEN 880 AND 1023)) AS BIGINT) AS greek,
-             CAST(len(list_filter(u, x -> x BETWEEN 19968 AND 40959)) AS BIGINT) AS cjk,
-             CAST(len(list_filter(u, x -> x IN (9,10,11,12,13,32))) AS BIGINT) AS whitespace
-           FROM cp)
-         SELECT source, lang, docs, chars, latin, digit, cyrillic, greek,
-           cjk, whitespace,
-           chars - latin - digit - cyrillic - greek - cjk - whitespace AS other,
-           ${dbl9Sql("latin", "chars")} AS latin_ratio
-         FROM (
-           SELECT source, lang, count(*) AS docs,
-             CAST(sum(n) AS BIGINT) AS chars,
-             CAST(sum(latin) AS BIGINT) AS latin,
-             CAST(sum(digit) AS BIGINT) AS digit,
-             CAST(sum(cyrillic) AS BIGINT) AS cyrillic,
-             CAST(sum(greek) AS BIGINT) AS greek,
-             CAST(sum(cjk) AS BIGINT) AS cjk,
-             CAST(sum(whitespace) AS BIGINT) AS whitespace
-           FROM per GROUP BY source, lang)
-         ORDER BY source, lang""",
-
-    // Integers-only diagnostic twin of q_fertility: no DOUBLE column at
-    // all, so a red here localizes any residual cross-engine divergence
-    // to a specific BIGINT count column in CORRECTNESS artifacts.
-    "q_fertility_counts" ->
-      s"""WITH $charClassCteNoLower
-         SELECT source, lang, count(*) AS docs,
-           CAST(sum(ws) AS BIGINT) AS ws_tokens,
-           CAST(sum(bpe) AS BIGINT) AS bpe_tokens
-         FROM cnt GROUP BY source, lang
-         ORDER BY source, lang""",
-
-    // ---- Permanent diagnostic canaries. The r8-r15 corpus-statistics
-    // bisect CLOSED in stages: the red family was an oracle
-    // result-REPRESENTATION artifact. r12 convicted DuckDB widening
-    // integer sum() to HUGEINT (Arrow decimal128(38,0)) vs Spark's LONG;
-    // r13 theorized precision <= 18 DECIMAL (int64-backed) was green;
-    // r15 falsified that — the driver redded DECIMAL(18,9) exactly like
-    // DECIMAL(20,9) on value-identical rows (sf0.01 value replay exact,
-    // parquet physical INT64), so ANY scale-9 DECIMAL presentation is
-    // hash-red and the proven-green tiers are BIGINT and DOUBLE. All
-    // production oracles CAST integer sums to BIGINT and present ratios
-    // as DOUBLE derived from the exact scaled integer (dbl9Sql /
-    // TextAnalysis.ratioDouble9); OracleLintSpec gates the int128 class,
-    // and the q_diag_dec_wide/_narrow pair (above) convicts the
-    // DECIMAL-vs-DOUBLE presentation by difference each round.
-    // Retired with information extracted: q_diag_ws_sql and
-    // q_diag_fert_source (r11), q_diag_ws_hist / q_diag_bpe_hist /
-    // q_diag_bpe_hist_nolower / q_diag_groups (r12 green — per-doc counts
-    // and group machinery exonerated), q_diag_ws_grouped /
-    // q_diag_bpe_grouped / q_diag_fert_double (r12 red — adjudicated as
-    // the HUGEINT confound), q_diag_sum_cast / q_diag_sum_uncast (r13
-    // pair — behaved exactly as designed, HUGEINT convicted, retired r14).
-    // Kept below: the data-INDEPENDENT construct probes (identical SQL
-    // text parsed by both engines — a red names an engine/compare
-    // divergence with zero data dependence), q_diag_profile (leaks the
-    // driver-data feature profile through VISIBLE row counts), and the
-    // agree sentinels.
-    // Each agree sentinel emits rows ONLY where two DuckDB constructs
-    // disagree; the Spark side is the matching EMPTY frame, so a red
-    // shows up as oracle_rows > 0 with the disagreement count visible
-    // in the artifact.
-    "q_diag_agree_ws" ->
-      s"""WITH $charClassCte,
-         a AS (SELECT sum($wsTokensRegexSql) AS v FROM documents),
-         b AS (SELECT sum(ws) AS v FROM cnt)
-         SELECT 'ws_split_regex' AS construct,
-           CAST(a.v AS BIGINT) AS regex_total, CAST(b.v AS BIGINT) AS charclass_total
-         FROM a, b WHERE a.v IS DISTINCT FROM b.v""",
-    "q_diag_agree_bpe" ->
-      s"""WITH $charClassCte,
-         a AS (SELECT sum($bpeTokensRegexSql) AS v FROM documents),
-         b AS (SELECT sum(bpe) AS v FROM cnt)
-         SELECT 'bpe_extract_all' AS construct,
-           CAST(a.v AS BIGINT) AS regex_total, CAST(b.v AS BIGINT) AS charclass_total
-         FROM a, b WHERE a.v IS DISTINCT FROM b.v""",
-    "q_diag_agree_latin" ->
-      """WITH a AS (
-           SELECT sum(CAST(length(text) -
-             length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS BIGINT)) AS v
-           FROM documents),
-         b AS (
-           SELECT sum(CAST(len(list_filter(
-             list_transform(string_split(text, ''), c -> unicode(c)),
-             x -> (x BETWEEN 65 AND 90) OR (x BETWEEN 97 AND 122))) AS BIGINT)) AS v
-           FROM documents)
-         SELECT 'latin_regexp_replace' AS construct,
-           CAST(a.v AS BIGINT) AS regex_total, CAST(b.v AS BIGINT) AS charclass_total
-         FROM a, b WHERE a.v IS DISTINCT FROM b.v""",
-    // Conviction pair (r14, re-adjudicated r15): identical value on both
-    // sides; the ONLY difference between the twins — changed in lockstep
-    // on Spark and DuckDB — is the final presentation TYPE.
-    // q_diag_dec_wide is EXPECTED red in-driver: a DECIMAL presentation
-    // at scale 9 diverges on the driver's type-sensitive hash (r15 showed
-    // int64-backed (18,9) reds exactly like int128-backed (20,9), so the
-    // class is "scale-9 DECIMAL", not "128-bit repr"). The narrow twin is
-    // the production DOUBLE presentation of the same integer-derived
-    // value — expected green. Red-wide + green-narrow convicts the
-    // presentation class by difference.
-    // (OracleLintSpec allowlists the wide twin — and its detector
-    // self-test REQUIRES it to be flagged.)
-    "q_diag_dec_wide" ->
-      s"""WITH $charClassCteNoLower
-         SELECT source, lang, docs, ws_tokens, bpe_tokens,
-           CAST(${dec9Sql("bpe_tokens", "ws_tokens")} AS DECIMAL(20,9)) AS fertility
-         FROM (
-           SELECT source, lang, count(*) AS docs,
-             CAST(sum(ws) AS BIGINT) AS ws_tokens,
-             CAST(sum(bpe) AS BIGINT) AS bpe_tokens
-           FROM cnt GROUP BY source, lang)
-         ORDER BY source, lang""",
-    "q_diag_dec_narrow" ->
-      s"""WITH $charClassCteNoLower
-         SELECT source, lang, docs, ws_tokens, bpe_tokens,
-           ${dbl9Sql("bpe_tokens", "ws_tokens")} AS fertility
-         FROM (
-           SELECT source, lang, count(*) AS docs,
-             CAST(sum(ws) AS BIGINT) AS ws_tokens,
-             CAST(sum(bpe) AS BIGINT) AS bpe_tokens
-           FROM cnt GROUP BY source, lang)
-         ORDER BY source, lang""",
-    // data-independent construct probes: IDENTICAL SQL text on both sides
-    "q_diag_dbl_arith" -> dblProbeSql(dblArithRows),
-    "q_diag_dbl_round" -> dblProbeSql(dblRoundRows),
-    "q_diag_dbl_repr" -> dblProbeSql(dblReprRows),
-    "q_diag_bigint_edge" -> bigintProbeSql,
-    "q_diag_str_edge" -> strProbeSql,
-    // corpus data-profile probe: one row per feature PRESENT, so the
-    // visible row counts reveal the driver-data profile
-    "q_diag_profile" -> {
-      val feats: Seq[(String, String)] = Seq(
-        "upper" -> "x BETWEEN 65 AND 90",
-        "digit" -> "x BETWEEN 48 AND 57",
-        "tab" -> "x = 9",
-        "cr" -> "x = 13",
-        "lf" -> "x = 10",
-        "vtff" -> "x IN (11, 12)",
-        "ascii_punct" -> ("(x BETWEEN 33 AND 47) OR (x BETWEEN 58 AND 64)" +
-          " OR (x BETWEEN 91 AND 96) OR (x BETWEEN 123 AND 126)"),
-        "ascii_ctrl" -> "(x BETWEEN 0 AND 8) OR (x BETWEEN 14 AND 31) OR x = 127",
-        "nonascii" -> "x > 127",
-        "supplementary" -> "x > 65535",
-        "combining" -> "x BETWEEN 768 AND 879",
-        "unicode_ws" -> ("x IN (133, 160, 5760, 8232, 8233, 8239, 8287, 12288)" +
-          " OR (x BETWEEN 8192 AND 8202)"),
-        "cyrillic" -> "x BETWEEN 1024 AND 1279",
-        "greek" -> "x BETWEEN 880 AND 1023",
-        "cjk" -> "x BETWEEN 19968 AND 40959")
-      val cpAggs = feats.zipWithIndex.map { case ((_, pred), i) =>
-        s"sum(CASE WHEN len(list_filter(u, x -> $pred)) > 0 THEN 1 ELSE 0 END) AS c$i"
-      }
-      val metaAggs = Seq(
-        "sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS m_null_text",
-        "sum(CASE WHEN text = '' THEN 1 ELSE 0 END) AS m_empty_text",
-        ("sum(CASE WHEN length(text) > 0 AND len(list_filter(u," +
-          " x -> x >= 0 AND NOT (x IN (9,10,11,12,13,32)))) = 0" +
-          " THEN 1 ELSE 0 END) AS m_ws_only_text"),
-        "sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS m_null_lang",
-        "sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS m_null_source")
-      val unions = (feats.zipWithIndex.map { case ((n, _), i) =>
-        s"SELECT '$n' AS feature, CAST(c$i AS BIGINT) AS n_docs FROM p"
-      } ++ Seq("null_text", "empty_text", "ws_only_text", "null_lang",
-        "null_source").map(n =>
-        s"SELECT '$n' AS feature, CAST(m_$n AS BIGINT) AS n_docs FROM p"))
-        .mkString(" UNION ALL ")
-      s"""WITH cp AS (
-           SELECT text, lang, source,
-             CASE WHEN text IS NULL THEN NULL
-                  ELSE list_transform(string_split(text, ''), c -> unicode(c))
-             END AS u
-           FROM documents),
-         p AS (SELECT ${(cpAggs ++ metaAggs).mkString(", ")} FROM cp)
-         SELECT feature, n_docs FROM ($unions)
-         WHERE n_docs > 0 ORDER BY feature"""
-    },
-    // oracle-internal sentinel: fires iff string_split(text,'') stops
-    // being per-code-point in the driver's DuckDB (empty text excluded:
-    // string_split('','') = [''] has len 1 vs length('') = 0 by design)
-    "q_diag_agree_cpsplit" ->
-      """WITH a AS (
-           SELECT sum(CAST(len(string_split(text, '')) AS BIGINT)) AS v
-           FROM documents WHERE text IS NOT NULL AND text <> ''),
-         b AS (
-           SELECT sum(CAST(length(text) AS BIGINT)) AS v
-           FROM documents WHERE text IS NOT NULL AND text <> '')
-         SELECT 'string_split_cp' AS construct,
-           CAST(a.v AS BIGINT) AS split_total, CAST(b.v AS BIGINT) AS length_total
-         FROM a, b WHERE a.v IS DISTINCT FROM b.v""",
-    "q_bm25" -> bm25Oracle(Seq("spark", "merge", "vector"), 15, 1.2, 0.75),
-    "q_hybrid_search" ->
-      s"""WITH bm AS (${bm25Oracle(Seq("spark", "merge", "vector"), 15, 1.2, 0.75)}),
-         vec AS (
-           WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-             d AS (SELECT vec_id,
-                 list_reduce(list_transform(list_zip(embedding, qv),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v) AS dot,
-                 list_reduce(list_transform(embedding,
-                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS n2,
-                 list_reduce(list_transform(qv,
-                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS qn2
-               FROM embeddings, q)
-           SELECT vec_id, dot / (sqrt(n2) * sqrt(qn2)) AS cosine
-           FROM d ORDER BY cosine DESC, vec_id LIMIT 20),
-         r1 AS (SELECT doc_id AS id,
-             row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r FROM bm),
-         r2 AS (SELECT vec_id AS id,
-             row_number() OVER (ORDER BY cosine DESC, vec_id) AS r FROM vec),
-         u AS (
-           SELECT id, CAST(1.0 / (60.0 + CAST(r AS DOUBLE)) AS DECIMAL(30,15)) AS c FROM r1
-           UNION ALL
-           SELECT id, CAST(1.0 / (60.0 + CAST(r AS DOUBLE)) AS DECIMAL(30,15)) FROM r2),
-         f AS (SELECT id, CAST(CAST(sum(c) AS VARCHAR) AS DOUBLE) AS rrf,
-             count(*) AS runs_hit FROM u GROUP BY id)
-       SELECT id, rrf, runs_hit FROM f ORDER BY rrf DESC, id LIMIT 20""",
-    "q_chunk" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS toks
-           FROM documents
-         ), t2 AS (
-           SELECT doc_id, toks, len(toks) AS n FROM t
-           WHERE len(toks) > 0 AND NOT (len(toks) = 1 AND toks[1] = '')
-         ), c AS (
-           SELECT doc_id, toks, n, unnest(range(0, n, 16)) AS strt FROM t2
-         )
-         SELECT doc_id, CAST(strt // 16 AS INT) AS chunk_id,
-           array_to_string(list_slice(toks, strt + 1, strt + 24), ' ') AS chunk_text,
-           CAST(least(n - strt, 24) AS INT) AS chunk_tokens
-         FROM c ORDER BY doc_id, chunk_id""",
-    "q_kmeans" -> kmeansOracle(8, 2, summary = false),
-    "q_dedup_semantic" -> semdedupOracle(8, 2, 0.92),
-    "q_embed_covariance" ->
-      s"""WITH $covarianceCteBody
-         SELECT i, j, round(cov, 9) AS cov,
-           CASE WHEN vi > 0 AND vj > 0 THEN
-             round(cov / sqrt(vi * vj), 9) END AS corr
-         FROM cv ORDER BY i, j""",
-    "q_pca_component" -> pcaOracle(PcaIters,
-      """SELECT vf.i, round(vf.x, 9) AS loading,
-           round(lam.nn, 6) AS eigenvalue
-         FROM vfin vf, lam ORDER BY vf.i"""),
-    "q_pca_scores" -> pcaOracle(PcaIters,
-      """SELECT e.vec_id,
-           round(list_reduce(list_transform(list_zip(e.embedding, lv.lv),
-             pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, w) -> acc + w), 6)
-             AS pc1
-         FROM embeddings e, lv ORDER BY e.vec_id"""),
-    "q_pca_component2" -> pcaOracle2(PcaIters,
-      """SELECT vf.i, round(vf.x, 9) AS loading,
-           round(dlam.nn, 6) AS eigenvalue
-         FROM dvfin vf, dlam ORDER BY vf.i"""),
-    "q_embed_rp" -> {
-      val scale = dlit(math.sqrt(3.0 / RpDims))
-      s"""WITH pl AS (
-           SELECT bb, list(w ORDER BY dd) AS pw FROM (
-             SELECT bb, dd,
-               CAST(('0x' || substr(md5('lshp:' || bb || ':' || dd), 1, 8)) AS BIGINT)
-                 / 4294967296.0 * 2.0 - 1.0 AS w
-             FROM (SELECT unnest(range(0, $RpDims)) AS bb),
-                  (SELECT unnest(range(0, (SELECT len(embedding) FROM embeddings
-                     LIMIT 1))) AS dd))
-           GROUP BY bb)
-         SELECT e.vec_id, CAST(pl.bb + 1 AS INT) AS j,
-           round(list_reduce(list_transform(list_zip(e.embedding, pl.pw),
-             pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, w) -> acc + w)
-             * $scale, 6) AS y
-         FROM embeddings e, pl
-         WHERE e.embedding IS NOT NULL
-         ORDER BY e.vec_id, j"""
-    },
-    "q_embed_outliers" ->
-      """WITH e AS (
-           SELECT vec_id, embedding AS v,
-             list_reduce(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, w) -> acc + w) AS n2
-           FROM embeddings WHERE embedding IS NOT NULL),
-         cm AS (
-           SELECT i,
-             CAST(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS mu
-           FROM (SELECT unnest(embedding) AS x,
-                   generate_subscripts(embedding, 1) AS i
-                 FROM embeddings WHERE embedding IS NOT NULL)
-           GROUP BY i),
-         cl AS (
-           SELECT list(mu ORDER BY i) AS c,
-             list_reduce(list_transform(list(mu ORDER BY i), x -> x * x),
-               (acc, w) -> acc + w) AS c2
-           FROM cm),
-         d AS (
-           SELECT e.vec_id,
-             e.n2 + cl.c2 - 2.0 * list_reduce(list_transform(list_zip(e.v, cl.c),
-               pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, w) -> acc + w) AS d2
-           FROM e, cl),
-         st AS (
-           SELECT CAST(CAST(sum(CAST(d2 AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS m,
-             CAST(CAST(sum(CAST(d2 * d2 AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS m2
-           FROM d)
-         SELECT vec_id, round(d2, 6) AS dist2,
-           CASE WHEN st.m2 - st.m * st.m > 0 THEN
-             round((d2 - st.m) / sqrt(st.m2 - st.m * st.m), 6) END AS z
-         FROM d, st
-         ORDER BY z DESC NULLS LAST, vec_id LIMIT 20""",
-    "q_pca_project" -> pcaOracle2(PcaIters,
-      """SELECT e.vec_id,
-           round(list_reduce(list_transform(list_zip(e.embedding, lv.lv),
-             pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, w) -> acc + w), 6)
-             AS pc1,
-           round(list_reduce(list_transform(list_zip(e.embedding, dlv.lv),
-             pr -> CAST(pr[1] AS DOUBLE) * pr[2]), (acc, w) -> acc + w), 6)
-             AS pc2
-         FROM embeddings e, lv, dlv ORDER BY e.vec_id"""),
-    "q_embed_whiten" ->
-      """WITH x AS (
-           SELECT vec_id, i, CAST(xi AS DOUBLE) AS xi FROM (
-             SELECT vec_id, unnest(embedding) AS xi,
-               generate_subscripts(embedding, 1) AS i
-             FROM embeddings WHERE embedding IS NOT NULL)
-         ), m AS (
-           SELECT i,
-             CAST(CAST(sum(CAST(xi AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(sum(CAST(xi * xi AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS sxx,
-             count(*) AS n
-           FROM x GROUP BY i
-         ), mv AS (
-           SELECT i, sx / n AS mu, (sxx - sx * sx / n) / n AS var FROM m
-         )
-         SELECT x.vec_id, x.i,
-           CASE WHEN mv.var > 0 THEN
-             round((x.xi - mv.mu) / sqrt(mv.var), 6) END AS z
-         FROM x JOIN mv ON mv.i = x.i
-         ORDER BY x.vec_id, x.i""",
-    "q_embed_geometry" ->
-      """WITH b AS (SELECT vec_id, embedding, label,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         pr AS (
-           SELECT a.embedding AS v1, a.nv AS n1, a.label AS l1,
-                  c.embedding AS v2, c.nv AS n2, c.label AS l2
-           FROM b a JOIN b c ON c.vec_id = a.vec_id + 7
-           UNION ALL
-           SELECT a.embedding, a.nv, a.label, c.embedding, c.nv, c.label
-           FROM b a JOIN b c ON c.vec_id = a.vec_id + 131
-         ), s AS (
-           SELECT least(19, greatest(0, CAST(floor((
-               list_reduce(list_transform(list_zip(v1, v2),
-                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v)
-               / (n1 * n2) + 1.0) / 2.0 * 20) AS INT))) AS bucket,
-             l1 = l2 AS same_label
-           FROM pr
-         )
-         SELECT bucket, same_label, count(*) AS n FROM s
-         GROUP BY bucket, same_label ORDER BY bucket, same_label""",
-    "q_embed_drift" ->
-      """WITH x AS (
-           SELECT label, unnest(embedding) AS x,
-             generate_subscripts(embedding, 1) AS i
-           FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL
-         ), s AS (
-           SELECT label, i,
-             CAST(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS m,
-             count(*) AS n
-           FROM x GROUP BY label, i
-         ), c AS (
-           SELECT label, max(n) AS n, list(m ORDER BY i) AS cent
-           FROM s GROUP BY label
-         ), gs AS (
-           SELECT i,
-             CAST(CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS m
-           FROM x GROUP BY i
-         ), g AS (
-           SELECT list(m ORDER BY i) AS cent FROM gs
-         )
-         SELECT c.label, c.n,
-           round(
-             list_reduce(list_transform(list_zip(c.cent, g.cent),
-               p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v)
-             / (sqrt(list_reduce(list_transform(c.cent, v -> v * v), (acc, v) -> acc + v))
-                * sqrt(list_reduce(list_transform(g.cent, v -> v * v), (acc, v) -> acc + v))),
-             9) AS centroid_cosine,
-           round(sqrt(list_reduce(list_transform(c.cent, v -> v * v),
-             (acc, v) -> acc + v)), 9) AS centroid_norm
-         FROM c, g ORDER BY c.label""",
-    "q_kmeans_summary" -> kmeansOracle(8, 2, summary = true),
-    "q_cluster_medoids" -> (kmeansCtes(8, 2) +
-      """
-       SELECT cl AS cluster, vec_id, round(d, 6) AS dist2 FROM (
-         SELECT *, row_number() OVER (PARTITION BY cl ORDER BY d, vec_id) AS rn
-         FROM afin)
-       WHERE rn = 1 ORDER BY cluster"""),
-    "q_coreset" -> coresetOracle(CoresetK),
-    "q_cluster_purity" -> (kmeansCtes(8, 2) +
-      """,
-       lab AS (
-         SELECT a.cl, e.label, count(*) AS c
-         FROM afin a JOIN embeddings e ON a.vec_id = e.vec_id
-         WHERE e.label IS NOT NULL
-         GROUP BY a.cl, e.label),
-       tot AS (SELECT cl, CAST(sum(c) AS BIGINT) AS n FROM lab GROUP BY cl),
-       top AS (
-         SELECT cl, label, c,
-           row_number() OVER (PARTITION BY cl ORDER BY c DESC, label) AS rn
-         FROM lab)
-       SELECT t.cl AS cluster, tot.n AS n, t.label AS top_label,
-         round(CAST(t.c AS DOUBLE) / CAST(tot.n AS DOUBLE), 9) AS purity
-       FROM top t JOIN tot ON t.cl = tot.cl
-       WHERE t.rn = 1 ORDER BY cluster"""),
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS sum_base_price,
-         CAST(SUM(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
-         CAST(SUM(CAST(l_extendedprice*(1.0-l_discount)*(1.0+l_tax) AS DECIMAL(28,6))) AS DOUBLE) AS sum_charge,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-         CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
-         COUNT(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-    "q_calc_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice*(1.0-l_discount) AS revenue
-         FROM lineitem WHERE l_discount >= 0.05 AND l_quantity < 10
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_calc_snapshot" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity*2 AS l_quantity, l_quantity+1.0 AS qty_plus
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_limit_offset" ->
-      """SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
-         ORDER BY o_orderkey LIMIT 100 OFFSET 10""",
-    "q_sort" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity FROM lineitem
-         ORDER BY l_returnflag, l_quantity DESC, l_orderkey, l_linenumber""",
-    "q_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-         ORDER BY l_returnflag, l_linestatus""",
-    "q_unique" -> "SELECT DISTINCT p_brand FROM part ORDER BY p_brand",
-    "q_union" ->
-      """SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS kind FROM customer
-         UNION ALL BY NAME
-         SELECT s_name AS name, 'supplier' AS kind FROM supplier
-         ORDER BY kind, name""",
-    "q_join_inner" ->
-      """SELECT o_orderpriority,
-         CAST(SUM(CAST(l_extendedprice*(1.0-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
-         COUNT(*) AS n
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_join_left" ->
-      """SELECT o_orderkey, c_name, c_acctbal
-         FROM orders LEFT JOIN (SELECT * FROM customer WHERE c_acctbal > 5000) c
-         ON o_custkey = c_custkey ORDER BY o_orderkey""",
-    "q_rank" ->
-      """SELECT o_orderkey, o_totalprice,
-         CAST(ROW_NUMBER() OVER (ORDER BY o_orderkey) AS INT) AS rn,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6)))
-              OVER (ORDER BY o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS DOUBLE) AS running
-         FROM orders ORDER BY o_orderkey""",
-    "q_pivot" ->
-      """SELECT l_returnflag,
-         CAST(SUM(CASE WHEN l_linestatus='F' THEN CAST(l_quantity AS DECIMAL(28,6)) END) AS DOUBLE) AS F,
-         CAST(SUM(CASE WHEN l_linestatus='O' THEN CAST(l_quantity AS DECIMAL(28,6)) END) AS DOUBLE) AS O
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_flatten" ->
-      """SELECT row_id, col_name, cell_value FROM (
-           SELECT p_partkey AS row_id, 'p_partkey' AS col_name, CAST(p_partkey AS VARCHAR) AS cell_value FROM part
-           UNION ALL
-           SELECT p_partkey, 'p_brand', p_brand FROM part
-           UNION ALL
-           SELECT p_partkey, 'p_type', p_type FROM part
-         ) ORDER BY row_id, col_name""",
-    "q_explode_vertical" ->
-      """SELECT doc_id, unnest(string_split(text, ' ')) AS word
-         FROM documents WHERE doc_id < 100 ORDER BY doc_id, word""",
-    "q_explode_horizontal" ->
-      """SELECT o_orderkey,
-         string_split(o_orderpriority, '-')[1] AS o_orderpriority_1,
-         string_split(o_orderpriority, '-')[2] AS o_orderpriority_2
-         FROM orders ORDER BY o_orderkey""",
-    "q_dummies" ->
-      """SELECT o_orderkey,
-         o_orderstatus = 'F' AS o_orderstatus_F,
-         o_orderstatus = 'O' AS o_orderstatus_O,
-         o_orderstatus = 'P' AS o_orderstatus_P
-         FROM orders ORDER BY o_orderkey""",
-    "q_search" ->
-      """SELECT p_partkey, p_name FROM part
-         WHERE lower(p_name) LIKE '%widget%' OR lower(p_brand) LIKE '%widget%'
-            OR lower(p_type) LIKE '%widget%'
-         ORDER BY p_partkey""",
-    "q_filterset" ->
-      """SELECT l_returnflag, COUNT(*) AS n FROM lineitem
-         WHERE l_returnflag IN ('A','R') GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_range_join" ->
-      """WITH bands AS (
-           SELECT b AS band, b*50.0 AS lo, b*50.0+50.0 AS hi FROM range(20) t(b))
-         SELECT event_id, value, band FROM events e
-         JOIN bands ON e.value >= bands.lo AND e.value < bands.hi
-         ORDER BY event_id""",
-    "q_asof_join" ->
-      """WITH marks AS (
-           SELECT event_type, date_trunc('hour', ts) AS mark_ts,
-                  CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS mark_total
-           FROM events GROUP BY event_type, date_trunc('hour', ts))
-         SELECT e.event_id, e.event_type, m.mark_total
-         FROM events e ASOF LEFT JOIN marks m
-           ON e.event_type = m.event_type AND e.ts >= m.mark_ts
-         ORDER BY e.event_id""",
-    "q_events_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS qty
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS qty
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_agg_stats" ->
-      """SELECT l_returnflag,
-         median(l_quantity) AS med_qty,
-         CASE WHEN COUNT(l_quantity) > 1 THEN
-           (CAST(SUM(CAST(l_quantity*l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-            - CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-              * CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(l_quantity))
-           / (COUNT(l_quantity) - 1.0) END AS var_qty,
-         sqrt(CASE WHEN COUNT(l_quantity) > 1 THEN
-           (CAST(SUM(CAST(l_quantity*l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-            - CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-              * CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) / COUNT(l_quantity))
-           / (COUNT(l_quantity) - 1.0) END) AS std_qty,
-         MIN(l_extendedprice) AS min_price,
-         MAX(l_extendedprice) AS max_price,
-         COUNT(DISTINCT l_suppkey) AS n_supp,
-         COUNT(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_agg_strings" ->
-      """SELECT n_regionkey,
-         string_agg(n_name, '' ORDER BY n_name) AS all_names,
-         string_agg(n_name, '|' ORDER BY n_name) AS name_list,
-         string_agg(replace(replace(n_name, '$', '$0'), ',', '$1'), ','
-           ORDER BY replace(replace(n_name, '$', '$0'), ',', '$1')) AS packed
-         FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""",
-    "q_agg_mincount" ->
-      """SELECT user_id,
-         CASE WHEN COUNT(v) >= 5 THEN CAST(SUM(CAST(v AS DECIMAL(28,6))) AS DOUBLE) END AS big_total,
-         COUNT(v) AS n_big
-         FROM (SELECT user_id, CASE WHEN value > 150 THEN value END AS v FROM events)
-         GROUP BY user_id ORDER BY user_id""",
-    "q_transpose" ->
-      """SELECT 'r_name' AS "column",
-         max(CASE WHEN r_regionkey=0 THEN r_name END) AS "0",
-         max(CASE WHEN r_regionkey=1 THEN r_name END) AS "1",
-         max(CASE WHEN r_regionkey=2 THEN r_name END) AS "2",
-         max(CASE WHEN r_regionkey=3 THEN r_name END) AS "3",
-         max(CASE WHEN r_regionkey=4 THEN r_name END) AS "4"
-         FROM region""",
-    "q_sequencer" ->
-      """SELECT chr(CAST(65 + (a // 26) AS INT)) || chr(CAST(65 + (a % 26) AS INT)) AS value
-         FROM range(676) t(a) ORDER BY value""",
-    "q_sequencer_range" ->
-      "SELECT range AS n FROM range(1, 1001) ORDER BY n",
-    "q_func_string" ->
-      """SELECT p_partkey, upper(p_name) AS u,
-         CASE WHEN length(p_name) < 4 THEN NULL ELSE left(p_name, 4) END AS l4,
-         length(p_name) AS len,
-         replace(p_name, ' ', '_') AS rep,
-         levenshtein(p_name, 'widget') AS lev,
-         p_brand || '#' AS catd
-         FROM part ORDER BY p_partkey""",
-    "q_func_math" ->
-      """SELECT l_orderkey, l_linenumber,
-         sqrt(l_quantity) AS sqrt_qty,
-         l_extendedprice / l_quantity AS unit_price,
-         floor(l_discount * 100) AS fl,
-         ceil(l_discount * 100) AS ce,
-         abs(l_discount - 0.05) AS ab,
-         CASE WHEN l_discount - 0.05 > 0 THEN 1.0 WHEN l_discount - 0.05 < 0 THEN -1.0 ELSE 0.0 END AS sg
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_func_datetime" ->
-      """SELECT o_orderkey,
-         year(o_orderdate) AS y, month(o_orderdate) AS m, day(o_orderdate) AS d,
-         strftime(o_orderdate, '%Y-%m-%dT%H:%M:%SZ') AS iso,
-         epoch(o_orderdate) / 86400.0 + 25569.0 AS excel,
-         CAST(epoch(o_orderdate) AS BIGINT) AS unix
-         FROM orders ORDER BY o_orderkey""",
-    "q_func_json" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-         FROM events ORDER BY event_id""",
-    "q_rename" ->
-      """SELECT n_nationkey, n_name AS nation_name, n_regionkey AS region_id
-         FROM nation ORDER BY n_nationkey""",
-    "q_rows_select" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n FROM lineitem
-         WHERE (l_returnflag = 'A' AND l_linestatus = 'F')
-            OR (l_returnflag = 'N' AND l_linestatus = 'O')
-         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-    "q_cache_clone" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "q_csv_roundtrip" ->
-      """SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS c_nationkey,
-         c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""",
-    "q_json_roundtrip" ->
-      """SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS s_nationkey
-         FROM supplier ORDER BY s_suppkey""",
-    "q_crawl" ->
-      """SELECT r_regionkey, 'https://example.invalid/r/' || r_regionkey AS url,
-         200 AS crawl_status,
-         'stub:' || md5('https://example.invalid/r/' || r_regionkey) AS crawl_body
-         FROM region ORDER BY r_regionkey""",
-    "q_http_source" ->
-      """SELECT 'https://example.invalid/doc/42' AS url, 200 AS crawl_status,
-         'stub:' || md5('https://example.invalid/doc/42') AS crawl_body""",
-    "q_rank_by" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-         CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS INT) AS rn,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6)))
-              OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS DOUBLE) AS running
-         FROM orders ORDER BY o_orderkey""",
-    "q_agg_medianpack" ->
-      """WITH g AS (
-           SELECT l_returnflag, list_sort(list(l_quantity)) AS a,
-                  COUNT(l_quantity) AS n,
-                  CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS s,
-                  CAST(SUM(CAST(l_quantity*l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sq
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag,
-           CASE WHEN n = 0 THEN NULL
-                WHEN n % 2 = 1 THEN CAST(a[CAST((n+1)//2 AS INT)] AS VARCHAR)
-                ELSE CAST(a[CAST(n//2 AS INT)] AS VARCHAR) || ',' ||
-                     CAST(a[CAST(n//2+1 AS INT)] AS VARCHAR) END AS med_pack,
-           a[CAST((n+1)//2 AS INT)] AS med_lo,
-           a[CAST(n//2+1 AS INT)] AS med_hi,
-           CASE WHEN n > 0 THEN (sq - s*s/n) / n END AS var_pop,
-           CASE WHEN n > 0 THEN sqrt((sq - s*s/n) / n) END AS std_pop,
-           n AS n_num
-         FROM g ORDER BY l_returnflag""",
-    "q_agg_medianpack_scalable" ->
-      """WITH g AS (
-           SELECT l_returnflag, list_sort(list(l_quantity)) AS a,
-                  COUNT(l_quantity) AS n
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag,
-           CASE WHEN n % 2 = 1 THEN CAST(a[CAST((n+1)//2 AS INT)] AS VARCHAR)
-                ELSE CAST(a[CAST(n//2 AS INT)] AS VARCHAR) || ',' ||
-                     CAST(a[CAST(n//2+1 AS INT)] AS VARCHAR) END AS med_pack,
-           a[CAST((n+1)//2 AS INT)] AS med_pack_low,
-           a[CAST(n//2+1 AS INT)] AS med_pack_high,
-           CAST(n AS BIGINT) AS med_pack_n
-         FROM g ORDER BY l_returnflag""",
-    "q_join_semi_anti" ->
-      """SELECT c_custkey, c_name, 'has_urgent' AS side FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders
-                       WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-         UNION ALL
-         SELECT s_suppkey AS c_custkey, s_name AS c_name, 'no_lineitem' AS side
-         FROM supplier
-         WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-         ORDER BY side, c_custkey""",
-    "q_window_funcs" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-           lag(o_totalprice, 1) OVER w AS prev_price,
-           lead(o_orderkey, 1) OVER w AS next_key,
-           CAST(ntile(4) OVER w AS INT) AS quartile,
-           cume_dist() OVER w AS cdist
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
-         ORDER BY o_custkey, o_orderkey""",
-    // decimal->double via VARCHAR in this oracle: DuckDB's direct decimal
-    // cast double-rounds (int128 to double, then /10^scale); the string
-    // path is correctly rounded like Spark's BigDecimal cast
-    "q_regression" ->
-      """WITH m AS (
-           SELECT l_returnflag,
-             CAST(count(*) AS DOUBLE) AS n,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,6))
-                    * CAST(l_quantity AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,6))
-                    * CAST(l_extendedprice AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,6))
-                    * CAST(l_extendedprice AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
-           FROM lineitem GROUP BY l_returnflag)
-         SELECT l_returnflag,
-           (n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)) AS corr_qp,
-           (sxy - sx*sy/n) / (n - 1.0) AS covar_qp,
-           (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope_qp,
-           (sy - sx * (n*sxy - sx*sy) / (n*sxx - sx*sx)) / n AS intercept_qp,
-           ((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)))
-             * ((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy))) AS r2_qp
-         FROM m ORDER BY l_returnflag""",
-    "q_trend" ->
-      """WITH daily AS (
-           SELECT event_type,
-             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-             count(*) AS cnt
-           FROM events GROUP BY 1, 2
-         ), m AS (
-           SELECT event_type,
-             CAST(count(*) AS BIGINT) AS n_days,
-             CAST(count(*) AS DOUBLE) AS n,
-             CAST(CAST(SUM(CAST(d AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(cnt AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(d AS DECIMAL(19,6))
-                    * CAST(d AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(cnt AS DECIMAL(19,6))
-                    * CAST(cnt AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy,
-             CAST(CAST(SUM(CAST(d AS DECIMAL(19,6))
-                    * CAST(cnt AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
-           FROM daily GROUP BY event_type
-         )
-         SELECT event_type, n_days,
-           (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
-           (sy - sx * (n*sxy - sx*sy) / (n*sxx - sx*sx)) / n AS intercept,
-           (n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)) AS corr
-         FROM m ORDER BY event_type""",
-    "q_winsorize" ->
-      """WITH g AS (
-           SELECT l_returnflag, list_sort(list(l_extendedprice)) AS a,
-                  count(l_extendedprice) AS n
-           FROM lineitem GROUP BY l_returnflag),
-         p AS (
-           SELECT l_returnflag, a,
-             (n-1)*CAST(0.05 AS DOUBLE) AS ql,
-             (n-1)*CAST(0.95 AS DOUBLE) AS qh
-           FROM g),
-         e AS (
-           SELECT l_returnflag,
-             CASE WHEN ceil(ql) = floor(ql) THEN a[CAST(ql AS INT)+1]
-               ELSE (ceil(ql)-ql)*a[CAST(floor(ql) AS INT)+1]
-                  + (ql-floor(ql))*a[CAST(ceil(ql) AS INT)+1] END AS lo,
-             CASE WHEN ceil(qh) = floor(qh) THEN a[CAST(qh AS INT)+1]
-               ELSE (ceil(qh)-qh)*a[CAST(floor(qh) AS INT)+1]
-                  + (qh-floor(qh))*a[CAST(ceil(qh) AS INT)+1] END AS hi
-           FROM p)
-         SELECT l.l_returnflag,
-           count(CASE WHEN l_extendedprice < lo OR l_extendedprice > hi
-                 THEN 1 END) AS n_clipped,
-           CAST(SUM(CAST(least(greatest(l_extendedprice, lo), hi)
-                 AS DECIMAL(28,6))) AS DOUBLE) AS sum_w
-         FROM lineitem l JOIN e ON l.l_returnflag = e.l_returnflag
-         GROUP BY l.l_returnflag ORDER BY l.l_returnflag""",
-    "q_impute" ->
-      """WITH d AS (
-           SELECT l_returnflag,
-             CASE WHEN l_linenumber = 3 THEN NULL ELSE l_quantity END AS v
-           FROM lineitem),
-         g AS (
-           SELECT l_returnflag, list_sort(list(v)) AS a, count(v) AS n
-           FROM d WHERE v IS NOT NULL GROUP BY l_returnflag),
-         m AS (
-           SELECT l_returnflag,
-             (a[CAST((n+1)//2 AS INT)] + a[CAST(n//2+1 AS INT)]) / 2 AS med
-           FROM g)
-         SELECT d.l_returnflag,
-           count(CASE WHEN d.v IS NULL THEN 1 END) AS n_imputed,
-           CAST(SUM(CAST(coalesce(d.v, m.med) AS DECIMAL(28,6))) AS DOUBLE) AS sum_q
-         FROM d JOIN m USING (l_returnflag)
-         GROUP BY d.l_returnflag ORDER BY d.l_returnflag""",
-    "q_outliers" ->
-      """WITH d AS (
-           SELECT doc_id, source, n_chars, CAST(n_chars AS DOUBLE) AS v
-           FROM documents),
-         g AS (
-           SELECT source, list_sort(list(v)) AS a, count(v) AS n
-           FROM d GROUP BY source),
-         m AS (
-           SELECT source,
-             (a[CAST((n+1)//2 AS INT)] + a[CAST(n//2+1 AS INT)]) / 2 AS med
-           FROM g),
-         dev AS (
-           SELECT d.doc_id, d.source, d.n_chars, d.v, m.med,
-                  abs(d.v - m.med) AS adev
-           FROM d JOIN m USING (source)),
-         g2 AS (
-           SELECT source, list_sort(list(adev)) AS a, count(adev) AS n
-           FROM dev GROUP BY source),
-         m2 AS (
-           SELECT source,
-             (a[CAST((n+1)//2 AS INT)] + a[CAST(n//2+1 AS INT)]) / 2 AS mad
-           FROM g2)
-         SELECT dev.doc_id, dev.source, dev.n_chars,
-           CASE WHEN m2.mad > 0
-             THEN CAST(0.6745 AS DOUBLE) * (dev.v - dev.med) / m2.mad END AS robust_z,
-           coalesce(abs(CASE WHEN m2.mad > 0
-             THEN CAST(0.6745 AS DOUBLE) * (dev.v - dev.med) / m2.mad END)
-             > CAST(2.0 AS DOUBLE), false) AS robust_z_outlier
-         FROM dev JOIN m2 USING (source) ORDER BY dev.doc_id""",
-    "q_dedup_tolerance" ->
-      """WITH RECURSIVE e AS (
-           SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-         keep AS (
-           SELECT user_id, event_type, min(us) AS us FROM e GROUP BY 1, 2
-           UNION ALL
-           SELECT e.user_id, e.event_type, min(e.us)
-           FROM keep k JOIN e ON e.user_id = k.user_id
-             AND e.event_type = k.event_type
-             AND e.us > k.us + 21600000000
-           GROUP BY 1, 2)
-         SELECT user_id, event_type, us FROM keep
-         ORDER BY user_id, event_type, us""",
-    "q_interp" ->
-      """WITH e AS (
-           SELECT user_id, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS b,
-                  ts, event_id, value
-           FROM events),
-         obs AS (
-           SELECT user_id, b, value AS obs FROM (
-             SELECT user_id, b, value,
-               row_number() OVER (PARTITION BY user_id, b
-                 ORDER BY ts DESC, event_id DESC) AS rn
-             FROM e) WHERE rn = 1),
-         rng AS (SELECT user_id, min(b) AS lo, max(b) AS hi FROM e GROUP BY user_id),
-         grid AS (SELECT user_id, unnest(range(lo, hi + 1)) AS b FROM rng),
-         j AS (
-           SELECT g.user_id, g.b, o.obs FROM grid g
-           LEFT JOIN obs o USING (user_id, b)),
-         w AS (
-           SELECT user_id, b, obs,
-             last_value(obs IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY b
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-             last_value(CASE WHEN obs IS NOT NULL THEN b END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY b
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pb,
-             first_value(obs IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY b
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-             first_value(CASE WHEN obs IS NOT NULL THEN b END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY b
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nb
-           FROM j)
-         SELECT user_id, b * 86400000000 AS bucket_ts,
-           CASE WHEN obs IS NOT NULL THEN obs
-                WHEN pv IS NULL THEN nv
-                WHEN nv IS NULL THEN pv
-                ELSE pv + (nv - pv) * (CAST(b - pb AS DOUBLE) / CAST(nb - pb AS DOUBLE))
-           END AS value,
-           obs IS NULL AS filled
-         FROM w ORDER BY user_id, bucket_ts""",
-    "q_gapfill" ->
-      """WITH e AS (
-           SELECT user_id, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS b,
-                  ts, event_id, value
-           FROM events),
-         obs AS (
-           SELECT user_id, b, value AS obs FROM (
-             SELECT user_id, b, value,
-               row_number() OVER (PARTITION BY user_id, b
-                 ORDER BY ts DESC, event_id DESC) AS rn
-             FROM e) WHERE rn = 1),
-         rng AS (SELECT user_id, min(b) AS lo, max(b) AS hi FROM e GROUP BY user_id),
-         grid AS (SELECT user_id, unnest(range(lo, hi + 1)) AS b FROM rng),
-         j AS (
-           SELECT g.user_id, g.b, o.obs
-           FROM grid g LEFT JOIN obs o USING (user_id, b))
-         SELECT user_id, b * 86400000000 AS bucket_ts,
-           last_value(obs IGNORE NULLS) OVER (
-             PARTITION BY user_id ORDER BY b
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
-           obs IS NULL AS filled
-         FROM j ORDER BY user_id, bucket_ts""",
-    "q_bins" ->
-      """WITH g AS (
-           SELECT l_returnflag, list_sort(list(l_extendedprice)) AS a,
-                  count(l_extendedprice) AS n
-           FROM lineitem GROUP BY l_returnflag),
-         p AS (
-           SELECT l_returnflag, a,
-             (n-1)*CAST(0.25 AS DOUBLE) AS q1,
-             (n-1)*CAST(0.5  AS DOUBLE) AS q2,
-             (n-1)*CAST(0.75 AS DOUBLE) AS q3
-           FROM g),
-         e AS (
-           SELECT l_returnflag,
-             CASE WHEN ceil(q1) = floor(q1) THEN a[CAST(q1 AS INT)+1]
-               ELSE (ceil(q1)-q1)*a[CAST(floor(q1) AS INT)+1]
-                  + (q1-floor(q1))*a[CAST(ceil(q1) AS INT)+1] END AS e1,
-             CASE WHEN ceil(q2) = floor(q2) THEN a[CAST(q2 AS INT)+1]
-               ELSE (ceil(q2)-q2)*a[CAST(floor(q2) AS INT)+1]
-                  + (q2-floor(q2))*a[CAST(ceil(q2) AS INT)+1] END AS e2,
-             CASE WHEN ceil(q3) = floor(q3) THEN a[CAST(q3 AS INT)+1]
-               ELSE (ceil(q3)-q3)*a[CAST(floor(q3) AS INT)+1]
-                  + (q3-floor(q3))*a[CAST(ceil(q3) AS INT)+1] END AS e3
-           FROM p)
-         SELECT l.l_returnflag,
-           (CASE WHEN l_extendedprice > e1 THEN 1 ELSE 0 END
-          + CASE WHEN l_extendedprice > e2 THEN 1 ELSE 0 END
-          + CASE WHEN l_extendedprice > e3 THEN 1 ELSE 0 END) AS bin,
-           count(*) AS n
-         FROM lineitem l JOIN e ON l.l_returnflag = e.l_returnflag
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_quantiles" ->
-      """WITH g AS (
-           SELECT l_returnflag, list_sort(list(l_extendedprice)) AS a,
-                  count(l_extendedprice) AS n
-           FROM lineitem GROUP BY l_returnflag),
-         p AS (
-           SELECT l_returnflag, a,
-             (n-1)*CAST(0.25 AS DOUBLE) AS p25p,
-             (n-1)*CAST(0.5  AS DOUBLE) AS p50p,
-             (n-1)*CAST(0.75 AS DOUBLE) AS p75p,
-             (n-1)*CAST(0.95 AS DOUBLE) AS p95p
-           FROM g)
-         SELECT l_returnflag,
-           CASE WHEN ceil(p25p) = floor(p25p) THEN a[CAST(p25p AS INT)+1]
-             ELSE (ceil(p25p)-p25p)*a[CAST(floor(p25p) AS INT)+1]
-                + (p25p-floor(p25p))*a[CAST(ceil(p25p) AS INT)+1] END AS p25,
-           CASE WHEN ceil(p50p) = floor(p50p) THEN a[CAST(p50p AS INT)+1]
-             ELSE (ceil(p50p)-p50p)*a[CAST(floor(p50p) AS INT)+1]
-                + (p50p-floor(p50p))*a[CAST(ceil(p50p) AS INT)+1] END AS p50,
-           CASE WHEN ceil(p75p) = floor(p75p) THEN a[CAST(p75p AS INT)+1]
-             ELSE (ceil(p75p)-p75p)*a[CAST(floor(p75p) AS INT)+1]
-                + (p75p-floor(p75p))*a[CAST(ceil(p75p) AS INT)+1] END AS p75,
-           CASE WHEN ceil(p95p) = floor(p95p) THEN a[CAST(p95p AS INT)+1]
-             ELSE (ceil(p95p)-p95p)*a[CAST(floor(p95p) AS INT)+1]
-                + (p95p-floor(p95p))*a[CAST(ceil(p95p) AS INT)+1] END AS p95
-         FROM p ORDER BY l_returnflag""",
-    "q_agg_median_scalable" ->
-      """WITH g AS (
-           SELECT l_linestatus, list_sort(list(l_quantity)) AS a,
-                  COUNT(l_quantity) AS n
-           FROM lineitem GROUP BY l_linestatus)
-         SELECT l_linestatus,
-           (a[CAST((n+1)//2 AS INT)] + a[CAST(n//2+1 AS INT)]) / 2 AS med_qty,
-           a[CAST((n+1)//2 AS INT)] AS med_qty_low,
-           a[CAST(n//2+1 AS INT)] AS med_qty_high,
-           CAST(n AS BIGINT) AS med_qty_n
-         FROM g ORDER BY l_linestatus""",
-    "q_formula_calc" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice*(1.0-l_discount) AS revenue
-         FROM lineitem WHERE l_discount >= 0.05 AND l_quantity < 10
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_formula_logic" ->
-      """SELECT o_orderkey,
-         CASE WHEN o_totalprice > 100000 THEN 'big' ELSE 'small' END AS label,
-         -1.0 AS fb,
-         o_totalprice * 2 AS third
-         FROM orders ORDER BY o_orderkey""",
-    "q_formula_string" ->
-      """SELECT p_partkey,
-         upper(p_name) || '-' || p_brand AS tag,
-         CASE WHEN 2 > length(p_name) THEN NULL ELSE substring(p_name, 3, 3) END AS midpart,
-         CAST(length(p_name) AS DOUBLE) AS nlen
-         FROM part ORDER BY p_partkey""",
-    "q_window_hist" ->
-      """SELECT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                * 86400000000 AS w,
-              CAST(least(9, greatest(0,
-                floor((value - CAST(0.0 AS DOUBLE))
-                      / CAST(100.0 AS DOUBLE) * 10))) AS INT) AS bin,
-              count(*) AS cnt
-         FROM events GROUP BY 1, 2 ORDER BY w, bin""",
-    "q_trending" ->
-      """WITH e AS (
-           SELECT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                  * 86400000000 AS w, event_type
-           FROM events
-         ), c AS (
-           SELECT w, event_type AS item, count(*) AS cnt FROM e GROUP BY 1, 2
-         )
-         SELECT w, item, cnt,
-           CAST(row_number() OVER (PARTITION BY w
-             ORDER BY cnt DESC, item ASC) AS INT) AS rk
-         FROM c QUALIFY rk <= 3 ORDER BY w, rk""",
-    "q_stream_trending" ->
-      """WITH e AS (
-           SELECT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                  * 86400000 AS w_ms, event_type
-           FROM events WHERE event_id < 20000
-         ), c AS (
-           SELECT w_ms, event_type AS item, count(*) AS cnt FROM e GROUP BY 1, 2
-         )
-         SELECT w_ms, item, cnt,
-           CAST(row_number() OVER (PARTITION BY w_ms
-             ORDER BY cnt DESC, item ASC) AS INT) AS rk
-         FROM c QUALIFY rk <= 3 ORDER BY w_ms, rk""",
-    "q_stream_histogram" ->
-      """WITH e AS (
-           SELECT CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-                  * 86400000 AS w_ms,
-             CAST(least(9, greatest(0,
-               floor((value - CAST(0.0 AS DOUBLE))
-                     / CAST(100.0 AS DOUBLE) * 10))) AS INT) AS bin
-           FROM events WHERE event_id < 20000
-         ), tot AS (
-           SELECT w_ms, count(*) AS total FROM e GROUP BY 1
-         ), c AS (
-           SELECT w_ms, bin, count(*) AS cnt FROM e GROUP BY 1, 2
-         ), g AS (
-           SELECT tot.w_ms AS w_ms, unnest(generate_series(0, 9)) AS bin
-           FROM tot
-         )
-         SELECT g.w_ms AS w_ms, CAST(g.bin AS INT) AS bin,
-           COALESCE(cnt, 0) AS cnt,
-           CAST(COALESCE(cnt, 0) AS DOUBLE) / CAST(total AS DOUBLE) AS share
-         FROM g LEFT JOIN c ON g.w_ms = c.w_ms AND g.bin = c.bin
-              JOIN tot ON g.w_ms = tot.w_ms
-         ORDER BY 1, 2""",
-    "q_vocab_overlap" ->
-      """WITH v AS (
-           SELECT DISTINCT source AS g,
-             unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), sz AS (
-           SELECT g, count(*) AS n FROM v GROUP BY g
-         ), i AS (
-           SELECT a.g AS group_a, b.g AS group_b, count(*) AS inter
-           FROM v a JOIN v b ON a.tok = b.tok AND a.g < b.g
-           GROUP BY 1, 2
-         )
-         SELECT group_a, group_b, inter,
-           sa.n + sb.n - inter AS uni,
-           CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-         FROM i JOIN sz sa ON sa.g = group_a JOIN sz sb ON sb.g = group_b
-         ORDER BY group_a, group_b""",
-    "q_topk_per_group" ->
-      """WITH toks AS (
-           SELECT source,
-             unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS item
-           FROM documents
-         ), c AS (
-           SELECT source, item, count(*) AS cnt FROM toks GROUP BY source, item
-         )
-         SELECT source, item, cnt,
-           CAST(row_number() OVER (PARTITION BY source
-             ORDER BY cnt DESC, item ASC) AS INT) AS rk
-         FROM c QUALIFY rk <= 3 ORDER BY source, rk""",
-    "q_weighted_sample" ->
-      """SELECT doc_id, source, n_chars FROM (
-           SELECT doc_id, source, n_chars,
-             ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 + 1.0) / 4294967297.0) / n_chars AS pri
-           FROM documents WHERE n_chars > 0
-           ORDER BY pri DESC, doc_id LIMIT 100)
-         ORDER BY doc_id""",
-    "q_dedup_incremental" ->
-      """WITH batch AS (
-           SELECT doc_id, text FROM documents WHERE doc_id >= 250
-           UNION ALL
-           SELECT doc_id + 300000, text FROM documents WHERE doc_id < 50
-         ), dd AS (
-           SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dupes, text
-           FROM batch GROUP BY text
-         )
-         SELECT doc_id, dupes FROM dd
-         WHERE NOT EXISTS (SELECT 1 FROM documents h
-                           WHERE h.doc_id < 250 AND h.text = dd.text)
-         ORDER BY doc_id""",
-    "q_dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, COUNT(*) AS dupes FROM (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 100000, text FROM documents WHERE doc_id < 50
-         ) GROUP BY text ORDER BY doc_id""",
-    "q_dedup_spans" ->
-      """WITH base AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 200000,
-                  array_to_string(w[1:20], ' ') || ' ' || array_to_string(w[1:20], ' ')
-           FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS w
-                 FROM documents WHERE doc_id < 25)
-         ), words AS (
-           -- empty tokens dropped pre-window; NULL/whitespace-only text
-           -- yields ZERO spans (mirrors Dedup.spans)
-           SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               w -> len(w) > 0) AS ws
-           FROM base
-         ), sp AS (
-           SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                  array_to_string(ws[(i-1)*10+1:(i-1)*10+10], ' ') AS span
-           FROM words, unnest(generate_series(1,
-             CASE WHEN ws IS NULL OR len(ws) = 0 THEN 0
-                  ELSE ((len(ws) - 1) // 10) + 1 END)) AS t(i)
-         ), keep AS (
-           SELECT doc_id, pos, span,
-                  row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-           FROM sp
-         ), agg AS (
-           SELECT doc_id, count(*) AS n_kept,
-                  string_agg(span, ' ' ORDER BY pos) AS text_dedup
-           FROM keep WHERE rn = 1 GROUP BY doc_id
-         ), tot AS (
-           SELECT doc_id,
-             CAST(CASE WHEN ws IS NULL OR len(ws) = 0 THEN 0
-                  ELSE ((len(ws) - 1) // 10) + 1 END AS INT) AS n_spans
-           FROM words
-         )
-         SELECT t.doc_id, t.n_spans,
-                CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-                coalesce(a.text_dedup, '') AS text_dedup
-         FROM tot t LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""",
-    "q_tfidf_terms" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS term
-           FROM documents
-         ), tf AS (
-           SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
-         ), dfq AS (
-           SELECT term, count(*) AS df FROM tf GROUP BY term
-         ), r AS (
-           SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-                  CAST(row_number() OVER (PARTITION BY tf.doc_id
-                    ORDER BY CAST(tf.tf AS DOUBLE) / dfq.df DESC, tf.term ASC) AS INT)
-                    AS term_rank
-           FROM tf JOIN dfq USING (term)
-         )
-         SELECT doc_id, term_rank, term, tf, df FROM r WHERE term_rank <= 3
-         ORDER BY doc_id, term_rank""",
-    "q_pack_sequences" ->
-      """WITH c AS (
-           SELECT doc_id, source,
-                  CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                   w -> len(w) > 0)) AS BIGINT)
-                    AS n_tokens
-           FROM documents
-         ), s AS (
-           SELECT doc_id, source, n_tokens,
-                  CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                    ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS strt
-           FROM c
-         )
-         SELECT doc_id, source, n_tokens,
-                CAST(strt // 256 AS BIGINT) AS pack_id,
-                CAST(strt % 256 AS BIGINT) AS pack_offset
-         FROM s ORDER BY doc_id""",
-    "q_text_oov" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), vocab AS (
-           SELECT tok FROM toks GROUP BY tok
-           ORDER BY count(*) DESC, tok ASC LIMIT 16
-         )
-         SELECT t.doc_id,
-           CAST(count(*) - count(v.tok) AS DOUBLE) / count(*) AS oov_rate
-         FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
-         GROUP BY t.doc_id ORDER BY t.doc_id""",
-    "q_contamination_embed" ->
-      """WITH c AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings WHERE vec_id % 50 <> 0),
-         p AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings WHERE vec_id % 50 = 0),
-         s AS (SELECT c.vec_id AS id, p.vec_id AS probe_id,
-           list_reduce(list_transform(list_zip(c.embedding, p.embedding),
-             pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-             (acc, v) -> acc + v) / (c.nv * p.nv) AS cosine
-         FROM c, p)
-       SELECT id, probe_id, cosine FROM s
-       WHERE cosine >= CAST('0.35' AS DOUBLE)
-       ORDER BY id, probe_id""",
-    "q_novelty" ->
-      """WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         ), ref AS (
-           SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 10 <> 7
-         ), d AS (
-           SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 10 = 7
-         ), t AS (
-           SELECT doc_id, count(*) AS total_ngrams FROM d GROUP BY doc_id
-         ), sn AS (
-           SELECT d.doc_id, count(*) AS seen FROM d JOIN ref USING (g) GROUP BY d.doc_id
-         )
-         SELECT t.doc_id, t.total_ngrams, coalesce(sn.seen, 0) AS seen,
-           CASE WHEN t.total_ngrams > 0 THEN
-             1.0 - CAST(coalesce(sn.seen, 0) AS DOUBLE) / CAST(t.total_ngrams AS DOUBLE)
-           END AS novelty
-         FROM t LEFT JOIN sn ON t.doc_id = sn.doc_id
-         ORDER BY t.doc_id""",
-    "q_contamination" ->
-      """WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         ), corpus AS (
-           SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 10 <> 7
-         ), probe AS (
-           SELECT doc_id AS probe_id, unnest(s) AS g FROM sh WHERE doc_id % 10 = 7
-         )
-         SELECT c.doc_id, p.probe_id, count(*) AS overlap
-         FROM corpus c JOIN probe p USING (g)
-         GROUP BY 1, 2 HAVING count(*) >= 2
-         ORDER BY doc_id, probe_id""",
-    "q_stream_contamination" ->
-      """WITH w AS (
-           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         ), probe AS (
-           SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 10 = 7
-         ), corpus AS (
-           SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 10 <> 7
-         )
-         SELECT c.doc_id, CAST(count(*) AS BIGINT) AS overlap
-         FROM corpus c JOIN probe p USING (g)
-         GROUP BY 1 HAVING count(*) >= 1
-         ORDER BY doc_id""",
-    // Stream-stream interval join: the same [ts - 1h, ts] range
-    // predicate as the streaming query, in plain SQL over the same
-    // hourly mark aggregate (the q_asof_join mark recipe).
-    "q_stream_interval_join" ->
-      """WITH marks AS (
-           SELECT event_type, date_trunc('hour', ts) AS mts,
-                  CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS mark_total
-           FROM events GROUP BY event_type, date_trunc('hour', ts))
-         SELECT e.event_id, m.mts, m.mark_total
-         FROM events e JOIN marks m
-           ON e.event_type = m.event_type
-          AND m.mts >= e.ts - INTERVAL 1 HOUR
-          AND m.mts <= e.ts
-         WHERE e.event_id < 20000
-         ORDER BY event_id, mts""",
-    "q_dedup_jaccard" ->
-      """WITH d AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text || ' nearly identical content' AS text
-           FROM documents WHERE doc_id % 50 = 0
-         ), w AS (
-           SELECT doc_id, regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws FROM d
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ws) >= 3
-               THEN list_distinct(list_transform(generate_series(1, len(ws) - 2),
-                      i -> array_to_string(ws[i:i+2], ' ')))
-               ELSE list_distinct([array_to_string(ws, ' ')]) END AS s
-           FROM w
-         )
-         SELECT a.doc_id AS id1, b.doc_id AS id2,
-           CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) AS jaccard
-         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) >= 0.5
-         ORDER BY 1, 2""",
-    "q_contrastive" ->
-      """WITH d AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id,
-                  text || ' extra trailing words appended' AS text
-           FROM documents WHERE doc_id % 7 = 0
-         ), w AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM d
-         ), nz AS (
-           SELECT doc_id, s FROM w WHERE len(s) > 0
-         ), pr AS (
-           SELECT a.doc_id AS id1, b.doc_id AS id2,
-             CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-                 AS DOUBLE) AS j
-           FROM nz a JOIN nz b ON a.doc_id < b.doc_id
-           WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-                 AS DOUBLE) >= 0.6
-         ), sym AS (
-           SELECT id1 AS anchor_id, id2 AS other, j FROM pr
-           UNION ALL SELECT id2, id1, j FROM pr
-         ), best AS (
-           SELECT anchor_id, other AS pos_id, j AS jaccard FROM (
-             SELECT *, row_number() OVER (PARTITION BY anchor_id
-               ORDER BY j DESC, other ASC) AS rn FROM sym)
-           WHERE rn = 1
-         ), cand AS (
-           SELECT doc_id AS neg_id,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-               AS BIGINT) % 16 AS bk
-           FROM d
-         ), pro AS (
-           SELECT b.anchor_id, b.pos_id, b.jaccard, c.neg_id
-           FROM best b JOIN cand c
-             ON CAST(('0x' || substr(md5(CAST(b.anchor_id AS VARCHAR)), 1, 8))
-               AS BIGINT) % 16 = c.bk
-           WHERE c.neg_id <> b.anchor_id AND c.neg_id <> b.pos_id
-             AND NOT EXISTS (SELECT 1 FROM sym s
-               WHERE s.anchor_id = b.anchor_id AND s.other = c.neg_id)
-         ), rk AS (
-           SELECT anchor_id, pos_id, jaccard, neg_id,
-             CAST(row_number() OVER (PARTITION BY anchor_id
-               ORDER BY md5(CAST(anchor_id AS VARCHAR) || ':'
-                 || CAST(neg_id AS VARCHAR)), neg_id) AS INT) AS neg_rank
-           FROM pro
-         )
-         SELECT anchor_id, pos_id, jaccard, neg_id, neg_rank
-         FROM rk WHERE neg_rank <= 3
-         ORDER BY anchor_id, neg_rank""",
-    "q_drop_contained" ->
-      """WITH base AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0
-         ), tr AS (
-           SELECT doc_id + 3000000 AS doc_id,
-             array_to_string(
-               (regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'))
-                 [1:len(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) // 2],
-               ' ') AS text
-           FROM base
-         ), d AS (
-           SELECT doc_id, text FROM base
-           UNION ALL SELECT doc_id, text FROM tr
-         ), w AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM d
-         ), nz AS (
-           SELECT doc_id, s FROM w WHERE len(s) > 0
-         ), drops AS (
-           SELECT DISTINCT a.doc_id AS id
-           FROM nz a JOIN nz b ON a.doc_id <> b.doc_id
-           WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / CAST(len(a.s) AS DOUBLE) >= 0.9
-             AND (len(b.s) > len(a.s)
-                  OR (len(b.s) = len(a.s) AND b.doc_id < a.doc_id))
-         )
-         SELECT doc_id, CAST(length(text) AS INT) AS n_chars FROM d
-         WHERE doc_id NOT IN (SELECT id FROM drops)
-         ORDER BY doc_id""",
-    "q_containment" ->
-      """WITH base AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0
-         ), tr AS (
-           SELECT doc_id + 3000000 AS doc_id,
-             array_to_string(
-               (regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'))
-                 [1:len(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+')) // 2],
-               ' ') AS text
-           FROM base
-         ), d AS (
-           SELECT doc_id, text FROM base
-           UNION ALL SELECT doc_id, text FROM tr
-         ), w AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM d
-         ), nz AS (
-           SELECT doc_id, s FROM w WHERE len(s) > 0
-         )
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) AS DOUBLE) AS containment
-         FROM nz a JOIN nz b ON a.doc_id <> b.doc_id
-         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) AS DOUBLE) >= 0.8
-         ORDER BY 1, 2""",
-    "q_dedup_ppjoin_screen" ->
-      """WITH c AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-         ), p AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
-           UNION ALL
-           SELECT doc_id + 2000000 AS doc_id,
-                  text || ' probe trailing suffix' AS text
-           FROM documents WHERE doc_id % 3 = 0 AND doc_id % 5 = 0
-         ), wc AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM c
-         ), wp AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM p
-         ), nc AS (SELECT doc_id, s FROM wc WHERE len(s) > 0),
-         np AS (SELECT doc_id, s FROM wp WHERE len(s) > 0)
-         SELECT a.doc_id AS probe_id, b.doc_id AS corpus_id,
-           CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-               AS DOUBLE) AS jaccard
-         FROM np a JOIN nc b ON true
-         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-               AS DOUBLE) >= 0.6
-         ORDER BY 1, 2""",
-    // ground truth for the prefix-filtered join is the INDEPENDENT
-    // all-pairs jaccard — the oracle shares no candidate machinery with
-    // the Spark side, so it checks exactness (no false negatives), not
-    // just agreement
-    "q_dedup_ppjoin" ->
-      """WITH d AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id,
-                  text || ' extra trailing words appended' AS text
-           FROM documents WHERE doc_id % 7 = 0
-         ), w AS (
-           SELECT doc_id,
-             list_distinct(list_filter(
-               regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               t -> len(t) > 0)) AS s
-           FROM d
-         ), nz AS (
-           SELECT doc_id, s FROM w WHERE len(s) > 0
-         )
-         SELECT a.doc_id AS id1, b.doc_id AS id2,
-           CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) AS jaccard
-         FROM nz a JOIN nz b ON a.doc_id < b.doc_id
-         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE) >= 0.6
-         ORDER BY 1, 2""",
-    "q_dedup_fuzzy" ->
-      """WITH k AS (
-           SELECT doc_id, substr(text, 1, 48) AS k FROM documents
-         )
-         SELECT a.doc_id AS id1, b.doc_id AS id2,
-           CAST(levenshtein(a.k, b.k) AS INT) AS dist
-         FROM k a JOIN k b ON a.doc_id < b.doc_id
-         WHERE levenshtein(a.k, b.k) <= 4
-         ORDER BY 1, 2""",
-    "q_dedup_bloom" ->
-      """WITH b AS (
-           SELECT doc_id, source, text,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bk
-           FROM documents
-         )
-         SELECT i.doc_id, i.source FROM b i
-         WHERE i.bk < 60
-           AND EXISTS (SELECT 1 FROM b r WHERE r.bk >= 30 AND r.text = i.text)
-         ORDER BY doc_id""",
-    "q_text_lm" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), c AS (
-           SELECT tok, count(*) AS c FROM toks GROUP BY tok
-         ), t AS (
-           SELECT sum(c) AS t FROM c
-         )
-         SELECT toks.doc_id,
-           round(CAST(sum(CAST(-ln(CAST(c.c AS DOUBLE) / t.t) AS DECIMAL(28,12))) AS DOUBLE)
-             / count(*), 6) AS nll
-         FROM toks JOIN c USING (tok) CROSS JOIN t
-         GROUP BY toks.doc_id ORDER BY toks.doc_id""",
-    "q_ccnet_buckets" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), c AS (
-           SELECT tok, count(*) AS c FROM toks GROUP BY tok
-         ), t AS (
-           SELECT sum(c) AS t FROM c
-         ), nll AS (
-           SELECT toks.doc_id,
-             round(CAST(sum(CAST(-ln(CAST(c.c AS DOUBLE) / t.t) AS DECIMAL(28,12))) AS DOUBLE)
-               / count(*), 6) AS nll
-           FROM toks JOIN c USING (tok) CROSS JOIN t
-           GROUP BY toks.doc_id
-         ), g AS (
-           SELECT list_sort(list(nll)) AS a, count(*) AS n FROM nll
-         ), p AS (
-           SELECT a, (n - 1) * (CAST(1 AS DOUBLE) / 3) AS q0p,
-                  (n - 1) * (CAST(2 AS DOUBLE) / 3) AS q1p
-           FROM g
-         ), th AS (
-           SELECT
-             CASE WHEN ceil(q0p) = floor(q0p) THEN a[CAST(q0p AS INT)+1]
-               ELSE (ceil(q0p)-q0p)*a[CAST(floor(q0p) AS INT)+1]
-                  + (q0p-floor(q0p))*a[CAST(ceil(q0p) AS INT)+1] END AS q0,
-             CASE WHEN ceil(q1p) = floor(q1p) THEN a[CAST(q1p AS INT)+1]
-               ELSE (ceil(q1p)-q1p)*a[CAST(floor(q1p) AS INT)+1]
-                  + (q1p-floor(q1p))*a[CAST(ceil(q1p) AS INT)+1] END AS q1
-           FROM p
-         )
-         SELECT nll.doc_id, nll.nll,
-           CASE WHEN nll.nll <= th.q0 THEN 'head'
-                WHEN nll.nll <= th.q1 THEN 'middle'
-                ELSE 'tail' END AS bucket
-         FROM nll, th ORDER BY nll.doc_id""",
-    "q_source_divergence" ->
-      """WITH gt AS (
-           SELECT g, tok, count(*) AS cg FROM (
-             SELECT source AS g,
-               unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-             FROM documents)
-           WHERE length(tok) > 0 GROUP BY g, tok
-         ), corpus AS (
-           SELECT tok, CAST(sum(cg) AS BIGINT) AS cc FROM gt GROUP BY tok
-         ), gtot AS (
-           SELECT g, CAST(sum(cg) AS BIGINT) AS ng,
-             CAST(count(*) AS BIGINT) AS vg
-           FROM gt GROUP BY g
-         ), ct AS (
-           SELECT CAST(sum(cc) AS BIGINT) AS nc FROM corpus
-         )
-         SELECT gt.g AS source, any_value(gtot.ng) AS n_tokens,
-           any_value(gtot.vg) AS vocab,
-           round(CAST(sum(CAST(
-             (CAST(gt.cg AS DOUBLE) / gtot.ng)
-               * ln((CAST(gt.cg AS DOUBLE) * ct.nc)
-                    / (CAST(corpus.cc AS DOUBLE) * gtot.ng))
-             AS DECIMAL(28,12))) AS DOUBLE), 6) AS kl
-         FROM gt JOIN corpus USING (tok) JOIN gtot USING (g) CROSS JOIN ct
-         GROUP BY gt.g ORDER BY gt.g""",
-    "q_text_lm2" ->
-      """WITH d AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ws FROM documents
-         ), bg AS (
-           SELECT doc_id,
-             CASE WHEN i = 1 THEN chr(1) || 's' ELSE ws[i-1] END AS prev,
-             ws[i] AS cur
-           FROM d, unnest(generate_series(1, len(ws))) AS t(i)
-         ), c2 AS (
-           SELECT prev, cur, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2
-         ), c1 AS (
-           SELECT prev, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1
-         ), v AS (
-           SELECT CAST(count(DISTINCT cur) AS BIGINT) AS v FROM bg
-         )
-         SELECT bg.doc_id,
-           round(CAST(sum(CAST(-ln((c2.c2 + 0.5) / (c1.c1 + 0.5 * v.v)) AS DECIMAL(28,12))) AS DOUBLE)
-             / count(*), 6) AS nll2
-         FROM bg JOIN c2 USING (prev, cur) JOIN c1 USING (prev) CROSS JOIN v
-         GROUP BY bg.doc_id ORDER BY doc_id""",
-    "q_bpe_pairs" ->
-      """WITH words AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS w
-           FROM documents
-         ), wc AS (
-           SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM words
-           WHERE len(w) > 0 GROUP BY w
-         ), syms AS (
-           SELECT cnt, list_append(string_split(w, ''), '</w>') AS s FROM wc
-         ), idx AS (
-           SELECT cnt, s, i
-           FROM syms, unnest(generate_series(1, len(s) - 1)) AS t(i)
-         )
-         SELECT s[i] AS l, s[i+1] AS r, CAST(sum(cnt) AS BIGINT) AS pair_count
-         FROM idx GROUP BY 1, 2 ORDER BY l, r""",
-    "q_bpe_train" -> bpeTrainOracle(16),
-    "q_bpe_segment" -> bpeSegmentOracle(8),
-    "q_bpe_encode" -> bpeEncodeOracle(8),
-    "q_classify_train" -> classifyTrainOracle(12),
-    "q_text_quality" ->
-      """SELECT doc_id,
-         len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                   w -> len(w) > 0)) AS n_tokens,
-         len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \t\n\x0b\f\r]')) AS n_bpe,
-         CASE WHEN length(text) > 0 THEN
-           CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-             / length(text) ELSE 0.0 END AS punct_ratio,
-         CASE WHEN len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-           CAST(list_sum(list_transform(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'), t -> length(t))) AS DOUBLE)
-             / len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS mean_wlen,
-         CASE WHEN len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-           CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-             t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-             / len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS sw_en
-         FROM documents ORDER BY doc_id""",
-    "q_text_scored" ->
-      """WITH c AS (
-           SELECT doc_id,
-             least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) AS len_score,
-             CASE WHEN len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                 t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS sw,
-             CASE WHEN length(text) > 0 THEN
-               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(text) ELSE 0.0 END AS punct
-           FROM documents)
-         SELECT doc_id,
-           least(len_score, 1.0) * 0.4 + least(sw * 5.0, 1.0) * 0.3 +
-           greatest(0.0, 1.0 - punct * 5.0) * 0.3 AS score
-         FROM c ORDER BY doc_id""",
-    "q_text_nfc" ->
-      """SELECT doc_id, nfc_normalize(text || 'e' || chr(769)) AS nfc
-         FROM documents ORDER BY doc_id""",
-    "q_text_fixmojibake" ->
-      """SELECT doc_id, text AS fixed FROM documents ORDER BY doc_id""",
-    "q_classify_score" ->
-      """WITH f AS (
-           SELECT doc_id, coalesce(text, '') AS t FROM documents
-         ), feat AS (
-           SELECT doc_id,
-             least(CAST(length(t) AS DOUBLE) / 1000.0, 1.0) AS f1,
-             CASE WHEN length(t) > 0 THEN
-               CAST(length(t) - length(regexp_replace(t, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(t) ELSE 0.0 END AS f2,
-             CASE WHEN len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(len(list_filter(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+'),
-                 w -> w IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS f3,
-             least((CASE WHEN len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(list_sum(list_transform(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+'),
-                 w -> length(w))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(t)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END) / 10.0, 1.0) AS f4,
-             CASE WHEN length(t) > 0 THEN
-               CAST(length(t) - length(regexp_replace(t, '[0-9]', '', 'g')) AS DOUBLE)
-                 / length(t) ELSE 0.0 END AS f5,
-             CASE WHEN length(t) > 0 THEN
-               CAST(length(t) - length(regexp_replace(t, '[A-Z]', '', 'g')) AS DOUBLE)
-                 / length(t) ELSE 0.0 END AS f6
-           FROM f)
-         SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(1.0*f1 - 2.0*f2 + 4.0*f3 + 1.0*f4 - 3.0*f5 - 2.0*f6 - 1.0))), 6) AS score
-         FROM feat ORDER BY doc_id""",
-    "q_classify_auc" ->
-      s"""WITH $classifyScoredCte,
-         g AS (SELECT s, count(*) AS n, sum(y) AS p FROM sc GROUP BY s),
-         r AS (SELECT n, p,
-             coalesce(sum(n) OVER (ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
-           FROM g)
-         SELECT CAST(sum(p) AS BIGINT) AS npos,
-           CAST(sum(n - p) AS BIGINT) AS nneg,
-           CASE WHEN sum(p) > 0 AND sum(n - p) > 0 THEN
-             round((CAST(sum(p * (2 * below + n + 1)) AS DOUBLE)
-                 - CAST(sum(p) AS DOUBLE) * (sum(p) + 1))
-               / (2.0 * sum(p) * sum(n - p)), 9) END AS auc
-         FROM r""",
-    "q_classify_calibration" ->
-      s"""WITH $classifyScoredCte
-         SELECT CAST(least(greatest(floor(s * 10), 0), 9) AS INT) AS bin,
-           count(*) AS n,
-           round(CAST(sum(CAST(s AS DECIMAL(30,15))) AS DOUBLE) / count(*), 9) AS mean_score,
-           round(CAST(sum(y) AS DOUBLE) / count(*), 9) AS pos_rate
-         FROM sc GROUP BY 1 ORDER BY 1""",
-    "q_classify_thresholds" ->
-      s"""WITH $classifyScoredCte,
-         t AS (SELECT CAST(unnest([0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS DOUBLE) AS threshold),
-         a AS (SELECT t.threshold,
-             count(*) FILTER (WHERE sc.s >= t.threshold) AS predicted,
-             coalesce(sum(sc.y) FILTER (WHERE sc.s >= t.threshold), 0) AS tp,
-             sum(sc.y) AS pos
-           FROM sc, t GROUP BY t.threshold)
-         SELECT threshold, CAST(predicted AS BIGINT) AS predicted,
-           CAST(tp AS BIGINT) AS tp,
-           CASE WHEN predicted > 0
-             THEN round(CAST(tp AS DOUBLE) / predicted, 9) END AS precision,
-           CASE WHEN pos > 0
-             THEN round(CAST(tp AS DOUBLE) / pos, 9) END AS recall,
-           CASE WHEN predicted + pos > 0
-             THEN round(2.0 * CAST(tp AS DOUBLE) / (predicted + pos), 9) END AS f1
-         FROM a ORDER BY threshold""",
-    "q_curate_packed" ->
-      """WITH words AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-               w -> len(w) > 0) AS ws
-           FROM documents
-         ), sp AS (
-           SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                  array_to_string(ws[(i-1)*10+1:(i-1)*10+10], ' ') AS span
-           FROM words, unnest(generate_series(1,
-             CASE WHEN ws IS NULL OR len(ws) = 0 THEN 0
-                  ELSE ((len(ws) - 1) // 10) + 1 END)) AS t(i)
-         ), keep AS (
-           SELECT doc_id, pos, span,
-                  row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-           FROM sp
-         ), agg AS (
-           SELECT doc_id, string_agg(span, ' ' ORDER BY pos) AS td
-           FROM keep WHERE rn = 1 GROUP BY doc_id
-         ), dd AS (
-           SELECT d.doc_id, d.source, a.td FROM documents d JOIN agg a USING (doc_id)
-         ), sc AS (
-           SELECT doc_id, source, td,
-             least(CAST(length(td) AS DOUBLE) / 1000.0, 1.0) * 0.4 +
-             least((CASE WHEN len(string_split_regex(trim(lower(td)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(len(list_filter(string_split_regex(trim(lower(td)), '[ \t\n\x0b\f\r]+'),
-                 t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(td)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END) * 5.0, 1.0) * 0.3 +
-             greatest(0.0, 1.0 - (CASE WHEN length(td) > 0 THEN
-               CAST(length(td) - length(regexp_replace(td, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(td) ELSE 0.0 END) * 5.0) * 0.3 AS score
-           FROM dd
-         ), cut AS (
-           SELECT doc_id, source, td FROM (
-             SELECT doc_id, source, td,
-               percent_rank() OVER (PARTITION BY source ORDER BY score DESC, doc_id) AS kf
-             FROM sc)
-           WHERE kf <= 0.8
-         ), n AS (
-           SELECT source, count(*) AS n FROM cut GROUP BY source
-         ), w AS (
-           SELECT source, n, sqrt(CAST(n AS DOUBLE)) AS w FROM n
-         ), t2 AS (
-           SELECT CAST(SUM(CAST(w AS DECIMAL(28,6))) AS DOUBLE) AS wsum,
-                  CAST(sum(n) AS BIGINT) AS ntot
-           FROM w
-         ), tg AS (
-           SELECT source, floor(ntot * w / wsum) AS target FROM w, t2
-         ), r AS (
-           SELECT doc_id, source, td,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM cut
-         ), mixed AS (
-           SELECT r.doc_id, r.source, r.td FROM r JOIN tg USING (source)
-           WHERE rn <= target
-         ), toks AS (
-           SELECT doc_id, source,
-             CAST(len(list_filter(string_split_regex(trim(lower(td)), '[ \t\n\x0b\f\r]+'),
-                   w -> len(w) > 0)) AS BIGINT)
-               AS n_tokens
-           FROM mixed
-         ), strts AS (
-           SELECT doc_id, source, n_tokens,
-             CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT) AS strt
-           FROM toks
-         )
-         SELECT doc_id, source, n_tokens,
-                CAST(strt // 256 AS BIGINT) AS pack_id,
-                CAST(strt % 256 AS BIGINT) AS pack_offset
-         FROM strts ORDER BY doc_id""",
-    "q_temperature_mix" ->
-      """WITH base AS (
-           SELECT doc_id, source FROM documents
-           UNION ALL
-           SELECT doc_id + 400000, 'src0' FROM documents WHERE doc_id < 100
-         ), n AS (
-           SELECT source, count(*) AS n FROM base GROUP BY source
-         ), w AS (
-           SELECT source, n, sqrt(CAST(n AS DOUBLE)) AS w FROM n
-         ), t AS (
-           SELECT CAST(SUM(CAST(w AS DECIMAL(28,6))) AS DOUBLE) AS wsum,
-                  CAST(sum(n) AS BIGINT) AS ntot
-           FROM w
-         ), tg AS (
-           SELECT source, floor(ntot * w / wsum) AS target FROM w, t
-         ), r AS (
-           SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM base
-         )
-         SELECT r.doc_id, r.source FROM r JOIN tg USING (source)
-         WHERE rn <= target ORDER BY doc_id""",
-    "q_source_cap" ->
-      """WITH base AS (
-           SELECT doc_id, source FROM documents
-           UNION ALL
-           SELECT doc_id + 500000, 'src0' FROM documents WHERE doc_id % 10 < 3
-         ), r AS (
-           SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM base
-         )
-         SELECT doc_id, source FROM r WHERE rn <= 15 ORDER BY doc_id""",
-    "q_histogram" ->
-      """WITH b AS (
-           SELECT CASE WHEN n_chars = 600 THEN 11
-                  ELSE CAST(floor((n_chars - 0.0) / (600.0 / 12)) AS INT) END AS bin
-           FROM documents WHERE n_chars IS NOT NULL
-         )
-         SELECT bin,
-           0.0 + bin * (600.0 / 12) AS bin_lo,
-           0.0 + (bin + 1) * (600.0 / 12) AS bin_hi,
-           count(*) AS n
-         FROM b WHERE bin >= 0 AND bin < 12
-         GROUP BY bin ORDER BY bin""",
-    "q_importance" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), tt AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents WHERE lang = 'en'
-         ), cc AS (
-           SELECT tok, count(*) AS cc FROM toks GROUP BY tok
-         ), ct AS (
-           SELECT tok, count(*) AS ct FROM tt GROUP BY tok
-         ), vocab AS (
-           SELECT COALESCE(cc.tok, ct.tok) AS tok, cc.cc, ct.ct
-           FROM cc FULL OUTER JOIN ct ON cc.tok = ct.tok
-         ), sizes AS (
-           SELECT count(*) AS v,
-             sum(COALESCE(ct, 0)) AS tt_total,
-             sum(COALESCE(cc, 0)) AS tc_total
-           FROM vocab
-         )
-         SELECT toks.doc_id,
-           round(CAST(sum(CAST(
-               ln((COALESCE(vocab.ct, 0) + CAST(1.0 AS DOUBLE)) / (sizes.tt_total + sizes.v))
-             - ln((COALESCE(vocab.cc, 0) + CAST(1.0 AS DOUBLE)) / (sizes.tc_total + sizes.v))
-             AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS logratio
-         FROM toks JOIN vocab USING (tok) CROSS JOIN sizes
-         GROUP BY toks.doc_id ORDER BY toks.doc_id""",
-    "q_token_budget" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-             CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                   w -> len(w) > 0)) AS BIGINT)
-               AS n_tokens,
-             md5(CAST(doc_id AS VARCHAR)) AS pr
-           FROM documents
-         ), c AS (
-           SELECT doc_id, source, n_tokens,
-             sum(n_tokens) OVER (ORDER BY pr, doc_id
-               ROWS UNBOUNDED PRECEDING) AS cum_tokens
-           FROM t
-         )
-         SELECT doc_id, source, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-         FROM c WHERE cum_tokens <= 15000 ORDER BY doc_id""",
-    "q_profile" ->
-      """SELECT 'doc_id' AS "column",
-             CAST(SUM(CAST(TRY_CAST(doc_id AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-               / COUNT(TRY_CAST(doc_id AS DOUBLE)) AS avg,
-             sqrt(CASE WHEN COUNT(TRY_CAST(doc_id AS DOUBLE)) > 1 THEN
-               (CAST(SUM(CAST(TRY_CAST(doc_id AS DOUBLE)*TRY_CAST(doc_id AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                - CAST(SUM(CAST(TRY_CAST(doc_id AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  * CAST(SUM(CAST(TRY_CAST(doc_id AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  / COUNT(TRY_CAST(doc_id AS DOUBLE)))
-               / (COUNT(TRY_CAST(doc_id AS DOUBLE)) - 1.0) END) AS stdev,
-             CAST(MIN(doc_id) AS VARCHAR) AS min_val,
-             CAST(MAX(doc_id) AS VARCHAR) AS max_val,
-             COUNT(*) AS n,
-             COUNT(DISTINCT doc_id) AS n_distinct,
-             COUNT(*) - COUNT(doc_id) AS n_empty
-           FROM documents
-           UNION ALL
-           SELECT 'text' AS "column",
-             CAST(SUM(CAST(TRY_CAST(text AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-               / COUNT(TRY_CAST(text AS DOUBLE)) AS avg,
-             sqrt(CASE WHEN COUNT(TRY_CAST(text AS DOUBLE)) > 1 THEN
-               (CAST(SUM(CAST(TRY_CAST(text AS DOUBLE)*TRY_CAST(text AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                - CAST(SUM(CAST(TRY_CAST(text AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  * CAST(SUM(CAST(TRY_CAST(text AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  / COUNT(TRY_CAST(text AS DOUBLE)))
-               / (COUNT(TRY_CAST(text AS DOUBLE)) - 1.0) END) AS stdev,
-             CAST(MIN(text) AS VARCHAR) AS min_val,
-             CAST(MAX(text) AS VARCHAR) AS max_val,
-             COUNT(*) AS n,
-             COUNT(DISTINCT text) AS n_distinct,
-             COUNT(*) - COUNT(text) AS n_empty
-           FROM documents
-           UNION ALL
-           SELECT 'lang' AS "column",
-             CAST(SUM(CAST(TRY_CAST(lang AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-               / COUNT(TRY_CAST(lang AS DOUBLE)) AS avg,
-             sqrt(CASE WHEN COUNT(TRY_CAST(lang AS DOUBLE)) > 1 THEN
-               (CAST(SUM(CAST(TRY_CAST(lang AS DOUBLE)*TRY_CAST(lang AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                - CAST(SUM(CAST(TRY_CAST(lang AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  * CAST(SUM(CAST(TRY_CAST(lang AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  / COUNT(TRY_CAST(lang AS DOUBLE)))
-               / (COUNT(TRY_CAST(lang AS DOUBLE)) - 1.0) END) AS stdev,
-             CAST(MIN(lang) AS VARCHAR) AS min_val,
-             CAST(MAX(lang) AS VARCHAR) AS max_val,
-             COUNT(*) AS n,
-             COUNT(DISTINCT lang) AS n_distinct,
-             COUNT(*) - COUNT(lang) AS n_empty
-           FROM documents
-           UNION ALL
-           SELECT 'source' AS "column",
-             CAST(SUM(CAST(TRY_CAST(source AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-               / COUNT(TRY_CAST(source AS DOUBLE)) AS avg,
-             sqrt(CASE WHEN COUNT(TRY_CAST(source AS DOUBLE)) > 1 THEN
-               (CAST(SUM(CAST(TRY_CAST(source AS DOUBLE)*TRY_CAST(source AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                - CAST(SUM(CAST(TRY_CAST(source AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  * CAST(SUM(CAST(TRY_CAST(source AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  / COUNT(TRY_CAST(source AS DOUBLE)))
-               / (COUNT(TRY_CAST(source AS DOUBLE)) - 1.0) END) AS stdev,
-             CAST(MIN(source) AS VARCHAR) AS min_val,
-             CAST(MAX(source) AS VARCHAR) AS max_val,
-             COUNT(*) AS n,
-             COUNT(DISTINCT source) AS n_distinct,
-             COUNT(*) - COUNT(source) AS n_empty
-           FROM documents
-           UNION ALL
-           SELECT 'n_chars' AS "column",
-             CAST(SUM(CAST(TRY_CAST(n_chars AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-               / COUNT(TRY_CAST(n_chars AS DOUBLE)) AS avg,
-             sqrt(CASE WHEN COUNT(TRY_CAST(n_chars AS DOUBLE)) > 1 THEN
-               (CAST(SUM(CAST(TRY_CAST(n_chars AS DOUBLE)*TRY_CAST(n_chars AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                - CAST(SUM(CAST(TRY_CAST(n_chars AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  * CAST(SUM(CAST(TRY_CAST(n_chars AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                  / COUNT(TRY_CAST(n_chars AS DOUBLE)))
-               / (COUNT(TRY_CAST(n_chars AS DOUBLE)) - 1.0) END) AS stdev,
-             CAST(MIN(n_chars) AS VARCHAR) AS min_val,
-             CAST(MAX(n_chars) AS VARCHAR) AS max_val,
-             COUNT(*) AS n,
-             COUNT(DISTINCT n_chars) AS n_distinct,
-             COUNT(*) - COUNT(n_chars) AS n_empty
-           FROM documents
-           ORDER BY "column"""",
-    "q_shard_manifest" ->
-      """WITH t AS (
-           SELECT doc_id,
-             coalesce(CAST(len(list_filter(
-                 string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                 w -> len(w) > 0)) AS BIGINT), 0)
-               AS n_tokens,
-             md5(CAST(doc_id AS VARCHAR)) AS pr
-           FROM documents
-         ), c AS (
-           SELECT doc_id, n_tokens,
-             sum(n_tokens) OVER (ORDER BY pr, doc_id ROWS UNBOUNDED PRECEDING)
-               - n_tokens AS excum
-           FROM t
-         )
-         SELECT CAST(floor(CAST(excum AS DOUBLE) / 2000) AS BIGINT) AS shard_id,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS token_total,
-           CAST(sum(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT))
-             AS BIGINT) AS id_checksum
-         FROM c GROUP BY 1 ORDER BY shard_id""",
-    "q_dup_histogram" ->
-      """WITH ad AS (
-           SELECT text FROM documents
-           UNION ALL
-           SELECT text FROM documents WHERE doc_id < 25
-           UNION ALL
-           SELECT text FROM documents WHERE doc_id = 0),
-         f AS (
-           SELECT md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp,
-             count(*) AS sz
-           FROM ad WHERE text IS NOT NULL GROUP BY 1)
-         SELECT sz AS cluster_size, count(*) AS n_clusters,
-           CAST(sum(sz) AS BIGINT) AS n_docs
-         FROM f GROUP BY sz ORDER BY cluster_size""",
-    "q_source_overlap" ->
-      """WITH ad AS (
-           SELECT source, text FROM documents
-           UNION ALL
-           SELECT 'mirror' AS source, text FROM documents WHERE doc_id < 25),
-         f AS (
-           SELECT DISTINCT source AS g,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-           FROM ad WHERE source IS NOT NULL AND text IS NOT NULL),
-         n AS (SELECT g, count(*) AS n FROM f GROUP BY g),
-         pr AS (
-           SELECT a.g AS sa, b.g AS sb, count(*) AS shared
-           FROM f a JOIN f b ON a.fp = b.fp AND a.g < b.g
-           GROUP BY a.g, b.g)
-         SELECT pr.sa AS src_a, pr.sb AS src_b, pr.shared,
-           na.n AS n_a, nb.n AS n_b,
-           round(CAST(pr.shared AS DOUBLE)
-             / CAST(na.n + nb.n - pr.shared AS DOUBLE), 9) AS jaccard
-         FROM pr JOIN n na ON na.g = pr.sa JOIN n nb ON nb.g = pr.sb
-         ORDER BY src_a, src_b""",
-    "q_zipf" ->
-      """WITH tk AS (
-           SELECT t, count(*) AS c FROM (
-             SELECT unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY t),
-         tp AS (
-           SELECT CAST(c AS DOUBLE) AS c,
-             row_number() OVER (ORDER BY c DESC, t) AS r
-           FROM tk ORDER BY c DESC, t LIMIT 100),
-         pt AS (SELECT ln(CAST(r AS DOUBLE)) AS x, ln(c) AS y FROM tp),
-         m AS (
-           SELECT CAST(count(*) AS DOUBLE) AS n,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6))
-                    * CAST(x AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(19,6))
-                    * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS syy,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(19,6))
-                    * CAST(y AS DECIMAL(19,6))) AS VARCHAR) AS DOUBLE) AS sxy
-           FROM pt)
-         SELECT CAST(n AS BIGINT) AS n_ranks,
-           CASE WHEN n > 1 AND n*sxx - sx*sx > 0 THEN
-             (n*sxy - sx*sy) / (n*sxx - sx*sx) END AS slope,
-           CASE WHEN n > 1 AND n*sxx - sx*sx > 0 THEN
-             (sy - sx * (n*sxy - sx*sy) / (n*sxx - sx*sx)) / n END AS intercept,
-           CASE WHEN n > 1 AND (n*sxx - sx*sx) * (n*syy - sy*sy) > 0 THEN
-             ((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)))
-               * ((n*sxy - sx*sy) / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)))
-             END AS r2
-         FROM m""",
-    "q_corpus_stats" ->
-      """WITH base AS (
-           SELECT doc_id, text, source FROM documents
-           UNION ALL
-           SELECT doc_id + 300000, text, source FROM documents WHERE doc_id < 25
-         ), f AS (
-           SELECT source,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp,
-             CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                   w -> len(w) > 0)) AS BIGINT)
-               AS ntok,
-             least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) * 0.4 +
-             least((CASE WHEN len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                 t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END) * 5.0, 1.0) * 0.3 +
-             greatest(0.0, 1.0 - (CASE WHEN length(text) > 0 THEN
-               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(text) ELSE 0.0 END) * 5.0) * 0.3 AS score
-           FROM base
-         ), d AS (
-           SELECT fp FROM f GROUP BY fp HAVING count(*) > 1
-         )
-         SELECT source,
-           count(*) AS n_docs,
-           CAST(sum(ntok) AS BIGINT) AS tok_total,
-           CAST(SUM(CAST(score AS DECIMAL(28,6))) AS DOUBLE) / count(score) AS avg_quality,
-           count(d.fp) AS n_dup_docs
-         FROM f LEFT JOIN d USING (fp)
-         GROUP BY source ORDER BY source""",
-    "q_quality_topfrac" ->
-      """WITH c AS (
-           SELECT doc_id, source,
-             least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) AS len_score,
-             CASE WHEN len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) > 0 THEN
-               CAST(len(list_filter(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                 t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) ELSE 0.0 END AS sw,
-             CASE WHEN length(text) > 0 THEN
-               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(text) ELSE 0.0 END AS punct
-           FROM documents
-         ), sc AS (
-           SELECT doc_id, source,
-             least(len_score, 1.0) * 0.4 + least(sw * 5.0, 1.0) * 0.3 +
-             greatest(0.0, 1.0 - punct * 5.0) * 0.3 AS score
-           FROM c
-         ), r AS (
-           SELECT doc_id, source, score,
-             percent_rank() OVER (PARTITION BY source ORDER BY score DESC, doc_id)
-               AS keep_frac
-           FROM sc
-         )
-         SELECT doc_id, source, score, keep_frac FROM r
-         WHERE keep_frac <= 0.8 ORDER BY doc_id""",
-    "q_text_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q_curate" ->
-      """WITH toks AS (
-           SELECT doc_id, text, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS tks
-           FROM documents
-         ), feat AS (
-           SELECT doc_id, text,
-             least(CAST(length(text) AS DOUBLE) / 1000.0, 1.0) AS len_score,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_en,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('der','die','das','und','ist','von','mit','ein','nicht','zu'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_de,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('el','la','los','y','es','de','un','una','que','no'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_es,
-             CASE WHEN length(text) > 0 THEN
-               CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-                 / length(text) ELSE 0.0 END AS punct
-           FROM toks
-         ), scored AS (
-           SELECT doc_id, text,
-             least(len_score, 1.0) * 0.4 + least(s_en * 5.0, 1.0) * 0.3 +
-               greatest(0.0, 1.0 - punct * 5.0) * 0.3 AS score,
-             CASE WHEN greatest(s_en, s_de, s_es) < 0.02 THEN 'und'
-                  WHEN s_es = greatest(s_en, s_de, s_es) THEN 'es'
-                  WHEN s_en = greatest(s_en, s_de, s_es) THEN 'en'
-                  ELSE 'de' END AS detected
-           FROM feat
-         ), dedup AS (
-           SELECT doc_id, score, row_number() OVER (
-               PARTITION BY md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g'))
-               ORDER BY doc_id) AS rn
-           FROM scored WHERE score >= 0.5 AND detected = 'en'
-         )
-         SELECT doc_id, score,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 8000 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 9000 THEN 'val'
-                ELSE 'test' END AS split
-         FROM dedup WHERE rn = 1 ORDER BY doc_id""",
-    "q_text_langid" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS tks FROM documents
-         ), scores AS (
-           SELECT doc_id,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('the','a','of','and','to','in','is','it','that','was'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_en,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('der','die','das','und','ist','von','mit','ein','nicht','zu'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_de,
-             CASE WHEN len(tks) > 0 THEN CAST(len(list_filter(tks,
-               t -> t IN ('el','la','los','y','es','de','un','una','que','no'))) AS DOUBLE) / len(tks)
-               ELSE 0.0 END AS s_es
-           FROM toks
-         )
-         SELECT doc_id,
-           CASE WHEN greatest(s_en, s_de, s_es) < 0.02 THEN 'und'
-                WHEN s_es = greatest(s_en, s_de, s_es) THEN 'es'
-                WHEN s_en = greatest(s_en, s_de, s_es) THEN 'en'
-                ELSE 'de' END AS detected
-         FROM scores ORDER BY doc_id""",
-    "q_text_repetition" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+') AS ts,
-                  -- the Spark entry folds spaces onto newlines BEFORE the
-                  -- line split, so pre-existing newlines in the text are
-                  -- line boundaries too
-                  string_split(replace(text, ' ', chr(10)), chr(10)) AS ls
-           FROM documents
-         ), tstats AS (
-           SELECT doc_id, SUM(c) AS n, COUNT(*) AS d, MAX(c) AS mx FROM (
-             SELECT doc_id, t, COUNT(*) AS c FROM (SELECT doc_id, unnest(ts) AS t FROM toks)
-             GROUP BY doc_id, t) GROUP BY doc_id
-         ), bstats AS (
-           SELECT doc_id, SUM(c) AS nb, COUNT(*) AS db FROM (
-             SELECT doc_id, b, COUNT(*) AS c FROM (
-               SELECT doc_id, ts[i] || ' ' || ts[i + 1] AS b
-               FROM toks, unnest(range(1, len(ts))) AS u(i)) GROUP BY doc_id, b)
-           GROUP BY doc_id
-         )
-         SELECT t.doc_id,
-           CASE WHEN s.n > 0 THEN CAST(s.n - s.d AS DOUBLE) / s.n ELSE 0.0 END AS dup_token_ratio,
-           CASE WHEN s.n > 0 THEN CAST(s.mx AS DOUBLE) / s.n ELSE 0.0 END AS top_token_frac,
-           CASE WHEN coalesce(b.nb, 0) > 0 THEN CAST(b.nb - b.db AS DOUBLE) / b.nb ELSE 0.0 END AS dup_bigram_ratio,
-           CASE WHEN len(t.ls) > 0 THEN CAST(len(t.ls) - len(list_distinct(t.ls)) AS DOUBLE) / len(t.ls) ELSE 0.0 END AS dup_line_frac
-         FROM toks t LEFT JOIN tstats s USING (doc_id) LEFT JOIN bstats b USING (doc_id)
-         ORDER BY doc_id""",
-    "q_text_pii" ->
-      """WITH synth AS (
-           SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com via 10.'
-             || CAST(doc_id % 200 AS VARCHAR) || '.0.1 tel +1555' || lpad(CAST(doc_id AS VARCHAR), 7, '0') AS s
-           FROM documents)
-         SELECT doc_id,
-           len(regexp_extract_all(s, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS emails,
-           len(regexp_extract_all(s, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS ips,
-           len(regexp_extract_all(s, '\+\d{7,15}')) AS phones,
-           regexp_replace(regexp_replace(regexp_replace(s,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-             '\+\d{7,15}', '<PHONE>', 'g') AS redacted
-         FROM synth ORDER BY doc_id""",
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE e AS (
-           SELECT d.doc_id AS a, d.doc_id + 1 AS b FROM documents d
-           WHERE d.doc_id % 10 < 9
-             AND EXISTS (SELECT 1 FROM documents x WHERE x.doc_id = d.doc_id + 1)
-         ), und AS (
-           SELECT a, b FROM e UNION SELECT b, a FROM e
-         ), reach(id, lab) AS (
-           SELECT DISTINCT a, a FROM und
-           UNION
-           SELECT u.a, r.lab FROM und u JOIN reach r ON r.id = u.b
-         )
-         SELECT id, min(lab) AS cluster FROM reach GROUP BY id ORDER BY id""",
-    "q_dedup_canon" ->
-      """WITH RECURSIVE e AS (
-           SELECT d.doc_id AS a, d.doc_id + 1 AS b FROM documents d
-           WHERE d.doc_id % 10 < 9
-             AND EXISTS (SELECT 1 FROM documents x WHERE x.doc_id = d.doc_id + 1)
-         ), und AS (
-           SELECT a, b FROM e UNION SELECT b, a FROM e
-         ), reach(id, lab) AS (
-           SELECT DISTINCT a, a FROM und
-           UNION
-           SELECT u.a, r.lab FROM und u JOIN reach r ON r.id = u.b
-         ), cc AS (
-           SELECT id, min(lab) AS cluster FROM reach GROUP BY id
-         )
-         SELECT doc_id, n_chars FROM documents
-         WHERE doc_id NOT IN (SELECT id FROM cc WHERE id <> cluster)
-         ORDER BY doc_id""",
-    "q_dedup_keepbest" ->
-      """WITH RECURSIVE e AS (
-           SELECT d.doc_id AS a, d.doc_id + 1 AS b FROM documents d
-           WHERE d.doc_id % 10 < 9
-             AND EXISTS (SELECT 1 FROM documents x WHERE x.doc_id = d.doc_id + 1)
-         ), und AS (
-           SELECT a, b FROM e UNION SELECT b, a FROM e
-         ), reach(id, lab) AS (
-           SELECT DISTINCT a, a FROM und
-           UNION
-           SELECT u.a, r.lab FROM und u JOIN reach r ON r.id = u.b
-         ), cc AS (
-           SELECT id, min(lab) AS cluster FROM reach GROUP BY id
-         ), memb AS (
-           SELECT cc.id, cc.cluster, d.n_chars AS p
-           FROM cc JOIN documents d ON d.doc_id = cc.id
-         ), win AS (
-           SELECT id FROM (
-             SELECT id, row_number() OVER (
-               PARTITION BY cluster ORDER BY p DESC NULLS LAST, id) AS rn
-             FROM memb) WHERE rn = 1
-         )
-         SELECT doc_id, n_chars FROM documents
-         WHERE doc_id NOT IN (SELECT id FROM cc)
-            OR doc_id IN (SELECT id FROM win)
-         ORDER BY doc_id""",
-    "q_split" ->
-      """SELECT doc_id, lang,
-         CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 8000 THEN 'train'
-              WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 9000 THEN 'val'
-              ELSE 'test' END AS split
-         FROM documents ORDER BY doc_id""",
-    "q_split_cluster" ->
-      """WITH RECURSIVE e AS (
-           SELECT d.doc_id AS a, d.doc_id + 1 AS b FROM documents d
-           WHERE d.doc_id % 10 < 9
-             AND EXISTS (SELECT 1 FROM documents x WHERE x.doc_id = d.doc_id + 1)
-         ), und AS (
-           SELECT a, b FROM e UNION SELECT b, a FROM e
-         ), reach(id, lab) AS (
-           SELECT DISTINCT a, a FROM und
-           UNION
-           SELECT u.a, r.lab FROM und u JOIN reach r ON r.id = u.b
-         ), cc AS (
-           SELECT id, min(lab) AS cluster FROM reach GROUP BY id
-         ), j AS (
-           SELECT d.doc_id, d.lang, coalesce(cc.cluster, d.doc_id) AS rep
-           FROM documents d LEFT JOIN cc ON cc.id = d.doc_id
-         )
-         SELECT doc_id, lang,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 8000 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < 9000 THEN 'val'
-                ELSE 'test' END AS split
-         FROM j ORDER BY doc_id""",
-    "q_stratified" ->
-      """SELECT doc_id, lang FROM documents
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 <
-           CASE WHEN lang = 'de' THEN 2000 WHEN lang = 'en' THEN 5000 ELSE 0 END
-         ORDER BY doc_id""",
-    "q_adaptive_sample" ->
-      """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM documents),
-         b AS (SELECT doc_id, CAST(length(text) AS DOUBLE) AS x,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS u
-           FROM documents),
-         cp AS (SELECT CAST(floor(least(1.0, 200.0 / CAST(total AS DOUBLE))
-             * 4294967296.0) AS BIGINT) AS cut, total FROM t),
-         p AS (SELECT count(x) AS n,
-             CAST(CAST(sum(CAST(x AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS s,
-             CAST(CAST(sum(CAST(x*x AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS sq
-           FROM b, cp WHERE u < cut),
-         d AS (SELECT cp.total, p.n AS pilot_n,
-             p.s / CAST(p.n AS DOUBLE) AS mean_p,
-             sqrt(greatest((p.sq - p.s * p.s / CAST(p.n AS DOUBLE))
-               / (CAST(p.n AS DOUBLE) - 1.0), 0.0)) AS sd_p
-           FROM p, cp),
-         r AS (SELECT *,
-             CASE WHEN mean_p = 0.0 THEN total ELSE
-               greatest(pilot_n, least(total,
-                 CAST(ceil(((1.96 * sd_p) / (0.05 * abs(mean_p)))
-                   * ((1.96 * sd_p) / (0.05 * abs(mean_p)))) AS BIGINT))) END
-               AS required_n
-           FROM d),
-         cs AS (SELECT r.*, CAST(floor(least(1.0,
-             CAST(required_n AS DOUBLE) / CAST(total AS DOUBLE))
-             * 4294967296.0) AS BIGINT) AS cut2 FROM r),
-         smp AS (SELECT count(x) AS sample_n,
-             CAST(CAST(sum(CAST(x AS DECIMAL(30,15))) AS VARCHAR) AS DOUBLE) AS ss
-           FROM b, cs WHERE u < cut2)
-       SELECT cs.total, cs.pilot_n, round(cs.mean_p, 9) AS pilot_mean,
-         round(cs.sd_p, 9) AS pilot_sd, cs.required_n, smp.sample_n,
-         round(CASE WHEN smp.sample_n = 0 THEN 0.0
-           ELSE smp.ss / CAST(smp.sample_n AS DOUBLE) END, 9) AS sample_mean
-       FROM cs, smp""",
-    "q_text_boilerplate" ->
-      """WITH d AS (
-           SELECT doc_id, string_split(replace(text, ' ', chr(10)), chr(10)) AS ls FROM documents
-         ), lines AS (
-           SELECT doc_id, i, ls[i] AS l FROM d, unnest(range(1, len(ls) + 1)) AS u(i)
-         ), bad AS (
-           SELECT l FROM lines GROUP BY l
-           HAVING count(DISTINCT doc_id) >= CAST(ceil(0.78 * (SELECT count(*) FROM documents)) AS BIGINT)
-         ), kept AS (
-           SELECT doc_id, i, l FROM lines WHERE l NOT IN (SELECT l FROM bad)
-         ), agg AS (
-           SELECT doc_id, string_agg(l, chr(10) ORDER BY i) AS c FROM kept GROUP BY doc_id
-         )
-         SELECT d2.doc_id, coalesce(a.c, '') AS clean_text
-         FROM documents d2 LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""",
-    "q_func_list" ->
-      """SELECT n_nationkey,
-         n_name || ',' || replace(replace(n_name || ',x', '$', '$0'), ',', '$1') AS packed,
-         2 AS n_items,
-         n_name || ',x' AS second,
-         n_name || ',x' AS unpacked2,
-         n_name || '-' || n_name || ',x' AS glued
-         FROM nation ORDER BY n_nationkey""",
-    "q_media_meta" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           (length(text)*7) % 1920 + 1 AS w,
-           (length(text)*13) % 1080 + 1 AS h FROM documents)
-         SELECT media_id, 'image/fake-resized' AS format,
-           CAST(round(w * least(640.0/w, 480.0/h, 1.0)) AS INT) AS width,
-           CAST(round(h * least(640.0/w, 480.0/h, 1.0)) AS INT) AS height
-         FROM m ORDER BY media_id""",
-    "q_media_frames" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           -- NULL payload: duration coalesces to 0 (ts_ms stays LONG 0),
-           -- frame bytes stay NULL (DuckDB least() would skip the NULL
-           -- and return 16) — mirrors Multimodal.fabricate/sampleFrames
-           coalesce((length(text)*131) % 600000, 0) AS dur,
-           CASE WHEN text IS NULL THEN NULL
-                ELSE least(16, octet_length(encode(text))) END AS fb
-         FROM documents)
-         SELECT media_id, CAST(i AS INT) AS frame_idx,
-           CAST(floor(CAST(i*dur AS DOUBLE)/3) AS BIGINT) AS ts_ms,
-           CAST(fb AS INT) AS frame_bytes
-         FROM m, range(3) t(i) ORDER BY media_id, frame_idx""",
-    "q_media_decode" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           CAST(doc_id % 31 + 1 AS INT) AS width,
-           CAST(doc_id % 17 + 1 AS INT) AS height
-         FROM documents WHERE doc_id < 1000)
-         SELECT media_id, 'image/png' AS format, width, height,
-           CAST(GREATEST(1, ROUND(width *
-             LEAST(1.0, 8.0/width, 8.0/height))) AS INT) AS r_width,
-           CAST(GREATEST(1, ROUND(height *
-             LEAST(1.0, 8.0/width, 8.0/height))) AS INT) AS r_height
-         FROM m ORDER BY media_id""",
-    "q_media_transcode" ->
-      """SELECT doc_id AS media_id, 'image/bmp' AS format,
-           CAST(doc_id % 31 + 1 AS INT) AS width,
-           CAST(doc_id % 17 + 1 AS INT) AS height
-         FROM documents WHERE doc_id < 1000 ORDER BY media_id""",
-    "q_audio_decode" ->
-      """SELECT doc_id AS media_id, 'audio/wave' AS format,
-           8000 AS sample_rate, 1 AS channels,
-           doc_id % 997 + 125 AS duration_ms
-         FROM documents WHERE doc_id < 1000 ORDER BY media_id""",
-    "q_audio_resample" ->
-      """SELECT doc_id AS media_id, 4000 AS sample_rate,
-           doc_id % 997 + 125 AS duration_ms
-         FROM documents WHERE doc_id < 1000 ORDER BY media_id""",
-    "q_video_decode" ->
-      """SELECT doc_id AS media_id, 'video/avi' AS format,
-           CAST(doc_id % 31 + 1 AS INT) AS width,
-           CAST(doc_id % 17 + 1 AS INT) AS height,
-           (doc_id % 7 + 2) * 250 AS duration_ms
-         FROM documents WHERE doc_id < 500 ORDER BY media_id""",
-    "q_video_frames" ->
-      """WITH m AS (SELECT doc_id AS media_id, doc_id % 7 + 2 AS total,
-           CAST(doc_id % 31 + 1 AS INT) AS w, CAST(doc_id % 17 + 1 AS INT) AS h
-         FROM documents WHERE doc_id < 500)
-         SELECT media_id,
-           CAST(floor(i * total / 2.0) AS BIGINT) AS frame_idx,
-           CAST(floor(i * total / 2.0) AS BIGINT) * 250 AS ts_ms,
-           w AS f_width, h AS f_height
-         FROM m, range(2) t(i) ORDER BY media_id, frame_idx""",
-    "q_video_mpeg" ->
-      """SELECT doc_id AS media_id, 'video/mpeg' AS format,
-           CAST(16 * (doc_id % 3 + 1) AS INT) AS width,
-           CAST(16 * (doc_id % 2 + 1) AS INT) AS height,
-           (doc_id % 5 + 2) * 40 AS duration_ms
-         FROM documents WHERE doc_id < 150 ORDER BY media_id""",
-    "q_video_mpeg_b" ->
-      """SELECT doc_id AS media_id, 'video/mpeg' AS format,
-           CAST(16 * (doc_id % 3 + 1) AS INT) AS width,
-           CAST(16 * (doc_id % 2 + 1) AS INT) AS height,
-           (3 + doc_id % 3) * 40 AS duration_ms
-         FROM documents WHERE doc_id < 150 ORDER BY media_id""",
-    // Full pixel decode of the B streams: frame count and geometry come
-    // from the DECODED frames (display order = planted order), so the
-    // planted id functions certify every picture survived its decode.
-    "q_video_mpeg_b_decode" ->
-      """SELECT doc_id AS media_id,
-           CAST(3 + doc_id % 3 AS INT) AS frames_decoded,
-           CAST(16 * (doc_id % 3 + 1) AS INT) AS frame_w,
-           CAST(16 * (doc_id % 2 + 1) AS INT) AS frame_h,
-           true AS dims_consistent
-         FROM documents WHERE doc_id < 150 ORDER BY media_id""",
-    "q_embed_topk" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-            d AS (SELECT vec_id,
-                    list_reduce(list_transform(list_zip(embedding, qv),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v) AS dot,
-                    list_reduce(list_transform(embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS n2,
-                    list_reduce(list_transform(qv,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS qn2
-                  FROM embeddings, q)
-         SELECT vec_id, dot / (sqrt(n2) * sqrt(qn2)) AS cosine
-         FROM d ORDER BY cosine DESC, vec_id LIMIT 20""",
-    "q_embed_band" ->
-      """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-            d AS (SELECT vec_id,
-                    list_reduce(list_transform(list_zip(embedding, qv),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (acc, v) -> acc + v) AS dot,
-                    list_reduce(list_transform(embedding,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS n2,
-                    list_reduce(list_transform(qv,
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v) AS qn2
-                  FROM embeddings, q)
-         SELECT vec_id, dot / (sqrt(n2) * sqrt(qn2)) AS cosine
-         FROM d WHERE dot / (sqrt(n2) * sqrt(qn2)) >= 0.1
-           AND dot / (sqrt(n2) * sqrt(qn2)) < 0.5
-         ORDER BY cosine DESC, vec_id""",
-    "q_embed_quantize" ->
-      """WITH s AS (
-           SELECT vec_id, embedding,
-             CAST(list_min(embedding) AS DOUBLE) AS q_lo,
-             (CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)) / 255.0
-               AS q_scale
-           FROM embeddings
-         ), c AS (
-           SELECT vec_id, q_lo, q_scale,
-             CASE WHEN q_scale > 0.0 THEN list_transform(embedding, x ->
-               least(255, greatest(0, CAST(floor((CAST(x AS DOUBLE) - q_lo) / q_scale) AS INT))))
-             ELSE list_transform(embedding, x -> 0) END AS q_codes
-           FROM s
-         )
-         SELECT vec_id, q_lo, q_scale,
-           md5(array_to_string(list_transform(q_codes, x -> CAST(x AS VARCHAR)), ',')) AS q_codes_md5
-         FROM c ORDER BY vec_id""",
-    "q_embed_topk_q8" ->
-      """WITH s AS (
-           SELECT vec_id, embedding,
-             CAST(list_min(embedding) AS DOUBLE) AS q_lo,
-             (CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)) / 255.0
-               AS q_scale
-           FROM embeddings
-         ), c AS (
-           SELECT vec_id, q_lo, q_scale,
-             CASE WHEN q_scale > 0.0 THEN list_transform(embedding, x ->
-               least(255, greatest(0, CAST(floor((CAST(x AS DOUBLE) - q_lo) / q_scale) AS INT))))
-             ELSE list_transform(embedding, x -> 0) END AS q_codes
-           FROM s
-         ), q AS (
-           SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qd
-           FROM embeddings WHERE vec_id = 0
-         ), qc AS (
-           SELECT qd, len(qd) AS dim,
-             list_reduce(qd, (acc, v) -> acc + v) AS sumq,
-             sqrt(list_reduce(list_transform(qd, x -> x * x), (acc, v) -> acc + v)) AS normq
-           FROM q
-         ), d AS (
-           SELECT c.vec_id, c.q_lo, c.q_scale, qc.sumq, qc.normq, qc.dim,
-             list_reduce(list_transform(list_zip(c.q_codes, qc.qd),
-               p -> CAST(p[1] AS DOUBLE) * p[2]), (acc, v) -> acc + v) AS dotcq,
-             list_reduce(list_transform(c.q_codes, x -> CAST(x AS DOUBLE)),
-               (acc, v) -> acc + v) AS csum,
-             list_reduce(list_transform(c.q_codes, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-               (acc, v) -> acc + v) AS csum2
-           FROM c, qc
-         )
-         SELECT vec_id,
-           (q_lo * sumq + q_scale * dotcq) /
-           (sqrt(CAST(dim AS DOUBLE) * q_lo * q_lo + 2.0 * q_lo * q_scale * csum +
-                 q_scale * q_scale * csum2) * normq) AS cosine_q8
-         FROM d ORDER BY cosine_q8 DESC, vec_id LIMIT 20""",
-    "q_jdbc_roundtrip" ->
-      """SELECT s_suppkey, s_name, s_acctbal, s_nationkey
-         FROM supplier ORDER BY s_suppkey""",
-    "q_pg_roundtrip" ->
-      """SELECT n_nationkey, n_name, n_regionkey
-         FROM nation ORDER BY n_nationkey""",
-    "q_pg_range_read" ->
-      """SELECT CAST(s_suppkey AS BIGINT) AS s_suppkey, s_name,
-           CAST(s_nationkey AS BIGINT) AS s_nationkey,
-           CAST(s_acctbal AS DOUBLE) AS s_acctbal
-         FROM supplier ORDER BY s_suppkey""",
-    "q_sqlite_roundtrip" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
-           CAST(o_custkey AS BIGINT) AS o_custkey,
-           o_orderstatus,
-           CAST(o_totalprice AS DOUBLE) AS o_totalprice
-         FROM orders ORDER BY o_orderkey""",
-    "q_sqlite_index_read" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
-           CAST(o_custkey AS BIGINT) AS o_custkey,
-           CAST(o_totalprice AS DOUBLE) AS o_totalprice
-         FROM orders WHERE o_custkey IN (1, 7, 13, 25)
-         ORDER BY o_orderkey""",
-    "q_sqlite_composite_read" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
-           CAST(o_custkey AS BIGINT) AS o_custkey,
-           o_orderstatus,
-           CAST(o_totalprice AS DOUBLE) AS o_totalprice
-         FROM orders
-         WHERE (o_custkey > 10 OR (o_custkey = 10 AND o_orderstatus >= 'O'))
-           AND (o_custkey < 20 OR (o_custkey = 20 AND o_orderstatus <= 'F'))
-         ORDER BY o_orderkey""",
-    "q_sqlite_worowid" ->
-      """SELECT c_name, CAST(c_custkey AS BIGINT) AS c_custkey,
-           CAST(c_nationkey AS BIGINT) AS c_nationkey,
-           CAST(c_acctbal AS DOUBLE) AS c_acctbal
-         FROM customer ORDER BY c_custkey""",
-    "q_dbf_roundtrip" ->
-      """SELECT s_suppkey AS suppkey, s_name AS name,
-         s_acctbal AS acctbal, s_nationkey AS nation
-         FROM supplier ORDER BY suppkey""",
-    "q_orc_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-         WHERE c_mktsegment = 'BUILDING' ORDER BY c_custkey""",
-    "q_embed_lsh_build" ->
-      "SELECT COUNT(*) AS n FROM embeddings",
-    "q_embed_pq_build" ->
-      "SELECT COUNT(*) AS n FROM embeddings",
-    "q_embed_ivfpq_build" ->
-      "SELECT COUNT(*) AS n FROM embeddings",
-    "q_embed_ivf_build" ->
-      "SELECT COUNT(*) AS n FROM embeddings",
-    "q_warehouse_mutate" ->
-      """WITH base AS (
-           SELECT n_nationkey, n_name, n_regionkey, 'old' AS flag FROM nation
-           UNION ALL
-           SELECT n_nationkey + 100, n_name, n_regionkey, NULL FROM nation
-           WHERE n_nationkey < 5
-         ), upd AS (
-           SELECT n_nationkey, n_name, n_regionkey,
-             CASE WHEN n_regionkey = 2 AND flag = 'old' THEN 'new' ELSE flag END AS flag
-           FROM base
-         )
-         SELECT n_nationkey, n_name, n_regionkey, flag FROM upd
-         WHERE n_nationkey NOT IN (1, 2) ORDER BY n_nationkey""",
-    "q_xml_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
-    "q_heavyhitters" ->
-      """WITH toks AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS item
-           FROM documents
-         )
-         SELECT item, count(*) AS cnt FROM toks GROUP BY item
-         ORDER BY cnt DESC, item ASC LIMIT 20""",
-    "q_compact" ->
-      """SELECT o_orderstatus, count(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS total
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q_table_diff" ->
-      """WITH oldt AS (
-           SELECT n_nationkey, n_name, n_regionkey FROM nation),
-         newt AS (
-           SELECT n_nationkey,
-             CASE WHEN n_regionkey = 2 THEN n_name || '_X' ELSE n_name END AS n_name,
-             n_regionkey
-           FROM nation WHERE n_nationkey NOT IN (1, 2)
-           UNION ALL
-           SELECT n_nationkey + 900, n_name, n_regionkey FROM nation
-           WHERE n_nationkey < 3)
-         SELECT coalesce(o.n_nationkey, n.n_nationkey) AS n_nationkey,
-           CASE WHEN o.n_nationkey IS NULL THEN 'added'
-                WHEN n.n_nationkey IS NULL THEN 'removed'
-                WHEN o.n_name IS DISTINCT FROM n.n_name
-                  OR o.n_regionkey IS DISTINCT FROM n.n_regionkey THEN 'changed'
-           END AS diff_kind
-         FROM oldt o FULL OUTER JOIN newt n ON o.n_nationkey = n.n_nationkey
-         WHERE CASE WHEN o.n_nationkey IS NULL THEN 'added'
-                    WHEN n.n_nationkey IS NULL THEN 'removed'
-                    WHEN o.n_name IS DISTINCT FROM n.n_name
-                      OR o.n_regionkey IS DISTINCT FROM n.n_regionkey THEN 'changed'
-               END IS NOT NULL
-         ORDER BY n_nationkey""",
-    "q_skew_report" ->
-      """WITH c AS (
-           SELECT l_suppkey, count(*) AS cnt FROM lineitem GROUP BY l_suppkey),
-         g AS (
-           SELECT list_sort(list(CAST(cnt AS DOUBLE))) AS a, count(*) AS n,
-                  max(cnt) AS max_cnt, CAST(sum(cnt) AS BIGINT) AS n_rows
-           FROM c),
-         p AS (
-           SELECT a, n, max_cnt, n_rows,
-             (n-1)*CAST(0.5 AS DOUBLE) AS q1, (n-1)*CAST(0.99 AS DOUBLE) AS q2
-           FROM g)
-         SELECT n AS n_keys, n_rows, max_cnt,
-           CASE WHEN ceil(q1) = floor(q1) THEN a[CAST(q1 AS INT)+1]
-             ELSE (ceil(q1)-q1)*a[CAST(floor(q1) AS INT)+1]
-                + (q1-floor(q1))*a[CAST(ceil(q1) AS INT)+1] END AS p50,
-           CASE WHEN ceil(q2) = floor(q2) THEN a[CAST(q2 AS INT)+1]
-             ELSE (ceil(q2)-q2)*a[CAST(floor(q2) AS INT)+1]
-                + (q2-floor(q2))*a[CAST(ceil(q2) AS INT)+1] END AS p99,
-           CAST(max_cnt AS DOUBLE) /
-             (CASE WHEN ceil(q1) = floor(q1) THEN a[CAST(q1 AS INT)+1]
-               ELSE (ceil(q1)-q1)*a[CAST(floor(q1) AS INT)+1]
-                  + (q1-floor(q1))*a[CAST(ceil(q1) AS INT)+1] END) AS skew_ratio
-         FROM p""",
-    "q_drift" ->
-      """WITH a AS (
-           -- NULL measures carry no drift signal and are dropped on both
-           -- engines (DuckDB least(19, NULL) = 19 would otherwise bin them)
-           SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-           WHERE doc_id < 250 AND n_chars IS NOT NULL),
-         b AS (
-           SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-           WHERE doc_id >= 250 AND n_chars IS NOT NULL),
-         mm AS (
-           SELECT min(v) AS lo, max(v) AS hi
-           FROM (SELECT v FROM a UNION ALL SELECT v FROM b)),
-         ca AS (
-           SELECT least(19, CAST(floor((v - lo) / (hi - lo) * 20) AS INT)) AS bin,
-                  count(*) AS c
-           FROM a, mm GROUP BY 1),
-         cb AS (
-           SELECT least(19, CAST(floor((v - lo) / (hi - lo) * 20) AS INT)) AS bin,
-                  count(*) AS c
-           FROM b, mm GROUP BY 1),
-         g AS (
-           SELECT CAST(unnest(range(20)) AS INT) AS bin),
-         j AS (
-           SELECT g.bin, coalesce(ca.c, 0) AS cnt_a, coalesce(cb.c, 0) AS cnt_b
-           FROM g LEFT JOIN ca ON g.bin = ca.bin LEFT JOIN cb ON g.bin = cb.bin)
-         SELECT bin, cnt_a, cnt_b,
-           CAST(sum(cnt_a) OVER (ORDER BY bin
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             / sum(cnt_a) OVER () AS share_a,
-           CAST(sum(cnt_b) OVER (ORDER BY bin
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             / sum(cnt_b) OVER () AS share_b,
-           abs(CAST(sum(cnt_a) OVER (ORDER BY bin
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-               / sum(cnt_a) OVER ()
-             - CAST(sum(cnt_b) OVER (ORDER BY bin
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-               / sum(cnt_b) OVER ()) AS gap
-         FROM j ORDER BY bin""",
-    "q_warehouse_merge" ->
-      """WITH upd AS (
-           SELECT n_nationkey, n_name || '_V2' AS n_name, n_regionkey
-           FROM nation WHERE n_nationkey < 10
-           UNION ALL
-           SELECT n_nationkey + 900, n_name, n_regionkey
-           FROM nation WHERE n_nationkey < 3
-         )
-         SELECT n_nationkey, n_name, n_regionkey FROM nation
-         WHERE n_nationkey NOT IN (SELECT n_nationkey FROM upd)
-         UNION ALL
-         SELECT n_nationkey, n_name, n_regionkey FROM upd
-         ORDER BY n_nationkey""",
-    // full SCD2 version history reconstructed independently: v1 = init,
-    // v2/v3 = the change batches, n1/n2 = the batch-introduced keys;
-    // no-op batch rows (keys 10-14 resent unchanged) must produce NO rows
-    "q_warehouse_scd2" ->
-      """WITH base AS (
-           SELECT n_nationkey, n_name, n_regionkey FROM nation
-         ), v1 AS (
-           SELECT n_nationkey, n_name, n_regionkey,
-             CAST(100 AS BIGINT) AS valid_from,
-             CAST(CASE WHEN n_nationkey < 10 THEN 200 END AS BIGINT) AS valid_to,
-             n_nationkey >= 10 AS is_current
-           FROM base
-         ), v2 AS (
-           SELECT n_nationkey, n_name || '_V2' AS n_name, n_regionkey,
-             CAST(200 AS BIGINT) AS valid_from,
-             CAST(CASE WHEN n_nationkey < 5 THEN 300 END AS BIGINT) AS valid_to,
-             n_nationkey >= 5 AS is_current
-           FROM base WHERE n_nationkey < 10
-         ), v3 AS (
-           SELECT n_nationkey, n_name || '_V3' AS n_name, n_regionkey,
-             CAST(300 AS BIGINT) AS valid_from,
-             CAST(NULL AS BIGINT) AS valid_to, true AS is_current
-           FROM base WHERE n_nationkey < 5
-         ), n1 AS (
-           SELECT n_nationkey + 900 AS n_nationkey, n_name, n_regionkey,
-             CAST(200 AS BIGINT) AS valid_from,
-             CAST(CASE WHEN n_nationkey = 0 THEN 300 END AS BIGINT) AS valid_to,
-             n_nationkey <> 0 AS is_current
-           FROM base WHERE n_nationkey < 3
-         ), n2 AS (
-           SELECT n_nationkey + 900 AS n_nationkey, n_name,
-             n_regionkey + 1 AS n_regionkey,
-             CAST(300 AS BIGINT) AS valid_from,
-             CAST(NULL AS BIGINT) AS valid_to, true AS is_current
-           FROM base WHERE n_nationkey < 1
-         )
-         SELECT * FROM v1
-         UNION ALL SELECT * FROM v2
-         UNION ALL SELECT * FROM v3
-         UNION ALL SELECT * FROM n1
-         UNION ALL SELECT * FROM n2
-         ORDER BY n_nationkey, valid_from""",
-    "q_rater_kappa" ->
-      """WITH lab AS (
-           SELECT source,
-             CASE WHEN n_chars < 216 THEN 'lo'
-                  WHEN n_chars < 374 THEN 'mid' ELSE 'hi' END AS r1,
-             CASE WHEN wc < 39 THEN 'lo'
-                  WHEN wc < 69 THEN 'mid' ELSE 'hi' END AS r2
-           FROM (SELECT source, n_chars,
-                   len(list_filter(
-                     regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-                     t -> len(t) > 0)) AS wc
-                 FROM documents)
-         ), cells AS (
-           SELECT source, r1, r2, count(*) AS c FROM lab GROUP BY 1, 2, 3
-         ), tot AS (
-           SELECT source, CAST(sum(c) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN r1 = r2 THEN c ELSE 0 END) AS BIGINT) AS agree
-           FROM cells GROUP BY 1
-         ), m1 AS (
-           SELECT source, r1 AS lab, CAST(sum(c) AS BIGINT) AS m1
-           FROM cells GROUP BY 1, 2
-         ), m2 AS (
-           SELECT source, r2 AS lab, CAST(sum(c) AS BIGINT) AS m2
-           FROM cells GROUP BY 1, 2
-         ), pe AS (
-           SELECT source, CAST(sum(m1 * m2) AS BIGINT) AS pe_num
-           FROM m1 JOIN m2 USING (source, lab) GROUP BY 1
-         )
-         SELECT t.source, n, agree, pe_num,
-           CASE WHEN n * n = pe_num THEN NULL
-                ELSE CAST(agree * n - pe_num AS DOUBLE)
-                     / CAST(n * n - pe_num AS DOUBLE) END AS kappa
-         FROM tot t JOIN pe USING (source)
-         ORDER BY source""",
-    "q_pref_pairs" ->
-      """WITH top AS (
-           SELECT source, lang, doc_id AS chosen_id, n_chars AS chosen_score,
-             row_number() OVER (PARTITION BY source, lang
-               ORDER BY n_chars DESC, doc_id ASC) AS rn
-           FROM documents
-         ), bot AS (
-           SELECT source, lang, doc_id AS rejected_id,
-             n_chars AS rejected_score,
-             row_number() OVER (PARTITION BY source, lang
-               ORDER BY n_chars ASC, doc_id ASC) AS rn
-           FROM documents
-         )
-         SELECT t.source, t.lang, chosen_id, chosen_score,
-           rejected_id, rejected_score,
-           chosen_score - rejected_score AS margin
-         FROM top t JOIN bot b ON t.source = b.source AND t.lang = b.lang
-         WHERE t.rn <= 3 AND b.rn <= 3
-           AND chosen_id <> rejected_id
-           AND chosen_score - rejected_score >= 50
-         ORDER BY 1, 2, 3, 5""",
-    "q_kcore" -> kcoreOracle(20, 3),
-    // SELECT DISTINCT subqueries (not count(DISTINCT col)) so null keys
-    // count as key values — matching the Spark struct-distinct semantics
-    "q_constraints" ->
-      """SELECT 'not_null:o_orderkey' AS rule,
-           CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS violations,
-           sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) = 0 AS passed
-         FROM orders
-         UNION ALL
-         SELECT 'not_null:o_orderstatus',
-           CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) = 0
-         FROM orders
-         UNION ALL
-         SELECT 'range:o_totalprice',
-           CAST(sum(CASE WHEN o_totalprice IS NOT NULL
-             AND (o_totalprice < 0.0 OR o_totalprice > 300000.0)
-             THEN 1 ELSE 0 END) AS BIGINT),
-           sum(CASE WHEN o_totalprice IS NOT NULL
-             AND (o_totalprice < 0.0 OR o_totalprice > 300000.0)
-             THEN 1 ELSE 0 END) = 0
-         FROM orders
-         UNION ALL
-         SELECT 'unique:o_orderkey',
-           CAST((SELECT count(*) FROM orders)
-             - (SELECT count(*) FROM (SELECT DISTINCT o_orderkey FROM orders))
-             AS BIGINT),
-           (SELECT count(*) FROM orders)
-             = (SELECT count(*) FROM (SELECT DISTINCT o_orderkey FROM orders))
-         UNION ALL
-         SELECT 'unique:o_custkey',
-           CAST((SELECT count(*) FROM orders)
-             - (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders))
-             AS BIGINT),
-           (SELECT count(*) FROM orders)
-             = (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders))
-         ORDER BY rule""",
-    // independent brute-force wedge close — no orientation machinery
-    "q_graph_triangles" ->
-      """WITH li AS (
-           SELECT l_orderkey, l_linenumber,
-             lpad(CAST(l_partkey AS VARCHAR), 7, '0') AS pk
-           FROM lineitem WHERE l_orderkey < 6000
-         ), e AS (
-           SELECT DISTINCT least(a.pk, b.pk) AS u, greatest(a.pk, b.pk) AS v
-           FROM li a JOIN li b
-             ON a.l_orderkey = b.l_orderkey
-            AND a.l_linenumber + 1 = b.l_linenumber
-           WHERE a.pk <> b.pk
-         )
-         SELECT x.u AS n1, x.v AS n2, y.v AS n3
-         FROM e x JOIN e y ON x.v = y.u
-                  JOIN e z ON z.u = x.u AND z.v = y.v
-         ORDER BY 1, 2, 3""",
-    "q_freq_pairs" ->
-      """WITH bi AS (
-           SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem
-         ), freq AS (
-           SELECT i FROM bi GROUP BY i HAVING count(*) >= 2
-         ), pruned AS (
-           SELECT b, i FROM bi WHERE i IN (SELECT i FROM freq)
-         )
-         SELECT a.i AS item1, c.i AS item2, count(*) AS support
-         FROM pruned a JOIN pruned c ON a.b = c.b AND a.i < c.i
-         GROUP BY 1, 2 HAVING count(*) >= 2
-         ORDER BY 1, 2""",
-    "q_transitions" ->
-      """WITH s AS (
-           SELECT user_id, event_type AS prev_event,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS next_event
-           FROM events
-         ), c AS (
-           SELECT prev_event, next_event, count(*) AS cnt
-           FROM s WHERE next_event IS NOT NULL GROUP BY 1, 2
-         ), t AS (
-           SELECT prev_event, CAST(sum(cnt) AS BIGINT) AS tot
-           FROM c GROUP BY 1
-         )
-         SELECT c.prev_event, c.next_event, c.cnt,
-           CAST(c.cnt AS DOUBLE) / CAST(t.tot AS DOUBLE) AS p
-         FROM c JOIN t USING (prev_event)
-         ORDER BY 1, 2""",
-    "q_twap" ->
-      """WITH b AS (
-           SELECT user_id AS key,
-             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT)
-               * 86400000000 AS w,
-             epoch_us(ts) AS us, value, event_id
-           FROM events
-         ), seg AS (
-           SELECT key, w, us, value,
-             lead(us) OVER (PARTITION BY key, w ORDER BY us, event_id) AS nxt
-           FROM b
-         )
-         SELECT key, w, count(*) AS n_events,
-           max(us) - min(us) AS span_us,
-           CASE WHEN max(us) - min(us) > 0 THEN
-             CAST(sum(CAST(CAST(value AS DECIMAL(24,6)) * 1000000
-                           AS DECIMAL(25,0))
-                      * CAST(COALESCE(nxt - us, 0) AS DECIMAL(12,0)))
-                  AS DOUBLE)
-               / CAST((max(us) - min(us)) * 1000000 AS DOUBLE) END AS twap
-         FROM seg GROUP BY key, w
-         ORDER BY key, w""",
-    "q_stickiness" ->
-      """WITH du AS (
-           SELECT DISTINCT
-             CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS d,
-             user_id AS u
-           FROM events
-         ), dau AS (
-           SELECT d, count(*) AS dau FROM du GROUP BY 1
-         ), wau AS (
-           SELECT a.d, count(DISTINCT b.u) AS wau
-           FROM dau a JOIN du b ON b.d >= a.d - 6 AND b.d <= a.d
-           GROUP BY 1
-         )
-         SELECT a.d, a.dau, w.wau,
-           CAST(a.dau AS DOUBLE) / CAST(w.wau AS DOUBLE) AS stickiness
-         FROM dau a JOIN wau w USING (d)
-         ORDER BY d""",
-    "q_dict_encode" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(string_split_regex(trim(lower(text)), '[ \t\n\x0b\f\r]+')) AS tok
-           FROM documents
-         ), dict AS (
-           SELECT tok, dense_rank() OVER (ORDER BY tok) AS id
-           FROM (SELECT DISTINCT tok FROM toks)
-         )
-         SELECT t.doc_id, count(*) AS n_tokens,
-           CAST(sum(d.id) AS BIGINT) AS sum_id,
-           CAST(min(d.id) AS BIGINT) AS min_id,
-           CAST(max(d.id) AS BIGINT) AS max_id
-         FROM toks t JOIN dict d USING (tok)
-         GROUP BY 1 ORDER BY 1""",
-    "q_incr_agg" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
-             AS sum_price
-         FROM lineitem
-         WHERE l_orderkey >= 2000 AND l_orderkey < 32000
-         GROUP BY l_returnflag
-         ORDER BY l_returnflag""",
-    "q_stream_scd2_enrich" ->
-      """WITH dim AS (
-           SELECT n_nationkey, n_name, CAST(0 AS BIGINT) AS vf,
-             CAST(CASE WHEN n_nationkey < 12 THEN 1704326400000 END
-               AS BIGINT) AS vt
-           FROM nation
-           UNION ALL
-           SELECT n_nationkey, n_name || '_V2', 1704326400000, NULL
-           FROM nation WHERE n_nationkey < 12
-         ), e AS (
-           SELECT event_id, user_id % 25 AS nk,
-             CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ems
-           FROM events WHERE event_id < 20000
-         )
-         SELECT e.event_id, d.n_name
-         FROM e JOIN dim d ON e.nk = d.n_nationkey
-           AND d.vf <= e.ems AND (d.vt IS NULL OR d.vt > e.ems)
-         ORDER BY event_id""",
-    "q_warehouse_stats" ->
-      """SELECT 'c_custkey' AS col_name, count(*) AS n_rows,
-           count(*) - count(c_custkey) AS n_nulls,
-           count(DISTINCT c_custkey) AS ndv,
-           CAST(min(c_custkey) AS VARCHAR) AS min_val,
-           CAST(max(c_custkey) AS VARCHAR) AS max_val FROM customer
-         UNION ALL
-         SELECT 'c_name', count(*), count(*) - count(c_name),
-           count(DISTINCT c_name),
-           CAST(min(c_name) AS VARCHAR), CAST(max(c_name) AS VARCHAR)
-         FROM customer
-         UNION ALL
-         SELECT 'c_nationkey', count(*), count(*) - count(c_nationkey),
-           count(DISTINCT c_nationkey),
-           CAST(min(c_nationkey) AS VARCHAR), CAST(max(c_nationkey) AS VARCHAR)
-         FROM customer
-         UNION ALL
-         SELECT 'c_mktsegment', count(*), count(*) - count(c_mktsegment),
-           count(DISTINCT c_mktsegment),
-           CAST(min(c_mktsegment) AS VARCHAR), CAST(max(c_mktsegment) AS VARCHAR)
-         FROM customer
-         ORDER BY col_name""",
-    "q_curve_prune" ->
-      """SELECT count(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty
-         FROM lineitem WHERE l_suppkey < 20 AND l_orderkey < 30000""",
-    "q_cluster_prune" ->
-      """SELECT count(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) AS sum_price
-         FROM lineitem WHERE l_orderkey >= 1000 AND l_orderkey < 2000""",
-    "q_retention" ->
-      """WITH p AS (
-           SELECT user_id, CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS period
-           FROM events
-         ), f AS (
-           SELECT user_id, min(period) AS cohort FROM p GROUP BY user_id
-         )
-         SELECT cohort, p.period - cohort AS period_offset,
-           count(DISTINCT p.user_id) AS n_active
-         FROM p JOIN f USING (user_id)
-         GROUP BY 1, 2 ORDER BY cohort, period_offset""",
-    "q_funnel" ->
-      """WITH s1 AS (
-           SELECT user_id, min(ts) AS t1 FROM events
-           WHERE event_type = 'signup' GROUP BY user_id
-         ), s2 AS (
-           SELECT e.user_id, min(ts) AS t2 FROM events e JOIN s1 USING (user_id)
-           WHERE event_type = 'click' AND ts > t1 GROUP BY e.user_id
-         ), s3 AS (
-           SELECT e.user_id, min(ts) AS t3 FROM events e JOIN s2 USING (user_id)
-           WHERE event_type = 'purchase' AND ts > t2 GROUP BY e.user_id
-         )
-         SELECT s1.user_id,
-           epoch_us(t1) AS us_signup, epoch_us(t2) AS us_click,
-           epoch_us(t3) AS us_purchase,
-           1 + CASE WHEN t2 IS NULL THEN 0 ELSE 1 END
-             + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END AS reached
-         FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
-           LEFT JOIN s3 ON s1.user_id = s3.user_id
-         ORDER BY s1.user_id""",
-    "q_rolling" ->
-      """SELECT event_id, user_id,
-           count(*) OVER w AS n_1h,
-           CAST(sum(CAST(value AS DECIMAL(28,6))) OVER w AS DOUBLE) AS sum_1h
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-    "q_stream_pg_sink" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
-           CAST(value AS DOUBLE) AS value
-         FROM events WHERE event_id < 20000 ORDER BY event_id""",
-    "q_stream_pg_source" ->
-      """SELECT CAST(event_id AS BIGINT) AS event_id, event_type,
-           CAST(value AS DOUBLE) AS value
-         FROM events WHERE event_id < 20000 ORDER BY event_id""",
-    "q_stream_cap" ->
-      """WITH r AS (
-           SELECT event_id AS id, event_type AS key,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY ts, event_id) AS admit_seq
-           FROM events WHERE event_id < 20000
-         )
-         SELECT id, key, admit_seq FROM r
-         WHERE admit_seq <= 500 ORDER BY key, admit_seq""",
-    "q_stream_quota" ->
-      """WITH r AS (
-           SELECT event_id AS id, event_type AS key,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY ts, event_id) AS admit_seq
-           FROM events
-         )
-         SELECT id, key, admit_seq FROM r
-         WHERE admit_seq <= 1000 ORDER BY key, admit_seq""",
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS tms FROM events),
-         m AS (SELECT user_id, tms,
-                 CASE WHEN lag(tms) OVER (PARTITION BY user_id ORDER BY tms) IS NULL
-                      OR tms - lag(tms) OVER (PARTITION BY user_id ORDER BY tms) > 7200000
-                 THEN 1 ELSE 0 END AS ns
-               FROM e),
-         s AS (SELECT user_id, tms,
-                 SUM(ns) OVER (PARTITION BY user_id ORDER BY tms
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-               FROM m),
-         a AS (SELECT user_id, sid, MIN(tms) AS started_ms, MAX(tms) AS ended_ms,
-                 COUNT(*) AS events
-               FROM s GROUP BY user_id, sid),
-         l AS (SELECT user_id, MAX(sid) AS mx FROM a GROUP BY user_id)
-         SELECT a.user_id, a.started_ms, a.ended_ms, a.events
-         FROM a JOIN l ON a.user_id = l.user_id AND a.sid < l.mx
-         ORDER BY a.user_id, a.started_ms""",
-
-    // The streaming row's oracle is the SAME session construction over the
-    // bounded fixture, WITHOUT the last-session exclusion: the per-user
-    // sentinel closes every real session, so the stream emits all of them.
-    "q_stream_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS tms FROM events
-                  WHERE event_id < 20000),
-         m AS (SELECT user_id, tms,
-                 CASE WHEN lag(tms) OVER (PARTITION BY user_id ORDER BY tms) IS NULL
-                      OR tms - lag(tms) OVER (PARTITION BY user_id ORDER BY tms) > 7200000
-                 THEN 1 ELSE 0 END AS ns
-               FROM e),
-         s AS (SELECT user_id, tms,
-                 SUM(ns) OVER (PARTITION BY user_id ORDER BY tms
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-               FROM m)
-         SELECT user_id, MIN(tms) AS started_ms, MAX(tms) AS ended_ms,
-           COUNT(*) AS events
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, started_ms""",
-    "q_embed_knn_gemm" ->
-      """WITH b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         p AS (SELECT q.vec_id AS qid, d.vec_id AS id,
-             list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-               pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-               (acc, v) -> acc + v) / (d.nv * q.nv) AS cosine
-           FROM b d, b q WHERE d.vec_id <> q.vec_id),
-         r AS (SELECT qid, id, cosine,
-             row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id) AS rn
-           FROM p)
-         SELECT qid, id, cosine FROM r WHERE rn <= 10 ORDER BY qid, id""",
-    "q_dedup_minhash_md5" -> minhashMd5Oracle(16, 4, 0.5),
-    "q_dedup_incr_md5" -> incrNearDupMd5Oracle(16, 4, 0.5),
-    "q_dedup_simhash_md5" -> simhashMd5Oracle(3),
-    "q_image_dhash_md5" -> plantedSigOracle("img:"),
-    "q_audio_fp_md5" -> plantedSigOracle("aud:"),
-    "q_stream_neardup" -> streamNearDupOracle(16, 4, 0.5),
-    // full HLL replay at p=4 (m=16, alpha=0.673): md5 bucket + rho, max
-    // registers, integer-scaled register sum, linear-counting branch
-    "q_distinct_hll_md5" ->
-      """WITH v AS (
-           SELECT CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 1, 1)) AS BIGINT) AS b,
-                  CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 2, 13)) AS BIGINT) AS w
-           FROM documents WHERE text IS NOT NULL
-         ), r AS (
-           SELECT b, max(CASE WHEN w = 0 THEN 53
-                              ELSE 53 - length(bin(w)) END) AS M
-           FROM v GROUP BY b
-         ), st AS (
-           SELECT CAST(count(*) AS BIGINT) AS used, coalesce(max(M), 0) AS mx
-           FROM r
-         ), s1 AS (
-           SELECT coalesce(CAST(sum(CAST(pow(2.0, st.mx - r.M) AS BIGINT)) AS BIGINT), 0) AS S,
-                  coalesce(any_value(st.used), 0) AS used,
-                  coalesce(any_value(st.mx), 0) AS mx
-           FROM r, st
-         ), ex AS (
-           SELECT CAST(count(DISTINCT text) AS BIGINT) AS n_exact
-           FROM documents WHERE text IS NOT NULL
-         ), e AS (
-           SELECT s1.used, 16 - s1.used AS zeros, ex.n_exact,
-             0.673 * 16 * 16 * pow(2.0, s1.mx)
-               / (CAST(s1.S AS DOUBLE) + CAST(16 - s1.used AS DOUBLE) * pow(2.0, s1.mx)) AS eraw
-           FROM s1, ex
-         )
-         SELECT 16 AS m, used AS used_registers, zeros,
-           round(CASE WHEN eraw <= 40.0 AND zeros > 0
-                      THEN 16.0 * ln(16.0 / zeros) ELSE eraw END, 6) AS estimate,
-           n_exact,
-           CASE WHEN n_exact > 0 THEN
-             round(abs((CASE WHEN eraw <= 40.0 AND zeros > 0
-                             THEN 16.0 * ln(16.0 / zeros) ELSE eraw END) - n_exact)
-               / n_exact, 6) END AS rel_error
-         FROM e""",
-    "q_embed_recall_lsh" ->
-      recallLshOracle(RecallLshBits, RecallLshMaxHamming, 64, 10),
-    "q_embed_recall_trunc" -> recallTruncOracle(64, 10),
-    // per-group HLL replay at p=4: the q_distinct_hll_md5 estimator with
-    // every stage threaded through GROUP BY source
-    "q_distinct_hll_groups" ->
-      """WITH v AS (
-           SELECT source,
-                  CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 1, 1)) AS BIGINT) AS b,
-                  CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 2, 13)) AS BIGINT) AS w
-           FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-         ), r AS (
-           SELECT source, b, max(CASE WHEN w = 0 THEN 53
-                                      ELSE 53 - length(bin(w)) END) AS M
-           FROM v GROUP BY source, b
-         ), st AS (
-           SELECT source, CAST(count(*) AS BIGINT) AS used, max(M) AS mx
-           FROM r GROUP BY source
-         ), s1 AS (
-           SELECT r.source,
-                  CAST(sum(CAST(pow(2.0, st.mx - r.M) AS BIGINT)) AS BIGINT) AS S,
-                  any_value(st.used) AS used, any_value(st.mx) AS mx
-           FROM r JOIN st USING (source) GROUP BY r.source
-         ), ex AS (
-           SELECT source, CAST(count(DISTINCT text) AS BIGINT) AS n_exact
-           FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-           GROUP BY source
-         ), e AS (
-           SELECT s1.source, s1.used, 16 - s1.used AS zeros, ex.n_exact,
-             0.673 * 16 * 16 * pow(2.0, s1.mx)
-               / (CAST(s1.S AS DOUBLE) + CAST(16 - s1.used AS DOUBLE) * pow(2.0, s1.mx)) AS eraw
-           FROM s1 JOIN ex USING (source)
-         )
-         SELECT source, 16 AS m, used AS used_registers, zeros,
-           round(CASE WHEN eraw <= 40.0 AND zeros > 0
-                      THEN 16.0 * ln(16.0 / zeros) ELSE eraw END, 6) AS estimate,
-           n_exact,
-           CASE WHEN n_exact > 0 THEN
-             round(abs((CASE WHEN eraw <= 40.0 AND zeros > 0
-                             THEN 16.0 * ln(16.0 / zeros) ELSE eraw END) - n_exact)
-               / n_exact, 6) END AS rel_error
-         FROM e ORDER BY source""",
-    "q_hll_algebra" ->
-      """WITH d AS (
-           SELECT source, text FROM documents
-           WHERE text IS NOT NULL
-             AND source IN ('src0','src1','src2','src3','src4')
-         ), v AS (
-           SELECT source,
-             CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 1, 1)) AS BIGINT) AS b,
-             CAST(('0x' || substr(md5(CAST(text AS VARCHAR)), 2, 13)) AS BIGINT) AS w
-           FROM d
-         ), r AS (
-           SELECT source, b, max(CASE WHEN w = 0 THEN 53
-                                      ELSE 53 - length(bin(w)) END) AS M
-           FROM v GROUP BY source, b
-         ), st AS (
-           SELECT source, CAST(count(*) AS BIGINT) AS used, max(M) AS mx
-           FROM r GROUP BY source
-         ), s1 AS (
-           SELECT r.source,
-             CAST(sum(CAST(pow(2.0, st.mx - r.M) AS BIGINT)) AS BIGINT) AS S,
-             any_value(st.used) AS used, any_value(st.mx) AS mx
-           FROM r JOIN st USING (source) GROUP BY r.source
-         ), ex AS (
-           SELECT source, CAST(count(DISTINCT text) AS BIGINT) AS n_exact
-           FROM d GROUP BY source
-         ), pe AS (
-           SELECT s1.source, ex.n_exact,
-             round(CASE WHEN (0.673 * 16 * 16 * pow(2.0, s1.mx)
-                     / (CAST(s1.S AS DOUBLE)
-                        + CAST(16 - s1.used AS DOUBLE) * pow(2.0, s1.mx)))
-                       <= 40.0 AND 16 - s1.used > 0
-                   THEN 16.0 * ln(16.0 / (16 - s1.used))
-                   ELSE 0.673 * 16 * 16 * pow(2.0, s1.mx)
-                     / (CAST(s1.S AS DOUBLE)
-                        + CAST(16 - s1.used AS DOUBLE) * pow(2.0, s1.mx)) END,
-               6) AS est
-           FROM s1 JOIN ex USING (source)
-         ), pairs AS (
-           SELECT a.source AS ga, b.source AS gb
-           FROM pe a JOIN pe b ON a.source < b.source
-         ), ur AS (
-           SELECT p.ga, p.gb, r.b, max(r.M) AS M
-           FROM pairs p JOIN r ON r.source = p.ga OR r.source = p.gb
-           GROUP BY 1, 2, 3
-         ), ust AS (
-           SELECT ga, gb, CAST(count(*) AS BIGINT) AS used, max(M) AS mx
-           FROM ur GROUP BY 1, 2
-         ), us1 AS (
-           SELECT ur.ga, ur.gb,
-             CAST(sum(CAST(pow(2.0, ust.mx - ur.M) AS BIGINT)) AS BIGINT) AS S,
-             any_value(ust.used) AS used, any_value(ust.mx) AS mx
-           FROM ur JOIN ust ON ur.ga = ust.ga AND ur.gb = ust.gb
-           GROUP BY ur.ga, ur.gb
-         ), uest AS (
-           SELECT ga, gb,
-             round(CASE WHEN (0.673 * 16 * 16 * pow(2.0, mx)
-                     / (CAST(S AS DOUBLE)
-                        + CAST(16 - used AS DOUBLE) * pow(2.0, mx)))
-                       <= 40.0 AND 16 - used > 0
-                   THEN 16.0 * ln(16.0 / (16 - used))
-                   ELSE 0.673 * 16 * 16 * pow(2.0, mx)
-                     / (CAST(S AS DOUBLE)
-                        + CAST(16 - used AS DOUBLE) * pow(2.0, mx)) END,
-               6) AS est_union
-           FROM us1
-         ), uex AS (
-           SELECT p.ga, p.gb, CAST(count(DISTINCT d.text) AS BIGINT) AS n_union
-           FROM pairs p JOIN d ON d.source = p.ga OR d.source = p.gb
-           GROUP BY 1, 2
-         )
-         SELECT p.ga AS grp_a, p.gb AS grp_b,
-           pa.est AS est_a, pb.est AS est_b, u.est_union,
-           round(pa.est + pb.est - u.est_union, 6) AS est_inter,
-           x.n_union,
-           pa.n_exact + pb.n_exact - x.n_union AS n_inter
-         FROM pairs p
-           JOIN pe pa ON pa.source = p.ga
-           JOIN pe pb ON pb.source = p.gb
-           JOIN uest u ON u.ga = p.ga AND u.gb = p.gb
-           JOIN uex x ON x.ga = p.ga AND x.gb = p.gb
-         ORDER BY 1, 2""",
-    "q_embed_recall_ivf" ->
-      recallIvfOracle(RecallIvfCells, 2, RecallIvfProbe, 64, 10),
-    "q_retrieval_ndcg" ->
-      ivfNdcgOracle(RecallIvfCells, 2, RecallIvfProbe, 64, 10),
-    "q_embed_recall_pq" ->
-      recallPqOracle(RecallPqSubspaces, 16, RecallPqCodebook, 1, 64, 10),
-    "q_knn_label" ->
-      """WITH b AS (
-           SELECT vec_id, label, embedding,
-             sqrt(list_reduce(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-               (acc, v) -> acc + v)) AS nv
-           FROM embeddings WHERE label IS NOT NULL
-         ), q AS (SELECT * FROM b WHERE vec_id < 64),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d, q WHERE d.vec_id <> q.vec_id)
-          WHERE rn <= 10),
-         v AS (SELECT ex.qid, l.label AS lab
-           FROM ex JOIN b l ON l.vec_id = ex.id),
-         c AS (SELECT qid, lab, count(*) AS votes FROM v GROUP BY qid, lab),
-         w AS (SELECT qid, lab, votes,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY votes DESC, lab) AS rn
-           FROM c)
-         SELECT w.qid AS vec_id, w.lab AS pred_label, w.votes,
-           e.label AS actual_label
-         FROM w JOIN embeddings e ON e.vec_id = w.qid
-         WHERE w.rn = 1 ORDER BY vec_id""",
-    "q_embed_recall_q8" ->
-      """WITH b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         ex AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM b d, b q WHERE d.vec_id <> q.vec_id) WHERE rn <= 10),
-         qz AS (SELECT vec_id, embedding,
-           CAST(list_min(embedding) AS DOUBLE) AS q_lo,
-           (CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)) / 255.0
-             AS q_scale
-         FROM embeddings),
-         cz AS (SELECT vec_id, q_lo, q_scale,
-           CASE WHEN q_scale > 0.0 THEN list_transform(embedding, x ->
-             least(255, greatest(0, CAST(floor((CAST(x AS DOUBLE) - q_lo) / q_scale) AS INT))))
-           ELSE list_transform(embedding, x -> 0) END AS q_codes
-         FROM qz),
-         dq AS (SELECT vec_id,
-           list_transform(q_codes, c -> q_lo + q_scale * CAST(c AS DOUBLE)) AS dv
-         FROM cz),
-         d2 AS (SELECT vec_id, dv,
-           sqrt(list_reduce(list_transform(dv, x -> x * x), (acc, v) -> acc + v)) AS nv
-         FROM dq),
-         ap AS (SELECT qid, id FROM (
-           SELECT q.vec_id AS qid, d.vec_id AS id,
-             row_number() OVER (PARTITION BY q.vec_id ORDER BY
-               list_reduce(list_transform(list_zip(d.dv, q.embedding),
-                 pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-                 (acc, v) -> acc + v) / (d.nv * q.nv) DESC, d.vec_id) AS rn
-           FROM d2 d, b q WHERE d.vec_id <> q.vec_id) WHERE rn <= 10),
-         h AS (SELECT ex.qid, count(*) AS hits FROM ex
-           JOIN ap ON ex.qid = ap.qid AND ex.id = ap.id GROUP BY ex.qid),
-         t AS (SELECT qid, count(*) AS total FROM ex GROUP BY qid)
-       SELECT t.qid, coalesce(h.hits, 0) AS hits, t.total,
-         CAST(coalesce(h.hits, 0) AS DOUBLE) / CAST(t.total AS DOUBLE) AS recall
-       FROM t LEFT JOIN h ON t.qid = h.qid ORDER BY t.qid""",
-    "q_embed_knn" ->
-      """WITH b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         p AS (SELECT q.vec_id AS qid, d.vec_id AS id,
-             list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-               pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-               (acc, v) -> acc + v) / (d.nv * q.nv) AS cosine
-           FROM b d, b q WHERE d.vec_id <> q.vec_id),
-         r AS (SELECT qid, id, cosine,
-             row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id) AS rn
-           FROM p)
-         SELECT qid, id, cosine FROM r WHERE rn <= 10 ORDER BY qid, id""",
-    "q_embed_topk_batch" ->
-      """WITH b AS (SELECT vec_id, embedding,
-           sqrt(list_reduce(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (acc, v) -> acc + v)) AS nv
-         FROM embeddings),
-         p AS (SELECT q.vec_id AS qid, d.vec_id AS id,
-             list_reduce(list_transform(list_zip(d.embedding, q.embedding),
-               pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)),
-               (acc, v) -> acc + v) / (d.nv * q.nv) AS cosine
-           FROM b d, b q WHERE d.vec_id <> q.vec_id AND q.vec_id < 64),
-         r AS (SELECT qid, id, cosine,
-             row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id) AS rn
-           FROM p)
-         SELECT qid, id, cosine FROM r WHERE rn <= 10 ORDER BY qid, id""",
-
-    "q_time_travel" ->
-      """WITH v1 AS (
-           SELECT n_nationkey, n_name, n_regionkey, 'old' AS flag FROM nation),
-         v2 AS (
-           SELECT n_nationkey, n_name, n_regionkey,
-             CASE WHEN n_regionkey = 2 THEN 'new' ELSE 'old' END AS flag
-           FROM v1),
-         v3 AS (SELECT * FROM v2 WHERE n_nationkey NOT IN (1, 2)),
-         sigs AS (
-           SELECT 'v1' AS tag, count(*) AS n,
-             count(CASE WHEN flag = 'new' THEN 1 END) AS n_new FROM v1
-           UNION ALL
-           SELECT 'v2', count(*),
-             count(CASE WHEN flag = 'new' THEN 1 END) FROM v2
-           UNION ALL
-           SELECT 'v3', count(*),
-             count(CASE WHEN flag = 'new' THEN 1 END) FROM v3),
-         d AS (
-           SELECT 'diff_changed' AS tag, count(*) AS n,
-             CAST(0 AS BIGINT) AS n_new
-           FROM v1 JOIN v3 ON v1.n_nationkey = v3.n_nationkey
-           WHERE v1.flag <> v3.flag OR v1.n_name <> v3.n_name
-              OR v1.n_regionkey <> v3.n_regionkey
-           UNION ALL
-           SELECT 'diff_removed', count(*), CAST(0 AS BIGINT)
-           FROM v1 WHERE n_nationkey NOT IN (SELECT n_nationkey FROM v3))
-         SELECT tag, n, n_new FROM sigs
-         UNION ALL SELECT tag, n, n_new FROM d
-         ORDER BY tag""",
-
-    "q_anonymity" ->
-      """SELECT c_nationkey, substr(c_name, -1, 1) AS qi_digit,
-           count(*) AS n,
-           count(DISTINCT c_mktsegment) AS n_sensitive,
-           count(*) >= 5 AS k_anonymous,
-           count(DISTINCT c_mktsegment) >= 3 AS l_diverse
-         FROM customer
-         GROUP BY c_nationkey, qi_digit
-         ORDER BY c_nationkey, qi_digit""",
-
-    "q_anonymity_suppress" ->
-      """WITH ok AS (
-           SELECT c_nationkey, substr(c_name, -1, 1) AS qi_digit
-           FROM customer
-           GROUP BY 1, 2
-           HAVING count(*) >= 5 AND count(DISTINCT c_mktsegment) >= 3
-         )
-         SELECT c.c_nationkey, count(*) AS kept
-         FROM customer c
-         JOIN ok ON ok.c_nationkey = c.c_nationkey
-                AND ok.qi_digit = substr(c.c_name, -1, 1)
-         GROUP BY c.c_nationkey
-         ORDER BY c.c_nationkey""",
-
-    "q_epoch_shuffle" ->
-      """WITH e AS (SELECT unnest([0, 1, 2]) AS epoch),
-         x AS (
-           SELECT e.epoch, d.doc_id,
-             md5(CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)) AS h
-           FROM e CROSS JOIN documents d
-         ),
-         s AS (
-           SELECT epoch, doc_id, h,
-             CAST(('0x' || substr(h, 1, 8)) AS BIGINT) % 8 AS shard
-           FROM x
-         )
-         SELECT epoch, shard,
-           CAST(row_number() OVER (PARTITION BY epoch, shard
-             ORDER BY h, doc_id) AS INT) AS pos,
-           doc_id
-         FROM s ORDER BY epoch, shard, pos""",
-
-    "q_sketch_cms" ->
-      """WITH it AS (
-           SELECT CAST(event_type AS VARCHAR) AS item FROM events
-           WHERE event_type IS NOT NULL
-         ),
-         r AS (SELECT unnest([0, 1, 2, 3]) AS r),
-         cnt AS (
-           SELECT r.r,
-             CAST(('0x' || substr(md5(CAST(r.r AS VARCHAR) || ':' || it.item), 1, 8))
-               AS BIGINT) % 32 AS b,
-             count(*) AS cnt
-           FROM it CROSS JOIN r GROUP BY 1, 2
-         ),
-         q AS (SELECT DISTINCT item FROM it),
-         est AS (
-           SELECT q.item, min(coalesce(c.cnt, 0)) AS est
-           FROM q CROSS JOIN r
-           LEFT JOIN cnt c ON c.r = r.r AND c.b =
-             CAST(('0x' || substr(md5(CAST(r.r AS VARCHAR) || ':' || q.item), 1, 8))
-               AS BIGINT) % 32
-           GROUP BY q.item
-         ),
-         ex AS (SELECT item, count(*) AS exact FROM it GROUP BY item)
-         SELECT est.item, est.est, ex.exact, est.est - ex.exact AS overcount
-         FROM est JOIN ex USING (item) ORDER BY item"""
-  )
+  /** Builds every persisted similarity index once; see
+    * [[graft.catalog.Embeddings.prepareIndexes]]. */
+  def prepareIndexes(s: SparkSession, dir: String): Unit =
+    Embeddings.prepareIndexes(s, dir)
+
+  val LshBits: Int = Embeddings.LshBits
+  val LshMaxHamming: Int = Embeddings.LshMaxHamming
 }

@@ -27,13 +27,16 @@ object WarpAggregates {
   /** Exact, partition-order-independent double sum. */
   def dsum(c: Column): Column = sum(c.cast(D)).cast("double")
 
+  /** Matching exact average: exact decimal sum, one double division. */
+  def davg(c: Column): Column = dsum(c) / count(c)
+
   /** sum: ignores non-numeric, empty set => 0 (SumReducer, Function.swift:2032).
     * Coerces through Warp.num so mixed-type columns never hit an ANSI cast
     * error; on already-numeric columns Catalyst folds the guard away. */
   def warpSum(c: Column): Column = coalesce(dsum(Warp.num(c)), lit(0.0))
 
   /** average over valid values (AverageReducer, Function.swift:2006). */
-  def warpAverage(c: Column): Column = dsum(Warp.num(c)) / count(Warp.num(c))
+  def warpAverage(c: Column): Column = davg(Warp.num(c))
 
   /** min/max with Warp ordering — null (empty) excluded like the reference
     * excludes invalid (Function.swift:2045,2057). */

@@ -217,12 +217,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, 1.0).otherwise(inter / uni))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 9).as("jaccard"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      withSig.unpersist()
-      out
-    }
+    releasingPairs(result, materialize)(withSig.unpersist())
   }
 
   /** ENGINE-REPLAYABLE near-dup LEDGER — the md5 tier of
@@ -320,6 +315,35 @@ object Dedup {
         (m, i) => least(m, xxhash64(h, i))))
   }
 
+  /** Candidate pairs (id1 < id2) sharing a (band, bh) bucket key; each
+    * bucket is capped at its `maxBucket` lowest ids to bound the quadratic
+    * blow-up of a degenerate band. */
+  private def bucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val bucketed = banded
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "bh").orderBy("id")))
+      .filter(col("rn") <= maxBucket)
+    bucketed.select(col("band"), col("bh"), col("id").as("id1"))
+      .join(bucketed.select(col("band"), col("bh"), col("id").as("id2")), Seq("band", "bh"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "id2")
+      .dropDuplicates("id1", "id2")
+  }
+
+  /** Materialize the (small) pairs result eagerly, then `release` the
+    * corpus-sized frames the call persisted — otherwise repeated pipeline
+    * invocations in one session accumulate cached frames indefinitely.
+    * materialize=false returns the fully lazy plan (plan audits, or callers
+    * that manage the cache themselves); such calls persist nothing. */
+  private def releasingPairs(result: DataFrame, materialize: Boolean)
+                            (release: => Unit): DataFrame =
+    if (!materialize) result
+    else {
+      val out = result.localCheckpoint(true)
+      release
+      out
+    }
+
   /** MinHash+LSH near-duplicate PAIRS.
     *
     * Pipeline: shingle → k minhashes → split signature into `bands` bands
@@ -356,10 +380,13 @@ object Dedup {
     // join (higher-order-function folds would run interpreted and ~10x
     // slower; see graft.functions.TextHash). Persisted because the verify
     // step re-joins the shingle sets (at warehouse scale this is the
-    // materialized index table you would write out once and reuse).
-    val withSh = df.select(col(idCol).as("id"),
+    // materialized index table you would write out once and reuse);
+    // materialize=false caches nothing, so it has nothing to release.
+    val withShPlan = df.select(col(idCol).as("id"),
       C(ShingleHashExpr(E(col(textCol)), shingleSize)).as("shh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withSh =
+      if (materialize) withShPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else withShPlan
 
     val withSig = withSh.select(col("id"),
       C(MinHashSigExpr(E(col("shh")), numHashes)).as("sig"))
@@ -369,18 +396,7 @@ object Dedup {
       posexplode(C(BandHashExpr(E(col("sig")), bands))))
       .select(col("id"), col("pos").as("band"), col("col").as("bh"))
 
-    // bound degenerate buckets, then pair within bucket (id1 < id2)
-    val bucketed = banded
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bh").orderBy("id")))
-      .filter(col("rn") <= maxBucket)
-
-    val l = bucketed.select(col("band"), col("bh"), col("id").as("id1"))
-    val r = bucketed.select(col("band"), col("bh"), col("id").as("id2"))
-    val candidates = l.join(r, Seq("band", "bh"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .dropDuplicates("id1", "id2")
+    val candidates = bucketPairs(banded, maxBucket)
 
     // exact verify: join the (small) candidate id pairs back to the
     // distinct shingle-hash sets — two narrow equi-joins — and compute
@@ -393,17 +409,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, 1.0).otherwise(inter / uni))
       .filter(col("jaccard") >= jaccardThreshold)
       .select("id1", "id2", "jaccard")
-    // materialize the (small) pairs result eagerly so the corpus-sized
-    // cached intermediate can be released NOW — otherwise repeated pipeline
-    // invocations in one session accumulate cached frames indefinitely.
-    // materialize=false keeps the lazy plan (no cache cleanup): for plan
-    // inspection/audits, or callers that manage the cache themselves
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      withSh.unpersist()
-      out
-    }
+    releasingPairs(result, materialize)(withSh.unpersist())
   }
 
   /** Exact n-gram Jaccard similarity of two shingle arrays. */
@@ -629,12 +635,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, lit(1.0)).otherwise(inter / uni))
       .filter(col("jaccard") >= threshold)
       .select(outCols: _*)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      sized0.unpersist() // vocab checkpoint blocks are GC-reclaimed
-      out
-    }
+    releasingPairs(result, materialize)(sized0.unpersist()) // vocab checkpoint blocks are GC-reclaimed
   }
 
   /** Probe-vs-corpus form of [[prefixJaccardJoin]] — the EXACT near-dup
@@ -740,12 +741,7 @@ object Dedup {
       .withColumn("containment", inter / size(col("__sa")).cast("double"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      sized.unpersist() // vocab checkpoint blocks are GC-reclaimed
-      out
-    }
+    releasingPairs(result, materialize)(sized.unpersist()) // vocab checkpoint blocks are GC-reclaimed
   }
 
   /** Truncation-duplicate CLEANUP over [[containmentJoin]]: drop every
@@ -915,9 +911,11 @@ object Dedup {
       if (dim > 0) dim
       else df.select(size(col(vecCol))).head().getInt(0)
 
-    val sk = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
+    val skPlan = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       Similarity.sketch(col(vecCol), Similarity.hyperplanes(theDim, nBits, seed)).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sk =
+      if (materialize) skPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else skPlan
 
     val banded = sk.select(col("id"),
       explode(array((0 until bands).map { b =>
@@ -928,16 +926,7 @@ object Dedup {
       }: _*)).as("bb"))
       .select(col("bb.band"), col("bb.bh"), col("id"))
 
-    val bucketed = banded
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bh").orderBy("id")))
-      .filter(col("rn") <= maxBucket)
-
-    val candidates = bucketed.select(col("band"), col("bh"), col("id").as("id1"))
-      .join(bucketed.select(col("band"), col("bh"), col("id").as("id2")), Seq("band", "bh"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .dropDuplicates("id1", "id2")
+    val candidates = bucketPairs(banded, maxBucket)
 
     val result = candidates
       .join(sk.select(col("id").as("id1"), col("vec").as("v1")), "id1")
@@ -945,14 +934,7 @@ object Dedup {
       .withColumn("cosine", Similarity.cosine(col("v1"), col("v2")))
       .filter(col("cosine") >= cosineThreshold)
       .select("id1", "id2", "cosine")
-    // eager pairs materialization -> release the cached sketch frame (see
-    // minhashPairs; same leak shape and same materialize=false escape hatch)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      sk.unpersist()
-      out
-    }
+    releasingPairs(result, materialize)(sk.unpersist())
   }
 
   /** Connected components over an undirected edge list — the cluster-
@@ -1449,12 +1431,7 @@ object Dedup {
       .select(col("id1"), col("id2"), hamming(col("sig1"), col("sig2")).as("hamming"))
       .dropDuplicates("id1", "id2")
       .filter(col("hamming") <= maxHamming)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      if (sigOwned) sigP.unpersist()
-      out
-    }
+    releasingPairs(result, materialize)(if (sigOwned) sigP.unpersist())
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the

@@ -20,6 +20,8 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Incremental {
 
+  /** State stays decimal, not dsum's double: deltas subtract, and only an
+    * exact sum returns to zero when its group's rows are all deleted. */
   private val Dec = DecimalType(28, 6)
 
   /** Build the initial aggregate state: one row per key —

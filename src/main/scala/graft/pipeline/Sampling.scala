@@ -127,8 +127,7 @@ object Sampling {
                 else org.apache.spark.sql.functions.pow(col("__n").cast("double"), alpha)
     val weights = counts.select(col("__cls"), col("__n"), wExpr.as("__w"))
     val tot = weights.agg(
-      sum(col("__w").cast(org.apache.spark.sql.types.DecimalType(28, 6)))
-        .cast("double").as("__wsum"),
+      graft.functions.WarpAggregates.dsum(col("__w")).as("__wsum"),
       sum(col("__n")).as("__ntot"))
     val targets = weights.crossJoin(broadcast(tot))
       .select(col("__cls"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.WarpOps._
 
@@ -9,13 +8,9 @@ import graft.ops.WarpOps._
   * suite; run with Test/runMain). */
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // AQE off: with an exchange in the plan, codegenString would see a
-      // not-yet-final AdaptiveSparkPlan and report zero fragments
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE off: with an exchange in the plan, codegenString would see a
+    // not-yet-final AdaptiveSparkPlan and report zero fragments
+    val spark = LocalSession(extra = Seq("spark.sql.adaptive.enabled" -> "false"))
     import org.apache.spark.sql.execution.debug.codegenString
     val ta = graft.pipeline.TextAnalysis
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -12,13 +11,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * which is what plans/r14 *_before/_after evidence refers to. */
 object DedupPlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase profile for q_dedup_fuzzy at scale (VERDICT r14 item 4): where
@@ -13,10 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val d = 4; val k = d + 1
     def time[A](label: String)(f: => A): A = {

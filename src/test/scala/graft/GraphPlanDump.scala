@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.execution.FormattedMode
@@ -12,12 +11,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * the evidence for the r14 SMJ -> SHJ change. */
 object GraphPlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = "/root/testdata/sf0.001"
     val hint = args.headOption.contains("hinted")
     val o = spark.read.parquet(s"$dir/orders.parquet").select(col("o_orderkey"), col("o_custkey"))

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: run one SparkEntry query and print its rows (for oracle
   * cross-checking during development; not a ScalaTest suite). */
 object OneOff {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val df = SparkEntry.queries(name)(spark, dir)
     df.collect().foreach(r => println(r.mkString("|")))
     spark.stop()

@@ -35,9 +35,10 @@ import java.nio.file.{Files, Paths}
   */
 class OracleLintSpec extends AnyFunSuite {
 
-  /** Queries allowed to emit an int128-backed output column: the
-    * deliberately-wide conviction probe only. */
-  private val allowWide = Set("q_diag_dec_wide")
+  /** Queries allowed to emit an int128-backed output column: the catalog's
+    * canaries (the deliberately-wide conviction probe). */
+  private val canaries =
+    graft.catalog.Catalog.all.filter(_.tags(graft.catalog.Catalog.Canary)).map(_.name).toSet
 
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -57,10 +58,7 @@ class OracleLintSpec extends AnyFunSuite {
 
     val dir = Files.createTempDirectory("oraclelint")
     val sqlJson = dir.resolve("oracle_sql.json")
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Verify.jsonQuote(k)}: ${Verify.jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(sqlJson, json)
+    Files.writeString(sqlJson, Verify.oracleJson())
 
     // Line protocol (no JSON parsing on the Scala side):
     //   BAD <tab> name <tab> column <tab> ducktype   — int128-backed output
@@ -109,7 +107,7 @@ class OracleLintSpec extends AnyFunSuite {
     assert(errs.isEmpty,
       s"oracle SQL failed to bind in DuckDB (driver gate would red these):\n${errs.mkString("\n")}")
 
-    val offenders = bad.filterNot(b => allowWide.contains(b(1)))
+    val offenders = bad.filterNot(b => canaries.contains(b(1)))
     assert(offenders.isEmpty,
       "an int128-backed type reaches an oracle output column (HUGEINT / " +
         "DECIMAL precision>18 = 128-bit repr on the driver's hash path, " +
@@ -117,13 +115,12 @@ class OracleLintSpec extends AnyFunSuite {
         "BIGINT and decimals to precision <= 18):\n" +
         offenders.map(_.mkString(" ")).mkString("\n"))
 
-    // detector self-test: the deliberately-wide probe MUST be flagged —
-    // if it is not, the lint has gone blind (or the probe was retired
-    // without updating the allowlist) and this gate is no longer guarding
-    val flaggedWide = bad.exists(b => b(1) == "q_diag_dec_wide")
-    val widePresent = SparkEntry.oracleSql.contains("q_diag_dec_wide")
-    assert(!widePresent || flaggedWide,
-      "q_diag_dec_wide (deliberately DECIMAL(20,9)) was NOT flagged int128 — the lint is blind")
+    // detector self-test: every canary MUST be flagged — if one is not,
+    // the lint has gone blind (or the canary lost its wide column without
+    // losing its tag) and this gate is no longer guarding
+    val blind = canaries.filterNot(c => bad.exists(b => b(1) == c))
+    assert(blind.isEmpty,
+      s"canaries (deliberately DECIMAL(20,9)) NOT flagged int128 — the lint is blind: $blind")
 
     assert(okCount.exists(_ == SparkEntry.oracleSql.size),
       s"checked ${okCount.getOrElse(-1)} of ${SparkEntry.oracleSql.size} oracle queries")

@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    // session configs MUST match Verify/Bench: a local-timezone LTZ
-    // session would dump timestamp-query plans that differ from the ones
+    // the Verify/Bench session confs, so the dumped plans are the ones
     // the driver sessions actually run (and PLANS.md documents)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = "/root/testdata/sf0.001"
     SparkEntry.prepareIndexes(spark, dir)
     for (n <- args) {

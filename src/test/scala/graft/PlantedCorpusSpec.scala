@@ -100,10 +100,8 @@ class PlantedCorpusSpec extends SparkSpec {
     assert(failures.isEmpty,
       s"Spark side failed on the planted corpus:\n${failures.mkString("\n")}")
 
-    val json = SparkEntry.oracleSql.filter(kv => textFamily.contains(kv._1))
-      .map { case (k, v) => s"${Verify.jsonQuote(k)}: ${Verify.jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(out.resolve("oracle_sql.json"), json)
+    Files.writeString(out.resolve("oracle_sql.json"),
+      Verify.oracleJson(textFamily.contains))
 
     val pb = new ProcessBuilder("python3", "tools/check.py",
       planted.toString, out.toString)

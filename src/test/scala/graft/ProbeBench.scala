@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch micro-bench: steady-state probe-vs-brute comparison for the
   * embedding queries (not a ScalaTest suite; run with Test/runMain). */
 object ProbeBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     SparkEntry.prepareIndexes(spark, dir)
     def time(n: String): Unit = {

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch: measure IVF probe recall vs brute at sf0.01/sf0.1. */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     import graft.pipeline.Similarity
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the salted contrastive negative-bucket join (r15,
@@ -17,12 +16,8 @@ object SaltProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val bcast = if (args.length > 1) args(1) else "on"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (bcast == "off") "-1" else "10485760")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(extra = Seq("spark.sql.autoBroadcastJoinThreshold" ->
+      (if (bcast == "off") "-1" else "10485760")))
     import graft.ops.WarpOps._
     def run(salt: Int): Unit = {
       val docs = spark.read.parquet(s"$dir/documents.parquet")

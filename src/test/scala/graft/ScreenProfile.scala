@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
@@ -9,11 +8,7 @@ import org.apache.spark.sql.DataFrame
   * each with a noop sink (guide §1.4) to locate the wall-clock. */
 object ScreenProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val corpus = docs.filter(col("doc_id") % 3 === 0)

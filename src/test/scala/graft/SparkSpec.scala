@@ -3,22 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared one-per-JVM test session (local mode; 4 shuffle partitions to
-  * keep tiny-data tests fast). */
+/** Shared one-per-JVM test session (pinned to 4 cores and shuffle
+  * partitions to keep tiny-data tests fast). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch cross-validation main (not a ScalaTest suite): read a SQLite
   * database written by an EXTERNAL real SQLite build (e.g. Python's
   * sqlite3 module) with [[graft.sources.SqliteFile]], and print enough to
@@ -9,10 +7,7 @@ import org.apache.spark.sql.SparkSession
 object SqliteExtProbe {
   def main(args: Array[String]): Unit = {
     val Array(path, table) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val df = graft.sources.SqliteFile.read(spark, path, table)
     println("SCHEMA " + df.schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","))
     println("COUNT " + df.count())
