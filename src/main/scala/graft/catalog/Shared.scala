@@ -211,7 +211,11 @@ private[catalog] object Shared {
     * every scale-9 DECIMAL output column is driver-hash red, int64- and
     * int128-backed alike; DOUBLE is the proven-green tier). The HUGEINT
     * e9 is exact, its DOUBLE cast is exact for e9 < 2^53, and `/ 1e9` is
-    * the identical correctly-rounded binary64 division Spark performs. */
+    * the identical correctly-rounded binary64 division Spark performs.
+    *
+    * Precondition: `num >= 0`. DuckDB's `//` floors while Spark's integral
+    * divide truncates toward zero, so the twins agree only for a
+    * non-negative numerator (every caller passes a count). */
   def dbl9Sql(num: String, den: String): String =
     s"""CASE WHEN $den > 0
           THEN CAST((CAST($num AS HUGEINT) * 2000000000 + $den) // (CAST($den AS HUGEINT) * 2) AS DOUBLE) / 1e9

@@ -5,10 +5,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.WarpOps._
 import graft.functions.WarpAggregates.dsum
+import graft.pipeline.Materialize
 import Shared._
 
 /** Structured Streaming rows (bounded fixtures run as real streams) and
-  * their batch-equivalence twins. */
+  * their batch-equivalence twins. A stream's fixture dirs come from its
+  * query's [[Materialize]] scope and are deleted once the bounded run has
+  * terminated: every result reads its memory sink (or Postgres), not the
+  * files. */
 object Streaming {
   /** Runs `body` with spark.sql.shuffle.partitions temporarily lowered for
     * the REAL-streaming catalog rows. A stateful streaming operator opens
@@ -119,7 +123,7 @@ object Streaming {
     //      dimension VERSION valid at its event time (the "join the dim
     //      as it was" semantics a replayable pipeline needs). Stateless
     //      stream-static join: no watermark, no sentinel required.
-    Q("q_stream_scd2_enrich", (s, dir) => {
+    Q("q_stream_scd2_enrich", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       streamShuffle(s) {
       val root = s"/tmp/graft_whse_${dirTag(dir)}"
@@ -135,7 +139,7 @@ object Streaming {
         .select(col("event_id"),
           pmod(col("user_id"), lit(25L)).cast("long").as("nk"),
           col("ts").cast(TimestampType).as("ts"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_se").toString
+      val tmp = m.tempDir("graft_stream_se")
       ev.coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(ev.schema).parquet(tmp)
       val ems = unix_millis(col("ts"))
@@ -214,7 +218,7 @@ object Streaming {
     //      read back through the partitioned wire scan. The stream->
     //      warehouse shape every ingest pipeline runs; AvailableNow makes
     //      it deterministic and oracle-gated against the source parquet.
-    Q("q_stream_pg_sink", (s, dir) => {
+    Q("q_stream_pg_sink", (s, dir) => Materialize(s) { m =>
       val pg = graft.sources.PgWire
       val conn = pg.ensureLocalServer()
       val tbl = s"stream_sink_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
@@ -223,7 +227,7 @@ object Streaming {
           .select(col("event_id").cast("long").as("event_id"),
             col("event_type").cast("string").as("event_type"),
             col("value").cast("double").as("value"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_pg").toString
+        val tmp = m.tempDir("graft_stream_pg")
         ev.coalesce(2).write.mode("overwrite").parquet(tmp)
         pg.resetTable(conn, tbl, ev.schema) // start-empty: re-runs must not append
         val src = s.readStream.schema(ev.schema).parquet(tmp)
@@ -289,7 +293,7 @@ object Streaming {
     //      sentinel is needed; the single-file fixture keeps arrival
     //      order deterministic (one batch), matching the oracle's
     //      (ts, event_id) chronological rank
-    Q("q_stream_cap", (s, dir) => {
+    Q("q_stream_cap", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       streamShuffle(s) {
       import s.implicits._
@@ -297,7 +301,7 @@ object Streaming {
         .select(col("event_id").cast("long").as("_1"),
           col("event_type").as("_2"),
           col("ts").cast(TimestampType).as("_3"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cap").toString
+      val tmp = m.tempDir("graft_stream_cap")
       ev.coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(ev.schema).parquet(tmp)
         .as[(Long, String, java.sql.Timestamp)]
@@ -326,7 +330,7 @@ object Streaming {
     //      dedup -> Jaccard verify -> memory sink, Trigger.AvailableNow)
     //      over a bounded fixture with planted near-dups; the oracle
     //      replays every md5 min-hash, band key and Jaccard in DuckDB
-    Q("q_stream_neardup", (s, dir) => {
+    Q("q_stream_neardup", (s, dir) => Materialize(s) { m =>
       // dropDuplicatesWithinWatermark emits each first occurrence IN its
       // data batch (the watermark only EVICTS dedup state), so the
       // trailing no-data batch is skippable machinery here too
@@ -343,7 +347,7 @@ object Streaming {
       // on a corpus-sized frame are a local-mode-only pattern (an executor
       // loss on a cluster kills the stream); the written form survives and
       // is exactly what a production deployment feeds its screen from
-      val tmpL = java.nio.file.Files.createTempDirectory("graft_stream_ndl").toString
+      val tmpL = m.tempDir("graft_stream_ndl")
       graft.pipeline.Dedup.minhashLedgerMd5(hist, "text", "doc_id")
         .write.mode("overwrite").parquet(tmpL)
       val ledger = s.read.parquet(tmpL)
@@ -359,7 +363,7 @@ object Streaming {
       val streamIn = fresh.unionByName(planted)
         .withColumn("ts",
           timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(600L))))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_nd").toString
+      val tmp = m.tempDir("graft_stream_nd")
       streamIn.write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(streamIn.schema).parquet(tmp)
       val out = graft.streaming.EventStream.nearDupScreenStreamMd5(
@@ -381,13 +385,13 @@ object Streaming {
     //      contamination flagger (broadcast probe grams, pure projection,
     //      no state store) runs as an actual streaming query; the oracle
     //      counts distinct-gram hits per document in plain SQL
-    Q("q_stream_contamination", (s, dir) => {
+    Q("q_stream_contamination", (s, dir) => Materialize(s) { m =>
       val docs = T(s, dir, "documents")
       val probes = docs.warpFilter(col("doc_id") % 10 === 7)
         .select(col("doc_id"), col("text"))
       val streamSide = docs.warpFilter(col("doc_id") % 10 =!= 7)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ct").toString
+      val tmp = m.tempDir("graft_stream_ct")
       streamSide.write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(streamSide.schema).parquet(tmp)
       val out = graft.streaming.EventStream.contaminationFlagStream(
@@ -430,7 +434,7 @@ object Streaming {
     //      BOTH sides plus the time-range join condition are what let
     //      Spark expire join state — the requirement for running this
     //      unbounded. Oracle: the identical range predicate in plain SQL.
-    Q("q_stream_interval_join", (s, dir) => {
+    Q("q_stream_interval_join", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       // inner join: every output row emits in its data batch, so the
       // trailing no-data batch is pure state-eviction machinery — skipped
@@ -454,8 +458,8 @@ object Streaming {
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).cast(TimestampType).as("mts"))
         .agg(dsum(col("value")).as("mark_total"))
-      val tmpE = java.nio.file.Files.createTempDirectory("graft_stream_ije").toString
-      val tmpM = java.nio.file.Files.createTempDirectory("graft_stream_ijm").toString
+      val tmpE = m.tempDir("graft_stream_ije")
+      val tmpM = m.tempDir("graft_stream_ijm")
       ev.write.mode("overwrite").parquet(tmpE)
       marks.write.mode("overwrite").parquet(tmpM)
       val srcE = s.readStream.schema(ev.schema).parquet(tmpE)
@@ -542,7 +546,7 @@ object Streaming {
     //      list — which is what the oracle computes. Bounded fixture
     //      (the q_stream_neardup discipline): event_id < 20000 keeps
     //      every row at the sf0.01 gate scale.
-    Q("q_stream_sessionize", (s, dir) => {
+    Q("q_stream_sessionize", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       // sessions close on the SENTINEL events, never on timeouts
       // (NoTimeout FMGWS — no-data batches invoke nothing), so the
@@ -562,7 +566,7 @@ object Streaming {
         .withColumn("event_type", lit("__eos"))
         .withColumn("ts", timestamp_millis(lit(sentinelMs)))
         .withColumn("value", lit(0.0))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sess").toString
+      val tmp = m.tempDir("graft_stream_sess")
       base.unionByName(sentinels).write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(base.schema).parquet(tmp)
         .as[graft.streaming.EventStream.Event]
@@ -613,7 +617,7 @@ object Streaming {
     //      micro-batch than real events, silently dropping them as late.
     //      Bounded fixture: event_id < 20000 (the q_stream_neardup
     //      discipline). Oracle: the q_trending SQL on the same slice.
-    Q("q_stream_trending", (s, dir) => {
+    Q("q_stream_trending", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       streamShuffle(s) {
       import s.implicits._
@@ -627,7 +631,7 @@ object Streaming {
       val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
         .select(col("user_id"), col("event_type"),
           timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_tr").toString
+      val tmp = m.tempDir("graft_stream_tr")
       base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(base.schema).parquet(tmp)
         .as[graft.streaming.EventStream.Event]
@@ -664,7 +668,7 @@ object Streaming {
     //      machinery, closed by the far-future-sentinel + AvailableNow
     //      no-data batch. Oracle: bins 0..9 generated per window, counts
     //      left-joined, share = one double division of exact counts.
-    Q("q_stream_histogram", (s, dir) => {
+    Q("q_stream_histogram", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
       streamShuffle(s) {
       import s.implicits._
@@ -678,7 +682,7 @@ object Streaming {
       val sentinel = Seq((0L, "__eos", 0.0)).toDF("user_id", "event_type", "value")
         .select(col("user_id"), col("event_type"),
           timestamp_millis(lit(sentinelMs)).as("ts"), col("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hg").toString
+      val tmp = m.tempDir("graft_stream_hg")
       base.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = s.readStream.schema(base.schema).parquet(tmp)
         .as[graft.streaming.EventStream.Event]

@@ -65,13 +65,14 @@ object Bpe {
     * Scale shape: ONE corpus aggregate (map-side combine on the word
     * hash), then per merge: one vocabulary-sized pair aggregate, a 1-row
     * TakeOrdered collect (the winner), and a map-only fold applying the
-    * merge. The vocabulary is localCheckpoint'ed each round so lineage
-    * (and re-execution) stays flat across merges. */
+    * merge. The vocabulary is pinned each round (the previous round
+    * dropped) so lineage and re-execution stay flat across merges. */
   def trainMerges(df: DataFrame, textCol: String, numMerges: Int,
-                  minCount: Long = 2): DataFrame = {
+                  minCount: Long = 2): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(numMerges > 0, s"numMerges must be > 0, got $numMerges")
     val spark = df.sparkSession
-    var vocab = initialVocab(df, textCol).localCheckpoint(true)
+    var vocab = m.pin(initialVocab(df, textCol))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var done = false
     for (rank <- 1 to numMerges if !done) {
@@ -82,13 +83,12 @@ object Bpe {
       else {
         val l = top(0).getAs[String]("l"); val r = top(0).getAs[String]("r")
         merges += ((rank, l, r, l + r, top(0).getAs[Long]("pair_count")))
-        val next = vocab.select(col("cnt"),
-          applyMerge(col("syms"), l, r).as("syms")).localCheckpoint(true)
-        vocab.unpersist()
+        val next = m.pin(vocab.select(col("cnt"),
+          applyMerge(col("syms"), l, r).as("syms")))
+        m.drop(vocab)
         vocab = next
       }
     }
-    vocab.unpersist()
     import spark.implicits._
     merges.toSeq.toDF("rank", "left", "right", "merged", "pair_count")
   }

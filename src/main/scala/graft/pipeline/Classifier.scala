@@ -110,32 +110,30 @@ object Classifier {
     * before the full corpus — and score everything with [[score]]. */
   def trainLogistic(df: DataFrame, featCol: Column, labelCol: Column,
                     iters: Int = 30, lr: Double = 2.0,
-                    l2: Double = 0.0): Array[Double] = {
+                    l2: Double = 0.0): Array[Double] =
+    Materialize(df.sparkSession) { m =>
     require(iters > 0, s"iters must be > 0, got $iters")
-    val data = df.select(featCol.as("__x"), labelCol.cast("double").as("__y"))
-      .localCheckpoint(true)
-    try {
-      val n = data.count().toDouble
-      require(n > 0, "cannot train on an empty dataset")
-      val w = Array.fill(dim + 1)(0.0)
-      for (_ <- 1 to iters) {
-        // error term in its own projection: the sigmoid is computed once
-        // per row, not once per gradient component (CollapseProject keeps
-        // the multiply-referenced alias separate)
-        val errDf = data.select(col("__x"),
-          (score(col("__x"), w.toSeq) - col("__y")).as("__e"))
-        val aggs = (0 until dim).map(j =>
-          sum((col("__e") * element_at(col("__x"), j + 1)).cast("decimal(30,15)"))) :+
-          sum(col("__e").cast("decimal(30,15)"))
-        val g = errDf.agg(aggs.head, aggs.tail: _*).head()
-        for (j <- 0 to dim) {
-          val gj = g.getDecimal(j).doubleValue() / n
-          val reg = if (j < dim) l2 * w(j) else 0.0
-          w(j) -= lr * (gj + reg)
-        }
+    val data = m.pin(df.select(featCol.as("__x"), labelCol.cast("double").as("__y")))
+    val n = data.count().toDouble
+    require(n > 0, "cannot train on an empty dataset")
+    val w = Array.fill(dim + 1)(0.0)
+    for (_ <- 1 to iters) {
+      // error term in its own projection: the sigmoid is computed once
+      // per row, not once per gradient component (CollapseProject keeps
+      // the multiply-referenced alias separate)
+      val errDf = data.select(col("__x"),
+        (score(col("__x"), w.toSeq) - col("__y")).as("__e"))
+      val aggs = (0 until dim).map(j =>
+        sum((col("__e") * element_at(col("__x"), j + 1)).cast("decimal(30,15)"))) :+
+        sum(col("__e").cast("decimal(30,15)"))
+      val g = errDf.agg(aggs.head, aggs.tail: _*).head()
+      for (j <- 0 to dim) {
+        val gj = g.getDecimal(j).doubleValue() / n
+        val reg = if (j < dim) l2 * w(j) else 0.0
+        w(j) -= lr * (gj + reg)
       }
-      w
-    } finally data.unpersist()
+    }
+    w
   }
 
   /** Exact tie-averaged ROC AUC of a score column against a 0/1 label —

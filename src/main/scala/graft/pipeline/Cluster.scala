@@ -66,41 +66,40 @@ object Cluster {
     * `q_embed_recall_ivf` gauge), unlike the seeded-sample
     * [[Similarity.ivfIndex]] tier. */
   def kmeansFit(df: DataFrame, vecCol: String, idCol: String,
-                k: Int = 8, iters: Int = 2): (DataFrame, Array[Array[Double]]) = {
+                k: Int = 8, iters: Int = 2): (DataFrame, Array[Array[Double]]) =
+    Materialize(df.sparkSession) { m =>
     require(k > 0, s"k must be positive, got $k")
     require(iters >= 0, s"iters must be >= 0, got $iters")
     // null vectors are DROPPED (they have no distance to any centroid and
     // would NPE the init collect); float and double element vectors both
     // work — init widens per element exactly like the dot kernel
-    val base = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
-      .localCheckpoint(true)
-    try {
-      val init = base.orderBy(col("__id")).limit(k)
-        .select(col("__v")).collect()
-        .map(r => Similarity.vecToDouble(r.getSeq[Any](0)))
-      require(init.length == k,
-        s"need at least $k non-null vectors for init, got ${init.length}")
-      var cents = init
-      for (_ <- 1 to iters) {
-        val sums = assign(base, cents)
-          .select(col("__c"), posexplode(col("__v")).as(Seq("__i", "__x")))
-          .groupBy("__c", "__i")
-          .agg(sum(col("__x").cast("double").cast(DecimalType(30, 15))).as("__s"),
-            count(lit(1)).as("__n"))
-          .collect()
-        val next = cents.map(_.clone())
-        sums.foreach { r =>
-          next(r.getInt(0))(r.getInt(1)) =
-            r.getDecimal(2).doubleValue() / r.getLong(3).toDouble
-        }
-        cents = next
+    val base = m.pin(df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+      .filter(col("__v").isNotNull))
+    val init = base.orderBy(col("__id")).limit(k)
+      .select(col("__v")).collect()
+      .map(r => Similarity.vecToDouble(r.getSeq[Any](0)))
+    require(init.length == k,
+      s"need at least $k non-null vectors for init, got ${init.length}")
+    var cents = init
+    for (_ <- 1 to iters) {
+      val sums = assign(base, cents)
+        .select(col("__c"), posexplode(col("__v")).as(Seq("__i", "__x")))
+        .groupBy("__c", "__i")
+        .agg(sum(col("__x").cast("double").cast(DecimalType(30, 15))).as("__s"),
+          count(lit(1)).as("__n"))
+        .collect()
+      val next = cents.map(_.clone())
+      sums.foreach { r =>
+        next(r.getInt(0))(r.getInt(1)) =
+          r.getDecimal(2).doubleValue() / r.getLong(3).toDouble
       }
-      val out = assign(base, cents)
-        .select(col("__id").as(idCol), col("__c").as("cluster"),
-          col("__d").as("dist2"))
-      (out, cents)
-    } finally { base.unpersist(); () }
+      cents = next
+    }
+    // the assignment frame reads base lazily: it is the caller's now
+    val out = assign(m.keep(base), cents)
+      .select(col("__id").as(idCol), col("__c").as("cluster"),
+        col("__d").as("dist2"))
+    (out, cents)
   }
 
   /** Per-cluster summary (size + mean squared distance, the inertia
@@ -139,7 +138,8 @@ object Cluster {
     * doubles), one map pass for distances (centroid as literal), one
     * decimal stats aggregate, one TakeOrdered(topK). */
   def embeddingOutliers(df: DataFrame, vecCol: String, idCol: String,
-                        topK: Int = 20): DataFrame = {
+                        topK: Int = 20): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(topK > 0, s"topK must be positive, got $topK")
     val v = col(vecCol)
     val rows = df.filter(v.isNotNull)
@@ -154,10 +154,9 @@ object Cluster {
     val d2 = Similarity.dot(v, v) + lit(c2) -
       lit(2.0) * Similarity.dot(v, typedLit(cent.toSeq))
     // the stats aggregate and the final TakeOrdered both consume the
-    // distances — localCheckpoint keeps the corpus-sized d2 kernel to ONE
-    // map pass (the documented scale shape), not one per action
-    val dists = rows.select(col(idCol).as("__id"), d2.as("__d2"))
-      .localCheckpoint(true)
+    // distances — the pin keeps the corpus-sized d2 kernel to ONE map
+    // pass (the documented scale shape), not one per action
+    val dists = m.pin(rows.select(col(idCol).as("__id"), d2.as("__d2")))
     val st = dists.agg(
         (sum(col("__d2").cast(DecimalType(30, 15))).cast("double")
           / count(lit(1)).cast("double")).as("__m"),
@@ -170,7 +169,7 @@ object Cluster {
       if (variance > 0)
         round((col("__d2") - lit(mu)) / lit(math.sqrt(variance)), 6)
       else lit(null).cast("double")
-    dists.select(col("__id").as(idCol), round(col("__d2"), 6).as("dist2"),
+    m.keep(dists).select(col("__id").as(idCol), round(col("__d2"), 6).as("dist2"),
         zCol.as("z"))
       .orderBy(col("z").desc, col(idCol)).limit(topK)
   }

@@ -119,20 +119,15 @@ object Dedup {
     * then exact Jaccard over the stored shingle sets — candidates only,
     * never all-pairs, history never re-shingled. */
   private def ledgerProbe(batch: DataFrame, ledger: DataFrame,
-                          jaccardThreshold: Double, maxBucket: Int): DataFrame = {
-    // materialize discipline (r14, guide §1.2): BOTH ledgers feed TWO plan
-    // branches each (band probe + shingle-set verify), and a ledger built
-    // inline (minhashLedgerMd5: 16 md5 calls per shingle) would otherwise
-    // re-run its signature pass once per branch. Persist both, checkpoint
-    // the small pair result eagerly, release the corpus-sized caches —
-    // but ONLY the caches THIS call introduced: a caller-persisted frame
-    // (e.g. a ledger probed across many micro-batches) must not lose its
-    // cache to our cleanup (ADVICE r14).
-    import org.apache.spark.storage.StorageLevel
-    val batchOwned = batch.storageLevel == StorageLevel.NONE
-    val ledgerOwned = ledger.storageLevel == StorageLevel.NONE
-    val batchP = if (batchOwned) batch.persist() else batch
-    val ledgerP = if (ledgerOwned) ledger.persist() else ledger
+                          jaccardThreshold: Double, maxBucket: Int): DataFrame =
+    Materialize(batch.sparkSession) { m =>
+    // BOTH ledgers feed TWO plan branches each (band probe + shingle-set
+    // verify), and a ledger built inline (minhashLedgerMd5: 16 md5 calls
+    // per shingle) would otherwise re-run its signature pass once per
+    // branch: cache both and pin the small pair result. A caller-persisted
+    // ledger (one probed across many micro-batches) keeps its cache.
+    val batchP = m.cache(batch)
+    val ledgerP = m.cache(ledger)
     def explodeBands(d: DataFrame, out: String) =
       d.select(col("id").as(out), posexplode(col("bhs")))
         .select(col(out), col("pos").as("band"), col("col").as("bh"))
@@ -153,10 +148,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, 1.0).otherwise(inter / uni))
       .filter(col("jaccard") >= jaccardThreshold)
       .select("new_id", "hist_id", "jaccard")
-    val out = result.localCheckpoint(true)
-    if (batchOwned) batchP.unpersist()
-    if (ledgerOwned) ledgerP.unpersist()
-    out
+    m.keep(m.pin(result))
   }
 
   /** ENGINE-REPLAYABLE MinHash LSH near-dup pairs — the md5 tier of
@@ -174,8 +166,8 @@ object Dedup {
   def minhashPairsMd5(df: DataFrame, textCol: String, idCol: String,
                       shingleSize: Int = 3, numHashes: Int = 16,
                       bands: Int = 4,
-                      jaccardThreshold: Double = 0.5,
-                      materialize: Boolean = true): DataFrame = {
+                      jaccardThreshold: Double = 0.5): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(numHashes > 0 && bands > 0, "need numHashes, bands > 0")
     val r = numHashes / bands
@@ -184,17 +176,14 @@ object Dedup {
         conv(substring(md5(concat(lit(s"$i:"), s)), 1, 15), 16, 10)
           .cast("long"))).as(s"__sig$i")
     }
-    // materialize discipline (r14): withSig feeds THREE plan branches
-    // (both band-join sides + the shingle-set verify) and its signature
-    // pass costs numHashes md5 calls per shingle — cache it once.
-    // materialize=false (plan audits, callers managing their own cache)
-    // keeps the fully lazy plan, like the sibling pair functions.
-    val withSigPlan = df
+    // withSig feeds THREE plan branches (both band-join sides + the
+    // shingle-set verify) and its signature pass costs numHashes md5
+    // calls per shingle — cache it once
+    val withSig = m.cache(df
       .select(col(idCol).as("id"),
         array_distinct(shingles(col(textCol), shingleSize)).as("__set"))
       .filter(size(col("__set")) > 0)
-      .select(col("id") +: col("__set") +: sigCols: _*)
-    val withSig = if (materialize) withSigPlan.persist() else withSigPlan
+      .select(col("id") +: col("__set") +: sigCols: _*))
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         concat_ws(",", (0 until r).map(j => col(s"__sig${b * r + j}")): _*)
@@ -217,7 +206,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, 1.0).otherwise(inter / uni))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 9).as("jaccard"))
-    releasingPairs(result, materialize)(withSig.unpersist())
+    m.keep(m.pin(result))
   }
 
   /** ENGINE-REPLAYABLE near-dup LEDGER — the md5 tier of
@@ -330,20 +319,6 @@ object Dedup {
       .dropDuplicates("id1", "id2")
   }
 
-  /** Materialize the (small) pairs result eagerly, then `release` the
-    * corpus-sized frames the call persisted — otherwise repeated pipeline
-    * invocations in one session accumulate cached frames indefinitely.
-    * materialize=false returns the fully lazy plan (plan audits, or callers
-    * that manage the cache themselves); such calls persist nothing. */
-  private def releasingPairs(result: DataFrame, materialize: Boolean)
-                            (release: => Unit): DataFrame =
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      release
-      out
-    }
-
   /** MinHash+LSH near-duplicate PAIRS.
     *
     * Pipeline: shingle → k minhashes → split signature into `bands` bands
@@ -359,8 +334,8 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
                    shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 16,
-                   jaccardThreshold: Double = 0.8, maxBucket: Int = 1000,
-                   materialize: Boolean = true): DataFrame = {
+                   jaccardThreshold: Double = 0.8, maxBucket: Int = 1000): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(numHashes % bands == 0, "bands must divide numHashes")
 
     // Signature via explode + k codegen'd min-aggregates: each shingle is
@@ -378,15 +353,11 @@ object Dedup {
     // a native codegen'd kernel produces distinct shingle hashes -> k-min
     // signature -> band bucket keys, with zero shuffle before the band
     // join (higher-order-function folds would run interpreted and ~10x
-    // slower; see graft.functions.TextHash). Persisted because the verify
+    // slower; see graft.functions.TextHash). Cached because the verify
     // step re-joins the shingle sets (at warehouse scale this is the
-    // materialized index table you would write out once and reuse);
-    // materialize=false caches nothing, so it has nothing to release.
-    val withShPlan = df.select(col(idCol).as("id"),
-      C(ShingleHashExpr(E(col(textCol)), shingleSize)).as("shh"))
-    val withSh =
-      if (materialize) withShPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else withShPlan
+    // materialized index table you would write out once and reuse).
+    val withSh = m.cache(df.select(col(idCol).as("id"),
+      C(ShingleHashExpr(E(col(textCol)), shingleSize)).as("shh")))
 
     val withSig = withSh.select(col("id"),
       C(MinHashSigExpr(E(col("shh")), numHashes)).as("sig"))
@@ -409,7 +380,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, 1.0).otherwise(inter / uni))
       .filter(col("jaccard") >= jaccardThreshold)
       .select("id1", "id2", "jaccard")
-    releasingPairs(result, materialize)(withSh.unpersist())
+    m.keep(m.pin(result))
   }
 
   /** Exact n-gram Jaccard similarity of two shingle arrays. */
@@ -492,9 +463,8 @@ object Dedup {
     * survivors — intersections run once per candidate, not per token
     * collision, because candidates are deduped first. */
   def prefixJaccardJoin(df: DataFrame, textCol: String, idCol: String,
-                        threshold: Double = 0.6,
-                        materialize: Boolean = true): DataFrame =
-    prefixJaccardCore(df, textCol, idCol, threshold, materialize, None)
+                        threshold: Double = 0.6): DataFrame =
+    prefixJaccardCore(df, textCol, idCol, threshold, None)
       .select(col("id1"), col("id2"), col("jaccard"))
 
   /** Shared engine of [[prefixJaccardJoin]] / [[prefixJaccardScreen]].
@@ -519,12 +489,13 @@ object Dedup {
     * `size(array_intersect)`'s per-pair hash set over strings. Which
     * PHYSICAL id a token gets may vary run to run (range boundaries,
     * AQE); only its ORDER and IDENTITY matter, and both are pinned for
-    * the query's lifetime — the vocab map is eagerly localCheckpointed
-    * (materialize=true) so every plan branch reads the ONE assignment
-    * and a recompute can never silently produce a different one. */
+    * the query's lifetime — the vocab map is pinned eagerly so every plan
+    * branch reads the ONE assignment and a recompute can never silently
+    * produce a different one. */
   private def prefixJaccardCore(df: DataFrame, textCol: String, idCol: String,
-                                threshold: Double, materialize: Boolean,
-                                sideCol: Option[String]): DataFrame = {
+                                threshold: Double,
+                                sideCol: Option[String]): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val sideSel = sideCol.map(c => col(s"`$c`").as("__sd")).toSeq
     val toks = df.select(col(idCol).as("id") +:
@@ -536,31 +507,25 @@ object Dedup {
     // bijective long token ids in the canonical rare-first order (ties on
     // frequency break deterministically on the token itself).
     // monotonically_increasing_id over a range sort is only stable WITHIN
-    // one evaluation, so the assignment is PINNED with an eager
-    // localCheckpoint: every downstream plan branch (both prefix sides,
-    // both verify sides) reads the one checkpointed map, and a lost
-    // executor fails the query loudly instead of silently recomputing a
-    // DIFFERENT assignment mid-query (ADVICE r14: a persist()-only vocab
-    // could be evicted and re-sampled inconsistently). materialize=false
-    // (plan audits only) keeps the fully lazy plan — ids there are NOT
-    // guaranteed branch-consistent; audit the SHAPE, never the values.
-    val vocabPlan = freq.sort(col("__df"), col("__tok"))
-      .select(col("__tok"), monotonically_increasing_id().as("__tid"))
-    val vocab = if (materialize) vocabPlan.localCheckpoint(true) else vocabPlan
+    // one evaluation, so the assignment is PINNED eagerly: every
+    // downstream plan branch (both prefix sides, both verify sides) reads
+    // the one checkpointed map, and a lost executor fails the query loudly
+    // instead of silently recomputing a DIFFERENT assignment mid-query
+    // (ADVICE r14: a cache-only vocab could be evicted and re-sampled
+    // inconsistently).
+    val vocab = m.pin(freq.sort(col("__df"), col("__tok"))
+      .select(col("__tok"), monotonically_increasing_id().as("__tid")))
     val ordered = exploded.join(vocab, "__tok")
       .groupBy("id")
       .agg(sort_array(collect_list(col("__tid"))).as("__ord"))
-    val sizedPlan = ordered
-      .withColumn("__n", size(col("__ord")))
-      .withColumn("__p",
-        col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int") + 1)
     // the ordered-token-set frame feeds FOUR plan branches (both prefix
     // sides, both verify sides): cache it once instead of re-tokenizing
-    // the corpus 4x; the small pair result is then checkpointed eagerly
-    // so the corpus-sized cache can be released before returning (the
-    // [[minhashPairs]] materialize discipline). materialize=false keeps
-    // the lazy plan for audits / callers managing their own cache.
-    val sized0 = if (materialize) sizedPlan.persist() else sizedPlan
+    // the corpus 4x; the small pair result is pinned, so the corpus-sized
+    // cache is released before returning
+    val sized0 = m.cache(ordered
+      .withColumn("__n", size(col("__ord")))
+      .withColumn("__p",
+        col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int") + 1))
     // re-attach the side tag (the freq/ordered pipeline drops it)
     val sized = sideCol match {
       case None => sized0
@@ -602,12 +567,10 @@ object Dedup {
     // volume, orders of magnitude above its input): repartitioning the
     // probe side by id first spreads that explosion over the executors.
     // r15 adjudication of the r14 evidence gap (VERDICT r14 item 2): in
-    // the LAZY (materialize=false) plan-dump form this exchange is ELIDED
-    // by EnsureRequirements as alias-semantically equal to the
-    // groupBy("id") child partitioning — which is why no
-    // REPARTITION_BY_NUM appears in the committed interior dumps. In the
-    // PRODUCTION path (sized0 persisted, AQE on) it is live, and on the
-    // screen it is worth ~1.5x, measured at sf0.1 with interleaved
+    // a lazy plan without the sized0 cache this exchange is ELIDED by
+    // EnsureRequirements as alias-semantically equal to the groupBy("id")
+    // child partitioning. Above the cached sized0 subtree (AQE on) it is
+    // live, and on the screen it is worth ~1.5x, measured at sf0.1 with interleaved
     // bracketing runs: q_dedup_ppjoin_screen 5.0-7.4 s WITH the by-id
     // repartition (measured before and after the variants), 9.4-10.1 s
     // with it removed, 9.8-10.8 s with a finer (id1, __pos1) keying —
@@ -635,7 +598,7 @@ object Dedup {
       .withColumn("jaccard", when(uni === 0.0, lit(1.0)).otherwise(inter / uni))
       .filter(col("jaccard") >= threshold)
       .select(outCols: _*)
-    releasingPairs(result, materialize)(sized0.unpersist()) // vocab checkpoint blocks are GC-reclaimed
+    m.keep(m.pin(result))
   }
 
   /** Probe-vs-corpus form of [[prefixJaccardJoin]] — the EXACT near-dup
@@ -653,12 +616,10 @@ object Dedup {
     * Output: (probe_id, corpus_id, jaccard). */
   def prefixJaccardScreen(corpus: DataFrame, probes: DataFrame,
                           textCol: String, idCol: String,
-                          threshold: Double = 0.6,
-                          materialize: Boolean = true): DataFrame = {
+                          threshold: Double = 0.6): DataFrame = {
     val tagged = corpus.select(col(idCol), col(textCol), lit(0).as("__side"))
       .unionByName(probes.select(col(idCol), col(textCol), lit(1).as("__side")))
-    prefixJaccardCore(tagged, textCol, idCol, threshold, materialize,
-      Some("__side"))
+    prefixJaccardCore(tagged, textCol, idCol, threshold, Some("__side"))
       .select(
         when(col("__sd1") === 1, col("id1")).otherwise(col("id2")).as("probe_id"),
         when(col("__sd1") === 1, col("id2")).otherwise(col("id1")).as("corpus_id"),
@@ -680,8 +641,8 @@ object Dedup {
     * product. No length filter applies (B may be arbitrarily large).
     * Self-pairs are excluded; both orientations of a pair can emit. */
   def containmentJoin(df: DataFrame, textCol: String, idCol: String,
-                      threshold: Double = 0.8,
-                      materialize: Boolean = true): DataFrame = {
+                      threshold: Double = 0.8): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val toks = df.select(col(idCol).as("id"),
         array_distinct(filter(split(trim(lower(col(textCol))), "\\s+"),
@@ -691,19 +652,17 @@ object Dedup {
     val freq = exploded.groupBy("__tok").agg(count(lit(1)).as("__df"))
     // bijective long token ids in canonical rare-first order — same
     // representation (and exactness + id-pinning argument) as
-    // [[prefixJaccardCore]]: the assignment is eagerly checkpointed so
-    // every plan branch reads ONE map and cache loss can never reassign
-    val vocabPlan = freq.sort(col("__df"), col("__tok"))
-      .select(col("__tok"), monotonically_increasing_id().as("__tid"))
-    val vocab = if (materialize) vocabPlan.localCheckpoint(true) else vocabPlan
+    // [[prefixJaccardCore]]: the assignment is pinned eagerly so every
+    // plan branch reads ONE map and cache loss can never reassign
+    val vocab = m.pin(freq.sort(col("__df"), col("__tok"))
+      .select(col("__tok"), monotonically_increasing_id().as("__tid")))
     val ordered = exploded.join(vocab, "__tok")
       .groupBy("id")
       .agg(sort_array(collect_list(col("__tid"))).as("__ord"))
-    val sizedPlan = ordered
+    val sized = m.cache(ordered
       .withColumn("__n", size(col("__ord")))
       .withColumn("__p",
-        col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int") + 1)
-    val sized = if (materialize) sizedPlan.persist() else sizedPlan
+        col("__n") - ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int") + 1))
     // positional filter, containment form: C ≥ t ⟹ o ≥ t·|A|, and at the
     // pair's earliest common token (0-based positions iA/iB) the overlap
     // is ≤ 1 + min(nA-1-iA, nB-1-iB) — the earliest common token is
@@ -719,9 +678,8 @@ object Dedup {
         col("__nb") - lit(1) - col("__pb"))).cast("double") >=
       lit(threshold) * col("__na").cast("double") - lit(1e-9)
     // by-id explosion-spreading repartition, same shape (and same r15
-    // elision adjudication) as prefixJaccardCore's candidate join: elided
-    // in the lazy dump form, live above the persisted subtree in
-    // production; all three variants (by-id, by (id, pos), removed)
+    // elision adjudication) as prefixJaccardCore's candidate join: live
+    // above the cached subtree; all three variants (by-id, by (id, pos), removed)
     // measured within noise on q_containment at sf0.1
     val fanout = df.sparkSession.sparkContext.defaultParallelism
     val cand = prefA.repartition(fanout, col("id_a"))
@@ -741,7 +699,7 @@ object Dedup {
       .withColumn("containment", inter / size(col("__sa")).cast("double"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
-    releasingPairs(result, materialize)(sized.unpersist()) // vocab checkpoint blocks are GC-reclaimed
+    m.keep(m.pin(result))
   }
 
   /** Truncation-duplicate CLEANUP over [[containmentJoin]]: drop every
@@ -897,7 +855,8 @@ object Dedup {
   def embeddingPairs(df: DataFrame, vecCol: String, idCol: String,
                      cosineThreshold: Double = 0.9, nBits: Int = 32,
                      bands: Int = 4, dim: Int = -1, seed: Long = 42L,
-                     maxBucket: Int = 1000, materialize: Boolean = true): DataFrame = {
+                     maxBucket: Int = 1000): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(nBits % bands == 0, "bands must divide nBits")
     val rows = nBits / bands
     // sketches are packed into 64-bit words; a band must sit inside one
@@ -911,11 +870,8 @@ object Dedup {
       if (dim > 0) dim
       else df.select(size(col(vecCol))).head().getInt(0)
 
-    val skPlan = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      Similarity.sketch(col(vecCol), Similarity.hyperplanes(theDim, nBits, seed)).as("sk"))
-    val sk =
-      if (materialize) skPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else skPlan
+    val sk = m.cache(df.select(col(idCol).as("id"), col(vecCol).as("vec"),
+      Similarity.sketch(col(vecCol), Similarity.hyperplanes(theDim, nBits, seed)).as("sk")))
 
     val banded = sk.select(col("id"),
       explode(array((0 until bands).map { b =>
@@ -934,7 +890,7 @@ object Dedup {
       .withColumn("cosine", Similarity.cosine(col("v1"), col("v2")))
       .filter(col("cosine") >= cosineThreshold)
       .select("id1", "id2", "cosine")
-    releasingPairs(result, materialize)(sk.unpersist())
+    m.keep(m.pin(result))
   }
 
   /** Connected components over an undirected edge list — the cluster-
@@ -949,7 +905,7 @@ object Dedup {
     * rounds, each round pure join + min-aggregate. Scale shape: no
     * per-node adjacency lists are ever collected (the usual OOM in naive
     * CC), the per-round state is one (u,v) edge table with 16-byte rows,
-    * and lineage is truncated every round with an eager localCheckpoint so
+    * and lineage is cut every round with an eager [[Materialize.pin]] so
     * the plan does not grow with iteration count. Skewed high-degree nodes
     * cost one hot reduce key in the min-aggregate (partial aggregation
     * absorbs it map-side), not a hot join bucket.
@@ -958,7 +914,8 @@ object Dedup {
     * `cluster` is the minimum node id of the component.
     */
   def connectedComponents(pairs: DataFrame, idCol1: String = "id1",
-                          idCol2: String = "id2", maxIter: Int = 30): DataFrame = {
+                          idCol2: String = "id2", maxIter: Int = 30): DataFrame =
+    Materialize(pairs.sparkSession) { m =>
     // ids may be integral (cast to long for a uniform 8-byte shuffle key)
     // or strings (UUIDs/URLs/content hashes — kept as-is, cluster = the
     // lexicographic minimum). Anything else fails loudly HERE: a blind
@@ -990,19 +947,10 @@ object Dedup {
     val nodes = raw.select(col("a").as("id"))
       .unionAll(raw.select(col("b").as("id"))).distinct()
 
-    // per-round lineage cut — MANDATORY (the iterated plan would grow
-    // exponentially) — but which kind is a deployment property: with a
-    // checkpoint dir configured (cluster runs) use the RELIABLE
-    // checkpoint, because a lost executor invalidates localCheckpoint
-    // blocks and kills the whole multi-hour job; without one (local
-    // sessions, tests) localCheckpoint avoids pointless disk round-trips
-    def cut(d: DataFrame): DataFrame =
-      if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint(true)
-      else d.localCheckpoint(true)
-
-    // canonical direction: u (larger) -> v (smaller); invariant held by
-    // both star operations below
-    var e = cut(raw.select(greatest(col("a"), col("b")).as("u"),
+    // per-round lineage cut (pin) — MANDATORY: the iterated plan would
+    // grow exponentially. Canonical direction: u (larger) -> v (smaller);
+    // invariant held by both star operations below
+    var e = m.pin(raw.select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       .distinct())
 
@@ -1046,8 +994,8 @@ object Dedup {
         .unionAll(mins2.select(col("u"), col("m").as("v")))
         .distinct()
       val prevE = e
-      e = cut(small)
-      prevE.unpersist()
+      e = m.pin(small)
+      m.drop(prevE)
       val cur = checksum(e)
       converged = cur == prev
       prev = cur
@@ -1055,12 +1003,10 @@ object Dedup {
     }
     // fixpoint: e is a star forest (child -> componentMin); roots and
     // isolated nodes label themselves
-    val out = cut(nodes
+    m.keep(m.pin(nodes
       .join(e.select(col("u").as("id"), col("v").as("cluster")).hint("SHUFFLE_HASH"),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster")))
-    e.unpersist()
-    out
+      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))))
   }
 
   /** Keep one representative (the minimum id) per duplicate cluster:
@@ -1403,22 +1349,17 @@ object Dedup {
     * `sigd` must have columns (id, sig). Two signatures within Hamming
     * distance <= 3 share at least one identical 16-bit quarter, so only
     * quarter-block collisions ever meet. */
-  def signaturePairs(sigd: DataFrame, maxHamming: Int = 3,
-                     materialize: Boolean = true): DataFrame = {
+  def signaturePairs(sigd: DataFrame, maxHamming: Int = 3): DataFrame =
+    Materialize(sigd.sparkSession) { m =>
     // 4 quarters pigeonhole Hamming <= 3 ONLY: at distance 4 one flipped
     // bit per quarter defeats the blocking and pairs silently vanish —
     // reject rather than return an incomplete pair set
     require(maxHamming >= 0 && maxHamming <= 3,
       s"16-bit-quarter blocking is complete only for maxHamming <= 3, got $maxHamming")
-    // materialize discipline (r14): the signature table feeds BOTH sides
-    // of the quarter-block self-join — computed signatures (md5-tier
-    // aggregations, image dhashes, ...) would otherwise run twice.
-    // Checkpoint the small pair result eagerly, release the cache —
-    // unless the CALLER already persisted sigd, in which case its cache
-    // is theirs to manage and must survive this call (ADVICE r14).
-    val sigOwned = materialize && sigd.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
-    val sigP = if (sigOwned) sigd.persist() else sigd
+    // the signature table feeds BOTH sides of the quarter-block self-join
+    // — computed signatures (md5-tier aggregations, image dhashes, ...)
+    // would otherwise run twice. A caller-persisted sigd keeps its cache.
+    val sigP = m.cache(sigd)
     val blocked = sigP.select(col("id"), col("sig"),
       explode(array((0 until 4).map { q =>
         struct(lit(q).as("q"),
@@ -1431,7 +1372,7 @@ object Dedup {
       .select(col("id1"), col("id2"), hamming(col("sig1"), col("sig2")).as("hamming"))
       .dropDuplicates("id1", "id2")
       .filter(col("hamming") <= maxHamming)
-    releasingPairs(result, materialize)(if (sigOwned) sigP.unpersist())
+    m.keep(m.pin(result))
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the

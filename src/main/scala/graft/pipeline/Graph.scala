@@ -19,18 +19,19 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Scale shape (100 TB of edges): each round is ONE join of the edge
   * table with the node-rank table keyed on source (the edge table is
-  * repartitioned by source once, up front, and localCheckpointed — the
-  * per-round join reuses that exchange), one map-side-combined decimal
-  * sum keyed on destination, a 1-row dangling aggregate broadcast into
-  * the same job, and a left join back to the node set. The driver holds
-  * no per-node state and issues ONE action per round. Note on round cleanup: `Dataset.unpersist` on a
-  * localCheckpoint'ed frame is best-effort — checkpoint blocks are
-  * actually reclaimed by the ContextCleaner once the previous round's
-  * Dataset is unreferenced (which the `pr = next` rebind guarantees), so
-  * storage frees lazily with GC rather than synchronously; on a
-  * long-lived driver budget roughly one extra round of node-table blocks. Hub destinations skew the dst-sum shuffle — AQE skew handling
-  * or [[graft.operators.WarpOps.saltedJoin]]-style salting applies; the
+  * repartitioned by source once, up front, and pinned — the per-round
+  * join reuses that exchange), one map-side-combined decimal sum keyed on
+  * destination, a 1-row dangling aggregate broadcast into the same job,
+  * and a left join back to the node set. The driver holds no per-node
+  * state and issues ONE action per round. Hub destinations skew the
+  * dst-sum shuffle — AQE skew handling or
+  * [[graft.operators.WarpOps.saltedJoin]]-style salting applies; the
   * decimal sum is associative so salted partial sums stay exact.
+  *
+  * Every loop runs in one [[Materialize]] scope: each round pins its
+  * table and releases the previous round's checkpoint blocks at once; on
+  * exit the edge, node and degree checkpoints are released too, and only
+  * the final round — which the returned frame reads — is kept.
   */
 object Graph {
 
@@ -56,72 +57,67 @@ object Graph {
     * combine already handles moderate skew. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
-               out: String = "pagerank", dstSalt: Int = 1): DataFrame = {
-    // iters >= 1: the result must be a materialized checkpoint of its own
-    // before the finally-block unpersists the edge/node checkpoints it
-    // derives from (recomputing an unpersisted LOCAL checkpoint fails)
+               out: String = "pagerank", dstSalt: Int = 1): DataFrame =
+    Materialize(edges.sparkSession) { m =>
+    // iters >= 1: the result must read a pinned round of its own, not the
+    // edge/node checkpoints the scope releases on exit
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(dstSalt >= 1, s"dstSalt must be >= 1, got $dstSalt")
-    val e = edges.select(col(srcCol).cast("string").as("__src"),
+    val e = m.pin(edges.select(col(srcCol).cast("string").as("__src"),
         col(dstCol).cast("string").as("__dst"))
-      .repartition(col("__src"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("__src").as("__n"))
-      .union(e.select(col("__dst"))).distinct().localCheckpoint(true)
-    // out-degree is loop-invariant: materialize it once instead of
-    // re-aggregating the edge table inside every round's checkpoint job
-    val deg = e.groupBy("__src").agg(count(lit(1)).as("__deg"))
-      .localCheckpoint(true)
-    try {
-      val n = nodes.count()
-      require(n > 0, "cannot rank an empty graph")
-      var pr = nodes.withColumn("__pr", lit(1.0 / n))
-      // SHUFFLE_HASH hints (r14, guide §3.1): every per-round join input
-      // here is a localCheckpoint scan, which carries NO size statistics —
-      // the planner can never auto-broadcast and falls back to sort-merge,
-      // re-SORTING the edge table (the big side) every round. Hinting the
-      // node-sized build side picks the shuffled-hash join: same result
-      // set (and the DECIMAL contribution sum is aggregation-order-exact),
-      // no per-round sort of the edges. Scale-safe: the build side is one
-      // partition's slice of the node-rank table, the standard SHJ shape.
-      for (_ <- 1 to iters) {
-        val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
-            pr("__n") === deg("__src"), "left")
-          .select(col("__n"), col("__pr"), col("__deg"))
-        // dangling mass: exact decimal sum -> ONE broadcast row riding the
-        // same job as the rank projection (no separate driver action)
-        val dang = withDeg.filter(col("__deg").isNull)
-          .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
-        val quant = e.join(
-            withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
-            col("__src") === col("__n"))
-          .select(col("__dst"), col("__src"),
-            (col("__pr") / col("__deg").cast("double"))
-              .cast(DecimalType(30, 15)).as("__c"))
-        val contrib =
-          if (dstSalt <= 1)
-            quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
-          else // salted two-phase: exact (decimal sum is associative)
-            quant
-              .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-              .agg(sum(col("__c")).as("__part"))
-              .groupBy("__dst").agg(sum(col("__part")).as("__in"))
-        val base = (1.0 - damping) / n.toDouble
-        val next = nodes.join(contrib.hint("SHUFFLE_HASH"),
-            nodes("__n") === contrib("__dst"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("__n"),
-            (lit(base) +
-              lit(damping) * coalesce(col("__in").cast("double"), lit(0.0)) +
-              lit(damping) * coalesce(col("__dang").cast("double"), lit(0.0))
-                / lit(n.toDouble)).as("__pr"))
-          .localCheckpoint(true) // eager: safe to drop the previous round
-        pr.unpersist()
-        pr = next
-      }
-      pr.select(col("__n").as("node"), col("__pr").as(out))
-    } finally { e.unpersist(); nodes.unpersist(); deg.unpersist(); () }
+      .repartition(col("__src")))
+    val nodes = m.pin(e.select(col("__src").as("__n"))
+      .union(e.select(col("__dst"))).distinct())
+    // out-degree is loop-invariant: pin it once instead of re-aggregating
+    // the edge table inside every round's checkpoint job
+    val deg = m.pin(e.groupBy("__src").agg(count(lit(1)).as("__deg")))
+    val n = nodes.count()
+    require(n > 0, "cannot rank an empty graph")
+    var pr = nodes.withColumn("__pr", lit(1.0 / n))
+    // SHUFFLE_HASH hints (r14, guide §3.1): every per-round join input
+    // here is a checkpoint scan, which carries NO size statistics —
+    // the planner can never auto-broadcast and falls back to sort-merge,
+    // re-SORTING the edge table (the big side) every round. Hinting the
+    // node-sized build side picks the shuffled-hash join: same result
+    // set (and the DECIMAL contribution sum is aggregation-order-exact),
+    // no per-round sort of the edges. Scale-safe: the build side is one
+    // partition's slice of the node-rank table, the standard SHJ shape.
+    for (_ <- 1 to iters) {
+      val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
+          pr("__n") === deg("__src"), "left")
+        .select(col("__n"), col("__pr"), col("__deg"))
+      // dangling mass: exact decimal sum -> ONE broadcast row riding the
+      // same job as the rank projection (no separate driver action)
+      val dang = withDeg.filter(col("__deg").isNull)
+        .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
+      val quant = e.join(
+          withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
+          col("__src") === col("__n"))
+        .select(col("__dst"), col("__src"),
+          (col("__pr") / col("__deg").cast("double"))
+            .cast(DecimalType(30, 15)).as("__c"))
+      val contrib =
+        if (dstSalt <= 1)
+          quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
+        else // salted two-phase: exact (decimal sum is associative)
+          quant
+            .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
+            .agg(sum(col("__c")).as("__part"))
+            .groupBy("__dst").agg(sum(col("__part")).as("__in"))
+      val base = (1.0 - damping) / n.toDouble
+      val next = m.pin(nodes.join(contrib.hint("SHUFFLE_HASH"),
+          nodes("__n") === contrib("__dst"), "left")
+        .crossJoin(broadcast(dang))
+        .select(col("__n"),
+          (lit(base) +
+            lit(damping) * coalesce(col("__in").cast("double"), lit(0.0)) +
+            lit(damping) * coalesce(col("__dang").cast("double"), lit(0.0))
+              / lit(n.toDouble)).as("__pr")))
+      m.drop(pr) // eager pin: safe to drop the previous round
+      pr = next
+    }
+    m.keep(pr).select(col("__n").as("node"), col("__pr").as(out))
   }
 
   /** PERSONALIZED PageRank: random-walk-with-restart importance relative
@@ -143,68 +139,60 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int = 3, damping: Double = 0.85,
-                           out: String = "ppr", dstSalt: Int = 1): DataFrame = {
+                           out: String = "ppr", dstSalt: Int = 1): DataFrame =
+    Materialize(edges.sparkSession) { m =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(dstSalt >= 1, s"dstSalt must be >= 1, got $dstSalt")
-    val e = edges.select(col(srcCol).cast("string").as("__src"),
+    val e = m.pin(edges.select(col(srcCol).cast("string").as("__src"),
         col(dstCol).cast("string").as("__dst"))
-      .repartition(col("__src"))
-      .localCheckpoint(true)
-    val sd = seeds.select(col(seedCol).cast("string").as("__s")).distinct()
-      .localCheckpoint(true)
-    val nodes = e.select(col("__src").as("__n"))
+      .repartition(col("__src")))
+    val sd = m.pin(seeds.select(col(seedCol).cast("string").as("__s")).distinct())
+    val nodes = m.pin(e.select(col("__src").as("__n"))
       .union(e.select(col("__dst")))
       .union(sd.select(col("__s")))
-      .distinct().localCheckpoint(true)
-    val deg = e.groupBy("__src").agg(count(lit(1)).as("__deg"))
-      .localCheckpoint(true)
-    try {
-      val k = sd.count()
-      require(k > 0, "personalized pagerank needs at least one seed")
-      val tele = nodes.join(sd, nodes("__n") === sd("__s"), "left")
+      .distinct())
+    val deg = m.pin(e.groupBy("__src").agg(count(lit(1)).as("__deg")))
+    val k = sd.count()
+    require(k > 0, "personalized pagerank needs at least one seed")
+    val tele = m.pin(nodes.join(sd, nodes("__n") === sd("__s"), "left")
+      .select(col("__n"),
+        when(col("__s").isNotNull, lit(1.0 / k)).otherwise(lit(0.0)).as("__t")))
+    var pr = tele.select(col("__n"), col("__t").as("__pr"))
+    // SHUFFLE_HASH hints: same rationale as [[pageRank]] — checkpoint
+    // scans have no stats, SMJ would re-sort the edge table per round
+    for (_ <- 1 to iters) {
+      val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
+          pr("__n") === deg("__src"), "left")
+        .select(col("__n"), col("__pr"), col("__deg"))
+      val dang = withDeg.filter(col("__deg").isNull)
+        .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
+      val quant = e.join(
+          withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
+          col("__src") === col("__n"))
+        .select(col("__dst"), col("__src"),
+          (col("__pr") / col("__deg").cast("double"))
+            .cast(DecimalType(30, 15)).as("__c"))
+      val contrib =
+        if (dstSalt <= 1)
+          quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
+        else
+          quant
+            .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
+            .agg(sum(col("__c")).as("__part"))
+            .groupBy("__dst").agg(sum(col("__part")).as("__in"))
+      val next = m.pin(tele.join(contrib.hint("SHUFFLE_HASH"),
+          tele("__n") === contrib("__dst"), "left")
+        .crossJoin(broadcast(dang))
         .select(col("__n"),
-          when(col("__s").isNotNull, lit(1.0 / k)).otherwise(lit(0.0)).as("__t"))
-        .localCheckpoint(true)
-      try {
-        var pr = tele.select(col("__n"), col("__t").as("__pr"))
-        // SHUFFLE_HASH hints: same rationale as [[pageRank]] — checkpoint
-        // scans have no stats, SMJ would re-sort the edge table per round
-        for (_ <- 1 to iters) {
-          val withDeg = pr.join(deg.hint("SHUFFLE_HASH"),
-              pr("__n") === deg("__src"), "left")
-            .select(col("__n"), col("__pr"), col("__deg"))
-          val dang = withDeg.filter(col("__deg").isNull)
-            .agg(sum(col("__pr").cast(DecimalType(30, 15))).as("__dang"))
-          val quant = e.join(
-              withDeg.filter(col("__deg").isNotNull).hint("SHUFFLE_HASH"),
-              col("__src") === col("__n"))
-            .select(col("__dst"), col("__src"),
-              (col("__pr") / col("__deg").cast("double"))
-                .cast(DecimalType(30, 15)).as("__c"))
-          val contrib =
-            if (dstSalt <= 1)
-              quant.groupBy("__dst").agg(sum(col("__c")).as("__in"))
-            else
-              quant
-                .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-                .agg(sum(col("__c")).as("__part"))
-                .groupBy("__dst").agg(sum(col("__part")).as("__in"))
-          val next = tele.join(contrib.hint("SHUFFLE_HASH"),
-              tele("__n") === contrib("__dst"), "left")
-            .crossJoin(broadcast(dang))
-            .select(col("__n"),
-              (lit(1.0 - damping) * col("__t") +
-                lit(damping) * coalesce(col("__in").cast("double"), lit(0.0)) +
-                lit(damping) * coalesce(col("__dang").cast("double"), lit(0.0))
-                  * col("__t")).as("__pr"))
-            .localCheckpoint(true)
-          pr.unpersist()
-          pr = next
-        }
-        pr.select(col("__n").as("node"), col("__pr").as(out))
-      } finally { tele.unpersist(); () }
-    } finally { e.unpersist(); sd.unpersist(); nodes.unpersist(); deg.unpersist(); () }
+          (lit(1.0 - damping) * col("__t") +
+            lit(damping) * coalesce(col("__in").cast("double"), lit(0.0)) +
+            lit(damping) * coalesce(col("__dang").cast("double"), lit(0.0))
+              * col("__t")).as("__pr")))
+      m.drop(pr)
+      pr = next
+    }
+    m.keep(pr).select(col("__n").as("node"), col("__pr").as(out))
   }
 
   /** Semi-supervised label propagation (Zhu–Ghahramani with clamped
@@ -231,50 +219,46 @@ object Graph {
                        srcCol: String, dstCol: String,
                        seedIdCol: String, seedLabelCol: String,
                        iters: Int = 2, prior: Double = 0.5,
-                       out: String = "score", dstSalt: Int = 1): DataFrame = {
+                       out: String = "score", dstSalt: Int = 1): DataFrame =
+    Materialize(edges.sparkSession) { m =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dstSalt >= 1, s"dstSalt must be >= 1, got $dstSalt")
-    val e = edges.select(col(srcCol).cast("string").as("__src"),
+    val e = m.pin(edges.select(col(srcCol).cast("string").as("__src"),
         col(dstCol).cast("string").as("__dst"))
-      .repartition(col("__src"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("__src").as("__n"))
-      .union(e.select(col("__dst"))).distinct().localCheckpoint(true)
-    try {
-      val sd = seeds.select(col(seedIdCol).cast("string").as("__n"),
-        col(seedLabelCol).cast("double").as("__seed"))
-      var sc = nodes.join(sd, Seq("__n"), "left")
+      .repartition(col("__src")))
+    val nodes = m.pin(e.select(col("__src").as("__n"))
+      .union(e.select(col("__dst"))).distinct())
+    val sd = seeds.select(col(seedIdCol).cast("string").as("__n"),
+      col(seedLabelCol).cast("double").as("__seed"))
+    var sc = m.pin(nodes.join(sd, Seq("__n"), "left")
+      .select(col("__n"), col("__seed"),
+        coalesce(col("__seed"), lit(prior)).as("__s")))
+    // SHUFFLE_HASH hints: same rationale as [[pageRank]]
+    for (_ <- 1 to iters) {
+      val quant = e.join(sc.hint("SHUFFLE_HASH"), col("__src") === col("__n"))
+        .select(col("__dst"), col("__src"),
+          col("__s").cast(DecimalType(30, 15)).as("__c"))
+      val in =
+        if (dstSalt <= 1)
+          quant.groupBy("__dst")
+            .agg(sum(col("__c")).as("__sum"), count(lit(1)).as("__cnt"))
+        else // salted two-phase: exact (sum and count are associative)
+          quant
+            .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
+            .agg(sum(col("__c")).as("__ps"), count(lit(1)).as("__pc"))
+            .groupBy("__dst")
+            .agg(sum(col("__ps")).as("__sum"), sum(col("__pc")).as("__cnt"))
+      val next = m.pin(sc.join(in.hint("SHUFFLE_HASH"), sc("__n") === in("__dst"), "left")
         .select(col("__n"), col("__seed"),
-          coalesce(col("__seed"), lit(prior)).as("__s"))
-        .localCheckpoint(true)
-      // SHUFFLE_HASH hints: same rationale as [[pageRank]]
-      for (_ <- 1 to iters) {
-        val quant = e.join(sc.hint("SHUFFLE_HASH"), col("__src") === col("__n"))
-          .select(col("__dst"), col("__src"),
-            col("__s").cast(DecimalType(30, 15)).as("__c"))
-        val in =
-          if (dstSalt <= 1)
-            quant.groupBy("__dst")
-              .agg(sum(col("__c")).as("__sum"), count(lit(1)).as("__cnt"))
-          else // salted two-phase: exact (sum and count are associative)
-            quant
-              .groupBy(col("__dst"), pmod(xxhash64(col("__src")), lit(dstSalt)))
-              .agg(sum(col("__c")).as("__ps"), count(lit(1)).as("__pc"))
-              .groupBy("__dst")
-              .agg(sum(col("__ps")).as("__sum"), sum(col("__pc")).as("__cnt"))
-        val next = sc.join(in.hint("SHUFFLE_HASH"), sc("__n") === in("__dst"), "left")
-          .select(col("__n"), col("__seed"),
-            when(col("__seed").isNotNull, col("__seed"))
-              .when(col("__cnt").isNotNull,
-                col("__sum").cast("double") / col("__cnt").cast("double"))
-              .otherwise(col("__s")).as("__s"))
-          .localCheckpoint(true)
-        sc.unpersist()
-        sc = next
-      }
-      sc.select(col("__n").as("node"), col("__seed").isNotNull.as("is_seed"),
-        col("__s").as(out))
-    } finally { e.unpersist(); nodes.unpersist(); () }
+          when(col("__seed").isNotNull, col("__seed"))
+            .when(col("__cnt").isNotNull,
+              col("__sum").cast("double") / col("__cnt").cast("double"))
+            .otherwise(col("__s")).as("__s")))
+      m.drop(sc)
+      sc = next
+    }
+    m.keep(sc).select(col("__n").as("node"), col("__seed").isNotNull.as("is_seed"),
+      col("__s").as(out))
   }
 
   /** k-CORE PEELING: iteratively remove nodes whose degree (in the
@@ -296,7 +280,8 @@ object Graph {
     * one eager checkpoint per round bounds the plan depth exactly like
     * [[pageRank]]'s rank table. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-                k: Int, rounds: Int): DataFrame = {
+                k: Int, rounds: Int): DataFrame =
+    Materialize(edges.sparkSession) { m =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val raw = edges.select(col(srcCol).cast("string").as("__a"),
@@ -306,9 +291,8 @@ object Graph {
     val und = raw.select(least(col("__a"), col("__b")).as("__u"),
         greatest(col("__a"), col("__b")).as("__v"))
       .distinct()
-    var e = und.select(col("__u").as("__s"), col("__v").as("__t"))
-      .union(und.select(col("__v"), col("__u")))
-      .localCheckpoint(true)
+    var e = m.pin(und.select(col("__u").as("__s"), col("__v").as("__t"))
+      .union(und.select(col("__v"), col("__u"))))
     for (_ <- 1 to rounds) {
       val keep = e.groupBy(col("__s").as("__n"))
         .agg(count(lit(1)).as("__d"))
@@ -317,19 +301,15 @@ object Graph {
       // SHUFFLE_HASH: checkpointed e has no stats (never broadcasts) and
       // SMJ would sort the edge table twice per round; the node-sized
       // keep set is the classic hash build side
-      val next = e
+      val next = m.pin(e
         .join(keep.select(col("__n").as("__s")).hint("SHUFFLE_HASH"), "__s")
         .join(keep.select(col("__n").as("__t")).hint("SHUFFLE_HASH"), "__t")
-        .select("__s", "__t")
-        .localCheckpoint(true)
-      e.unpersist()
+        .select("__s", "__t"))
+      m.drop(e)
       e = next
     }
-    val out = e.groupBy(col("__s").as("node"))
-      .agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-    e.unpersist()
-    out
+    m.keep(m.pin(e.groupBy(col("__s").as("node"))
+      .agg(count(lit(1)).as("degree"))))
   }
 
   /** Triangle counting with DEGREE-ORDERED edge orientation — the
@@ -350,8 +330,8 @@ object Graph {
     *
     * Returns one row per triangle as the canonically sorted node triple
     * (n1 < n2 < n3 as strings) — countable or joinable downstream. */
-  def triangles(edges: DataFrame, srcCol: String, dstCol: String,
-                materialize: Boolean = true): DataFrame = {
+  def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    Materialize(edges.sparkSession) { m =>
     val raw = edges.select(col(srcCol).cast("string").as("__a"),
         col(dstCol).cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull &&
@@ -367,18 +347,16 @@ object Graph {
     val withDeg = und
       .join(deg.select(col("__n").as("__u"), col("__d").as("__du")), "__u")
       .join(deg.select(col("__n").as("__v"), col("__d").as("__dv")), "__v")
-    val orientedPlan = withDeg.select(
+    // the oriented edge list feeds THREE plan branches (both wedge legs
+    // and the closing probe): cache it once instead of recomputing the
+    // canonicalize+degree+orient pipeline 3x; the pinned triangle result
+    // lets the edge-sized cache go before returning
+    val oriented = m.cache(withDeg.select(
       when(col("__du") < col("__dv") ||
            (col("__du") === col("__dv") && col("__u") < col("__v")),
         struct(col("__u").as("s"), col("__v").as("t")))
         .otherwise(struct(col("__v").as("s"), col("__u").as("t"))).as("__e"))
-      .select(col("__e.s").as("__s"), col("__e.t").as("__t"))
-    // the oriented edge list feeds THREE plan branches (both wedge legs
-    // and the closing probe): cache it once instead of recomputing the
-    // canonicalize+degree+orient pipeline 3x; the triangle result is
-    // checkpointed eagerly so the edge-sized cache releases before
-    // returning. materialize=false keeps the lazy plan for audits.
-    val oriented = if (materialize) orientedPlan.persist() else orientedPlan
+      .select(col("__e.s").as("__s"), col("__e.t").as("__t")))
     // wedges from a shared oriented source, closed by an oriented edge
     val w1 = oriented.select(col("__s").as("__apex"), col("__t").as("__b"))
     val w2 = oriented.select(col("__s").as("__apex"), col("__t").as("__c"))
@@ -390,11 +368,6 @@ object Graph {
       .select(array_sort(array(col("__apex"), col("__b"), col("__c"))).as("__tri"))
       .select(col("__tri")(0).as("n1"), col("__tri")(1).as("n2"),
         col("__tri")(2).as("n3"))
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true)
-      oriented.unpersist()
-      out
-    }
+    m.keep(m.pin(result))
   }
 }

@@ -24,6 +24,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object Preference {
 
+  /** Upper bound of [[contrastiveTriplets]]' automatic salt factor: skew
+    * relief saturates far below the width of a wide cluster, while the
+    * anchor-side replication grows with every salt value. */
+  val AutoSaltCap = 64
+
   /** (chosen, rejected) pairs per group with `score_chosen − score_rejected
     * >= margin`. Emits one row per surviving pair: the group columns,
     * chosen/rejected ids and scores, and the realized margin. */
@@ -134,12 +139,13 @@ object Preference {
     //     (anchor_id, __salt) spreads it (defaultParallelism:
     //     scale-adaptive, not a constant) — same move as
     //     Dedup.prefixJaccardCore's collision join (r14).
-    // saltFactor: 0 = derive from the cluster (defaultParallelism);
+    // saltFactor: 0 = derive from the cluster (defaultParallelism, capped
+    // at AutoSaltCap);
     // 1 = salting off (one salt value — the join key degenerates to __bk);
     // >1 = explicit. Output is salt-INVARIANT (pinned by spec): the salt
     // only re-keys the join, never changes which pairs meet.
     val fanout = df.sparkSession.sparkContext.defaultParallelism
-    val nSalt = if (saltFactor > 0) saltFactor else fanout
+    val nSalt = if (saltFactor > 0) saltFactor else math.min(fanout, AutoSaltCap)
     val cands = df.select(col(idCol).as("neg_id"))
       .withColumn("__bk", bucket(col("neg_id")))
       .withColumn("__salt", pmod(xxhash64(col("neg_id")), lit(nSalt.toLong)))

@@ -508,73 +508,67 @@ object Sampling {
     *
     * Scale shape (100 TB): each step is ONE map pass (a single dot kernel
     * against the new center, `least` with the running minimum) plus a
-    * TakeOrdered(1); the running minimum is localCheckpointed per step so
+    * TakeOrdered(1); the running minimum is pinned per step so
     * step cost stays O(1) kernels/row regardless of k. The driver holds k
     * centers. At corpus scale run the selection on a deterministic hash
     * sample ([[splitByHash]]) — greedy k-center saturates far below full
     * data — then the chosen ids index back into the corpus. */
   def kCenterGreedy(df: DataFrame, vecCol: String, idCol: String,
-                    k: Int): DataFrame = {
+                    k: Int): DataFrame =
+    Materialize(df.sparkSession) { m =>
     require(k > 0, s"k must be positive, got $k")
     val spark = df.sparkSession
     def c2of(c: Array[Double]): Double = c.foldLeft(0.0)((acc, x) => acc + x * x)
     def distTo(c: Array[Double]): Column =
       col("__n2") + lit(c2of(c)) -
         lit(2.0) * Similarity.dot(col("__v"), typedLit(c.toSeq))
-    val base = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    val base = m.pin(df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .filter(col("__v").isNotNull)
-      .withColumn("__n2", Similarity.dot(col("__v"), col("__v")))
-      .localCheckpoint(true)
-    try {
-      val first = base.orderBy(col("__id")).limit(1).collect()
-      require(first.nonEmpty, "kCenterGreedy: empty input")
-      val picks = scala.collection.mutable.ArrayBuffer[(Int, Any, Any)](
-        (1, first(0).get(0), null))
-      // chosen points leave the candidate pool (a duplicate vector would
-      // otherwise be re-pickable at distance 0); fewer than k distinct
-      // rows ends the selection early with the rows that exist
-      var cur = base
-        .filter(col("__id") =!= lit(first(0).get(0)))
-        .withColumn("__mind", distTo(Similarity.vecToDouble(first(0).getSeq[Any](1))))
-        .localCheckpoint(true)
-      try {
-        var step = 2
-        var exhausted = false
-        while (step <= k && !exhausted) {
-          val tops = cur.orderBy(col("__mind").desc, col("__id")).limit(1)
-            .collect()
-          if (tops.isEmpty) exhausted = true
-          else {
-            val top = tops(0)
-            val d = top.getDouble(3)
-            picks += ((step, top.get(0),
-              BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-                .toDouble))
-            if (step < k) {
-              val next = cur
-                .filter(col("__id") =!= lit(top.get(0)))
-                .withColumn("__mind",
-                  least(col("__mind"),
-                    distTo(Similarity.vecToDouble(top.getSeq[Any](1)))))
-                .localCheckpoint(true)
-              cur.unpersist(); cur = next
-            }
-          }
-          step += 1
+      .withColumn("__n2", Similarity.dot(col("__v"), col("__v"))))
+    val first = base.orderBy(col("__id")).limit(1).collect()
+    require(first.nonEmpty, "kCenterGreedy: empty input")
+    val picks = scala.collection.mutable.ArrayBuffer[(Int, Any, Any)](
+      (1, first(0).get(0), null))
+    // chosen points leave the candidate pool (a duplicate vector would
+    // otherwise be re-pickable at distance 0); fewer than k distinct
+    // rows ends the selection early with the rows that exist
+    var cur = m.pin(base
+      .filter(col("__id") =!= lit(first(0).get(0)))
+      .withColumn("__mind", distTo(Similarity.vecToDouble(first(0).getSeq[Any](1)))))
+    var step = 2
+    var exhausted = false
+    while (step <= k && !exhausted) {
+      val tops = cur.orderBy(col("__mind").desc, col("__id")).limit(1)
+        .collect()
+      if (tops.isEmpty) exhausted = true
+      else {
+        val top = tops(0)
+        val d = top.getDouble(3)
+        picks += ((step, top.get(0),
+          BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+            .toDouble))
+        if (step < k) {
+          val next = m.pin(cur
+            .filter(col("__id") =!= lit(top.get(0)))
+            .withColumn("__mind",
+              least(col("__mind"),
+                distTo(Similarity.vecToDouble(top.getSeq[Any](1))))))
+          m.drop(cur); cur = next
         }
-      } finally { cur.unpersist(); () }
-      val idType = base.schema("__id").dataType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("step",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField(idCol, idType),
-        org.apache.spark.sql.types.StructField("min_dist",
-          org.apache.spark.sql.types.DoubleType)))
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        picks.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3)).asJava,
-        schema)
-    } finally { base.unpersist(); () }
+      }
+      step += 1
+    }
+    val idType = base.schema("__id").dataType
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("step",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      org.apache.spark.sql.types.StructField(idCol, idType),
+      org.apache.spark.sql.types.StructField("min_dist",
+        org.apache.spark.sql.types.DoubleType)))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      picks.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3)).asJava,
+      schema)
   }
 
   def sampleMembers(df: DataFrame, idCol: String, requiredN: Long,

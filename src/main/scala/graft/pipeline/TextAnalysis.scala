@@ -134,7 +134,11 @@ object TextAnalysis {
 
   /** The shared integer core of [[ratioDecimal9]]/[[ratioDouble9]]: the
     * 9-decimal ratio as a plain LONG of scaled units (round-half-up of
-    * `num/den * 1e9` in integer arithmetic; 0 when `den <= 0`). */
+    * `num/den * 1e9` in integer arithmetic; 0 when `den <= 0`).
+    * Precondition: `num >= 0` — the integral divide truncates toward zero,
+    * which is round-half-up only for a non-negative numerator and equals
+    * the DuckDB twin's flooring `//` ([[graft.catalog.Shared.dbl9Sql]])
+    * only there. */
   private def ratioE9(num: Column, den: Column): Column = {
     import org.apache.spark.sql.GraftColumnAccess.{column => C, expression => E}
     import org.apache.spark.sql.catalyst.expressions.IntegralDivide

@@ -425,9 +425,10 @@ class PipelineSpec extends SparkSpec {
     assert(pinned.map(_.toSeq).toSet == rows.map(_.toSeq).toSet)
     // salt-INVARIANT (r15 skew salt): the salt only re-keys the negative
     // bucket join — every (anchor, candidate) pair still meets exactly
-    // once — so salting off (1) and an explicit high factor (64) must
-    // both equal the default (auto = defaultParallelism) run
-    for (s <- Seq(1, 64)) {
+    // once — so salting off (1), the auto-salt cap and an explicit factor
+    // above it must all equal the default (auto = defaultParallelism
+    // capped at AutoSaltCap) run
+    for (s <- Seq(1, Preference.AutoSaltCap, 2 * Preference.AutoSaltCap)) {
       val salted = Preference.contrastiveTriplets(corpus, "text", "doc_id",
         0.6, 3, saltFactor = s).collect()
       assert(salted.map(_.toSeq).toSet == rows.map(_.toSeq).toSet,
@@ -681,11 +682,14 @@ class PipelineSpec extends SparkSpec {
 
   test("prefixJaccardJoin plan has no cartesian product") {
     val docs = sf("documents").filter(col("doc_id") % 11 === 0)
-    val plan = Dedup.prefixJaccardJoin(docs, "text", "doc_id", 0.6,
-        materialize = false)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    // the vocabulary pin and the result pin: the plans that actually run
+    val plans = checkpointPlans(Dedup.prefixJaccardJoin(docs, "text", "doc_id", 0.6))
+      .map(_.toString)
+    assert(plans.length == 2, plans.mkString("\n"))
+    for (plan <- plans) {
+      assert(!plan.contains("CartesianProduct"), plan)
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    }
   }
 
   test("simhashMd5Sigs through signaturePairs equals brute all-pairs Hamming") {
@@ -1574,26 +1578,52 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("connected components use the RELIABLE checkpoint when a dir is configured") {
-    // cluster deployments set a checkpoint dir; the per-round lineage cut
-    // must then survive executor loss (localCheckpoint blocks would not).
-    // Isolated session: setCheckpointDir is session-global state.
+    // cluster deployments set a checkpoint dir; every pin (the per-round
+    // lineage cuts included) must then survive executor loss
+    // (localCheckpoint blocks would not). Isolated session; the checkpoint
+    // dir is SparkContext-global state, so it is unset again at the end.
     val old = spark
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val sc = old.sparkContext
     try {
       val s2 = org.apache.spark.sql.SparkSession.builder()
         .master("local[2]").config("spark.sql.shuffle.partitions", "2")
         .getOrCreate()
-      val ckpt = java.nio.file.Files.createTempDirectory("ccckpt").toFile.getAbsolutePath
-      s2.sparkContext.setCheckpointDir(ckpt)
+      val ckpt = java.nio.file.Files.createTempDirectory("ccckpt")
+      sc.setCheckpointDir(ckpt.toString)
+      // the reliable path actually writes checkpoint data: one rdd-<id>
+      // dir per checkpointed RDD
+      def written: Long = {
+        val walk = java.nio.file.Files.walk(ckpt)
+        try walk.filter(_.getFileName.toString.startsWith("rdd-")).count()
+        finally walk.close()
+      }
       import s2.implicits._
       val edges = (0L until 7L).map(i => (i, i + 1)).toDF("id1", "id2")
-      val rows = Dedup.connectedComponents(edges).as[(Long, Long)].collect()
-      assert(rows.toMap == (0L to 7L).map(_ -> 0L).toMap)
-      // the reliable path actually wrote checkpoint data
-      val written = new java.io.File(ckpt).listFiles()
-      assert(written != null && written.nonEmpty, s"no checkpoint data under $ckpt")
+      val docs = Seq(1L -> "a b c d e", 2L -> "a b c d f", 3L -> "x y z")
+        .toDF("doc_id", "text")
+      for ((name, run) <- Seq[(String, () => Unit)](
+          "connectedComponents" -> { () =>
+            val rows = Dedup.connectedComponents(edges).as[(Long, Long)].collect()
+            assert(rows.toMap == (0L to 7L).map(_ -> 0L).toMap)
+          },
+          "pageRank" -> { () =>
+            val pr = Graph.pageRank(edges, "id1", "id2").collect()
+            assert(pr.length == 8)
+            assert(math.abs(pr.map(_.getDouble(1)).sum - 1.0) < 1e-9)
+          },
+          "prefixJaccardJoin" -> { () =>
+            val pairs = Dedup.prefixJaccardJoin(docs, "text", "doc_id", 0.6)
+              .collect().map(r => (r.getLong(0), r.getLong(1)))
+            assert(pairs.toSeq == Seq((1L, 2L)))
+          })) {
+        val before = written
+        run()
+        assert(written > before, s"$name wrote no checkpoint data under $ckpt")
+      }
     } finally {
+      sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]]).invoke(sc, None)
       org.apache.spark.sql.SparkSession.setDefaultSession(old)
       org.apache.spark.sql.SparkSession.setActiveSession(old)
     }

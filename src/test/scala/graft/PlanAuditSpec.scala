@@ -162,18 +162,19 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dedup pair queries never degrade to cartesian/nested-loop joins") {
-    // q_dedup_minhash's entry eagerly checkpoints (cache hygiene), which
-    // collapses its plan to a LogicalRDD scan — audit the SAME pipeline in
-    // lazy form (materialize=false) so the join structure stays observable
+    // the pair operators pin their result, which collapses the returned
+    // plan to a checkpoint scan — audit the plans the pins executed
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val lazyMinhash = graft.pipeline.Dedup.minhashPairs(docs, "text", "doc_id",
-      shingleSize = 5, numHashes = 64, bands = 16, jaccardThreshold = 0.5,
-      materialize = false)
-    for ((name, p) <- Seq(
-        "minhashPairs" -> lazyMinhash.queryExecution.executedPlan.toString,
-        "q_dedup_simhash" -> plan("q_dedup_simhash"))) {
-      assert(!p.contains("CartesianProduct"), s"$name has a cartesian product")
-      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
+    for ((name, run) <- Seq[(String, () => Any)](
+        "minhashPairs" -> (() => graft.pipeline.Dedup.minhashPairs(docs, "text", "doc_id",
+          shingleSize = 5, numHashes = 64, bands = 16, jaccardThreshold = 0.5)),
+        "q_dedup_simhash" -> (() => SparkEntry.queries("q_dedup_simhash")(spark, dir)))) {
+      val plans = checkpointPlans(run()).map(_.toString)
+      assert(plans.nonEmpty, s"$name pinned nothing")
+      for (p <- plans) {
+        assert(!p.contains("CartesianProduct"), s"$name has a cartesian product")
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$name has a nested-loop join")
+      }
     }
     // q_dedup_fuzzy: the MAIN pair generation must be the (t, i, s) equi
     // block join; a cartesian is legal ONLY for the tiny bucket (keys

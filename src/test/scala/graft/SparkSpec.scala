@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared one-per-JVM test session (pinned to 4 cores and shuffle
@@ -12,4 +14,29 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf(name: String) = spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")
+
+  /** The final (post-AQE) physical plans of the checkpoint actions `run`
+    * performs: a pipeline operator pins its result, so its interior plan is
+    * visible only to a QueryExecutionListener. Listener delivery is FIFO,
+    * so a marker query flushes the events `run` produced. */
+  def checkpointPlans(run: => Any): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = seen.add(funcName -> qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val marker = s"flush_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    def flushed = seen.stream().anyMatch(_._2.analyzed.output.exists(_.name == marker))
+    spark.listenerManager.register(listener)
+    try {
+      run
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!flushed && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(flushed, "the marker query never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val pins = Set("localCheckpoint", "checkpoint")
+    seen.asScala.toSeq.collect { case (f, qe) if pins(f) => qe.executedPlan }
+  }
 }
