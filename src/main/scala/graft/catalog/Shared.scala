@@ -1,16 +1,30 @@
 package graft
 package catalog
 
+import java.lang.ref.SoftReference
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import graft.ops.WarpOps._
 
 /** Helpers used by more than one catalog domain. */
-private[catalog] object Shared {
+private[graft] object Shared {
 
-  /** Table `name` of the data directory `dir`. */
+  /** Table `name` of the data directory `dir`. A table file is resolved
+    * (listed, footer-read for its schema) once per session and version;
+    * every call returns a fresh plan over that relation, with its own
+    * expression ids, so self-joins and `df("col")` resolve as with
+    * `read.parquet`. A directory may gain files, so it is never cached. */
   def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = scala.util.Try(stamp(s, path)).toOption.filterNot(_.isDir) match {
+      case Some(file) =>
+        s.baseRelationToDataFrame(resolved(s, Opened(file, SchemaConfs.map(s.conf.getOption))))
+      // a directory, or a path Spark itself must report (missing, glob)
+      case None => s.read.parquet(path)
+    }
     // events.ts is nanosecond-precision parquet, which Spark only reads via
     // spark.sql.legacy.parquet.nanosAsLong (set by every LocalSession).
     // Normalize to a naive microsecond timestamp; `DIV` keeps the integer
@@ -18,6 +32,43 @@ private[catalog] object Shared {
     df.schema.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType) match {
       case Some(_) => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")).cast("timestamp_ntz"))
       case None    => df
+    }
+  }
+
+  /** The session confs parquet schema inference reads. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** A file's qualified path, kind and (mtime, length). */
+  private case class Stamp(path: String, isDir: Boolean, mtime: Long, length: Long)
+
+  private def stamp(s: SparkSession, path: String): Stamp = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    Stamp(fs.makeQualified(p).toString, st.isDirectory, st.getModificationTime, st.getLen)
+  }
+
+  /** One version of a table file, read under one set of [[SchemaConfs]]. */
+  private case class Opened(file: Stamp, confs: Seq[Option[String]])
+
+  /** The relations [[T]] resolved, per session, one version per path. A
+    * relation holds its session, so the map is held softly: a strong value
+    * would keep the weak key reachable and a dropped session alive. */
+  private val opened =
+    new java.util.WeakHashMap[SparkSession, SoftReference[Map[Opened, BaseRelation]]]()
+
+  private def resolved(s: SparkSession, key: Opened): BaseRelation = {
+    def tables = Option(opened.get(s)).flatMap(r => Option(r.get)).getOrElse(Map.empty[Opened, BaseRelation])
+    opened.synchronized(tables.get(key)).getOrElse {
+      // resolved outside the lock: a footer read runs a Spark job
+      val rel = s.read.parquet(key.file.path).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }.get
+      opened.synchronized {
+        opened.put(s, new SoftReference(tables.filter(_._1.file.path != key.file.path) + (key -> rel)))
+      }
+      rel
     }
   }
 
@@ -39,10 +90,8 @@ private[catalog] object Shared {
     * collision between two data directories would silently serve the wrong
     * memoized fixture/centroids/index. */
   def dataFp(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    s"${dirTag(dir)}_${st.getModificationTime}_${st.getLen}"
+    val st = stamp(s, s"$dir/$table.parquet")
+    s"${dirTag(dir)}_${st.mtime}_${st.length}"
   }
 
   /** Index root keyed by the data directory AND the embeddings file's
@@ -53,7 +102,7 @@ private[catalog] object Shared {
     s"/tmp/graft_index_${dataFp(s, dir, "embeddings")}"
 
   def indexExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
+    val p = new Path(path + "/_SUCCESS")
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 

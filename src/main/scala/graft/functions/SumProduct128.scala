@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{
-  Add, AttributeReference, BitwiseAnd, BitwiseNot, BitwiseOr, EqualTo,
-  Expression, EvalMode, GreaterThanOrEqual, If, IsNull, Literal, Multiply,
-  Not, Or, ShiftRightUnsigned}
+  Add, And, AttributeReference, BitwiseAnd, BitwiseNot, BitwiseOr, EqualTo,
+  Expression, EvalMode, GreaterThan, GreaterThanOrEqual, If, IsNull,
+  LessThan, LessThanOrEqual, Literal, Multiply, Not, Or, ShiftRightUnsigned}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -31,12 +31,14 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
   * DOUBLE)` performs, so results are bit-identical to the decimal
   * formulation (pinned by spec against the inline decimal form).
   *
-  * Domain: |Σ x6·y6| < 2¹²⁷ ≈ 1.7e38 — the same envelope as the decimal
-  * formulation's DECIMAL(38,12) accumulator (< 1e38). Signed overflow of
-  * the accumulator is DETECTED (same-sign operands producing a
-  * flipped-sign result, checked in update and merge) and poisons the
-  * group to NULL — mirroring the non-ANSI decimal sum's null-on-overflow
-  * rather than wrapping silently.
+  * Domain: |Σ x6·y6| < 10³⁸, the DECIMAL(38,12) accumulator's precision
+  * bound. The decimal sum writes its buffer after every row and every
+  * merge, and a buffer value of 39 digits becomes NULL (non-ANSI; ANSI
+  * raises instead). The accumulator checks the same bound at the same
+  * steps, in update and in merge, and poisons the group to NULL — never a
+  * finite double where the decimal form has none. A merge of two
+  * in-bound partials can pass 2¹²⁷ ≈ 1.7e38, so signed overflow of the
+  * accumulator (same-sign operands, flipped-sign result) is detected too.
   *
   * Null contract = `sum()`: null inputs are skipped; a group with no
   * non-null input evaluates to NULL. The callers null BOTH factors
@@ -76,16 +78,29 @@ case class SumProduct128(left: Expression, right: Expression)
 
   private def nonNeg(e: Expression) = GreaterThanOrEqual(e, Literal(0L))
 
-  /** signed-128 add (ah,al) + (bh,bl) → (hi, lo, overflowed). */
+  /** the unsigned order of a low word, as a signed long */
+  private def unsigned(e: Expression) = wadd(e, Literal(Long.MinValue))
+
+  /** |hi·2⁶⁴ + lo| ≥ 10³⁸: past DECIMAL(38,12)'s 38 digits. */
+  private def pastDecimal(h: Expression, l: Expression) = {
+    val (pHi, pLo) = (5421010862427522170L, 687399551400673280L)    // 10³⁸
+    val (nHi, nLo) = (-5421010862427522171L, -687399551400673280L)  // −10³⁸
+    Or(
+      Or(GreaterThan(h, Literal(pHi)), And(EqualTo(h, Literal(pHi)),
+        GreaterThanOrEqual(unsigned(l), Literal(pLo + Long.MinValue)))),
+      Or(LessThan(h, Literal(nHi)), And(EqualTo(h, Literal(nHi)),
+        LessThanOrEqual(unsigned(l), Literal(nLo + Long.MinValue)))))
+  }
+
+  /** signed-128 add (ah,al) + (bh,bl) → (hi, lo, out of domain). */
   private def add128(ah: Expression, al: Expression,
                      bh: Expression, bl: Expression) = {
     val sLo = wadd(al, bl)
     val sHi = wadd(wadd(ah, bh), carry(al, bl, sLo))
     // same-signed operands with a flipped-sign result ⇒ signed overflow
-    val ovf = org.apache.spark.sql.catalyst.expressions.And(
-      EqualTo(nonNeg(ah), nonNeg(bh)),
+    val ovf = And(EqualTo(nonNeg(ah), nonNeg(bh)),
       Not(EqualTo(nonNeg(sHi), nonNeg(ah))))
-    (sHi, sLo, ovf)
+    (sHi, sLo, Or(ovf, pastDecimal(sHi, sLo)))
   }
 
   override lazy val updateExpressions: Seq[Expression] = {

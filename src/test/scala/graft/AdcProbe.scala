@@ -14,7 +14,7 @@ object AdcProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
     val inflate = args.headOption.map(_.toInt).getOrElse(100)
 
-    val docs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val docs = catalog.Shared.T(spark, dir, "embeddings")
     val m = 8; val k = 64
     val books = graft.pipeline.Similarity.pqTrain(docs, "embedding", "vec_id", m, k, seed = 1L)
     val enc = graft.pipeline.Similarity.pqEncode(docs, "embedding", "vec_id", books)

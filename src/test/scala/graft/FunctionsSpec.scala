@@ -284,6 +284,40 @@ class FunctionsSpec extends SparkSpec {
     assert(!plan.contains("(37,12)"), plan.take(2000))
   }
 
+  test("SumProduct128 goes NULL at the DECIMAL(38,12) bound, as the decimal form does") {
+    // x = y = 999999999999: each x6·y6 is 1e36 − 2e24 + 1e12 (unscaled,
+    // scale 12), and 100 of them sum to 1e38 − 2e26 + 1e14, just inside
+    // 38 digits. One more term of 2e26 − 1e14 lands exactly on 1e38, one
+    // of 2e26 just past it — both below the 128-bit limit of ~1.7e38.
+    // All terms of a group share one sign, so no partial sum exceeds the
+    // group's total, whatever the partitioning.
+    import org.apache.spark.sql.GraftColumnAccess.{column => C, expression => E}
+    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.types.DecimalType
+    val D2 = DecimalType(18, 6)
+    val big = 999999999999.0
+    val edges = Seq("below" -> Nil, "at" -> Seq((1e8, 1999999.999999)),
+      "above" -> Seq((1e7, 2e7)))
+    val pts = for ((edge, extra) <- edges; sign <- Seq(1.0, -1.0);
+                   (x, y) <- Seq.fill(100)((big, big)) ++ extra)
+      yield (s"$edge$sign", x, sign * y)
+    val df = pts.toDF("g", "x", "y").repartition(5)
+    def unscaled(c: org.apache.spark.sql.Column) = C(UnscaledValue(E(c.cast(D2))))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false") // the decimal sum nulls, not raises
+    val rows = try df.groupBy("g").agg(
+        C(graft.functions.SumProduct128(E(unscaled(col("x"))), E(unscaled(col("y"))))
+          .toAggregateExpression()).as("kernel"),
+        sum(col("x").cast(D2) * col("y").cast(D2)).cast("double").as("decimal")).collect()
+      finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val got = rows.map(r => r.getString(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(got.size == 6)
+    got.foreach { case (g, (kernel, decimal)) => assert(kernel == decimal, g) }
+    assert(got("below1.0")._2.isDefined && got("below-1.0")._2.isDefined)
+    for (edge <- Seq("at", "above"); sign <- Seq("1.0", "-1.0"))
+      assert(got(edge + sign)._1.isEmpty, edge + sign)
+  }
+
   test("aggregates: all-null groups yield null medians, not index errors") {
     val df = Seq(("g", null.asInstanceOf[java.lang.Double]),
                  ("g", null.asInstanceOf[java.lang.Double])).toDF("k", "v")

@@ -22,7 +22,7 @@ object FuzzyProfile {
     }
     for (round <- 1 to 3; mma <- Seq(false, true)) {
       println(s"--- fuzzy round $round multiMatchAware=$mma")
-      val keyed = spark.read.parquet(s"$dir/documents.parquet")
+      val keyed = catalog.Shared.T(spark, dir, "documents")
         .select(col("doc_id").as("id"), substring(col("text"), 1, 48).as("k"),
           length(substring(col("text"), 1, 48)).as("len"))
       def segLen(t: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =

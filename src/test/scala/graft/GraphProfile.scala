@@ -20,8 +20,8 @@ object GraphProfile {
 
     for (round <- 1 to 2) {
       println(s"--- round $round")
-      val o = spark.read.parquet(s"$dir/orders.parquet").select(col("o_orderkey"), col("o_custkey"))
-      val l = spark.read.parquet(s"$dir/lineitem.parquet").select(col("l_orderkey"), col("l_suppkey"))
+      val o = catalog.Shared.T(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val l = catalog.Shared.T(spark, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val pairs = o.join(l, col("o_orderkey") === col("l_orderkey"))
         .select(concat(lit("c"), col("o_custkey")).as("src"),
           concat(lit("s"), col("l_suppkey")).as("dst"))

@@ -1,34 +1,47 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Materialization lives in one place: outside [[graft.pipeline.Materialize]]
   * no main source caches, checkpoints, unpersists or makes a temp dir by
   * hand. The one exemption is `WarpOps.cacheStep`, whose persisted frame
-  * is the user's by design (QBECacheStep). */
+  * is the user's by design (QBECacheStep). Likewise every data-directory
+  * table opens through [[graft.catalog.Shared.T]], which resolves it once
+  * per session. */
 class MaterializeLintSpec extends AnyFunSuite {
-  private val banned =
-    Seq("localCheckpoint(", ".checkpoint(", ".persist(", ".unpersist(", "createTempDirectory")
-  private val allowed = Set(
-    "graft/pipeline/Materialize.scala" -> "*",
-    "graft/ops/WarpOps.scala" ->
-      "df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)")
 
-  test("only the Materialize scope caches, checkpoints or makes temp dirs") {
-    val root = Paths.get("src/main/scala")
+  /** `file:line: text` of every line under `root` holding a `banned`
+    * needle, unless its (relative file, trimmed line) — or the file with
+    * "*" — is `allowed`. */
+  private def hits(root: Path, banned: Seq[String],
+                   allowed: Set[(String, String)]): Seq[String] = {
     val walk = Files.walk(root)
     val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    assert(files.exists(_.endsWith("graft/pipeline/Materialize.scala")),
+    assert(files.exists(_.endsWith("graft/catalog/Shared.scala")),
       s"no sources under ${root.toAbsolutePath}")
-    val hits = for {
+    for {
       f <- files
       rel = root.relativize(f).toString
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if banned.exists(line.contains) && !allowed(rel -> "*") && !allowed(rel -> line.trim)
     } yield s"$rel:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only the Materialize scope caches, checkpoints or makes temp dirs") {
+    val found = hits(Paths.get("src/main/scala"),
+      Seq("localCheckpoint(", ".checkpoint(", ".persist(", ".unpersist(", "createTempDirectory"),
+      Set("graft/pipeline/Materialize.scala" -> "*",
+        "graft/ops/WarpOps.scala" ->
+          "df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("only catalog.Shared.T reads a data-directory table file") {
+    val found = hits(Paths.get("src"), Seq("read.parquet(s\"$dir/"),
+      Set("main/scala/graft/catalog/Shared.scala" -> "*"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

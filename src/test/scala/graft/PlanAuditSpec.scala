@@ -59,7 +59,7 @@ class PlanAuditSpec extends SparkSpec {
     // inspectable before execution)
     import org.apache.spark.sql.execution.debug.codegenString
     import graft.pipeline.{TextAnalysis => TA}
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = catalog.Shared.T(spark, dir, "documents")
     def calls(q: org.apache.spark.sql.DataFrame, needle: String): Int =
       needle.r.findAllIn(codegenString(q.queryExecution.executedPlan)).length
     val pii = docs.select(
@@ -164,7 +164,7 @@ class PlanAuditSpec extends SparkSpec {
   test("dedup pair queries never degrade to cartesian/nested-loop joins") {
     // the pair operators pin their result, which collapses the returned
     // plan to a checkpoint scan — audit the plans the pins executed
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = catalog.Shared.T(spark, dir, "documents")
     for ((name, run) <- Seq[(String, () => Any)](
         "minhashPairs" -> (() => graft.pipeline.Dedup.minhashPairs(docs, "text", "doc_id",
           shingleSize = 5, numHashes = 64, bands = 16, jaccardThreshold = 0.5)),
@@ -216,37 +216,20 @@ class PlanAuditSpec extends SparkSpec {
     // removeBoilerplateLines once ran a driver-side count() and warpPivot
     // an eager distinct-label collect at plan-BUILD time — a full extra
     // scan before the query even runs at 100 TB. (Targets the operators on
-    // pre-read DataFrames: `spark.read.parquet` itself launches a footer
-    // schema-inference job, which is a source concern, not an operator
-    // one.) Listener-bus delivery is FIFO: flush with a marker job and
-    // assert it is the ONLY job seen.
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    // pre-read DataFrames: a session's first open of a table launches a
+    // footer schema-inference job, which is a source concern, not an
+    // operator one.)
+    val docs = catalog.Shared.T(spark, dir, "documents")
       .withColumn("lined", translate(col("text"), " ", "\n"))
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    // drain still-queued events (the reads' footer jobs) so a freshly
-    // registered listener starts from a quiet bus
-    spark.sparkContext.parallelize(Seq(1)).count()
-    Thread.sleep(500)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(js.jobId)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val li = catalog.Shared.T(spark, dir, "lineitem")
+    val built = jobsStarted {
       graft.pipeline.TextAnalysis.removeBoilerplateLinesByFrac(
         docs, "doc_id", "lined", minDocFrac = 0.78)
       li.warpPivot(Seq(col("l_linestatus")), Seq("l_returnflag"),
         sum("l_quantity"), values = Seq("F", "O"))
       li.warpFilter(col("l_discount") >= 0.05) // type probe must not analyze eagerly either
-      // marker flushes the bus; an RDD count is exactly ONE job (a SQL
-      // count under AQE submits two)
-      spark.sparkContext.parallelize(Seq(1)).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(500) // settle: the first delivered event may precede the marker
-      assert(seen.size == 1, s"plan build ran ${seen.size - 1} job(s) before the marker")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(built == 0, s"plan build ran $built job(s)")
   }
 
   // AdaptiveSparkPlanExec has no children, so collect() over the
@@ -630,7 +613,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q_chunk: map-only until the output sort — one Generate, no join") {
     val base = graft.pipeline.Retrieval.chunkByTokens(
-      spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", 24, 8)
+      catalog.Shared.T(spark, dir, "documents"), "doc_id", "text", 24, 8)
     val p = base.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), p.take(3000)) // embarrassingly parallel
     assert(!p.contains("Join"), p.take(3000))
@@ -640,7 +623,7 @@ class PlanAuditSpec extends SparkSpec {
     // one Lloyd round's assign step must be scan -> project only; the
     // centroids ride as literals, so a shuffle or join here would mean the
     // operator stopped scaling as a map pass
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = catalog.Shared.T(spark, dir, "embeddings")
     val out = graft.pipeline.Cluster.kmeansAssign(emb, "embedding", "vec_id",
       k = 2, iters = 1)
     val p = out.queryExecution.executedPlan.toString

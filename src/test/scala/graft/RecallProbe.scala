@@ -8,7 +8,7 @@ object RecallProbe {
     val spark = LocalSession()
     import graft.pipeline.Similarity
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = catalog.Shared.T(spark, dir, "embeddings")
       val path = java.nio.file.Files.createTempDirectory("ivfrec").toFile.getAbsolutePath + "/idx"
       val centroids = Similarity.ivfWriteIndex(emb, "embedding", "vec_id", nCells = 16, path)
       val idx = spark.read.parquet(path)

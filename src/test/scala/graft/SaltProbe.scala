@@ -20,7 +20,7 @@ object SaltProbe {
       (if (bcast == "off") "-1" else "10485760")))
     import graft.ops.WarpOps._
     def run(salt: Int): Unit = {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = catalog.Shared.T(spark, dir, "documents")
         .warpFilter(col("doc_id") % 7 === 0)
       val near = docs.calculate(Seq(
         "doc_id" -> (col("doc_id") + 1000000),

@@ -15,6 +15,35 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf(name: String) = spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")
 
+  /** The number of Spark jobs `run` starts. Listener delivery is FIFO, so
+    * once a marker job's start arrives every earlier start has too: one
+    * marker drains what came before `run`, a second closes its count. */
+  def jobsStarted(run: => Any): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(): String = {
+      val m = s"marker-${java.util.UUID.randomUUID()}"
+      sc.setJobDescription(m)
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+      m
+    }
+    def startsBefore(m: String): Int = Iterator.continually(
+        seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+      .map { d => assert(d != null, s"$m never reached the listener"); d }
+      .takeWhile(_ != m).size
+    sc.addSparkListener(listener)
+    try {
+      startsBefore(marker())
+      run
+      startsBefore(marker())
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The final (post-AQE) physical plans of the checkpoint actions `run`
     * performs: a pipeline operator pins its result, so its interior plan is
     * visible only to a QueryExecutionListener. Listener delivery is FIFO,

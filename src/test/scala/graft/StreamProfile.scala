@@ -28,11 +28,11 @@ object StreamProfile {
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         noData.toString)
       try {
-        val ev = spark.read.parquet(s"$dir/events.parquet")
+        val ev = catalog.Shared.T(spark, dir, "events")
           .select(col("event_id").cast("long").as("event_id"),
             col("event_type"), col("ts").cast(TimestampType).as("ts"))
           .filter(col("event_id") < 20000L)
-        val marks = spark.read.parquet(s"$dir/events.parquet")
+        val marks = catalog.Shared.T(spark, dir, "events")
           .groupBy(col("event_type"),
             date_trunc("hour", col("ts")).cast(TimestampType).as("mts"))
           .agg(sum(col("value").cast("decimal(28,6)")).cast("double").as("mark_total"))
