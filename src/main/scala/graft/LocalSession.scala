@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.plans.{Graft, WarpExtensions}
 
 /** The one local-mode session conf every graft main, probe and test session
   * shares, so a probe never runs under different confs from the bench it
-  * explains. */
+  * explains. Every session is built with [[graft.plans.WarpExtensions]] and
+  * gets [[graft.plans.Graft.install]]'s planner strategy. */
 object LocalSession {
 
   /** Cores: `SPARK_GRAFT_CPUS`, else every processor this JVM sees. */
@@ -25,9 +27,11 @@ object LocalSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new WarpExtensions())
     val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Graft.install(spark)
     spark
   }
 }

@@ -2,15 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.{Catalog, Embeddings, Q, Sql}
+import graft.plans.Graft
 
 /** Driver contract, derived once from [[graft.catalog.Catalog]]: one
   * `queries` entry per implemented operator from SURVEY.md §2, each with
   * an equivalent DuckDB oracle in [[oracleSql]] unless the catalog
-  * declares why it has none. */
+  * declares why it has none. Each entry first runs the idempotent
+  * [[graft.plans.Graft.install]], so a session graft did not build gets
+  * graft's planner strategy and rule too. */
 object SparkEntry {
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Catalog.all.map(q => q.name -> q.run).toMap
+    Catalog.all.map(q => q.name -> { (s: SparkSession, dir: String) =>
+      Graft.install(s)
+      q.run(s, dir)
+    }).toMap
 
   lazy val oracleSql: Map[String, String] =
     Catalog.all.collect { case Q(name, _, Sql(text), _) => name -> text }.toMap

@@ -17,15 +17,8 @@ import graft.functions.{BandHashExpr, DotProductExpr, FixMojibakeExpr, HammingDi
   * cosmetics — Cast is something the data-source strategies understand, so
   * filters written through the Warp coercion kernel regain predicate
   * pushdown eligibility, and downstream rules (constant folding,
-  * simplifyCasts) see through it.
-  *
-  * [[WarpExtensions]]: `spark.sql.extensions`-style injection point that
-  * installs the rule and registers the native kernels as SQL functions
-  * (`warp_num`, `simhash64`, `shingle_hashes`, `minhash_sig`,
-  * `band_hashes`, `token_stats`, `text_stats`, `pii_scan`,
-  * `lang_scores`, `vec_dot`, `bits_hamming`, `vec_cosine`) so
-  * `spark.sql(...)` users reach them without the Scala API.
-  * [[Graft.install]] does the same on an already-built session.
+  * simplifyCasts) see through it. [[WarpExtensions]] installs it when a
+  * session is built, [[Graft.install]] on a session that already exists.
   */
 object SimplifyWarpCoercion extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
@@ -39,6 +32,19 @@ object SimplifyWarpCoercion extends Rule[LogicalPlan] {
   }
 }
 
+/** The build-time path (`builder.withExtensions` or
+  * `spark.sql.extensions=graft.plans.WarpExtensions`; every
+  * [[graft.LocalSession]] is built this way). It puts
+  * [[SimplifyWarpCoercion]] inside the operator-optimization batch, so a
+  * `warp_num` filter over a numeric column reaches the parquet scan as a
+  * pushed predicate, and registers the native kernels as SQL functions
+  * (`warp_num`, `simhash64`, `shingle_hashes`, `minhash_sig`,
+  * `band_hashes`, `token_stats`, `text_stats`, `pii_scan`, `lang_scores`,
+  * `vec_dot`, `bits_hamming`, `vec_cosine`, `nfc_normalize`,
+  * `nfkc_normalize`, `fix_mojibake`) so `spark.sql(...)` users reach them
+  * without the Scala API. Extensions exist only at build time, so the
+  * [[SmallSort]] strategy is left to [[Graft.install]], which reaches
+  * sessions graft did not build too. */
 class WarpExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SimplifyWarpCoercion)
@@ -142,21 +148,30 @@ object WarpExtensions {
 }
 
 object Graft {
-  /** Install rule + SQL functions on an existing session. Note the
-    * difference from the [[WarpExtensions]] builder path:
-    * `experimental.extraOptimizations` runs AFTER the scan-pushdown batch,
-    * so this gives plan simplification + SQL functions but not restored
-    * predicate pushdown; sessions built with
-    * `spark.sql.extensions=graft.plans.WarpExtensions` (or
-    * `builder.withExtensions`) get the rule inside the operator-
-    * optimization batch and full pushdown. */
+  /** Install graft's planning on `spark`; idempotent, so every
+    * [[graft.SparkEntry.queries]] entry calls it and reaches sessions
+    * graft did not build (an outside harness's own builder).
+    *
+    *  - [[SmallSort]] goes into `experimental.extraStrategies`, once.
+    *  - [[SimplifyWarpCoercion]] and the SQL functions are added only when
+    *    the session was built without [[WarpExtensions]], so no rule runs
+    *    twice. There the rule sits in `experimental.extraOptimizations`,
+    *    which runs AFTER the scan-pushdown batch: plan simplification and
+    *    SQL functions, but not restored predicate pushdown. */
   def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(SimplifyWarpCoercion))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SimplifyWarpCoercion
-    WarpExtensions.sqlFunctions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(SmallSort))
+        ex.extraStrategies = ex.extraStrategies :+ SmallSort
+      if (!ex.extraOptimizations.contains(SimplifyWarpCoercion) &&
+          !spark.sessionState.optimizer.extendedOperatorOptimizationRules
+            .contains(SimplifyWarpCoercion)) {
+        ex.extraOptimizations = ex.extraOptimizations :+ SimplifyWarpCoercion
+        WarpExtensions.sqlFunctions.foreach { case (name, builder) =>
+          spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+            name, builder, "scala_udf")
+        }
+      }
     }
   }
 }

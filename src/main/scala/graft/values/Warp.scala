@@ -51,9 +51,6 @@ object Warp {
     column(graft.functions.WarpNumExpr(expression(c)))
   }
 
-  /** Typed fast path: column already numeric — avoid the regex. */
-  def numTyped(c: Column): Column = c.cast(DoubleType)
-
   /** Coerce to string (dates intentionally excluded upstream). */
   def str(c: Column): Column = c.cast(StringType)
 

@@ -72,7 +72,7 @@ class BpeSpec extends SparkSpec {
     // the kernel (BpeSegmentExpr) replaces the chained-aggregate fold in
     // the operator surface; pin them against each other on real corpus
     // text (unicode, punctuation, odd whitespace) plus crafted edges
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = sf("documents")
       .select("text").limit(200)
       .union(Seq("", "  ", "a", "aaaa aaaa", "\tlead tab", "π señor 𝄞clef",
         "low lower newest").toDF("text"))

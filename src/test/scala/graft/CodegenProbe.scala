@@ -13,7 +13,7 @@ object CodegenProbe {
     val spark = LocalSession(extra = Seq("spark.sql.adaptive.enabled" -> "false"))
     import org.apache.spark.sql.execution.debug.codegenString
     val ta = graft.pipeline.TextAnalysis
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = catalog.Shared.T(spark, "/root/testdata/sf0.001", "documents")
     val frag = docs
       .calculate(Seq(
         "score" -> ta.qualityScore(col("text")),

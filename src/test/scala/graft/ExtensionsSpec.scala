@@ -1,16 +1,25 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.Graft
+import graft.plans.{Graft, SimplifyWarpCoercion}
 import graft.values.Warp
 
-/** Catalyst extension tests: coercion simplification restores pushdown;
-  * native kernels reachable from SQL. */
+/** Catalyst extension tests on the shared session, which
+  * [[LocalSession]] builds with [[graft.plans.WarpExtensions]]: coercion
+  * simplification restores pushdown; native kernels reachable from SQL. */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
+  test("the coercion rule runs once, inside the operator-optimization batch") {
+    def inBatch = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+      .count(_ == SimplifyWarpCoercion)
+    assert(inBatch == 1)
+    Graft.install(spark) // a session built with the extensions keeps its one copy
+    assert(inBatch == 1)
+    assert(!spark.experimental.extraOptimizations.contains(SimplifyWarpCoercion))
+  }
+
   test("SimplifyWarpCoercion rewrites warp_num over numerics to a cast") {
-    Graft.install(spark)
     val df = Seq(1.5, 2.5).toDF("v")
     val plan = df.filter(Warp.num(col("v")) > 2.0).queryExecution.optimizedPlan.toString
     assert(!plan.contains("warp_num"), plan) // rewritten away
@@ -26,26 +35,13 @@ class ExtensionsSpec extends SparkSpec {
     // path, not experimental.extraOptimizations which runs after pushdown
     val dir = java.nio.file.Files.createTempDirectory("pushdown").toFile.getAbsolutePath
     Seq(1.0, 5.0, 9.0).toDF("v").write.mode("overwrite").parquet(dir)
-    val old = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val extended = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.WarpExtensions()(_))
-        .getOrCreate()
-      val q = extended.read.parquet(dir).filter(Warp.num(col("v")) > 4.0)
-      val physical = q.queryExecution.executedPlan.toString
-      assert(physical.contains("PushedFilters: [IsNotNull(v), GreaterThan(v,4.0)]"), physical)
-      assert(q.count() == 2)
-    } finally {
-      org.apache.spark.sql.SparkSession.setDefaultSession(old)
-      org.apache.spark.sql.SparkSession.setActiveSession(old)
-    }
+    val q = spark.read.parquet(dir).filter(Warp.num(col("v")) > 4.0)
+    val physical = q.queryExecution.executedPlan.toString
+    assert(physical.contains("PushedFilters: [IsNotNull(v), GreaterThan(v,4.0)]"), physical)
+    assert(q.count() == 2)
   }
 
   test("native kernels callable from SQL after install") {
-    Graft.install(spark)
     Seq((1L, "the quick brown fox")).toDF("id", "text")
       .createOrReplaceTempView("sqldocs")
     val r = spark.sql(
@@ -75,7 +71,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("vec_cosine: one call, folds over literals, matches the Scala path") {
-    Graft.install(spark)
     val c = spark.sql(
       """SELECT vec_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS same,
                 vec_cosine(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS orth,
@@ -107,7 +102,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("unicode kernels callable from SQL: normalize + mojibake repair") {
-    Graft.install(spark)
     val r = spark.sql(
       "SELECT nfc_normalize('é') AS n, nfkc_normalize('ﬁ') AS k, " +
         "fix_mojibake('Ã©') AS f, fix_mojibake('café') AS keep")
@@ -119,7 +113,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("kernel misuse fails at analysis with a readable message") {
-    Graft.install(spark)
     Seq((1L, "txt")).toDF("id", "text").createOrReplaceTempView("sqldocs2")
     // quoted numerals still work (pre-existing lenient behavior)
     val lenient = spark.sql(

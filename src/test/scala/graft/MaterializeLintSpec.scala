@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * no main source caches, checkpoints, unpersists or makes a temp dir by
   * hand. The one exemption is `WarpOps.cacheStep`, whose persisted frame
   * is the user's by design (QBECacheStep). Likewise every data-directory
-  * table opens through [[graft.catalog.Shared.T]], which resolves it once
-  * per session. */
+  * table, named through a `$dir` or a literal test-data path, opens through
+  * [[graft.catalog.Shared.T]], which resolves it once per session. */
 class MaterializeLintSpec extends AnyFunSuite {
 
   /** `file:line: text` of every line under `root` holding a `banned`
@@ -40,7 +40,8 @@ class MaterializeLintSpec extends AnyFunSuite {
   }
 
   test("only catalog.Shared.T reads a data-directory table file") {
-    val found = hits(Paths.get("src"), Seq("read.parquet(s\"$dir/"),
+    val found = hits(Paths.get("src"),
+      Seq("read.parquet(s\"$dir/", "read.parquet(\"/root/testdata", "read.parquet(s\"/root/testdata"),
       Set("main/scala/graft/catalog/Shared.scala" -> "*"))
     assert(found.isEmpty, found.mkString("\n"))
   }

@@ -120,20 +120,28 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("bits_hamming"), p.take(2000))
   }
 
-  test("q_text_repetition: scoring is one map pass; only the output sort shuffles") {
+  /** No shuffle at all: the presentation sort of a small scored scan is
+    * one sorted partition (graft.plans.SmallSort), so any Exchange would
+    * mean the scoring itself started shuffling. */
+  private def mapOnlyThenOneSortedPartition(p: String): Unit = {
+    assert(!p.contains("Exchange"), p.take(2000))
+    assert("""Sort \[.*\], false""".r.findFirstIn(p).isDefined, p.take(2000))
+    assert(p.contains("Coalesce 1"), p.take(2000))
+  }
+
+  test("q_text_repetition: scoring is one map pass, sorted in one partition with no shuffle") {
     val p = plan("q_text_repetition")
     // the native token_stats kernel keeps all four ratios in one projection
-    // over the scan — a second Exchange would mean the scoring phase itself
-    // started shuffling (the single one here is the final presentation sort)
-    assert("Exchange".r.findAllMatchIn(p).length == 1, p.take(2000))
+    // over the scan
+    mapOnlyThenOneSortedPartition(p)
     assert(p.contains("token_stats"), p.take(2000))
   }
 
   test("q_classify_score: trained-filter scoring is map-only; features computed once") {
     val p = plan("q_classify_score")
     // scoring with literal weights must stay a stacked pair of map-only
-    // projects over the scan — the one Exchange is the presentation sort
-    assert("Exchange".r.findAllMatchIn(p).length == 1, p.take(2000))
+    // projects over the scan
+    mapOnlyThenOneSortedPartition(p)
     // the feature array is materialized in its OWN projection (the
     // multiply-referenced __feat alias keeps CollapseProject away): the
     // sigmoid reads it 6 times, so a collapsed plan would repeat every

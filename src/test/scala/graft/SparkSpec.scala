@@ -13,7 +13,8 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
-  def sf(name: String) = spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")
+  /** Table `name` of the sf0.001 test data, opened once per session. */
+  def sf(name: String) = catalog.Shared.T(spark, "/root/testdata/sf0.001", name)
 
   /** The number of Spark jobs `run` starts. Listener delivery is FIFO, so
     * once a marker job's start arrives every earlier start has too: one

@@ -603,7 +603,7 @@ class StreamingSpec extends SparkSpec {
 
   test("semanticScreenStream flags incoming vectors near the eval probes") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val emb = sf("embeddings")
     val probes = emb.filter(col("vec_id") < 3)
     val rows = emb.filter(col("vec_id").isin(1L, 100L))
       .select(col("vec_id"), col("embedding"))
