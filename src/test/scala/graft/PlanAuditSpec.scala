@@ -129,7 +129,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Coalesce 1"), p.take(2000))
   }
 
-  test("q_text_repetition: scoring is one map pass, sorted in one partition with no shuffle") {
+  test("q_text_repetition: scoring is one map pass; one sorted partition, no shuffle") {
     val p = plan("q_text_repetition")
     // the native token_stats kernel keeps all four ratios in one projection
     // over the scan
