@@ -19,7 +19,7 @@ object Bench {
     // untimed warmup: JIT/codegen/scheduler spin-up otherwise lands on
     // whichever query happens to run first
     spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+    try catalog.Shared.T(spark, sfDir, "lineitem").limit(1000)
       .write.mode("overwrite").format("noop").save()
     catch { case _: Throwable => () }
     // untimed index preparation: q_embed_lsh/q_embed_ivf measure the

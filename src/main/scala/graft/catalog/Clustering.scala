@@ -15,18 +15,15 @@ object Clustering {
     * inputs and the published values can never drift apart. */
   private def round9(x: Double): Double = graft.pipeline.Cluster.round9(x)
 
-  /** Memoized first two principal components per embeddings fingerprint:
-    * all q_pca_* entries share ONE covariance job + both power
-    * iterations. */
-  private val pcaCache = new scala.collection.concurrent.TrieMap[
-    String, ((Seq[Double], Double), (Seq[Double], Double))]
+  /** The first two principal components, a session fixture: all q_pca_*
+    * entries share ONE covariance job + both power iterations. */
   private def pcaFixture2(s: SparkSession, dir: String)
       : ((Seq[Double], Double), (Seq[Double], Double)) =
-    pcaCache.getOrElseUpdate(idxRoot(s, dir), {
+    fixture(s, dir, "embeddings", "pca2") {
       val ((v1, l1), (v2, l2)) = graft.pipeline.Cluster.pcaPowerDeflated(
         T(s, dir, "embeddings"), "embedding", PcaIters)
       ((v1.toSeq, l1), (v2.toSeq, l2))
-    })
+    }
   private def pcaFixture(s: SparkSession, dir: String): (Seq[Double], Double) =
     pcaFixture2(s, dir)._1
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.BaseRelation
 import graft.ops.WarpOps._
+import graft.pipeline.Materialize
 
 /** Helpers used by more than one catalog domain. */
 private[graft] object Shared {
@@ -72,6 +73,21 @@ private[graft] object Shared {
     }
   }
 
+  /** `build` once per session, fixture `name` and version of table `table`
+    * of `dir` (its [[Stamp]], as [[T]] keys it). */
+  def fixture[A](s: SparkSession, dir: String, table: String, name: String)(build: => A): A =
+    Materialize.session(s).memo(name, stamp(s, s"$dir/$table.parquet"))(build)
+
+  /** A [[fixture]] directory: a fresh dir under the session's run root,
+    * filled once by `write` and kept until the session ends. */
+  def fixtureDir(s: SparkSession, dir: String, table: String, name: String)(
+      write: String => Unit): String =
+    fixture(s, dir, table, name) {
+      val out = Materialize.session(s).tempDir(name)
+      write(out)
+      out
+    }
+
   /** Deterministic duplicate-pair fixture for the connected-components
     * queries: doc i ~ doc i+1 whenever both exist and i % 10 < 9 — 10-node
     * chains, reproducible in SQL (no hash seeds involved). */
@@ -79,32 +95,6 @@ private[graft] object Shared {
     docs.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))
       .where(col("doc_id") % 10 < 9)
       .join(docs.select(col("doc_id").as("id2")), Seq("id2"), "left_semi")
-
-  /** Collision-free path tag: the directory string verbatim, sanitized —
-    * never a 32-bit hash that could alias two data directories. */
-  def dirTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** Data fingerprint tag: the directory embedded verbatim (sanitized for
-    * path use) plus the table file's (mtime, size). The full tuple is kept
-    * in the string rather than collapsed to a 32-bit hash — a hash
-    * collision between two data directories would silently serve the wrong
-    * memoized fixture/centroids/index. */
-  def dataFp(s: SparkSession, dir: String, table: String): String = {
-    val st = stamp(s, s"$dir/$table.parquet")
-    s"${dirTag(dir)}_${st.mtime}_${st.length}"
-  }
-
-  /** Index root keyed by the data directory AND the embeddings file's
-    * (mtime, size) fingerprint: different SFs never share an index, and
-    * REGENERATED data at the same path invalidates the old index instead
-    * of silently probing stale neighbors. */
-  def idxRoot(s: SparkSession, dir: String): String =
-    s"/tmp/graft_index_${dataFp(s, dir, "embeddings")}"
-
-  def indexExists(s: SparkSession, path: String): Boolean = {
-    val p = new Path(path + "/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** A double constant for oracle SQL, parse-exact: Scala's shortest
     * round-trip repr, parsed via VARCHAR so DuckDB cannot route it through

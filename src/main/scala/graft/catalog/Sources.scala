@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.functions._
 import graft.ops.WarpOps._
 import graft.functions.WarpAggregates.dsum
+import graft.pipeline.Materialize
 import Shared._
 
 /** Sources and sinks: file-format and database round-trips, crawl/HTTP
@@ -15,12 +16,11 @@ object Sources {
     //      QBECSVStep.swift:135): write with the reference's formatting,
     //      read back with header dedup + locale parse + type inference
     Q("q_csv_roundtrip", (s, dir) => {
-      // export fingerprint-cached (the q_dbf_roundtrip recipe): the bench
-      // then measures the READ + type-inference path, which is the
+      // the export is a session fixture (the q_dbf_roundtrip recipe): the
+      // bench then measures the READ + type-inference path, which is the
       // operator; the write ran once and is timed by its first invocation
-      val out = s"/tmp/graft_csv_${dataFp(s, dir, "customer")}"
-      if (!indexExists(s, out))
-        graft.sources.CsvSource.write(T(s, dir, "customer"), out)
+      val out = fixtureDir(s, dir, "customer", "csv")(
+        graft.sources.CsvSource.write(T(s, dir, "customer"), _))
       val back = graft.sources.CsvSource.inferTyped(
         graft.sources.CsvSource.read(s, out))
       back.select(
@@ -36,10 +36,8 @@ object Sources {
     // ---- JSON sink + source round-trip with shape detection
     //      (JSONStream.swift:16-168)
     Q("q_json_roundtrip", (s, dir) => {
-      val out = s"/tmp/graft_json_${dataFp(s, dir, "supplier")}"
-      if (!indexExists(s, out))
-        graft.sources.JsonSource.write(
-          T(s, dir, "supplier").selectColumns(Seq("s_suppkey", "s_name", "s_nationkey")), out)
+      val out = fixtureDir(s, dir, "supplier", "json")(graft.sources.JsonSource.write(
+        T(s, dir, "supplier").selectColumns(Seq("s_suppkey", "s_name", "s_nationkey")), _))
       graft.sources.JsonSource.read(s, out)
         .select(col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
           col("s_nationkey").cast("long").as("s_nationkey"))
@@ -54,27 +52,24 @@ object Sources {
       val sup = T(s, dir, "supplier").select(
         col("s_suppkey").as("suppkey"), col("s_name").as("name"),
         col("s_acctbal").as("acctbal"), col("s_nationkey").as("nation"))
-      // export fingerprint-cached like the similarity indexes: the write
-      // runs driver-side at plan-build time, so an uncached export charges
-      // every bench iteration a full file re-write; keyed by the supplier
-      // file's (dir, mtime, size) so regenerated data still re-exports
-      val path = s"/tmp/graft_dbf_${dataFp(s, dir, "supplier")}.dbf"
-      if (!new java.io.File(path).exists())
-        graft.sources.DbfSource.write(sup, path)
+      // the export is a session fixture like the similarity indexes: the
+      // write runs driver-side at plan-build time, so a per-call export
+      // would charge every bench iteration a full file re-write
+      val path = fixtureDir(s, dir, "supplier", "dbf")(d =>
+        graft.sources.DbfSource.write(sup, s"$d/supplier.dbf")) + "/supplier.dbf"
       graft.sources.DbfSource.read(s, path).orderBy("suppkey")
     }, Sql("""SELECT s_suppkey AS suppkey, s_name AS name,
          s_acctbal AS acctbal, s_nationkey AS nation
          FROM supplier ORDER BY suppkey""")),
 
     // ---- Avro roundtrip (beyond-reference row-format ingestion): export
-    //      events once per data fingerprint as per-partition containers,
+    //      events once per session as per-partition containers,
     //      read back distributed (one task per file) with a filter —
     //      timestamps travel as local-timestamp-micros logical type
     Q("q_avro_roundtrip", (s, dir) => {
       val ev = T(s, dir, "events")
         .selectColumns(Seq("event_id", "ts", "user_id", "event_type", "value"))
-      val path = s"/tmp/graft_avro_${dataFp(s, dir, "events")}"
-      graft.sources.AvroSource.writeOnce(ev, path)
+      val path = fixtureDir(s, dir, "events", "avro")(graft.sources.AvroSource.write(ev, _))
       graft.sources.AvroSource.read(s, path)
         .warpFilter(col("event_type") === "click")
         .selectColumns(Seq("event_id", "user_id", "value", "ts"))
@@ -83,12 +78,11 @@ object Sources {
          WHERE event_type = 'click' ORDER BY event_id""")),
 
     // ---- ORC roundtrip (beyond-reference columnar interchange): export
-    //      customer once per data fingerprint, read back with a filtered
+    //      customer once per session, read back with a filtered
     //      projection — pushdown into the ORC scan pinned in PlanAuditSpec
     Q("q_orc_roundtrip", (s, dir) => {
       val cust = T(s, dir, "customer")
-      val path = s"/tmp/graft_orc_${dataFp(s, dir, "customer")}"
-      graft.sources.OrcSource.writeOnce(cust, path)
+      val path = fixtureDir(s, dir, "customer", "orc")(graft.sources.OrcSource.write(cust, _))
       graft.sources.OrcSource.read(s, path)
         .warpFilter(col("c_mktsegment") === "BUILDING")
         .selectColumns(Seq("c_custkey", "c_name", "c_acctbal"))
@@ -103,7 +97,7 @@ object Sources {
     Q("q_jdbc_roundtrip", (s, dir) => {
       val sup = T(s, dir, "supplier")
         .selectColumns(Seq("s_suppkey", "s_name", "s_acctbal", "s_nationkey"))
-      val db = s"/tmp/graft_derby_${dirTag(dir)}"
+      val db = s"${Materialize.session(s).tempDir("derby")}/db"
       graft.sources.JdbcSource.derbyWrite(sup, db, "supplier_rt")
       graft.sources.JdbcSource.derby(s, db, "supplier_rt")
         .orderBy("s_suppkey")
@@ -122,7 +116,7 @@ object Sources {
       val conn = pg.ensureLocalServer()
       val nat = T(s, dir, "nation")
         .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
-      val tbl = s"nation_rt_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
+      val tbl = s"nation_rt_$dir".replaceAll("[^A-Za-z0-9_]", "_")
       pg.writeTable(nat, conn, tbl)
       pg.read(s, conn, tbl, "n_nationkey", numPartitions = 4)
         .orderBy("n_nationkey")
@@ -143,7 +137,7 @@ object Sources {
           col("s_name").cast("string").as("s_name"),
           col("s_nationkey").cast("long").as("s_nationkey"),
           col("s_acctbal").cast("double").as("s_acctbal"))
-      val tbl = s"supplier_rr_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
+      val tbl = s"supplier_rr_$dir".replaceAll("[^A-Za-z0-9_]", "_")
       pg.writeTableDistributed(sup.repartition(3), conn, tbl)
       pg.readRange(s, conn, tbl, "s_suppkey", numPartitions = 4)
         .orderBy("s_suppkey")
@@ -164,7 +158,7 @@ object Sources {
           col("o_orderstatus").cast("string").as("o_orderstatus"),
           col("o_totalprice").cast("double").as("o_totalprice"))
         .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_${dirTag(dir)}.sqlite"
+      val path = s"${Materialize.session(s).tempDir("sqlite")}/orders.sqlite"
       graft.sources.SqliteFile.write(ord, path, "orders_rt")
       graft.sources.SqliteFile.read(s, path, "orders_rt")
         .orderBy("o_orderkey")
@@ -189,7 +183,7 @@ object Sources {
           col("o_custkey").cast("long").as("o_custkey"),
           col("o_totalprice").cast("double").as("o_totalprice"))
         .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_idx_${dirTag(dir)}.sqlite"
+      val path = s"${Materialize.session(s).tempDir("sqlite_idx")}/orders.sqlite"
       graft.sources.SqliteFile.writeTablesIndexed(
         Seq(("orders_ix", ord, Seq("o_custkey"))), path)
       graft.sources.SqliteFile.readIndexed(s, path, "orders_ix", "o_custkey",
@@ -215,7 +209,7 @@ object Sources {
           col("o_orderstatus").cast("string").as("o_orderstatus"),
           col("o_totalprice").cast("double").as("o_totalprice"))
         .orderBy("o_orderkey")
-      val path = s"/tmp/graft_sqlite_cidx_${dirTag(dir)}.sqlite"
+      val path = s"${Materialize.session(s).tempDir("sqlite_cidx")}/orders.sqlite"
       graft.sources.SqliteFile.writeTablesIndexedMulti(
         Seq(("orders_cx", ord, Seq(Seq("o_custkey", "o_orderstatus")))), path)
       graft.sources.SqliteFile.readIndexedRangeMulti(s, path, "orders_cx",
@@ -243,7 +237,7 @@ object Sources {
           col("c_custkey").cast("long").as("c_custkey"),
           col("c_nationkey").cast("long").as("c_nationkey"),
           col("c_acctbal").cast("double").as("c_acctbal"))
-      val path = s"/tmp/graft_sqlite_worowid_${dirTag(dir)}.sqlite"
+      val path = s"${Materialize.session(s).tempDir("sqlite_worowid")}/customer.sqlite"
       graft.sources.SqliteFile.writeTablesWithoutRowid(
         Seq(("customer_wr", cust, Seq("c_custkey"))), path)
       graft.sources.SqliteFile.read(s, path, "customer_wr")
@@ -283,7 +277,7 @@ object Sources {
     //      (null-safe match) → keyed delete, then read the surviving table.
     //      Oracle = the equivalent DuckDB UPDATE/DELETE algebra.
     Q("q_warehouse_mutate", (s, dir) => {
-      val root = s"/tmp/graft_wh_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("wh")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       wh.create("nation_mut",
         T(s, dir, "nation").calculate(Seq("flag" -> lit("old"))))
@@ -316,7 +310,7 @@ object Sources {
     //      swap; file budget from filesystem metadata, no table scan.
     //      The read-back aggregate proves rows survive byte-identical.
     Q("q_compact", (s, dir) => {
-      val root = s"/tmp/graft_whc_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whc")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       wh.create("ord_frag", T(s, dir, "orders").repartition(64))
       wh.compact("ord_frag", targetBytes = 256L << 20)
@@ -334,18 +328,17 @@ object Sources {
     //      scattered across files, then clusterBy(l_orderkey) —
     //      repartitionByRange + in-file sort gives each parquet file a
     //      disjoint key range, so the probe's pushed filter skips every
-    //      row group outside [1000,2000). Cluster step is fingerprint-
-    //      cached (the index recipe): the PROBE is the measured path.
+    //      row group outside [1000,2000). The clustered table is a session
+    //      fixture (the index recipe): the PROBE is the measured path.
     Q("q_cluster_prune", (s, dir) => {
-      val root = s"/tmp/graft_whk_${dataFp(s, dir, "lineitem")}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      if (!wh.exists("li_clu")) {
+      val root = fixtureDir(s, dir, "lineitem", "li_clu") { root =>
+        val wh = new graft.sources.ParquetWarehouse(s, root)
         wh.create("li_clu", T(s, dir, "lineitem")
           .selectColumns(Seq("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"))
           .repartition(16))
         wh.clusterBy("li_clu", Seq("l_orderkey"), targetBytes = 1L << 20)
       }
-      wh.read("li_clu")
+      new graft.sources.ParquetWarehouse(s, root).read("li_clu")
         .warpFilter(col("l_orderkey") >= 1000 && col("l_orderkey") < 2000)
         .agg(count(lit(1)).as("n"),
              dsum(col("l_quantity")).as("sum_qty"),
@@ -357,19 +350,18 @@ object Sources {
 
     // ---- 2-D Hilbert-curve clustering + probe on the SECOND dimension:
     //      a 1-D sort would leave l_suppkey full-width per file; the
-    //      curve layout tightens both footers. Cluster step fingerprint-
-    //      cached; the probe is the measured path.
+    //      curve layout tightens both footers. The clustered table is a
+    //      session fixture; the probe is the measured path.
     Q("q_curve_prune", (s, dir) => {
-      val root = s"/tmp/graft_whv_${dataFp(s, dir, "lineitem")}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
-      if (!wh.exists("li_curve")) {
+      val root = fixtureDir(s, dir, "lineitem", "li_curve") { root =>
+        val wh = new graft.sources.ParquetWarehouse(s, root)
         wh.create("li_curve", T(s, dir, "lineitem")
           .selectColumns(Seq("l_orderkey", "l_suppkey", "l_quantity"))
           .repartition(16))
         wh.clusterByCurve("li_curve", "l_orderkey", "l_suppkey",
           order = 12, targetBytes = 1L << 20)
       }
-      wh.read("li_curve")
+      new graft.sources.ParquetWarehouse(s, root).read("li_curve")
         .warpFilter(col("l_suppkey") < 20 && col("l_orderkey") < 30000)
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
     }, Sql("""SELECT count(*) AS n,
@@ -379,7 +371,7 @@ object Sources {
     // ---- keyed diff of two table versions: added / removed / changed
     //      classification from ONE full-outer join
     Q("q_table_diff", (s, dir) => {
-      val root = s"/tmp/graft_whd_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whd")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       val nation = T(s, dir, "nation")
         .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
@@ -419,7 +411,7 @@ object Sources {
     // ---- warehouse MERGE (upsert): nations 0-9 get re-priced rows, 900+
     //      are brand-new — one anti-join + union rewrite
     Q("q_warehouse_merge", (s, dir) => {
-      val root = s"/tmp/graft_whm_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whm")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       wh.create("nation_m", T(s, dir, "nation")
         .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey")))
@@ -449,7 +441,7 @@ object Sources {
     //      in batch 1. The oracle reconstructs the full version history
     //      independently from the base table
     Q("q_warehouse_scd2", (s, dir) => {
-      val root = s"/tmp/graft_whscd_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whscd")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       val base = T(s, dir, "nation")
         .selectColumns(Seq("n_nationkey", "n_name", "n_regionkey"))
@@ -514,7 +506,7 @@ object Sources {
     // ---- warehouse ANALYZE: per-column row/null/NDV/min/max stats — the
     //      stats surface pruning and join planning feed from
     Q("q_warehouse_stats", (s, dir) => {
-      val root = s"/tmp/graft_whst_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whst")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       wh.create("cust_s", T(s, dir, "customer").selectColumns(
         Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment")))
@@ -544,9 +536,8 @@ object Sources {
     // ---- XML sink + source round-trip (QBEXMLStep.swift:41-110): write
     //      the grid document, read it back (header dedup, empty -> null)
     Q("q_xml_roundtrip", (s, dir) => {
-      val out = s"/tmp/graft_xml_${dataFp(s, dir, "region")}.xml"
-      if (!new java.io.File(out).exists())
-        graft.sources.XmlSource.write(T(s, dir, "region"), out)
+      val out = fixtureDir(s, dir, "region", "xml")(d =>
+        graft.sources.XmlSource.write(T(s, dir, "region"), s"$d/region.xml")) + "/region.xml"
       graft.sources.XmlSource.read(s, out)
         .select(col("r_regionkey").cast("int").as("r_regionkey"), col("r_name"))
         .orderBy("r_regionkey")
@@ -559,7 +550,7 @@ object Sources {
     //      cross-version diff — dataset reproducibility, the thing a
     //      100 TB training pipeline needs from its corpus store.
     Q("q_time_travel", (s, dir) => {
-      val root = s"/tmp/graft_whv_${dirTag(dir)}"
+      val root = Materialize.session(s).tempDir("whv")
       val wh = new graft.sources.ParquetWarehouse(s, root)
       wh.create("nation_v",
         T(s, dir, "nation").calculate(Seq("flag" -> lit("old"))))

@@ -14,42 +14,39 @@ import Shared._
   * terminated: every result reads its memory sink (or Postgres), not the
   * files. */
 object Streaming {
-  /** Runs `body` with spark.sql.shuffle.partitions temporarily lowered for
-    * the REAL-streaming catalog rows. A stateful streaming operator opens
-    * one state-store instance PER shuffle partition PER micro-batch — at
-    * the session's 32 partitions each tiny bounded fixture pays 32 store
-    * inits + 32 delta-file commits per stateful operator per batch, pure
-    * fixed overhead (measured: q_stream_neardup 6.2 s, q_stream_interval
-    * _join 8.2 s isolated at sf0.1, dominated by store churn, not rows).
-    * Results are partition-count independent (hash-partitioning by key is
-    * semantically neutral; every row's output is key-local), pinned by the
-    * unchanged oracle hashes. Production sizes this to the cluster — the
-    * number is a tuning knob, not a semantic one; streaming queries clone
-    * the session conf at start(), so the scoped set/restore is race-free. */
-  private def streamShuffle[A](s: SparkSession, n: Int = 4)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  /** spark.sql.shuffle.partitions for the REAL-streaming catalog rows. A
+    * stateful streaming operator opens one state-store instance PER shuffle
+    * partition PER micro-batch — at the session's 32 partitions each tiny
+    * bounded fixture pays 32 store inits + 32 delta-file commits per
+    * stateful operator per batch, pure fixed overhead (measured:
+    * q_stream_neardup 6.2 s, q_stream_interval_join 8.2 s isolated at
+    * sf0.1, dominated by store churn, not rows). Results are
+    * partition-count independent (hash-partitioning by key is semantically
+    * neutral; every row's output is key-local), pinned by the unchanged
+    * oracle hashes. Production sizes this to the cluster — the number is a
+    * tuning knob, not a semantic one; streaming queries clone the session
+    * conf at start(), so the scoped set/restore is race-free. */
+  private val StreamShuffle = "spark.sql.shuffle.partitions" -> "4"
 
-  /** Scoped skip of the trailing NO-DATA micro-batch (r15, VERDICT r14
-    * item 5): a bounded AvailableNow run otherwise appends one empty batch
-    * whose only work is watermark-driven state EVICTION — measured at
-    * ~0.7-0.9 s of pure machinery (planning + empty addBatch + state
-    * commit) per streaming query. Output-NEUTRAL only where no operator
-    * emits on watermark advance: inner stream-stream joins (matches emit
-    * in the data batch) and NoTimeout flatMapGroupsWithState (no-data
-    * batches invoke nothing). NOT for append-mode windowed aggregations,
-    * whose final windows emit exactly in that batch — those entries keep
-    * the default. Unbounded production runs keep no-data batches ON for
-    * state cleanup; this wrapper is scoped per entry and restores the
-    * previous value. */
-  private def streamNoFinalBatch[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
+  /** Skip of the trailing NO-DATA micro-batch (r15, VERDICT r14 item 5): a
+    * bounded AvailableNow run otherwise appends one empty batch whose only
+    * work is watermark-driven state EVICTION — measured at ~0.7-0.9 s of
+    * pure machinery (planning + empty addBatch + state commit) per
+    * streaming query. Output-NEUTRAL only where no operator emits on
+    * watermark advance: inner stream-stream joins (matches emit in the data
+    * batch) and NoTimeout flatMapGroupsWithState (no-data batches invoke
+    * nothing). NOT for append-mode windowed aggregations, whose final
+    * windows emit exactly in that batch — those entries keep the default.
+    * Unbounded production runs keep no-data batches ON for state cleanup. */
+  private val NoFinalBatch = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** Runs `body` with `confs` set on the session, then puts each key back
+    * as it was: its previous value, or unset when it had none. */
+  private def withConf[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val before = s.conf.getAll
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) => before.get(k).fold(s.conf.unset(k))(s.conf.set(k, _)) }
   }
 
   /** DuckDB oracle replaying the md5-tier SimHash pairs of
@@ -125,9 +122,8 @@ object Streaming {
     //      stream-static join: no watermark, no sentinel required.
     Q("q_stream_scd2_enrich", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
-      val root = s"/tmp/graft_whse_${dirTag(dir)}"
-      val wh = new graft.sources.ParquetWarehouse(s, root)
+      withConf(s, StreamShuffle) {
+      val wh = new graft.sources.ParquetWarehouse(s, m.tempDir("graft_whse"))
       val base = T(s, dir, "nation").selectColumns(Seq("n_nationkey", "n_name"))
       val cutMs = 1704326400000L // 2024-01-04: splits the event fixture
       wh.scd2Init("dim_e", base, 0L)
@@ -221,8 +217,8 @@ object Streaming {
     Q("q_stream_pg_sink", (s, dir) => Materialize(s) { m =>
       val pg = graft.sources.PgWire
       val conn = pg.ensureLocalServer()
-      val tbl = s"stream_sink_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      streamShuffle(s) {
+      val tbl = s"stream_sink_$dir".replaceAll("[^A-Za-z0-9_]", "_")
+      withConf(s, StreamShuffle) {
         val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
           .select(col("event_id").cast("long").as("event_id"),
             col("event_type").cast("string").as("event_type"),
@@ -258,8 +254,8 @@ object Streaming {
     Q("q_stream_pg_source", (s, dir) => {
       val pg = graft.sources.PgWire
       val conn = pg.ensureLocalServer()
-      val tbl = s"stream_src_${dirTag(dir)}".replaceAll("[^A-Za-z0-9_]", "_")
-      streamShuffle(s) {
+      val tbl = s"stream_src_$dir".replaceAll("[^A-Za-z0-9_]", "_")
+      withConf(s, StreamShuffle) {
         val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
           .select(col("event_id").cast("long").as("event_id"),
             col("event_type").cast("string").as("event_type"),
@@ -295,7 +291,7 @@ object Streaming {
     //      (ts, event_id) chronological rank
     Q("q_stream_cap", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
+      withConf(s, StreamShuffle) {
       import s.implicits._
       val ev = T(s, dir, "events").filter(col("event_id") < 20000L)
         .select(col("event_id").cast("long").as("_1"),
@@ -334,7 +330,7 @@ object Streaming {
       // dropDuplicatesWithinWatermark emits each first occurrence IN its
       // data batch (the watermark only EVICTS dedup state), so the
       // trailing no-data batch is skippable machinery here too
-      streamShuffle(s) { streamNoFinalBatch(s) {
+      withConf(s, StreamShuffle, NoFinalBatch) {
       val docs = T(s, dir, "documents")
       val hist = docs.warpFilter(col("doc_id") < 250)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -378,7 +374,7 @@ object Streaming {
       s.table(qname)
         .select(col("doc_id").as("new_id"), col("hist_id"), col("jaccard"))
         .orderBy("new_id", "hist_id")
-      } }
+      }
     }, Sql(streamNearDupOracle(16, 4, 0.5))),
 
     // ---- second REAL streaming driver row: the stateless ingest-time
@@ -438,8 +434,8 @@ object Streaming {
       import org.apache.spark.sql.types.TimestampType
       // inner join: every output row emits in its data batch, so the
       // trailing no-data batch is pure state-eviction machinery — skipped
-      // (streamNoFinalBatch; profiled in plans/r15/stream_profile.txt)
-      streamShuffle(s) { streamNoFinalBatch(s) {
+      // (NoFinalBatch; profiled in plans/r15/stream_profile.txt)
+      withConf(s, StreamShuffle, NoFinalBatch) {
       // LTZ event time (watermarks reject NTZ); session tz is UTC so the
       // instant is unchanged, and the dumped mts is cast back to NTZ.
       // Bounded fixture (the q_stream_neardup discipline): event_id <
@@ -477,7 +473,7 @@ object Streaming {
         .select(col("event_id"), col("mts").cast("timestamp_ntz").as("mts"),
           col("mark_total"))
         .orderBy("event_id", "mts")
-      } }
+      }
     },
       // Stream-stream interval join: the same [ts - 1h, ts] range
       // predicate as the streaming query, in plain SQL over the same
@@ -553,7 +549,7 @@ object Streaming {
       // trailing no-data batch is skippable machinery. q_stream_trending
       // is the opposite case — its event-time timeouts FIRE in that
       // batch — and keeps the default.
-      streamShuffle(s) { streamNoFinalBatch(s) {
+      withConf(s, StreamShuffle, NoFinalBatch) {
       import s.implicits._
       val gapMs = 2L * 3600 * 1000
       val sentinelMs = 4102444800000L // 2100-01-01, past any fixture event
@@ -584,7 +580,7 @@ object Streaming {
         .select(col("user_id"), unix_millis(col("started")).as("started_ms"),
           unix_millis(col("ended")).as("ended_ms"), col("events"))
         .orderBy("user_id", "started_ms")
-      } }
+      }
     },
       // The streaming row's oracle is the SAME session construction over the
       // bounded fixture, WITHOUT the last-session exclusion: the per-user
@@ -619,7 +615,7 @@ object Streaming {
     //      discipline). Oracle: the q_trending SQL on the same slice.
     Q("q_stream_trending", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
+      withConf(s, StreamShuffle) {
       import s.implicits._
       val winMs = 86400000L
       val sentinelMs = 4102444800000L // 2100-01-01, past any fixture event
@@ -670,7 +666,7 @@ object Streaming {
     //      left-joined, share = one double division of exact counts.
     Q("q_stream_histogram", (s, dir) => Materialize(s) { m =>
       import org.apache.spark.sql.types.TimestampType
-      streamShuffle(s) {
+      withConf(s, StreamShuffle) {
       import s.implicits._
       val winMs = 86400000L
       val sentinelMs = 4102444800000L

@@ -14,23 +14,19 @@ object Text {
   /** Trained-merge-list fixture for q_bpe_segment: in a deployment the
     * merge list ships WITH the tokenizer (it is the trained artifact);
     * deriving it per probe invocation would charge segmentation the whole
-    * training run. Memoized per data fingerprint (the fixtureVec pattern);
-    * 8 merges keeps the chained fold inside codegen limits (Bpe.segment's
-    * scaladoc: long merge lists belong in a native kernel). */
-  private val bpeMergeCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]
+    * training run. A session fixture; 8 merges keeps the chained fold
+    * inside codegen limits (Bpe.segment's scaladoc: long merge lists
+    * belong in a native kernel). */
   private def bpeMergeFixture(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergeCache.getOrElseUpdate(dataFp(s, dir, "documents"),
+    fixture(s, dir, "documents", "bpe_merges")(
       graft.pipeline.Bpe.trainMerges(T(s, dir, "documents"), "text", numMerges = 8)
         .orderBy("rank").collect()
         .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq)
 
   /** Vocabulary fixture for q_bpe_encode — ships with the merges as the
-    * tokenizer artifact; same memo discipline. */
-  private val bpeVocabCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[String]]
+    * tokenizer artifact; a session fixture too. */
   private def bpeVocabFixture(s: SparkSession, dir: String): Seq[String] =
-    bpeVocabCache.getOrElseUpdate(dataFp(s, dir, "documents"),
+    fixture(s, dir, "documents", "bpe_vocab")(
       graft.pipeline.Bpe.vocabulary(T(s, dir, "documents"), "text",
           bpeMergeFixture(s, dir))
         .orderBy("id").collect().map(_.getAs[String]("token")).toSeq)

@@ -73,8 +73,9 @@ object Cluster {
     // null vectors are DROPPED (they have no distance to any centroid and
     // would NPE the init collect); float and double element vectors both
     // work — init widens per element exactly like the dot kernel
-    val base = m.pin(df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull))
+    val vecs = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+      .filter(col("__v").isNotNull)
+    val base = m.pin(vecs)
     val init = base.orderBy(col("__id")).limit(k)
       .select(col("__v")).collect()
       .map(r => Similarity.vecToDouble(r.getSeq[Any](0)))
@@ -95,8 +96,10 @@ object Cluster {
       }
       cents = next
     }
-    // the assignment frame reads base lazily: it is the caller's now
-    val out = assign(m.keep(base), cents)
+    // the assignment reads `df` again, not the pin, so the pin is released
+    // here: a caller that consumes the assignment eagerly (a broadcast join)
+    // would otherwise leave it persisted with no owner
+    val out = assign(vecs, cents)
       .select(col("__id").as(idCol), col("__c").as("cluster"),
         col("__d").as("dist2"))
     (out, cents)

@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -17,10 +20,15 @@ import org.apache.spark.storage.StorageLevel
   * so its blocks would outlive the call and land on whatever runs next in
   * the JVM. Reliable checkpoint files stay under the checkpoint dir, where
   * `spark.cleaner.referenceTracking.cleanCheckpoints` governs them. No
-  * release blocks. */
-final class Materialize private (spark: SparkSession) {
+  * release blocks.
+  *
+  * [[Materialize.session]] is the scope that lives as long as a
+  * SparkContext: its dirs sit under the context's run root and its
+  * [[memo]] holds the fixtures the catalog derives from its tables. */
+final class Materialize private (spark: SparkSession, runRoot: Option[Path]) {
   private val owned = ArrayBuffer.empty[(DataFrame, () => Unit)]
-  private val dirs = ArrayBuffer.empty[Path]
+  private val dirs = ArrayBuffer.empty[Path] ++ runRoot
+  private lazy val memos = new ConcurrentHashMap[(String, Any), Once[_]]()
 
   private def own(df: DataFrame)(release: => Unit): DataFrame = {
     owned += (df -> (() => release))
@@ -55,28 +63,69 @@ final class Materialize private (spark: SparkSession) {
     if (i < 0) None else Some(owned.remove(i)._2)
   }
 
-  /** A fresh driver-local directory, deleted with its contents on exit. */
-  def tempDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    dirs += dir
-    dir.toString
+  /** A fresh driver-local directory, deleted with its contents on exit:
+    * a call's scope makes it in `java.io.tmpdir`, the session scope under
+    * its run root (so a result may read it lazily until the session ends). */
+  def tempDir(prefix: String): String = runRoot match {
+    case Some(root) => Files.createTempDirectory(root, prefix).toString
+    case None =>
+      val dir = Files.createTempDirectory(prefix)
+      dirs += dir
+      dir.toString
   }
 
-  private def close(): Unit = {
+  /** `build` once per `(name, key)` for the life of this scope; a build
+    * that throws is retried by the next call. Builds of different keys
+    * may nest. */
+  def memo[A](name: String, key: Any)(build: => A): A =
+    memos.computeIfAbsent((name, key), _ => new Once(build)).value.asInstanceOf[A]
+
+  /** The session scope's run root. */
+  private[graft] def root: Option[String] = runRoot.map(_.toString)
+
+  private def close(): Unit = synchronized {
     owned.reverseIterator.foreach(_._2())
+    owned.clear()
     for (d <- dirs if Files.exists(d)) {
       val walk = Files.walk(d)
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(p => { Files.deleteIfExists(p); () })
       finally walk.close()
     }
+    dirs.clear()
   }
+}
+
+/** A value built on first use, by one thread. */
+private final class Once[A](build: => A) {
+  lazy val value: A = build
 }
 
 object Materialize {
   /** Run `body` in a fresh scope and release what it owns on exit. */
   def apply[A](spark: SparkSession)(body: Materialize => A): A = {
-    val m = new Materialize(spark)
+    val m = new Materialize(spark, None)
     try body(m) finally m.close()
+  }
+
+  private val sessions = scala.collection.mutable.Map.empty[SparkContext, Materialize]
+
+  /** The scope of `spark`'s SparkContext: one run root, a fresh temp dir
+    * in `java.io.tmpdir`, deleted with everything under it when the
+    * context stops or the JVM exits. */
+  def session(spark: SparkSession): Materialize = sessions.synchronized {
+    val sc = spark.sparkContext
+    sessions.getOrElseUpdate(sc, {
+      val m = new Materialize(spark, Some(Files.createTempDirectory("graft_run")))
+      val onExit = sys.addShutdownHook(m.close())
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+          sessions.synchronized(sessions.remove(sc))
+          m.close()
+          scala.util.Try(onExit.remove()) // fails once the JVM is exiting
+        }
+      })
+      m
+    })
   }
 }

@@ -261,12 +261,4 @@ object AvroSource {
     val marker = fs0.create(new Path(d, "_SCHEMA.avsc"), true)
     try marker.write(schemaJson.getBytes("UTF-8")) finally marker.close()
   }
-
-  /** [[write]] once per (path, fingerprint) — the bench/export memo used
-    * by the roundtrip query. */
-  def writeOnce(df: DataFrame, dir: String): Unit = {
-    val fs = new Path(dir).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_SCHEMA.avsc"))) write(df, dir)
-  }
 }

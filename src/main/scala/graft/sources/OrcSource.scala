@@ -14,10 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * wrong at any scale).
   *
   * Writes are plain distributed `DataFrameWriter` jobs: one file per
-  * partition, `partitionBy` for hive-style layout. [[writeOnce]] guards
-  * with the `_SUCCESS` marker (the similarity-index discipline) so
-  * plan-build-time exports are charged once per dataset, not once per
-  * invocation.
+  * partition, `partitionBy` for hive-style layout.
   */
 object OrcSource {
 
@@ -26,12 +23,5 @@ object OrcSource {
   def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
-
-  /** Export unless a completed export already exists at `path`. */
-  def writeOnce(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) write(df, path, partitionBy)
   }
 }

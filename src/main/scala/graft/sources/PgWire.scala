@@ -1225,7 +1225,10 @@ object PgWire {
       .getOrElse(throw new IllegalStateException("initdb not found: PostgreSQL not installed"))
       .getAbsolutePath
     val pgctl = new java.io.File(initdb).getParent + "/pg_ctl"
+    // fixed paths, not a session's run root: the server, its data dir and
+    // its log are shared by every JVM and query that reaches this port
     val data = "/tmp/graft_pgdata"
+    val log = "/tmp/graft_pg.log"
     val asRoot = System.getProperty("user.name") == "root"
     def run(label: String, cmd: String): Unit = {
       val (rc, out) =
@@ -1241,7 +1244,7 @@ object PgWire {
     // start may lose a cross-PROCESS race (forked bench JVMs share the
     // cluster): a failed start is fine as long as SOMEONE got it up
     try run("pg_ctl start",
-      s"$pgctl -D $data -l /tmp/graft_pg.log -o '-p ${local.port} -k /tmp -c listen_addresses=127.0.0.1' start")
+      s"$pgctl -D $data -l $log -o '-p ${local.port} -k /tmp -c listen_addresses=127.0.0.1' start")
     catch { case e: IllegalStateException => if (listening(local)) () else throw e }
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
     while (!listening(local)) {

@@ -519,7 +519,7 @@ object SqliteFile {
     * PageFile (closed via task-completion listener). */
   def readIndexedMulti(spark: SparkSession, path: String, table: String,
                        columns: Seq[String], keys: Seq[Seq[Any]]): DataFrame = {
-    val (root, schema, ipk, idxRoot) = indexedMeta(path, table, columns)
+    val (root, schema, ipk, indexRoot) = indexedMeta(path, table, columns)
     require(keys.forall(_.length == columns.length),
       "every key tuple must have one value per requested column")
     val types = schema.fields.map(_.dataType)
@@ -531,7 +531,7 @@ object SqliteFile {
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => f.close()))
         vs.flatMap { v =>
-          indexSeekRowids(f, idxRoot, v).flatMap { rid =>
+          indexSeekRowids(f, indexRoot, v).flatMap { rid =>
             rowidSeek(f, root, rid).map { vals =>
               Row.fromSeq(types.indices.map { i =>
                 if (i == ipk) rid
@@ -561,13 +561,13 @@ object SqliteFile {
   def readIndexedRangeMulti(spark: SparkSession, path: String, table: String,
                             columns: Seq[String], lo: Seq[Any],
                             hi: Seq[Any]): DataFrame = {
-    val (root, schema, ipk, idxRoot) = indexedMeta(path, table, columns)
+    val (root, schema, ipk, indexRoot) = indexedMeta(path, table, columns)
     require(lo.length <= columns.length && lo.length == hi.length,
       "range bounds must cover the same (prefix of the) requested columns")
     val types = schema.fields.map(_.dataType)
     val rowids = {
       val f = new PageFile(path)
-      try indexRangeRowids(f, idxRoot, lo.map(toStored), hi.map(toStored)).sorted
+      try indexRangeRowids(f, indexRoot, lo.map(toStored), hi.map(toStored)).sorted
       finally f.close()
     }
     val rows = spark.sparkContext
@@ -625,7 +625,7 @@ object SqliteFile {
     columns.foreach(c =>
       require(cols.exists(_._1 == c), s"no column '$c' in $table"))
     val want = columns.map(_.toUpperCase)
-    val idxRoot = indexes(path).collectFirst {
+    val indexRoot = indexes(path).collectFirst {
       // a PARTIAL index (… WHERE …) only covers a subset — selecting one
       // would silently drop rows from the keyed read
       case (_, t, r, isql) if t == table &&
@@ -633,7 +633,7 @@ object SqliteFile {
         !isql.toUpperCase.matches("""(?s).*\)\s*WHERE\s.*""") => r
     }.getOrElse(throw new IllegalArgumentException(
       s"no complete index with leading columns (${columns.mkString(", ")}) on $table"))
-    (root, schema, ipk, idxRoot)
+    (root, schema, ipk, indexRoot)
   }
 
   /** (name, rootpage, createSql) for every table in the database. */
@@ -1288,9 +1288,9 @@ object SqliteFile {
         val root = b.buildTree(cellIt)
         val tableRow = ("table", table, table, root, createSql)
         val idxRows = idxPos.zipWithIndex.map { case (spec, k) =>
-          val idxRoot = b.buildIndexTree(keyLog(k).sortedRecords())
+          val indexRoot = b.buildIndexTree(keyLog(k).sortedRecords())
           val name = s"idx_${table}_${spec.map(_._1).mkString("_")}"
-          ("index", name, table, idxRoot,
+          ("index", name, table, indexRoot,
             s"""CREATE INDEX "$name" ON "$table" (${spec.map(c => s""""${c._1}"""").mkString(", ")})""")
         }
         tableRow +: idxRows

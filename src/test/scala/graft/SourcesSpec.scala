@@ -285,19 +285,20 @@ class SourcesSpec extends SparkSpec {
         java.time.LocalDateTime.of(1999, 12, 31, 23, 59, 59),
         java.sql.Date.valueOf("1970-01-01"), Seq.empty[String]))
     val df = spark.createDataFrame(rows, st).repartition(2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro").toString
-    graft.sources.AvroSource.write(df, dir)
-    // one container per partition + the schema marker
-    val files = new java.io.File(dir).list().sorted.toSeq
-    assert(files.count(_.endsWith(".avro")) == 2, files)
-    assert(files.contains("_SCHEMA.avsc"))
-    val back = graft.sources.AvroSource.read(spark, dir)
-    assert(back.schema == st.copy(fields = st.fields.map(_.copy(nullable = true))) ||
-      back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        st.fields.map(f => (f.name, f.dataType)).toSeq)
-    val a = df.orderBy("id").collect().toSeq
-    val b = back.orderBy("id").collect().toSeq
-    assert(a == b)
+    withTempDir("graft_avro") { dir =>
+      graft.sources.AvroSource.write(df, dir)
+      // one container per partition + the schema marker
+      val files = new java.io.File(dir).list().sorted.toSeq
+      assert(files.count(_.endsWith(".avro")) == 2, files)
+      assert(files.contains("_SCHEMA.avsc"))
+      val back = graft.sources.AvroSource.read(spark, dir)
+      assert(back.schema == st.copy(fields = st.fields.map(_.copy(nullable = true))) ||
+        back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+          st.fields.map(f => (f.name, f.dataType)).toSeq)
+      val a = df.orderBy("id").collect().toSeq
+      val b = back.orderBy("id").collect().toSeq
+      assert(a == b)
+    }
   }
 
   test("avro: mixed-schema directory resolves fields by NAME, not position") {
@@ -308,35 +309,37 @@ class SourcesSpec extends SparkSpec {
     import org.apache.avro.{Schema, SchemaBuilder}
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro3").toString
-    def schemaOf(fieldOrder: Seq[String]): Schema = {
-      var b = SchemaBuilder.record("rec").fields()
-      fieldOrder.foreach { n => b = b.name(n).`type`().longType().noDefault() }
-      b.endRecord()
+    withTempDir("graft_avro3") { dir =>
+      def schemaOf(fieldOrder: Seq[String]): Schema = {
+        var b = SchemaBuilder.record("rec").fields()
+        fieldOrder.foreach { n => b = b.name(n).`type`().longType().noDefault() }
+        b.endRecord()
+      }
+      def writeFile(name: String, sch: Schema, recs: Seq[Map[String, Long]]): Unit = {
+        val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
+        w.create(sch, new java.io.File(dir, name))
+        try recs.foreach { m =>
+          val r = new GenericData.Record(sch)
+          m.foreach { case (k, v) => r.put(k, v) }
+          w.append(r)
+        } finally w.close()
+      }
+      writeFile("part-00000.avro", schemaOf(Seq("a", "b")), Seq(Map("a" -> 1L, "b" -> 10L)))
+      writeFile("part-00001.avro", schemaOf(Seq("b", "a")), Seq(Map("a" -> 2L, "b" -> 20L)))
+      val back = graft.sources.AvroSource.read(spark, dir)
+        .orderBy("a").collect().map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("b"))))
+      assert(back.toSeq == Seq((1L, 10L), (2L, 20L)))
     }
-    def writeFile(name: String, sch: Schema, recs: Seq[Map[String, Long]]): Unit = {
-      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
-      w.create(sch, new java.io.File(dir, name))
-      try recs.foreach { m =>
-        val r = new GenericData.Record(sch)
-        m.foreach { case (k, v) => r.put(k, v) }
-        w.append(r)
-      } finally w.close()
-    }
-    writeFile("part-00000.avro", schemaOf(Seq("a", "b")), Seq(Map("a" -> 1L, "b" -> 10L)))
-    writeFile("part-00001.avro", schemaOf(Seq("b", "a")), Seq(Map("a" -> 2L, "b" -> 20L)))
-    val back = graft.sources.AvroSource.read(spark, dir)
-      .orderBy("a").collect().map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("b"))))
-    assert(back.toSeq == Seq((1L, 10L), (2L, 20L)))
   }
 
   test("avro: distributed read is one task per container file") {
     val df = sf("supplier").repartition(3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro2").toString
-    graft.sources.AvroSource.write(df, dir)
-    val back = graft.sources.AvroSource.read(spark, dir)
-    assert(back.rdd.getNumPartitions == 3)
-    assert(back.count() == df.count())
+    withTempDir("graft_avro2") { dir =>
+      graft.sources.AvroSource.write(df, dir)
+      val back = graft.sources.AvroSource.read(spark, dir)
+      assert(back.rdd.getNumPartitions == 3)
+      assert(back.count() == df.count())
+    }
   }
 
   test("jdbc: Derby roundtrip preserves nulls and negative doubles") {
@@ -440,7 +443,7 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  test("orc: partitioned write round-trips with hive-style layout; writeOnce caches") {
+  test("orc: partitioned write round-trips with hive-style layout") {
     import spark.implicits._
     val df = Seq((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).toDF("id", "v", "part")
     val dir = java.nio.file.Files.createTempDirectory("orcrt").toString + "/t"
@@ -450,9 +453,6 @@ class SourcesSpec extends SparkSpec {
     val back = graft.sources.OrcSource.read(spark, dir)
       .select("id", "v", "part").as[(Long, String, String)].collect().toSet
     assert(back == Set((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")))
-    // writeOnce: second call with different data must NOT overwrite
-    graft.sources.OrcSource.writeOnce(df.limit(1), dir)
-    assert(graft.sources.OrcSource.read(spark, dir).count() == 3)
   }
 
   test("rename step ignores unknown names, is case-insensitive") {

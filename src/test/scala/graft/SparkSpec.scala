@@ -13,6 +13,20 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+  /** Deletes `dir` and everything under it; a symlink goes, not its target. */
+  def deleteTree(dir: java.nio.file.Path): Unit = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+    finally walk.close()
+  }
+
+  /** Runs `f` on a fresh temp dir named `prefix`…, deleted afterwards. */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString) finally deleteTree(dir)
+  }
+
   /** Table `name` of the sf0.001 test data, opened once per session. */
   def sf(name: String) = catalog.Shared.T(spark, "/root/testdata/sf0.001", name)
 
