@@ -46,8 +46,8 @@ object Bench {
     // untimed TARGET-SF warmup for named heavy queries: the tiny-SF pass
     // compiles every generated class, but the two 400M-iteration pair-loop
     // queries (q_embed_knn*) additionally need profile-driven C2
-    // recompilation that only the big run itself triggers — ProbeBench
-    // convergence at sf1 is 254 -> 168 -> 156 -> 67 s on this host, so even
+    // recompilation that only the big run itself triggers — four
+    // back-to-back runs in one JVM at sf1 took 254 -> 168 -> 156 -> 67 s, so even
     // min-of-3 reports a compilation artifact, not the steady state a
     // deployment pays. Listing them here runs ONE untimed full-scale pass
     // first. Default: the iterative graph heavies, whose multi-round

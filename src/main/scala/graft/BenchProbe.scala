@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.obs.QueryProfile
 
 /** Fixed-cohort isolated-JVM probe bench: the standing artifact that makes
   * round-over-round bench numbers ATTRIBUTABLE.
@@ -16,8 +17,12 @@ import java.nio.file.{Files, Paths}
   * regression triage cites `BENCH_PROBE.json` instead of ad-hoc probes.
   *
   * Parent mode (no args): fork one child JVM per cohort query, collect
-  * each child's marker line, write `BENCH_PROBE.json`.
-  * Child mode (`<queryName>` arg): time that one query, print the marker.
+  * each child's marker lines, write `BENCH_PROBE.json` and, beside it,
+  * `BENCH_LAYERS.json`: per query, the layer totals of its untimed
+  * full-scale pass.
+  * Child mode (`<queryName>` arg): time that one query, print the marker,
+  * then the layers marker. Only the untimed pass runs under a
+  * [[graft.obs.QueryProfile]].
   */
 object BenchProbe {
   /** Frozen at round 10 from the round-9 heaviest determinate (oracle
@@ -58,6 +63,7 @@ object BenchProbe {
     "q_dedup_incr_md5", "q_stream_neardup")
 
   private val Marker = "BENCH_PROBE_RESULT "
+  private val LayersMarker = "BENCH_LAYERS_RESULT "
 
   def main(args: Array[String]): Unit =
     if (args.isEmpty) parent() else child(args(0))
@@ -98,16 +104,36 @@ object BenchProbe {
       val sec = out.linesIterator.find(_.startsWith(Marker))
         .map(_.stripPrefix(Marker).trim.toDouble)
         .getOrElse(-1.0)
+      val layers = out.linesIterator.find(_.startsWith(LayersMarker))
+        .map(_.stripPrefix(LayersMarker).trim)
       System.err.println(f"[probe] $name%-22s rc=$rc ${fmt(sec)}")
-      name -> (if (rc == 0) sec else -1.0)
+      (name, if (rc == 0) sec else -1.0, layers)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val json = s"""{"metric":"probe_total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","isolation":"jvm-per-query","samples":"min-of-3"}"""
     println(json)
-    if (only.isEmpty)
+    val layers = results.collect { case (k, _, Some(l)) => "\"" + k + "\":" + l }
+      .mkString(s"""{"sf":"$sfDir","pass":"untimed full-scale","queries":{""", ",", "}}")
+    if (only.isEmpty) {
       Files.writeString(Paths.get("BENCH_PROBE.json"), json + "\n")
+      Files.writeString(Paths.get("BENCH_LAYERS.json"), layers + "\n")
+    }
+  }
+
+  /** The layer totals of one profiled pass, as a JSON object. */
+  private def layersJson(p: QueryProfile[_]): String = {
+    def total(f: QueryProfile.Action => Double) = p.actions.map(f).sum
+    Seq("actions" -> p.actions.size.toDouble, "jobs" -> p.jobs.toDouble,
+      "stages" -> total(_.stages.size), "tasks" -> total(_.tasks),
+      "wall_s" -> total(_.wallMs / 1e3), "gap_s" -> total(_.gapMs / 1e3),
+      "run_s" -> total(_.runMs / 1e3), "cpu_s" -> total(_.cpuMs / 1e3),
+      "gc_s" -> total(_.gcMs / 1e3), "skew_x" -> p.actions.map(_.skew).maxOption.getOrElse(1.0),
+      "input_rows" -> total(_.inputRows), "shuffle_write_mb" -> total(_.shuffleWriteBytes / 1e6),
+      "shuffle_read_mb" -> total(_.shuffleReadBytes / 1e6), "spill_mb" -> total(_.spillBytes / 1e6),
+      "stream_batches" -> p.batches.size.toDouble)
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
   }
 
   private def child(name: String): Unit = {
@@ -126,8 +152,11 @@ object BenchProbe {
       try { SparkEntry.prepareIndexes(spark, warmDir); run(warmDir) }
       catch { case e: Throwable => System.err.println(s"[probe] warmup failed: $e") }
     }
-    try run(sfDir) catch { case e: Throwable =>
-      System.err.println(s"[probe] full-scale warm failed: $e") }
+    val layers = try Some(layersJson(QueryProfile(spark)(run(sfDir)))) catch {
+      case e: Throwable =>
+        System.err.println(s"[probe] full-scale warm failed: $e")
+        None
+    }
     val sec = (1 to 3).map { _ =>
       System.gc()
       val t0 = System.nanoTime()
@@ -135,6 +164,7 @@ object BenchProbe {
       (System.nanoTime() - t0) / 1e9
     }.min
     println(Marker + fmt(sec))
+    layers.foreach(l => println(LayersMarker + l))
     spark.stop()
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
   LongType}
 
@@ -33,18 +34,20 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
   *
   * Domain: |Σ x6·y6| < 10³⁸, the DECIMAL(38,12) accumulator's precision
   * bound. The decimal sum writes its buffer after every row and every
-  * merge, and a buffer value of 39 digits becomes NULL (non-ANSI; ANSI
-  * raises instead). The accumulator checks the same bound at the same
-  * steps, in update and in merge, and poisons the group to NULL — never a
-  * finite double where the decimal form has none. A merge of two
-  * in-bound partials can pass 2¹²⁷ ≈ 1.7e38, so signed overflow of the
-  * accumulator (same-sign operands, flipped-sign result) is detected too.
+  * merge, and a buffer value of 39 digits becomes NULL (ANSI off) or raises
+  * (ANSI on). The accumulator checks the same bound at the same steps, in
+  * update and in merge, and marks the group, which then evaluates to NULL or
+  * raises `Sum`'s own `ARITHMETIC_OVERFLOW` by the ANSI mode read when the
+  * expression is built, as `Sum` reads it. A merge of two in-bound partials
+  * can pass 2¹²⁷ ≈ 1.7e38, so signed overflow of the accumulator (same-sign
+  * operands, flipped-sign result) is detected too.
   *
   * Null contract = `sum()`: null inputs are skipped; a group with no
   * non-null input evaluates to NULL. The callers null BOTH factors
   * together (the domain gate), so x/y null-ness always agrees.
   */
-case class SumProduct128(left: Expression, right: Expression)
+case class SumProduct128(left: Expression, right: Expression,
+                         ansi: Boolean = SQLConf.get.ansiEnabled)
     extends DeclarativeAggregate with BinaryLike[Expression] {
 
   override def prettyName: String = "sum_product_128"
@@ -130,11 +133,15 @@ case class SumProduct128(left: Expression, right: Expression)
       Or(Or(bad.left, bad.right), ovf))
   }
 
-  override lazy val evaluateExpression: Expression =
-    If(Or(EqualTo(cnt, Literal(0L)), bad),
-      Literal(null, DoubleType),
-      StaticInvoke(Int128Util.getClass, DoubleType, "toDouble12",
-        Seq(hi, lo), Seq(LongType, LongType), returnNullable = false))
+  override lazy val evaluateExpression: Expression = {
+    val value = StaticInvoke(Int128Util.getClass, DoubleType, "toDouble12",
+      Seq(hi, lo), Seq(LongType, LongType), returnNullable = false)
+    val outOfRange =
+      if (ansi) StaticInvoke(Int128Util.getClass, DoubleType, "overflow", Nil, Nil,
+        returnNullable = false)
+      else Literal(null, DoubleType)
+    If(EqualTo(cnt, Literal(0L)), Literal(null, DoubleType), If(bad, outOfRange, value))
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SumProduct128 =
@@ -151,4 +158,7 @@ object Int128Util {
       .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
     new java.math.BigDecimal(bi, 12).doubleValue()
   }
+
+  /** Raises the error the decimal sum raises past its precision. */
+  def overflow(): Double = throw org.apache.spark.sql.GraftSparkAccess.sumOfDecimalsOverflow()
 }

@@ -407,7 +407,7 @@ object Dedup {
     * `filter(jaccard >= t)` ABOVE the join does NOT behave this way:
     * predicate pushdown re-inlines the alias into the join condition
     * AHEAD of the existing conjuncts, evaluating the intersect 3x per
-    * candidate pair (observed via PlanDump). */
+    * candidate pair (seen in the join condition of the final plan). */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     // shingle HASHES, not strings: the one-pass native kernel emits each

@@ -43,11 +43,20 @@ final class Materialize private (spark: SparkSession, runRoot: Option[Path]) {
   /** Cut the lineage eagerly: a RELIABLE checkpoint when the SparkContext
     * has a checkpoint dir (cluster runs, where a lost executor would
     * invalidate local checkpoint blocks and fail the query), else a local
-    * one (no disk round trip). */
+    * one (no disk round trip). The checkpoint's call site is the line that
+    * called `pin` (`localCheckpoint at Graph.scala:304`), so each round of
+    * a loop is its own row in a [[graft.obs.QueryProfile]]. */
   def pin(df: DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
+    val saved = sc.getLocalProperty("callSite.short") // what setCallSite sets
+    val op = if (reliable) "checkpoint" else "localCheckpoint"
+    Thread.currentThread.getStackTrace.iterator.drop(1)
+      .find(!_.getClassName.startsWith(classOf[Materialize].getName))
+      .foreach(f => sc.setCallSite(s"$op at ${f.getFileName}:${f.getLineNumber}"))
     val cut =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      try if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+      finally sc.setLocalProperty("callSite.short", saved)
     val rdds = cut.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
     own(cut)(rdds.foreach(_.unpersist(blocking = false)))
   }

@@ -33,7 +33,7 @@ class ExtensionsSpec extends SparkSpec {
     // full pushdown needs the rule INSIDE the operator-optimization batch
     // (before V2ScanRelationPushDown) — i.e. the SparkSessionExtensions
     // path, not experimental.extraOptimizations which runs after pushdown
-    val dir = java.nio.file.Files.createTempDirectory("pushdown").toFile.getAbsolutePath
+    val dir = tempDir("pushdown")
     Seq(1.0, 5.0, 9.0).toDF("v").write.mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir).filter(Warp.num(col("v")) > 4.0)
     val physical = q.queryExecution.executedPlan.toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 /** Cross-engine result-TYPE gate for the oracle catalog (VERDICT r12
@@ -33,7 +32,7 @@ import java.nio.file.{Files, Paths}
   * flag it — a planted wide decimal that went undetected would fail here,
   * so the detector itself is regression-gated.
   */
-class OracleLintSpec extends AnyFunSuite {
+class OracleLintSpec extends SparkSpec {
 
   /** Queries allowed to emit an int128-backed output column: the catalog's
     * canaries (the deliberately-wide conviction probe). */
@@ -56,7 +55,7 @@ class OracleLintSpec extends AnyFunSuite {
     assume(Files.isDirectory(Paths.get(sfDir)), s"$sfDir missing")
     assume(pythonOk, "python3+duckdb unavailable; driver environment has it")
 
-    val dir = Files.createTempDirectory("oraclelint")
+    val dir = Paths.get(tempDir("oraclelint"))
     val sqlJson = dir.resolve("oracle_sql.json")
     Files.writeString(sqlJson, Verify.oracleJson())
 

@@ -43,10 +43,8 @@ class PgStreamSourceSpec extends SparkSpec {
   test("checkpointed restart reads only the rows that arrived since") {
     assume(conn.isDefined, "PostgreSQL unavailable in this environment")
     val c = conn.get
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("pgstream_ckpt").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("pgstream_out").toString
+    val ckpt = tempDir("pgstream_ckpt")
+    val out = tempDir("pgstream_out")
     def drain(): Unit = {
       val q = readStreamOf(c, "pgstream_incr")
         .writeStream.format("parquet").option("path", out)
@@ -218,9 +216,9 @@ class PgStreamSourceSpec extends SparkSpec {
     PgWire.execute(c, "DROP TABLE IF EXISTS pgstream_sw")
     PgWire.execute(c, "DROP TABLE IF EXISTS pgstream_sw__epochs")
     val ev = spark.range(200).selectExpr("id", "CAST(id AS STRING) AS v")
-    val tmp = java.nio.file.Files.createTempDirectory("pgstream_sw_in").toString
+    val tmp = tempDir("pgstream_sw_in")
     ev.coalesce(2).write.mode("overwrite").parquet(tmp)
-    val ckpt = java.nio.file.Files.createTempDirectory("pgstream_sw_ck").toString
+    val ckpt = tempDir("pgstream_sw_ck")
     def drain(): Unit = {
       val q = spark.readStream.schema(ev.schema).parquet(tmp)
         .writeStream.format("graft.sources.PgStreamSource")
@@ -246,7 +244,7 @@ class PgStreamSourceSpec extends SparkSpec {
     // a NEW run (fresh checkpoint -> fresh queryId, epoch ids restart
     // at 0) must APPEND its re-read, not be misread as a replay of the
     // first run's epoch 0 — the ledger is keyed (run, epoch)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("pgstream_sw_ck2").toString
+    val ckpt2 = tempDir("pgstream_sw_ck2")
     val q2 = spark.readStream.schema(ev.schema).parquet(tmp)
       .writeStream.format("graft.sources.PgStreamSource")
       .option("host", c.host).option("port", c.port.toString)

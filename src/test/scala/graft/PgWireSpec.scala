@@ -268,8 +268,8 @@ class PgWireSpec extends SparkSpec {
       sslRootCert = Some(crt.getAbsolutePath))
     assert(PgWire.query(spark, verified, "SELECT 42").collect()(0).getInt(0) == 42)
     // ...while a root that did NOT sign the server cert is rejected
-    val wrongCrt = java.io.File.createTempFile("wrong", ".crt")
-    val wrongKey = java.io.File.createTempFile("wrong", ".key")
+    val wrongCrt = new java.io.File(tempDir("wrong") + "/wrong.crt")
+    val wrongKey = new java.io.File(tempDir("wrong") + "/wrong.key")
     val p2 = new ProcessBuilder("openssl", "req", "-new", "-x509", "-days", "2",
       "-nodes", "-subj", "/CN=evil",
       "-out", wrongCrt.getAbsolutePath, "-keyout", wrongKey.getAbsolutePath)

@@ -1078,7 +1078,7 @@ class PipelineSpec extends SparkSpec {
   test("persisted LSH index round-trips and matches the inline path") {
     val emb = sf("embeddings")
     val q = emb.filter(col("vec_id") === 7).select("embedding").collect()(0).getSeq[Float](0)
-    val path = java.nio.file.Files.createTempDirectory("lshidx").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("lshidx") + "/idx"
     Similarity.lshWriteIndex(emb, "embedding", nBits = 16, dim = q.length, path)
     val fromIndex = Similarity.lshReadTopK(spark, path, "embedding", "vec_id",
       q, 10, nBits = 16, maxHamming = 8).select("vec_id").as[Long].collect().toSeq
@@ -1090,7 +1090,7 @@ class PipelineSpec extends SparkSpec {
   test("persisted IVF index: centroids reload, probe prunes partitions") {
     val emb = sf("embeddings")
     val q = emb.filter(col("vec_id") === 7).select("embedding").collect()(0).getSeq[Float](0)
-    val path = java.nio.file.Files.createTempDirectory("ivfidx").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("ivfidx") + "/idx"
     val built = Similarity.ivfWriteIndex(emb, "embedding", "vec_id", nCells = 8, path)
     val loaded = Similarity.ivfReadCentroids(spark, path)
     assert(loaded.toSeq == built.toSeq) // centroid table survives the round-trip
@@ -1118,7 +1118,7 @@ class PipelineSpec extends SparkSpec {
     assert(brute.filter(col("qid") === col("id")).count() == 0)
     assert(brute.groupBy("qid").count().agg(max("count")).as[Long].head() <= 3)
 
-    val path = java.nio.file.Files.createTempDirectory("knnidx").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("knnidx") + "/idx"
     val dim = corpus.select(size(col("embedding"))).head().getInt(0)
     Similarity.lshWriteIndex(corpus, "embedding", nBits = 64, dim = dim, path)
     val gated = Similarity.knnGraphSketch(spark.read.parquet(path),
@@ -1135,7 +1135,7 @@ class PipelineSpec extends SparkSpec {
     // (smaller corpus => farther top-10); 0.8 leaves seed margin
     val emb = sf("embeddings")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val path = java.nio.file.Files.createTempDirectory("recallidx").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("recallidx") + "/idx"
     Similarity.lshWriteIndex(emb, "embedding", nBits = SparkEntry.LshBits, dim = dim, path)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "id").as[(Long, Long)].collect().toSet
@@ -1164,7 +1164,7 @@ class PipelineSpec extends SparkSpec {
 
   test("batch kNN over the IVF index: agrees with per-query probes, recall vs brute") {
     val emb = sf("embeddings")
-    val path = java.nio.file.Files.createTempDirectory("ivfbatch").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("ivfbatch") + "/idx"
     val centroids = Similarity.ivfWriteIndex(emb, "embedding", "vec_id", nCells = 8, path)
     val idx = spark.read.parquet(path)
     val batch = Similarity.knnGraphIvf(idx, centroids, "embedding", "vec_id",
@@ -1590,7 +1590,7 @@ class PipelineSpec extends SparkSpec {
       val s2 = org.apache.spark.sql.SparkSession.builder()
         .master("local[2]").config("spark.sql.shuffle.partitions", "2")
         .getOrCreate()
-      val ckpt = java.nio.file.Files.createTempDirectory("ccckpt")
+      val ckpt = java.nio.file.Paths.get(tempDir("ccckpt"))
       sc.setCheckpointDir(ckpt.toString)
       // the reliable path actually writes checkpoint data: one rdd-<id>
       // dir per checkpointed RDD
@@ -1972,7 +1972,7 @@ class PipelineSpec extends SparkSpec {
   test("writeShardedCorpus: one directory and one data file per shard; round-trips") {
     val df = (1L to 40L).map(i => (i, i % 5 + 2)).toDF("id", "ntok")
     val assigned = Sampling.assignShards(df, col("id"), col("ntok"), 20L)
-    val dir = java.nio.file.Files.createTempDirectory("shardw").toString + "/corpus"
+    val dir = tempDir("shardw") + "/corpus"
     Sampling.writeShardedCorpus(assigned, dir)
     val shardDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .map(_.getName).filter(_.startsWith("shard_id=")).sorted
@@ -2030,7 +2030,7 @@ class PipelineSpec extends SparkSpec {
     assert(got == want) // same values AND same hardest-first order
     assert(got.nonEmpty)
     assert(!got.exists(_._1 == 5L)) // the anchor (cosine 1) is above hi
-    val dir = java.nio.file.Files.createTempDirectory("graft-band").toString + "/idx"
+    val dir = tempDir("graft-band") + "/idx"
     val cents = Similarity.ivfWriteIndex(df, "embedding", "vec_id", 8, dir)
     val pruned = Similarity.ivfBandScan(spark, dir, cents, "embedding", "vec_id",
       query, 0.2, 0.8, nProbe = 4).as[(Long, Double)].collect().toSeq
@@ -2142,8 +2142,7 @@ class PipelineSpec extends SparkSpec {
     val vecs = (0L until 100L).map(i => (i, Seq.fill(8)(rnd.nextFloat())))
     val df = vecs.toDF("vec_id", "embedding")
     val books = Similarity.pqTrain(df, "embedding", "vec_id", m = 2, k = 16, seed = 3L)
-    val path = java.nio.file.Files.createTempDirectory("pqidx")
-      .toFile.getAbsolutePath + "/idx"
+    val path = tempDir("pqidx") + "/idx"
     Similarity.pqWriteIndex(df, "embedding", "vec_id", books, path)
     val back = Similarity.pqReadCodebooks(spark, path)
     assert(back.map(_.map(_.toSeq).toSeq).toSeq ==
@@ -2623,8 +2622,7 @@ class PipelineSpec extends SparkSpec {
   test("ivfPq: persisted probe prunes partitions, never reads vectors, recalls") {
     val emb = sf("embeddings")
     val q = emb.filter(col("vec_id") === 7).select("embedding").collect()(0).getSeq[Float](0)
-    val path = java.nio.file.Files.createTempDirectory("ivfpqidx")
-      .toFile.getAbsolutePath + "/idx"
+    val path = tempDir("ivfpqidx") + "/idx"
     val (cents, books) = Similarity.ivfPqWriteIndex(emb, "embedding", "vec_id",
       nCells = 8, m = 8, k = 64, path)
     // both halves survive persistence
@@ -2711,8 +2709,8 @@ class PipelineSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 3).select("embedding")
       .collect()(0).getSeq[Float](0)
     val dim = q.length
-    val full = java.nio.file.Files.createTempDirectory("lshfull").toFile.getAbsolutePath + "/idx"
-    val inc = java.nio.file.Files.createTempDirectory("lshinc").toFile.getAbsolutePath + "/idx"
+    val full = tempDir("lshfull") + "/idx"
+    val inc = tempDir("lshinc") + "/idx"
     Similarity.lshWriteIndex(emb, "embedding", nBits = 16, dim = dim, path = full)
     Similarity.lshWriteIndex(emb.filter(col("vec_id") % 2 === 0),
       "embedding", nBits = 16, dim = dim, path = inc)
@@ -2731,7 +2729,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ivfAppendIndex: delta lands in argmax cells; probes see appended rows") {
     val emb = sf("embeddings")
-    val path = java.nio.file.Files.createTempDirectory("ivfinc").toFile.getAbsolutePath + "/idx"
+    val path = tempDir("ivfinc") + "/idx"
     Similarity.ivfWriteIndex(emb.filter(col("vec_id") % 2 === 0),
       "embedding", "vec_id", nCells = 4, path)
     Similarity.ivfAppendIndex(emb.filter(col("vec_id") % 2 === 1),

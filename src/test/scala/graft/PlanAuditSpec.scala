@@ -70,6 +70,13 @@ class PlanAuditSpec extends SparkSpec {
       TA.tokenCountWs(col("text")).as("a"), TA.tokenCountBpe(col("text")).as("b"),
       TA.punctRatio(col("text")).as("c"), TA.meanWordLength(col("text")).as("d"))
     assert(calls(quality, "TextStatsExpr\\.compute") == 1)
+    // the fertility report's two sums ride one class-counts call per row (AQE
+    // off: its exchange would hide the generated code behind query stages)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try assert(calls(TA.fertilityReport(docs, Seq("source", "lang"), "text"),
+      "ClassCountsExpr\\.compute") == 1)
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("q_embed_ivf_batch: corpus streams into a broadcast cell-join, top-k pre-pruned") {

@@ -83,33 +83,32 @@ class PlantedCorpusSpec extends SparkSpec {
     } catch { case _: Throwable => false }
     assume(pyOk, "python3+duckdb unavailable; driver environment has it")
 
-    withTempDir("planted") { root =>
-      val planted = PlantedCorpus.build(spark, Paths.get(root, "corpus"))
-      val out = Paths.get(root, "out")
-      Files.createDirectories(out)
-      val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (name <- textFamily) {
-        try SparkEntry.queries(name)(spark, planted.toString)
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
-        catch { case e: Throwable =>
-          failures += s"$name: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}"
-        }
+    val root = tempDir("planted")
+    val planted = PlantedCorpus.build(spark, Paths.get(root, "corpus"))
+    val out = Paths.get(root, "out")
+    Files.createDirectories(out)
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (name <- textFamily) {
+      try SparkEntry.queries(name)(spark, planted.toString)
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/$name")
+      catch { case e: Throwable =>
+        failures += s"$name: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}"
       }
-      assert(failures.isEmpty,
-        s"Spark side failed on the planted corpus:\n${failures.mkString("\n")}")
-
-      Files.writeString(out.resolve("oracle_sql.json"),
-        Verify.oracleJson(textFamily.contains))
-
-      val pb = new ProcessBuilder("python3", "tools/check.py",
-        planted.toString, out.toString)
-      pb.directory(new java.io.File("/root/repo"))
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-      val rc = proc.waitFor()
-      assert(rc == 0, s"planted-corpus oracle compare failed:\n" +
-        log.linesIterator.filter(l => !l.startsWith("ok")).mkString("\n"))
     }
+    assert(failures.isEmpty,
+      s"Spark side failed on the planted corpus:\n${failures.mkString("\n")}")
+
+    Files.writeString(out.resolve("oracle_sql.json"),
+      Verify.oracleJson(textFamily.contains))
+
+    val pb = new ProcessBuilder("python3", "tools/check.py",
+      planted.toString, out.toString)
+    pb.directory(new java.io.File("/root/repo"))
+    pb.redirectErrorStream(true)
+    val proc = pb.start()
+    val log = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    val rc = proc.waitFor()
+    assert(rc == 0, s"planted-corpus oracle compare failed:\n" +
+      log.linesIterator.filter(l => !l.startsWith("ok")).mkString("\n"))
   }
 }

@@ -875,8 +875,7 @@ class PropertySpec extends SparkSpec {
       val df = spark.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
           .SeqHasAsJava(rows).asJava), schema)
-      val path = java.nio.file.Files.createTempDirectory("dbfprop")
-        .toFile.getAbsolutePath + s"/p$trial.dbf"
+      val path = tempDir("dbfprop") + s"/p$trial.dbf"
       graft.sources.DbfSource.write(df, path)
       val back = graft.sources.DbfSource.read(spark, path)
       assert(back.orderBy("s").collect().toSeq ==

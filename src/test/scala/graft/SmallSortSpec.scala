@@ -24,15 +24,12 @@ class SmallSortSpec extends SparkSpec {
   }
 
   /** `body` over a small parquet table, one file in a temp dir that is
-    * deleted afterwards. */
+    * deleted after the test. */
   private def withTable[T](body: DataFrame => T): T = {
-    val tmp = java.nio.file.Files.createTempDirectory("smallsort")
-    try {
-      val dir = tmp.resolve("t").toString
-      spark.range(0, 500).select(col("id"), (col("id") * 7919 % 101).as("k"))
-        .coalesce(1).write.parquet(dir)
-      body(spark.read.parquet(dir)) // resolved here: the footer job runs now
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val dir = tempDir("smallsort") + "/t"
+    spark.range(0, 500).select(col("id"), (col("id") * 7919 % 101).as("k"))
+      .coalesce(1).write.parquet(dir)
+    body(spark.read.parquet(dir)) // resolved here: the footer job runs now
   }
 
   test("row order equals the Scala sort: ties, nulls, string/numeric collation, 5 input partitions") {

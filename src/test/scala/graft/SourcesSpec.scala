@@ -12,14 +12,9 @@ import graft.ops.WarpOps._
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
 
   test("csv: header dedup a, a_B, a_C (CSVStream.swift:64-77)") {
-    val dir = tmp("csvdup")
+    val dir = tempDir("csvdup")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/f.csv"),
       "a,b,a,a\n1,2,3,4\n")
     val df = CsvSource.read(spark, s"$dir/f.csv")
@@ -32,7 +27,7 @@ class SourcesSpec extends SparkSpec {
     assert(CsvSource.defaultNameForIndex(0) == "A")
     assert(CsvSource.defaultNameForIndex(25) == "Z")
     assert(CsvSource.defaultNameForIndex(26) == "AA")
-    val dir = tmp("csvnh")
+    val dir = tempDir("csvnh")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/f.csv"), "1,2\n3,4\n")
     val df = CsvSource.read(spark, s"$dir/f.csv", hasHeaders = false)
     assert(df.columns.toSeq == Seq("A", "B"))
@@ -40,7 +35,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv: locale-aware number normalization (Language.swift:502-516)") {
-    val dir = tmp("csvnl")
+    val dir = tempDir("csvnl")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/f.csv"),
       "v,s\n\"1.234,56\",hello\n\"7,5\",\"1.000.000\"\n")
     val df = CsvSource.read(spark, s"$dir/f.csv", locale = Some(WarpLanguage.nl))
@@ -54,7 +49,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv: inferTyped keeps ids beyond 2^53 exact (direct long parse)") {
-    val dir = tmp("csvbig")
+    val dir = tempDir("csvbig")
     // 9007199254740993 = 2^53+1: round-trips through double as ...992
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/f.csv"),
       "id,v\n9007199254740993,1\n9223372036854775807,2\n")
@@ -65,7 +60,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv: multi-file directory derives header from the FIRST file") {
-    val dir = tmp("csvmulti")
+    val dir = tempDir("csvmulti")
     // part-1 is lexicographically later and much larger — a naive limit(1)
     // over the directory scan would pick its first row (Spark packs the
     // biggest split first)
@@ -81,7 +76,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv: NTZ timestamps write without a zone suffix (no fake UTC label)") {
-    val dir = tmp("csvntz")
+    val dir = tempDir("csvntz")
     val df = Seq((1L, "2024-06-01 12:30:45")).toDF("id", "t")
       .select(col("id"), col("t").cast("timestamp_ntz").as("t"))
     CsvSource.write(df, s"$dir/out")
@@ -94,7 +89,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv: empty cells read as empty/null") {
-    val dir = tmp("csvempty")
+    val dir = tempDir("csvempty")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/f.csv"),
       "a,b\n1,\n,2\n")
     val df = CsvSource.read(spark, s"$dir/f.csv")
@@ -103,33 +98,33 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json: array-of-objects, single object, array-of-values, scalar (JSONStream.swift:16-168)") {
-    val d1 = tmp("json1")
+    val d1 = tempDir("json1")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d1/f.json"),
       """[{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]""")
     val arrObj = JsonSource.read(spark, s"$d1/f.json")
     assert(arrObj.columns.sorted.toSeq == Seq("a", "b") && arrObj.count() == 2)
 
-    val d2 = tmp("json2")
+    val d2 = tempDir("json2")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d2/f.json"),
       """{"a": 7, "b": "z"}""")
     val single = JsonSource.read(spark, s"$d2/f.json")
     assert(single.count() == 1 && single.select("a").as[Long].collect()(0) == 7L)
 
-    val d3 = tmp("json3")
+    val d3 = tempDir("json3")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d3/f.json"),
       """[1, 2, "three"]""")
     val arrVal = JsonSource.read(spark, s"$d3/f.json")
     assert(arrVal.columns.toSeq == Seq("value"))
     assert(arrVal.as[String].collect().toSet == Set("1", "2", "three"))
 
-    val d4 = tmp("json4")
+    val d4 = tempDir("json4")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d4/f.json"), "42")
     val scalar = JsonSource.read(spark, s"$d4/f.json")
     assert(scalar.as[String].collect().toSeq == Seq("42"))
   }
 
   test("json: JSON-Lines detected and read splittable") {
-    val d = tmp("jsonl")
+    val d = tempDir("jsonl")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$d/f.json"),
       "{\"a\": 1}\n{\"a\": 2}\n{\"a\": 3}\n")
     val df = JsonSource.read(spark, s"$d/f.json")
@@ -159,7 +154,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("warehouse: create/insert/import/update/delete/alter/rename/truncate (MutableData.swift:40-196)") {
-    val wh = new ParquetWarehouse(spark, tmp("wh"))
+    val wh = new ParquetWarehouse(spark, tempDir("wh"))
     wh.create("t", Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "v"))
 
     // insert: extra column discarded, missing column filled with empty
@@ -229,7 +224,7 @@ class SourcesSpec extends SparkSpec {
       r.foreach(v => buf.put(v.getBytes("ASCII")))
     }
     buf.put(0x1A.toByte)
-    val path = tmp("dbf") + "/t.dbf"
+    val path = tempDir("dbf") + "/t.dbf"
     java.nio.file.Files.write(java.nio.file.Paths.get(path), buf.array())
 
     val df = graft.sources.DbfSource.read(spark, path)
@@ -243,7 +238,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("dbf: writer round-trips types, nulls, and the 10-char name limit") {
-    val path = tmp("dbfw") + "/w.dbf"
+    val path = tempDir("dbfw") + "/w.dbf"
     val df = Seq(
       (1L, "alpha", 1.25, true, "2020-03-05"),
       (2L, "bé", -0.5, false, null.asInstanceOf[String]),
@@ -285,20 +280,19 @@ class SourcesSpec extends SparkSpec {
         java.time.LocalDateTime.of(1999, 12, 31, 23, 59, 59),
         java.sql.Date.valueOf("1970-01-01"), Seq.empty[String]))
     val df = spark.createDataFrame(rows, st).repartition(2)
-    withTempDir("graft_avro") { dir =>
-      graft.sources.AvroSource.write(df, dir)
-      // one container per partition + the schema marker
-      val files = new java.io.File(dir).list().sorted.toSeq
-      assert(files.count(_.endsWith(".avro")) == 2, files)
-      assert(files.contains("_SCHEMA.avsc"))
-      val back = graft.sources.AvroSource.read(spark, dir)
-      assert(back.schema == st.copy(fields = st.fields.map(_.copy(nullable = true))) ||
-        back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-          st.fields.map(f => (f.name, f.dataType)).toSeq)
-      val a = df.orderBy("id").collect().toSeq
-      val b = back.orderBy("id").collect().toSeq
-      assert(a == b)
-    }
+    val dir = tempDir("graft_avro")
+    graft.sources.AvroSource.write(df, dir)
+    // one container per partition + the schema marker
+    val files = new java.io.File(dir).list().sorted.toSeq
+    assert(files.count(_.endsWith(".avro")) == 2, files)
+    assert(files.contains("_SCHEMA.avsc"))
+    val back = graft.sources.AvroSource.read(spark, dir)
+    assert(back.schema == st.copy(fields = st.fields.map(_.copy(nullable = true))) ||
+      back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        st.fields.map(f => (f.name, f.dataType)).toSeq)
+    val a = df.orderBy("id").collect().toSeq
+    val b = back.orderBy("id").collect().toSeq
+    assert(a == b)
   }
 
   test("avro: mixed-schema directory resolves fields by NAME, not position") {
@@ -309,42 +303,40 @@ class SourcesSpec extends SparkSpec {
     import org.apache.avro.{Schema, SchemaBuilder}
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-    withTempDir("graft_avro3") { dir =>
-      def schemaOf(fieldOrder: Seq[String]): Schema = {
-        var b = SchemaBuilder.record("rec").fields()
-        fieldOrder.foreach { n => b = b.name(n).`type`().longType().noDefault() }
-        b.endRecord()
-      }
-      def writeFile(name: String, sch: Schema, recs: Seq[Map[String, Long]]): Unit = {
-        val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
-        w.create(sch, new java.io.File(dir, name))
-        try recs.foreach { m =>
-          val r = new GenericData.Record(sch)
-          m.foreach { case (k, v) => r.put(k, v) }
-          w.append(r)
-        } finally w.close()
-      }
-      writeFile("part-00000.avro", schemaOf(Seq("a", "b")), Seq(Map("a" -> 1L, "b" -> 10L)))
-      writeFile("part-00001.avro", schemaOf(Seq("b", "a")), Seq(Map("a" -> 2L, "b" -> 20L)))
-      val back = graft.sources.AvroSource.read(spark, dir)
-        .orderBy("a").collect().map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("b"))))
-      assert(back.toSeq == Seq((1L, 10L), (2L, 20L)))
+    val dir = tempDir("graft_avro3")
+    def schemaOf(fieldOrder: Seq[String]): Schema = {
+      var b = SchemaBuilder.record("rec").fields()
+      fieldOrder.foreach { n => b = b.name(n).`type`().longType().noDefault() }
+      b.endRecord()
     }
+    def writeFile(name: String, sch: Schema, recs: Seq[Map[String, Long]]): Unit = {
+      val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
+      w.create(sch, new java.io.File(dir, name))
+      try recs.foreach { m =>
+        val r = new GenericData.Record(sch)
+        m.foreach { case (k, v) => r.put(k, v) }
+        w.append(r)
+      } finally w.close()
+    }
+    writeFile("part-00000.avro", schemaOf(Seq("a", "b")), Seq(Map("a" -> 1L, "b" -> 10L)))
+    writeFile("part-00001.avro", schemaOf(Seq("b", "a")), Seq(Map("a" -> 2L, "b" -> 20L)))
+    val back = graft.sources.AvroSource.read(spark, dir)
+      .orderBy("a").collect().map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("b"))))
+    assert(back.toSeq == Seq((1L, 10L), (2L, 20L)))
   }
 
   test("avro: distributed read is one task per container file") {
     val df = sf("supplier").repartition(3)
-    withTempDir("graft_avro2") { dir =>
-      graft.sources.AvroSource.write(df, dir)
-      val back = graft.sources.AvroSource.read(spark, dir)
-      assert(back.rdd.getNumPartitions == 3)
-      assert(back.count() == df.count())
-    }
+    val dir = tempDir("graft_avro2")
+    graft.sources.AvroSource.write(df, dir)
+    val back = graft.sources.AvroSource.read(spark, dir)
+    assert(back.rdd.getNumPartitions == 3)
+    assert(back.count() == df.count())
   }
 
   test("jdbc: Derby roundtrip preserves nulls and negative doubles") {
     import graft.sources.JdbcSource
-    val db = tmp("derbynull") + "/db"
+    val db = tempDir("derbynull") + "/db"
     val df = Seq[(java.lang.Long, String, java.lang.Double)](
       (1L, "alpha", -2.5), (2L, null, 0.0), (3L, "gamma", null))
       .toDF("id", "name", "score")
@@ -356,7 +348,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("dbf: writer truncates at the 254 width cap without shifting fields") {
-    val path = tmp("dbfcap") + "/cap.dbf"
+    val path = tempDir("dbfcap") + "/cap.dbf"
     val long300 = "x" * 300
     val df = Seq((1L, long300, true), (2L, "short", false)).toDF("id", "s", "ok")
     graft.sources.DbfSource.write(df, path)
@@ -369,7 +361,7 @@ class SourcesSpec extends SparkSpec {
   test("xml: round-trips the reference's graph/grid export shape (QBEXMLStep.swift:41-110)") {
     val df = Seq((1L, "a<b", null.asInstanceOf[String]), (2L, "y&z", "ok"))
       .toDF("id", "name", "note")
-    val path = tmp("xml") + "/t.xml"
+    val path = tempDir("xml") + "/t.xml"
     graft.sources.XmlSource.write(df, path, title = "t")
     val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
     assert(text.contains("<graph xmlns=\"http://dialogicplatform.com/data/1.0\">"))
@@ -390,7 +382,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jdbc: embedded Derby write, read, and range-partitioned bulk read") {
     import graft.sources.JdbcSource
-    val db = tmp("derbydb") + "/db"
+    val db = tempDir("derbydb") + "/db"
     val src = sf("nation").select("n_nationkey", "n_name", "n_regionkey")
     JdbcSource.derbyWrite(src, db, "nation_rt")
     val back = JdbcSource.derby(spark, db, "nation_rt")
@@ -446,7 +438,7 @@ class SourcesSpec extends SparkSpec {
   test("orc: partitioned write round-trips with hive-style layout") {
     import spark.implicits._
     val df = Seq((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).toDF("id", "v", "part")
-    val dir = java.nio.file.Files.createTempDirectory("orcrt").toString + "/t"
+    val dir = tempDir("orcrt") + "/t"
     graft.sources.OrcSource.write(df, dir, partitionBy = Seq("part"))
     // hive-style directories exist per partition value
     assert(new java.io.File(s"$dir/part=x").isDirectory)
@@ -463,7 +455,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse merge: updates replace by key, inserts append, nulls match") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whmerge"))
+    val wh = new ParquetWarehouse(spark, tempDir("whmerge"))
     wh.create("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
       .unionByName(Seq((Option.empty[Long], "nullkey")).toDF("k", "v")))
     // update k=2, insert k=9, replace the null-key row, extra column dropped
@@ -477,7 +469,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse diffTables: added/removed/changed, null keys and cells are rows") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whdiff"))
+    val wh = new ParquetWarehouse(spark, tempDir("whdiff"))
     val old_ = Seq((Some(1L), Some("a")), (Some(2L), Some("b")),
       (Some(3L), Option.empty[String]), (Option.empty[Long], Some("nk")))
       .toDF("k", "v")
@@ -498,7 +490,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse time travel: mutations retire versions; readVersion/diffVersions/vacuum") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whtt"))
+    val wh = new ParquetWarehouse(spark, tempDir("whtt"))
     wh.create("t", (1L to 10L).map(i => (i, "a")).toDF("id", "v"))
     assert(wh.versions("t").isEmpty && wh.currentVersion("t") == 1)
     wh.update("t", Map("id" -> 3L), "v", "a", "b") // retires v1 (dir rename)
@@ -528,7 +520,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse analyze: rows, nulls, exact ndv, min/max per column") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whstats"))
+    val wh = new ParquetWarehouse(spark, tempDir("whstats"))
     wh.create("t", Seq(
       (1L, Some("x")), (2L, Some("y")), (3L, None), (3L, Some("x"))
     ).toDF("id", "v"))
@@ -573,7 +565,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse SCD2: change detection, closes, inserts, as-of reads") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whscd2"))
+    val wh = new ParquetWarehouse(spark, tempDir("whscd2"))
     wh.scd2Init("d", Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
       .toDF("k", "name", "attr"), 100L)
     // batch: k=1 changes one attr, k=2 resent identical (no-op),
@@ -607,7 +599,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse compact: file count shrinks to the byte budget, rows survive") {
     import spark.implicits._
-    val wh = new ParquetWarehouse(spark, tmp("whcompact"))
+    val wh = new ParquetWarehouse(spark, tempDir("whcompact"))
     val df = (1L to 10000L).map(i => (i, s"v$i")).toDF("id", "v")
     wh.create("t", df.repartition(8))
     assert(wh.fileCount("t") >= 8, s"expected fragmented layout, got ${wh.fileCount("t")}")
@@ -639,7 +631,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse clusterByCurve: BOTH dimensions tighten (footer audit)") {
     import spark.implicits._
-    val root = tmp("whcurve")
+    val root = tempDir("whcurve")
     val wh = new ParquetWarehouse(spark, root)
     // 100x100 grid scattered over 8 files: every file spans ~everything
     val rows = for (x <- 0L until 100L; y <- 0L until 100L) yield (x, y, s"p$x-$y")
@@ -665,7 +657,7 @@ class SourcesSpec extends SparkSpec {
 
   test("warehouse clusterBy: files carry disjoint sorted key ranges (footer audit)") {
     import spark.implicits._
-    val root = tmp("whcluster")
+    val root = tempDir("whcluster")
     val wh = new ParquetWarehouse(spark, root)
     // scattered layout: keys round-robin across 6 files, every file spans
     // nearly the whole key range

@@ -12,10 +12,7 @@ import graft.sources.SqliteFile
 class SqliteFileSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDb(name: String): String = {
-    val f = java.io.File.createTempFile(name, ".sqlite")
-    f.delete(); f.getAbsolutePath
-  }
+  private def tmpDb(name: String): String = tempDir(name) + "/db.sqlite"
 
   test("record codec: every serial type round-trips; spec-pinned bytes decode") {
     // hand-assembled record straight from the spec's serial-type table:

@@ -194,7 +194,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("readEvents streams a parquet directory with the events schema") {
-    val dir = java.nio.file.Files.createTempDirectory("evstream").toFile.getAbsolutePath
+    val dir = tempDir("evstream")
     val batch = Seq(Event(1L, "click", ts(1), 1.0), Event(2L, "view", ts(2), 2.0)).toDS()
     batch.write.mode("overwrite").parquet(dir)
     val stream = EventStream.readEvents(spark, dir, batch.schema)
@@ -443,7 +443,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[Event]
     val winMs = 10 * 60 * 1000L
-    val chk = java.nio.file.Files.createTempDirectory("graft-trend-chk").toString
+    val chk = tempDir("graft-trend-chk")
     // the memory sink refuses checkpoint recovery, so each run drains its
     // emissions into a driver-side buffer via foreachBatch (which recovers)
     def start(buf: java.util.Queue[(java.sql.Timestamp, String, Long, Int)]) =
@@ -514,7 +514,7 @@ class StreamingSpec extends SparkSpec {
       Event(4L, "z", ts(650), 0), Event(5L, "z", ts(660), 0),
       Event(6L, "y", ts(655), 0),                     // window 1: z=2, y=1
       Event(0L, "__eos", sentinel, 0))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-trend-file").toString
+    val tmp = tempDir("graft-trend-file")
     // ONE part file: the file source must not split data and sentinel
     // across micro-batches — a sentinel processed before a real event
     // advances the watermark and silently drops the real event as late
@@ -537,7 +537,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[Event]
     val winMs = 10 * 60 * 1000L
-    val chk = java.nio.file.Files.createTempDirectory("graft-hist-chk").toString
+    val chk = tempDir("graft-hist-chk")
     def start(buf: java.util.Queue[(java.sql.Timestamp, Int, Long, Double)]) =
       EventStream.histogramClosed(input.toDS(), winMs,
           lo = 0.0, hi = 10.0, nBins = 5, watermarkDelay = "0 seconds")

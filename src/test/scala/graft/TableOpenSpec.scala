@@ -27,13 +27,11 @@ class TableOpenSpec extends SparkSpec {
     Files.copy(part, tmp.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def withTemp(f: Path => Unit): Unit = {
-    val tmp = Files.createTempDirectory("graft_open")
-    try f(tmp) finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-  }
+  private def temp(): Path = java.nio.file.Paths.get(tempDir("graft_open"))
 
   /** A temp data dir holding an `orders` table file. */
-  private def withOrders(f: String => Unit): Unit = withTemp { tmp =>
+  private def withOrders(f: String => Unit): Unit = {
+    val tmp = temp()
     writeFile(tmp, "orders", spark.range(1000)
       .select(col("id").as("o_orderkey"), (col("id") % 37).as("o_custkey")))
     f(tmp.toString)
@@ -60,44 +58,41 @@ class TableOpenSpec extends SparkSpec {
   }
 
   test("a table file rewritten in place is read anew") {
-    withTemp { tmp =>
-      writeFile(tmp, "t", Seq(1L, 2L).toDF("k"))
-      assert(rows(T(spark, tmp.toString, "t")) == Seq("[1]", "[2]"))
-      writeFile(tmp, "t", Seq(7L, 8L, 9L).toDF("k").withColumn("v", lit("x")))
-      assert(rows(T(spark, tmp.toString, "t")) == Seq("[7,x]", "[8,x]", "[9,x]"))
-    }
+    val tmp = temp()
+    writeFile(tmp, "t", Seq(1L, 2L).toDF("k"))
+    assert(rows(T(spark, tmp.toString, "t")) == Seq("[1]", "[2]"))
+    writeFile(tmp, "t", Seq(7L, 8L, 9L).toDF("k").withColumn("v", lit("x")))
+    assert(rows(T(spark, tmp.toString, "t")) == Seq("[7,x]", "[8,x]", "[9,x]"))
   }
 
   test("a schema-inference conf change re-resolves the table") {
-    withTemp { tmp =>
-      // a Spark-written file carries its Spark schema, which inference
-      // prefers to every conf: write a bare BINARY column instead
-      val schema = MessageTypeParser.parseMessageType("message b { required binary s; }")
-      val out = HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(s"$tmp/b.parquet"),
-        spark.sparkContext.hadoopConfiguration)
-      val w = ExampleParquetWriter.builder(out).withType(schema).build()
-      try Seq("a", "b").foreach(v => w.write(new SimpleGroupFactory(schema).newGroup().append("s", v)))
-      finally w.close()
-      val key = "spark.sql.parquet.binaryAsString"
-      val prev = spark.conf.getOption(key)
-      assert(T(spark, tmp.toString, "b").schema("s").dataType == BinaryType)
-      spark.conf.set(key, "true")
-      try {
-        val asString = T(spark, tmp.toString, "b")
-        assert(asString.schema("s").dataType == StringType)
-        assert(rows(asString) == Seq("[a]", "[b]"))
-      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      assert(T(spark, tmp.toString, "b").schema("s").dataType == BinaryType)
-    }
+    val tmp = temp()
+    // a Spark-written file carries its Spark schema, which inference
+    // prefers to every conf: write a bare BINARY column instead
+    val schema = MessageTypeParser.parseMessageType("message b { required binary s; }")
+    val out = HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(s"$tmp/b.parquet"),
+      spark.sparkContext.hadoopConfiguration)
+    val w = ExampleParquetWriter.builder(out).withType(schema).build()
+    try Seq("a", "b").foreach(v => w.write(new SimpleGroupFactory(schema).newGroup().append("s", v)))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    assert(T(spark, tmp.toString, "b").schema("s").dataType == BinaryType)
+    spark.conf.set(key, "true")
+    try {
+      val asString = T(spark, tmp.toString, "b")
+      assert(asString.schema("s").dataType == StringType)
+      assert(rows(asString) == Seq("[a]", "[b]"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(T(spark, tmp.toString, "b").schema("s").dataType == BinaryType)
   }
 
   test("a directory table is read, and read again after it gains a file") {
-    withTemp { tmp =>
-      val path = tmp.resolve("d.parquet").toString
-      Seq(1L, 2L).toDF("k").write.parquet(path)
-      assert(rows(T(spark, tmp.toString, "d")) == Seq("[1]", "[2]"))
-      Seq(3L).toDF("k").write.mode("append").parquet(path)
-      assert(rows(T(spark, tmp.toString, "d")) == Seq("[1]", "[2]", "[3]"))
-    }
+    val tmp = temp()
+    val path = tmp.resolve("d.parquet").toString
+    Seq(1L, 2L).toDF("k").write.parquet(path)
+    assert(rows(T(spark, tmp.toString, "d")) == Seq("[1]", "[2]"))
+    Seq(3L).toDF("k").write.mode("append").parquet(path)
+    assert(rows(T(spark, tmp.toString, "d")) == Seq("[1]", "[2]", "[3]"))
   }
 }
