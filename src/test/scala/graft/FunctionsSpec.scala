@@ -284,7 +284,9 @@ class FunctionsSpec extends SparkSpec {
     assert(!plan.contains("(37,12)"), plan.take(2000))
   }
 
-  test("SumProduct128 at the DECIMAL(38,12) bound nulls or raises as the decimal form does") {
+  // Groups at the DECIMAL(38,12) bound, with the SumProduct128 kernel and the
+  // decimal sum it stands in for, and the groups that land on or past 1e38.
+  private def boundCase() = {
     // x = y = 999999999999: each x6·y6 is 1e36 − 2e24 + 1e12 (unscaled,
     // scale 12), and 100 of them sum to 1e38 − 2e26 + 1e14, just inside
     // 38 digits. One more term of 2e26 − 1e14 lands exactly on 1e38, one
@@ -308,22 +310,29 @@ class FunctionsSpec extends SparkSpec {
       .toAggregateExpression()).as("kernel")
     def decimal = sum(col("x").cast(D2) * col("y").cast(D2)).cast("double").as("decimal")
     val outOfBound = for (edge <- Seq("at", "above"); sign <- Seq("1.0", "-1.0")) yield edge + sign
+    (df, () => kernel, () => decimal, outOfBound)
+  }
 
+  test("SumProduct128 goes NULL at the DECIMAL(38,12) bound, as the decimal form does") {
+    val (df, kernel, decimal, outOfBound) = boundCase()
     // ANSI off: the decimal sum nulls past the bound, and so does the kernel
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    val rows = try df.groupBy("g").agg(kernel, decimal).collect()
+    val rows = try df.groupBy("g").agg(kernel(), decimal()).collect()
       finally spark.conf.set("spark.sql.ansi.enabled", ansi)
     val got = rows.map(r => r.getString(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
     assert(got.size == 6)
     got.foreach { case (g, (k, d)) => assert(k == d, g) }
     assert(got("below1.0")._2.isDefined && got("below-1.0")._2.isDefined)
     outOfBound.foreach(g => assert(got(g)._1.isEmpty, g))
+  }
 
+  test("SumProduct128 raises at the DECIMAL(38,12) bound under ANSI, as the decimal form does") {
+    val (df, kernel, decimal, outOfBound) = boundCase()
     // the session's own mode, ANSI on (Spark 4's default): in-bound groups
     // agree, out-of-bound groups raise in both forms (the decimal form raises
     // the precision error if its overflowed partial skipped a row buffer)
-    assert(ansi == "true")
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     def result(g: String, c: org.apache.spark.sql.Column): Either[String, Any] =
       try Right(df.filter(col("g") === g).groupBy("g").agg(c).head().get(1)) catch {
         case e: Exception => Left(Iterator.iterate[Throwable](e)(_.getCause)
@@ -331,8 +340,8 @@ class FunctionsSpec extends SparkSpec {
             case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
           }.getOrElse(e.toString))
       }
-    for (g <- got.keys) {
-      val (k, d) = (result(g, kernel), result(g, decimal))
+    for (g <- Seq("below", "at", "above").flatMap(e => Seq(e + "1.0", e + "-1.0"))) {
+      val (k, d) = (result(g, kernel()), result(g, decimal()))
       if (!outOfBound.contains(g)) assert(k.isRight && k == d, g)
       else assert(k == Left("ARITHMETIC_OVERFLOW") && d.left.exists(Set("ARITHMETIC_OVERFLOW",
         "NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION")), s"$g: kernel $k, decimal $d")
